@@ -2,6 +2,7 @@ package graft.catalog
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Date-partitioned parquet layout for the tall archive, shared by the
@@ -48,16 +49,36 @@ object ArchiveStore {
     df.select(col("attribute_id").cast("int"), col("timestamp"),
       col("value").cast("double"))
 
-  def write(df: DataFrame, mode: SaveMode, target: String): Unit =
+  private def writer(df: DataFrame) =
     normalized(df)
       .withColumn("p_date", to_date(col("timestamp")))
-      .write.mode(mode).partitionBy("p_date").parquet(target)
+      .write.partitionBy("p_date")
+
+  def write(df: DataFrame, mode: SaveMode, target: String): Unit =
+    writer(df).mode(mode).parquet(target)
 
   def append(df: DataFrame, path: String): Unit = write(df, SaveMode.Append, path)
 
-  /** Small-file compaction: streaming upserts leave one file per
-    * micro-batch per touched date; over days that degrades scans (task
-    * per tiny file, footer overhead). Rewrites each listed date
+  /** Dynamic partition overwrite, set on this write only: the date
+    * partitions `df` holds are replaced and every other date is kept.
+    * A session-wide setting would race with concurrent per-site streams
+    * sharing the session, and a static overwrite deletes every date. */
+  private def overwriteDates(df: DataFrame, path: String): Unit =
+    writer(df).mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic").parquet(path)
+
+  /** Drops a `localCheckpoint`ed frame's blocks now. `Dataset.unpersist`
+    * only touches the cache manager, so without this the blocks stay in
+    * executor storage until a GC lets the ContextCleaner find them. */
+  private[graft] def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
+  /** Small-file compaction for appended data: every append leaves its own
+    * file(s) in each date it touches, and over days that degrades scans
+    * (task per tiny file, footer overhead). Upserts already write each
+    * rewritten date as one file. Rewrites each listed date
     * partition — or every partition with more than `maxFilesPerDate`
     * files when none are listed — into `targetFiles` file(s) via a
     * dynamic partition overwrite. Pure layout maintenance: rows are
@@ -83,38 +104,30 @@ object ArchiveStore {
       .select(cols.map(col): _*)
       .repartition(targetFiles, col("timestamp")) // timestamp-clustered files
       .localCheckpoint() // break lineage: overwrite targets the read path
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      write(rows, SaveMode.Overwrite, path)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    try overwriteDates(rows, path) finally release(rows)
   }
 
   /** Last-write-wins upsert on (attribute_id, timestamp), touching only
     * the date partitions present in `recomputed`. `localCheckpoint` breaks
-    * the read lineage so the overwrite may target the same path it read. */
+    * the read lineage so the overwrite may target the same path it read.
+    * The rewritten rows are hash-partitioned by date first, so each
+    * rewritten date is one file whatever the inputs' partitioning. */
   def upsert(spark: SparkSession, path: String, recomputed: DataFrame): Unit = {
     val rec = normalized(recomputed)
     if (!exists(path)) { append(rec, path); return }
     val recMat = rec.localCheckpoint()
-    if (recMat.isEmpty) return // nothing to upsert; avoid a no-partition overwrite job
-    val touchedDates = recMat.select(to_date(col("timestamp")).as("p_date")).distinct()
-    val keep = spark.read.parquet(path)
-      .join(broadcast(touchedDates), Seq("p_date"), "left_semi")
-      .join(recMat.select("attribute_id", "timestamp"),
-        Seq("attribute_id", "timestamp"), "left_anti")
-      .select(cols.map(col): _*)
-    val out = keep.unionByName(recMat).localCheckpoint()
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      write(out, SaveMode.Overwrite, path)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+      if (recMat.isEmpty) return // nothing to upsert; avoid a no-partition overwrite job
+      val touchedDates = recMat.select(to_date(col("timestamp")).as("p_date")).distinct()
+      val keep = spark.read.parquet(path)
+        .join(broadcast(touchedDates), Seq("p_date"), "left_semi")
+        .join(recMat.select("attribute_id", "timestamp"),
+          Seq("attribute_id", "timestamp"), "left_anti")
+        .select(cols.map(col): _*)
+      val out = keep.unionByName(recMat)
+        .repartition(to_date(col("timestamp")))
+        .localCheckpoint()
+      try overwriteDates(out, path) finally release(out)
+    } finally release(recMat)
   }
 }

@@ -5,6 +5,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -23,8 +24,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - offset = number of grid ticks emitted (monotone long);
   *  - each micro-batch covers `[start, end)` ticks, capped by
   *    `maxTicksPerBatch` (the incremental watermark pull, T1);
-  *  - one InputPartition PER TAG per batch — the same per-tag
-  *    parallelism the reference got from its batch sub-requests;
+  *  - each batch is planned as at most `defaultParallelism` contiguous
+  *    TAG GROUPS in tag order. One group is one `/batch` POST carrying a
+  *    sub-request per tag, which is what the reference sends; a
+  *    partition per tag would cost a task per tag per micro-batch for a
+  *    few rows each. Contiguous groups keep `monotonically_increasing_id`
+  *    tag-major, tick-minor, so the arrival order behind the keep-first
+  *    dedup is the same as with one partition per tag;
   *  - rows are `(lookup_key, timestamp, value)` STRINGS, exactly the
   *    raw shape [[graft.ingest.Ingest.coerceBatch]] expects.
   *
@@ -82,7 +88,8 @@ final class PiBatchScan(options: CaseInsensitiveStringMap) extends Scan {
       baseTime = options.getOrDefault("baseTime", "2024-01-01T00:00:00"),
       intervalSeconds = options.getLong("intervalSeconds", 60L),
       endTicks = options.getLong("endTicks", Long.MaxValue),
-      maxTicksPerBatch = options.getLong("maxTicksPerBatch", 60L))
+      maxTicksPerBatch = options.getLong("maxTicksPerBatch", 60L),
+      maxPartitions = SparkSession.active.sparkContext.defaultParallelism)
 }
 
 /** Offset = count of grid ticks fully emitted. */
@@ -92,7 +99,7 @@ final case class TickOffset(ticks: Long) extends Offset {
 
 final class PiBatchMicroBatchStream(
     tags: Seq[String], baseTime: String, intervalSeconds: Long,
-    endTicks: Long, maxTicksPerBatch: Long)
+    endTicks: Long, maxTicksPerBatch: Long, maxPartitions: Int)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   /** Trigger.AvailableNow drains everything up to the prepare-time end
@@ -119,17 +126,38 @@ final class PiBatchMicroBatchStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[TickOffset].ticks
     val e = end.asInstanceOf[TickOffset].ticks
-    // one partition per tag — the reference's per-tag batch sub-requests
-    tags.map(t => PiBatchPartition(t, s, e, baseTime, intervalSeconds): InputPartition).toArray
+    val perTag = tags.map(PiBatchPartition(_, s, e, baseTime, intervalSeconds))
+    // contiguous groups whose sizes differ by at most one, in tag order
+    val n = math.max(1, math.min(perTag.size, maxPartitions))
+    (0 until n).map { i =>
+      PiBatchGroupPartition(perTag.slice(i * perTag.size / n, (i + 1) * perTag.size / n)): InputPartition
+    }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     (partition: InputPartition) =>
-      new PiBatchPartitionReader(partition.asInstanceOf[PiBatchPartition])
+      new PiBatchGroupReader(partition.asInstanceOf[PiBatchGroupPartition])
 }
 
+/** One tag's sub-request of a `/batch` POST. */
 final case class PiBatchPartition(tag: String, startTick: Long, endTick: Long,
     baseTime: String, intervalSeconds: Long) extends InputPartition
+
+/** One `/batch` POST: a contiguous run of tags, read tag after tag. */
+final case class PiBatchGroupPartition(tags: Seq[PiBatchPartition]) extends InputPartition
+
+final class PiBatchGroupReader(g: PiBatchGroupPartition) extends PartitionReader[InternalRow] {
+  private val pending = g.tags.iterator
+  private var cur: PiBatchPartitionReader = null
+
+  @scala.annotation.tailrec
+  override def next(): Boolean =
+    if (cur != null && cur.next()) true
+    else if (pending.hasNext) { close(); cur = new PiBatchPartitionReader(pending.next()); next() }
+    else false
+  override def get(): InternalRow = cur.get()
+  override def close(): Unit = if (cur != null) cur.close()
+}
 
 final class PiBatchPartitionReader(p: PiBatchPartition)
     extends PartitionReader[InternalRow] {

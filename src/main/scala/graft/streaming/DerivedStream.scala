@@ -247,7 +247,8 @@ object DerivedStream {
       .option("checkpointLocation", checkpointPath)
       .trigger(trigger)
       .foreachBatch { (batchRaw: DataFrame, _: Long) =>
-        val batch = Ingest.coerceBatch(batchRaw, mapping).cache()
+        // not .cache(): spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false keeps every dedup-shuffle partition
+        val batch = Ingest.coerceBatch(batchRaw, mapping).localCheckpoint()
         try if (!batch.isEmpty) {
           val toWrite =
             if (derived.isEmpty) batch
@@ -263,7 +264,7 @@ object DerivedStream {
               batch.unionByName(recomputed)
             }
           graft.catalog.ArchiveStore.upsert(spark, archivePath, toWrite)
-        } finally batch.unpersist()
+        } finally graft.catalog.ArchiveStore.release(batch)
         ()
       }
       .start()

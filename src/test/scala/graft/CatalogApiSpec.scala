@@ -239,6 +239,36 @@ class CatalogApiSpec extends SparkSpec {
     assert(after === before)
   }
 
+  test("concurrent upserts keep every untouched date and leave the session conf alone") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val sess = spark
+    import sess.implicits._
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
+    val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
+    val seeded = days.map(d => (1, ts(s"$d 00:00:00"), 0.0))
+    val archives = Seq("a", "b").map { site =>
+      val path = Files.createTempDirectory(s"graft_concurrent_$site").toString + "/archive"
+      graft.catalog.ArchiveStore.append(seeded.toDF("attribute_id", "timestamp", "value"), path)
+      path
+    }
+    // two per-site writers sharing the session, each rewriting only day 2
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val writers = archives.map(path => Future {
+      for (i <- 1 to 6)
+        graft.catalog.ArchiveStore.upsert(spark, path,
+          Seq((2, ts("2024-01-02 12:00:00"), i.toDouble)).toDF("attribute_id", "timestamp", "value"))
+    })
+    Await.result(Future.sequence(writers), 10.minutes)
+    for (path <- archives) {
+      val rows = spark.read.parquet(path).select("attribute_id", "timestamp", "value")
+        .collect().map(r => (r.getInt(0), r.getTimestamp(1), r.getDouble(2))).toSet
+      assert(rows === (seeded :+ ((2, ts("2024-01-02 12:00:00"), 6.0))).toSet)
+    }
+    assert(spark.conf.getOption(modeKey) === modeBefore)
+  }
+
   test("api: lookup exact vs wildcard, generic table export filters") {
     val (api, cat) = freshApi()
     cat.insertElement("Boiler")

@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.catalog.ArchiveStore
 import graft.ingest.Ingest
 import graft.streaming.DerivedStream
 import graft.streaming.DerivedStream.DerivedDef
@@ -369,6 +370,56 @@ class IngestStreamSpec extends SparkSpec {
     assert(byAttr(1) === 30.0) // re-delivered source replaced
     assert(byAttr(2) === 2.0)
     assert(byAttr(9) === 60.0) // derived recomputed from the NEW value
+  }
+
+  /** An archive whose first day holds two appended files and whose
+    * second day holds one. */
+  private def seededArchive(dir: String): String = {
+    val sess = spark
+    import sess.implicits._
+    val archive = s"$dir/archive"
+    for (at <- Seq("2024-01-01 00:00:00", "2024-01-01 01:00:00", "2024-01-02 00:00:00"))
+      ArchiveStore.append(Seq((1, Timestamp.valueOf(at), 1.0))
+        .toDF("attribute_id", "timestamp", "value"), archive)
+    archive
+  }
+
+  /** Streams four two-tick micro-batches of two tags and a derived
+    * formula into `archive`; they all land on 2024-01-01. */
+  private def streamFourBatches(archive: String, ckpt: String): Unit = {
+    val raw = spark.readStream.format("graft.sources.PiBatchSource")
+      .option("tags", "\\\\AF\\Plant\\U1|temp,\\\\AF\\Plant\\U1|press")
+      .option("baseTime", "2024-01-01T00:00:00")
+      .option("endTicks", "8")
+      .option("maxTicksPerBatch", "2")
+      .load()
+    val q = DerivedStream.start(raw, mapping, Seq(DerivedDef(9, "$1 + $2")), archive, ckpt)
+    q.awaitTermination(120000)
+    q.exception.foreach(e => throw e)
+    assert(q.recentProgress.count(_.numInputRows > 0) === 4)
+  }
+
+  test("streamed upserts write each touched date as one file and keep the others") {
+    val dir = Files.createTempDirectory("graft_layout").toString
+    val archive = seededArchive(dir)
+    def parquetFiles(date: String): Set[String] =
+      new java.io.File(s"$archive/p_date=$date").listFiles()
+        .map(_.getName).filter(_.endsWith(".parquet")).toSet
+    val untouched = parquetFiles("2024-01-02")
+    streamFourBatches(archive, s"$dir/ckpt")
+    assert(parquetFiles("2024-01-01").size === 1)
+    assert(parquetFiles("2024-01-02") === untouched)
+    val rows = spark.read.parquet(archive)
+    assert(rows.count() === 3 + 16 + 8) // seeded + 2 tags x 8 ticks + 8 derived
+    assert(rows.select("attribute_id", "timestamp").distinct().count() === 27)
+  }
+
+  test("a stream run leaves no checkpoint blocks behind") {
+    val dir = Files.createTempDirectory("graft_release").toString
+    val archive = seededArchive(dir)
+    val preIds = spark.sparkContext.getPersistentRDDs.keySet
+    streamFourBatches(archive, s"$dir/ckpt")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(preIds).isEmpty)
   }
 
   test("T5 live trigger: PI source under ProcessingTime pacing, full re-delivery upserts cleanly") {
