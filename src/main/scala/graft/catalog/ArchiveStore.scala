@@ -5,6 +5,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
+import graft.streaming.DerivedStream
+import graft.streaming.DerivedStream.DerivedDef
+
 /** Date-partitioned parquet layout for the tall archive, shared by the
   * batch [[Catalog]] and the streaming sink
   * ([[graft.streaming.DerivedStream.start]]).
@@ -107,27 +110,41 @@ object ArchiveStore {
     try overwriteDates(rows, path) finally release(rows)
   }
 
-  /** Last-write-wins upsert on (attribute_id, timestamp), touching only
-    * the date partitions present in `recomputed`. `localCheckpoint` breaks
-    * the read lineage so the overwrite may target the same path it read.
-    * The rewritten rows are hash-partitioned by date first, so each
-    * rewritten date is one file whatever the inputs' partitioning. */
-  def upsert(spark: SparkSession, path: String, recomputed: DataFrame): Unit = {
-    val rec = normalized(recomputed)
-    if (!exists(path)) { append(rec, path); return }
-    val recMat = rec.localCheckpoint()
-    try {
-      if (recMat.isEmpty) return // nothing to upsert; avoid a no-partition overwrite job
-      val touchedDates = recMat.select(to_date(col("timestamp")).as("p_date")).distinct()
-      val keep = spark.read.parquet(path)
-        .join(broadcast(touchedDates), Seq("p_date"), "left_semi")
-        .join(recMat.select("attribute_id", "timestamp"),
-          Seq("attribute_id", "timestamp"), "left_anti")
-        .select(cols.map(col): _*)
-      val out = keep.unionByName(recMat)
-        .repartition(to_date(col("timestamp")))
-        .localCheckpoint()
-      try overwriteDates(out, path) finally release(out)
-    } finally release(recMat)
+  /** Last-write-wins upsert on (attribute_id, timestamp) that also
+    * recomputes `derived` where `rows` touched their refs, as ONE
+    * date-clustered plan. `rows` is read twice, so pass a materialized
+    * frame:
+    *  1. its dates are collected, and the archive is read with a static
+    *     `p_date IN (...)` filter, so only the touched days are scanned;
+    *  2. those rows and `rows` merge under [[DerivedStream.merge]]:
+    *     hash-partitioned by date — the plan's one shuffle — last write
+    *     wins, then every formula in one aggregate, whose rows win too;
+    *  3. a `localCheckpoint` breaks the read lineage, and a dynamic
+    *     partition overwrite replaces the touched days, one file each.
+    * Untouched days keep their files byte for byte. Into a fresh archive
+    * with no formulas, `rows` is appended as given (the bulk load); an
+    * empty load leaves the archive fresh. */
+  def upsert(spark: SparkSession, path: String, rows: DataFrame,
+      derived: Seq[DerivedDef] = Nil): Unit = {
+    val rec = normalized(rows)
+    val fresh = !exists(path)
+    if (fresh && derived.isEmpty) {
+      append(rec, path)
+      // no rows, no date partition: drop the marker, or `exists` holds
+      // for a directory no reader can infer a schema from
+      val (fs, root) = hadoopFs(path)
+      if (!fs.listStatus(root).exists(_.getPath.getName.startsWith("p_date=")))
+        fs.delete(new HPath(root, "_SUCCESS"), false)
+      return
+    }
+    val dates = rec.select(to_date(col("timestamp"))).distinct().collect().toSeq.map(_.get(0))
+    if (dates.isEmpty) return // nothing to upsert; avoid a no-partition overwrite job
+    val archived =
+      if (fresh) None else Some(spark.read.parquet(path).filter(col("p_date").isin(dates: _*)))
+    val out = DerivedStream.merge(archived, rec, derived)
+      .select(cols.map(col): _*)
+      .localCheckpoint()
+    try if (fresh) append(out, path) else overwriteDates(out, path)
+    finally release(out)
   }
 }

@@ -1,10 +1,20 @@
 package graft
 
 import java.nio.file.Files
+import java.security.MessageDigest
 import java.sql.Timestamp
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.catalog.ArchiveStore
 import graft.ingest.Ingest
@@ -311,6 +321,26 @@ class IngestStreamSpec extends SparkSpec {
     assert(spark.read.parquet(s"${dirs("siteB")}/archive").head().getDouble(2) === 77.0)
   }
 
+  test("an empty first micro-batch leaves the archive fresh for the next one") {
+    val sess = spark
+    import sess.implicits._
+    implicit val sq = sess.sqlContext
+    val dir = Files.createTempDirectory("graft_empty_first").toString
+    val mem = MemoryStream[(String, String, String)]
+    val raw = mem.toDF.toDF("lookup_key", "timestamp", "value")
+    def run(): Unit = {
+      val q = DerivedStream.start(raw, mapping, Nil, s"$dir/archive", s"$dir/ckpt")
+      q.awaitTermination(120000)
+      q.exception.foreach(e => throw e)
+    }
+    mem.addData(("\\\\AF\\Plant\\Unknown|x", "2024-01-01T00:00:00", "5.0")) // unmapped
+    run()
+    assert(!ArchiveStore.exists(s"$dir/archive"))
+    mem.addData(("\\\\AF\\Plant\\U1|temp", "2024-01-01T00:00:00", "10.0"))
+    run()
+    assert(spark.read.parquet(s"$dir/archive").count() === 1)
+  }
+
   test("end-to-end stream: micro-batches maintain archive + derived rows") {
     val sess = spark
     import sess.implicits._
@@ -384,20 +414,28 @@ class IngestStreamSpec extends SparkSpec {
     archive
   }
 
-  /** Streams four two-tick micro-batches of two tags and a derived
-    * formula into `archive`; they all land on 2024-01-01. */
-  private def streamFourBatches(archive: String, ckpt: String): Unit = {
+  /** Streams `ticks` one-minute ticks of the two mapped tags from raw
+    * (UTC) time `base`, `perBatch` ticks a micro-batch, through `derived`
+    * into `archive`; returns the micro-batches that carried data. */
+  private def streamTicks(archive: String, ckpt: String, base: String, ticks: Int,
+      perBatch: Int, derived: Seq[DerivedDef]): Int = {
     val raw = spark.readStream.format("graft.sources.PiBatchSource")
       .option("tags", "\\\\AF\\Plant\\U1|temp,\\\\AF\\Plant\\U1|press")
-      .option("baseTime", "2024-01-01T00:00:00")
-      .option("endTicks", "8")
-      .option("maxTicksPerBatch", "2")
+      .option("baseTime", base)
+      .option("endTicks", ticks.toString)
+      .option("maxTicksPerBatch", perBatch.toString)
       .load()
-    val q = DerivedStream.start(raw, mapping, Seq(DerivedDef(9, "$1 + $2")), archive, ckpt)
+    val q = DerivedStream.start(raw, mapping, derived, archive, ckpt)
     q.awaitTermination(120000)
     q.exception.foreach(e => throw e)
-    assert(q.recentProgress.count(_.numInputRows > 0) === 4)
+    q.recentProgress.count(_.numInputRows > 0)
   }
+
+  /** Streams four two-tick micro-batches of two tags and a derived
+    * formula into `archive`; they all land on 2024-01-01. */
+  private def streamFourBatches(archive: String, ckpt: String): Unit =
+    assert(streamTicks(archive, ckpt, "2024-01-01T00:00:00", 8, 2,
+      Seq(DerivedDef(9, "$1 + $2"))) === 4)
 
   test("streamed upserts write each touched date as one file and keep the others") {
     val dir = Files.createTempDirectory("graft_layout").toString
@@ -420,6 +458,226 @@ class IngestStreamSpec extends SparkSpec {
     val preIds = spark.sparkContext.getPersistentRDDs.keySet
     streamFourBatches(archive, s"$dir/ckpt")
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(preIds).isEmpty)
+  }
+
+  private def ts(s: String) = Timestamp.valueOf(s)
+
+  private def appendRows(archive: String, rows: Seq[(Int, Timestamp, Double)]): Unit = {
+    val sess = spark
+    import sess.implicits._
+    ArchiveStore.append(rows.toDF("attribute_id", "timestamp", "value"), archive)
+  }
+
+  /** The archive as (attribute_id, timestamp) -> value; fails on a
+    * repeated key. */
+  private def archiveByKey(archive: String): Map[(Int, String), Option[Double]] = {
+    val rows = spark.read.parquet(archive).select("attribute_id", "timestamp", "value")
+      .collect().map(r => (r.getInt(0), r.get(1).toString) ->
+        (if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+    val byKey = rows.toMap
+    assert(byKey.size === rows.length, s"duplicate archive keys in ${rows.toSeq}")
+    byKey
+  }
+
+  /** Content digest of each parquet file in one date partition. */
+  private def fileDigests(archive: String, date: String): Map[String, String] =
+    new java.io.File(s"$archive/p_date=$date").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> MessageDigest.getInstance("SHA-256")
+        .digest(Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString)
+      .toMap
+
+  /** Blocks until every listener event posted so far is delivered. The
+    * query-execution listeners share the SparkContext listeners' queue,
+    * so once a marker job's start arrives, every earlier event has. */
+  private def drainListeners(): Unit = {
+    val sc = spark.sparkContext
+    val marker = java.util.UUID.randomUUID().toString
+    val seen = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker)) seen.countDown()
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(marker, "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(seen.await(60, TimeUnit.SECONDS), "listener events were not delivered")
+    } finally sc.removeSparkListener(l)
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  test("a batch carrying a derived attribute's own id keeps one row per key, the recomputed one") {
+    val sess = spark
+    import sess.implicits._
+    implicit val sq = sess.sqlContext
+    val dir = Files.createTempDirectory("graft_derived_id").toString
+    val withDerivedTag = mapping.unionByName(
+      Seq(("\\\\AF\\Plant\\U1|sum", 9)).toDF("lookup_key", "attribute_id"))
+    val mem = MemoryStream[(String, String, String)]
+    val raw = mem.toDF.toDF("lookup_key", "timestamp", "value")
+    def run(): Unit = {
+      val q = DerivedStream.start(raw, withDerivedTag, Seq(DerivedDef(9, "$1 + $2")),
+        s"$dir/archive", s"$dir/ckpt")
+      q.awaitTermination(120000)
+      q.exception.foreach(e => throw e)
+    }
+    // the first batch builds the archive, the second rewrites its day
+    for (value <- Seq("10.0", "30.0")) {
+      mem.addData(
+        ("\\\\AF\\Plant\\U1|temp", "2024-01-01T00:00:00", value),
+        ("\\\\AF\\Plant\\U1|press", "2024-01-01T00:00:00", "2.0"),
+        ("\\\\AF\\Plant\\U1|sum", "2024-01-01T00:00:00", "-1.0"))
+      run()
+      val rows = archiveByKey(s"$dir/archive")
+      assert(rows.size === 3)
+      assert(rows((9, "2024-01-01T07:00")) === Some(value.toDouble + 2.0))
+    }
+  }
+
+  test("a re-delivered NULL source replaces the archived value; the NULL gate keeps the prior derived row") {
+    val sess = spark
+    import sess.implicits._
+    implicit val sq = sess.sqlContext
+    val dir = Files.createTempDirectory("graft_null_redeliver").toString
+    val mem = MemoryStream[(String, String, String)]
+    val raw = mem.toDF.toDF("lookup_key", "timestamp", "value")
+    def run(): Unit = {
+      val q = DerivedStream.start(raw, mapping, Seq(DerivedDef(9, "$1 * $2")),
+        s"$dir/archive", s"$dir/ckpt")
+      q.awaitTermination(120000)
+      q.exception.foreach(e => throw e)
+    }
+    mem.addData(
+      ("\\\\AF\\Plant\\U1|temp", "2024-01-01T00:00:00", "10.0"),
+      ("\\\\AF\\Plant\\U1|press", "2024-01-01T00:00:00", "2.0"))
+    run()
+    // a PI error value: coerced to NULL
+    mem.addData(("\\\\AF\\Plant\\U1|temp", "2024-01-01T00:00:00", "Bad Input"))
+    run()
+    val rows = archiveByKey(s"$dir/archive")
+    assert(rows === Map(
+      (1, "2024-01-01T07:00") -> None,
+      (2, "2024-01-01T07:00") -> Some(2.0),
+      (9, "2024-01-01T07:00") -> Some(20.0)))
+  }
+
+  test("a formula is evaluated only where the batch touched its own refs") {
+    val dir = Files.createTempDirectory("graft_touched").toString
+    val archive = s"$dir/archive"
+    // sources for both formulas, no derived rows yet
+    appendRows(archive, Seq((1, ts("2024-01-01 00:00:00"), 1.0),
+      (2, ts("2024-01-01 00:00:00"), 2.0), (3, ts("2024-01-01 00:00:00"), 5.0)))
+    val sess = spark
+    import sess.implicits._
+    ArchiveStore.upsert(spark, archive,
+      Seq((3, ts("2024-01-01 00:00:00"), 7.0)).toDF("attribute_id", "timestamp", "value"),
+      Seq(DerivedDef(9, "$1 + $2"), DerivedDef(10, "$3 * 2")))
+    val rows = archiveByKey(archive)
+    assert(rows((10, "2024-01-01 00:00:00.0")) === Some(14.0))
+    assert(!rows.contains((9, "2024-01-01 00:00:00.0"))) // absent before, absent after
+    assert(rows.size === 4)
+  }
+
+  test("a division by zero raises only at timestamps the batch touched") {
+    val dir = Files.createTempDirectory("graft_div0").toString
+    val archive = s"$dir/archive"
+    appendRows(archive, Seq((1, ts("2024-01-01 00:00:00"), 1.0),
+      (2, ts("2024-01-01 00:00:00"), 0.0), (3, ts("2024-01-01 00:00:00"), 5.0)))
+    val sess = spark
+    import sess.implicits._
+    val formulas = Seq(DerivedDef(9, "$1 / $2"), DerivedDef(10, "$3 * 2"))
+    // $2 = 0 at 00:00, but this batch only touches $3
+    ArchiveStore.upsert(spark, archive,
+      Seq((3, ts("2024-01-01 00:00:00"), 7.0)).toDF("attribute_id", "timestamp", "value"),
+      formulas)
+    val before = archiveByKey(archive)
+    assert(before((10, "2024-01-01 00:00:00.0")) === Some(14.0))
+    assert(!before.contains((9, "2024-01-01 00:00:00.0")))
+    // touching $2 evaluates $1 / $2 there: ANSI division by zero, as in
+    // the reference's PostgreSQL trigger, and the archive is untouched
+    val e = intercept[Exception](ArchiveStore.upsert(spark, archive,
+      Seq((2, ts("2024-01-01 00:00:00"), 0.0)).toDF("attribute_id", "timestamp", "value"),
+      formulas))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO")), e.toString)
+    assert(archiveByKey(archive) === before)
+  }
+
+  test("a batch spanning midnight rewrites both dates as one file each") {
+    val dir = Files.createTempDirectory("graft_midnight").toString
+    val archive = s"$dir/archive"
+    for (day <- Seq("2024-01-01", "2024-01-02"); hour <- Seq("12", "13"))
+      appendRows(archive, Seq((1, ts(s"$day $hour:00:00"), 1.0)))
+    appendRows(archive, Seq((1, ts("2024-01-03 12:00:00"), 1.0)))
+    val untouched = fileDigests(archive, "2024-01-03")
+    Seq("2024-01-01", "2024-01-02").foreach(d => assert(fileDigests(archive, d).size === 2))
+    // raw 16:58 UTC is 23:58 plant time: ticks 23:58, 23:59, 00:00, 00:01
+    assert(streamTicks(archive, s"$dir/ckpt", "2024-01-01T16:58:00", 4, 4,
+      Seq(DerivedDef(9, "$1 + $2"))) === 1)
+    Seq("2024-01-01", "2024-01-02").foreach(d => assert(fileDigests(archive, d).size === 1))
+    assert(fileDigests(archive, "2024-01-03") === untouched)
+    val rows = archiveByKey(archive)
+    assert(rows.size === 5 + 2 * 4 + 4) // seeded + 2 tags x 4 ticks + 4 derived
+    assert(rows.keySet.count(_._1 == 9) === 4)
+  }
+
+  test("each micro-batch scans only the date partitions it touches; the others keep their bytes") {
+    val dir = Files.createTempDirectory("graft_prune").toString
+    val archive = s"$dir/archive"
+    val days = Seq("2023-12-30", "2023-12-31", "2024-01-01", "2024-01-02")
+    for (day <- days)
+      appendRows(archive, Seq((1, ts(s"$day 12:00:00"), 1.0), (2, ts(s"$day 12:00:00"), 2.0)))
+    val untouched = days.filterNot(_ == "2024-01-01")
+    val before = untouched.map(d => d -> fileDigests(archive, d)).toMap
+    val scanned = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        Plans.collectWithSubqueries(qe.executedPlan) { case s: FileSourceScanExec => s }
+          .filter(_.relation.location.rootPaths.exists(_.toString.contains(archive)))
+          .foreach(_.inputRDD.asInstanceOf[FileScanRDD].filePartitions
+            .foreach(_.files.foreach(f => scanned.add(f.filePath.toString))))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      streamFourBatches(archive, s"$dir/ckpt")
+      drainListeners()
+    } finally spark.listenerManager.unregister(listener)
+    val dates = scanned.asScala.toSeq.map(p => "p_date=([^/]+)".r.findFirstMatchIn(p).get.group(1))
+    assert(dates.nonEmpty, "no archive scan observed")
+    assert(dates.toSet === Set("2024-01-01"))
+    untouched.foreach(d => assert(fileDigests(archive, d) === before(d), d))
+  }
+
+  test("a two-formula micro-batch over a pre-seeded day runs at most 12 Spark jobs") {
+    val sess = spark
+    import sess.implicits._
+    val dir = Files.createTempDirectory("graft_jobs").toString
+    val archive = s"$dir/archive"
+    // six hours of both tags on the streamed day (plant time 07:00 on)
+    ArchiveStore.append(spark.range(0, 720)
+      .select((col("id") % 2 + 1).cast("int").as("attribute_id"),
+        (lit(Timestamp.valueOf("2024-01-01 00:00:00")) + make_interval(
+          lit(0), lit(0), lit(0), lit(0), lit(0), (col("id") / 2).cast("int"))).as("timestamp"),
+        (col("id") % 7).cast("double").as("value")), archive)
+    val jobs = new ConcurrentHashMap[String, AtomicInteger]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.computeIfAbsent(b, _ => new AtomicInteger()).incrementAndGet())
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(streamTicks(archive, s"$dir/ckpt", "2024-01-01T00:00:00", 4, 2,
+        Seq(DerivedDef(9, "$1 + $2"), DerivedDef(10, "$1 * $2"))) === 2)
+      drainListeners()
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val perBatch = jobs.asScala.map { case (b, n) => b -> n.get }.toMap
+    assert(perBatch.size === 2, perBatch)
+    assert(perBatch.values.forall(_ <= 12), s"jobs per micro-batch: $perBatch")
+    assert(spark.read.parquet(archive).filter(col("attribute_id") >= 9).count() === 8)
   }
 
   test("T5 live trigger: PI source under ProcessingTime pacing, full re-delivery upserts cleanly") {
