@@ -2,14 +2,10 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the benched configuration IS the recommended deployment config —
     // scale-proportional reduce parallelism rationale in GraftSession
-    val spark = GraftSession.local(cpus.toInt, "graft-bench")
-    // absorb JVM/codegen/parquet-reader init outside the timed region —
-    // otherwise whichever query runs first is charged ~30s of warmup
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    val spark = Harness.session("graft-bench")
+    Harness.warm(spark, sfDir)
     // SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the sweep — used for the
     // 100× scale spot-bench where only the pair-generation suite matters
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -21,33 +17,20 @@ object Bench {
     // all ~50 queries is paid on tiny data instead of inside pass 1
     val warmDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
     if (warmDir.isDirectory) names.foreach { n =>
-      try SparkEntry.queries(n)(spark, warmDir.toString).count()
-      catch { case _: Throwable => () }
-      spark.catalog.clearCache()
+      Harness.dropCreated(spark) {
+        try SparkEntry.queries(n)(spark, warmDir.toString).count()
+        catch { case _: Throwable => () }
+      }
     }
-    def timeOne(name: String): Double = {
+    // queries are independent measurements: each one's cache and
+    // checkpoint blocks are dropped after its timed region
+    def timeOne(name: String): Double = Harness.dropCreated(spark) {
       val t0 = System.nanoTime()
-      // snapshot the RDDs persisted BEFORE the query so the post-query
-      // sweep drops only what this query created: a blanket unpersist
-      // would also drop localCheckpoint blocks of any frame retained
-      // across queries — a checkpointed frame has truncated lineage, so
-      // a later use would fail with block-not-found, not recompute
-      val preIds = spark.sparkContext.getPersistentRDDs.keySet
       val n = try { SparkEntry.queries(name)(spark, sfDir).count() } catch {
         case e: Throwable => System.err.println(s"BENCHFAIL $name: $e"); -1L
       }
       val dt = (System.nanoTime() - t0) / 1e9
       System.err.println(f"BENCHQ $name rows=$n%d sec=$dt%.2f")
-      // queries are independent measurements: drop any cache/persist the
-      // operator pinned so it doesn't distort later queries' memory.
-      // clearCache only drops the SQL cache — localCheckpoint blocks
-      // (every unrolled graph/dedup superstep) otherwise linger until
-      // the ContextCleaner's GC-driven sweep catches up, and hundreds of
-      // queries × passes of them squeeze the storage pool mid-suite
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!preIds.contains(id)) rdd.unpersist(false)
-      }
       dt
     }
     // n passes (default 3, SPARK_GRAFT_BENCH_RUNS): this VM sees bursty

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The recommended session configuration for this engine, in one place —
   * what a deployment would put behind `--conf`, and what the harness
-  * mains (`Bench`/`Verify`/`ProfileQuery`) apply so the benched
-  * configuration IS the recommended one.
+  * mains apply through [[Harness.session]] so the benched configuration
+  * IS the recommended one. Nothing here reads the environment.
   *
   *  - `shuffle.partitions = cores`: the AQE floor; fine for small inputs.
   *  - `initialPartitionNum = 8 × cores`: the scale lever — large shuffles
@@ -36,8 +36,7 @@ object GraftSession {
       // 3× median/min spread on the unrolled graph cells (each query is
       // stable in isolation, where 100 entries suffice). Class metadata
       // is KBs per entry; the compiled code budget is the code cache.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // this engine's bucketed tables (registry relayouts — dedup gram
       // claims, graph edge/score/label bases — and the materialized ANN
       // indexes) are all probed by key filters or joined on their

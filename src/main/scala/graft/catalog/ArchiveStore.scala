@@ -48,6 +48,16 @@ object ArchiveStore {
     if (exists(path)) spark.read.parquet(path).select(cols.map(col): _*)
     else empty
 
+  /** Moves the directory `from` onto `to`, deleting whatever `to` held:
+    * the swap step of a whole-archive rewrite. */
+  private[catalog] def replace(from: String, to: String): Unit = {
+    val (fs, dst) = hadoopFs(to)
+    if (fs.exists(dst) && !fs.delete(dst, true))
+      throw new java.io.IOException(s"cannot delete $to")
+    if (!fs.rename(new HPath(from), dst))
+      throw new java.io.IOException(s"cannot move $from to $to")
+  }
+
   private def normalized(df: DataFrame): DataFrame =
     df.select(col("attribute_id").cast("int"), col("timestamp"),
       col("value").cast("double"))

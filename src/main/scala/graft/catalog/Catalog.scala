@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,15 +16,14 @@ import graft.tree.Hierarchy
   * column.
   *
   * Scale notes: dimension tables are catalog-sized (≤ millions of rows)
-  * — single-writer rewrite-on-mutation is correct and cheap. The archive
-  * is the only big table: mutations against it are expressed as
-  * anti-join rewrites here; a production deployment would make them
-  * partition-scoped overwrites on the date partitioning.
+  * — single-writer rewrite-on-mutation is correct and cheap. Every probe,
+  * read and move goes through the Hadoop FileSystem ([[ArchiveStore]]),
+  * so `root` may be a local path or a URI (`file:`, `hdfs://`, ...).
   */
 final class Catalog(val spark: SparkSession, root: String, val database: String) {
 
   private def path(table: String) = s"$root/$database/$table"
-  private def exists(table: String) = Files.exists(Paths.get(path(table), "_SUCCESS"))
+  private def exists(table: String) = ArchiveStore.exists(path(table))
 
   def elements: DataFrame =
     if (exists("element")) spark.read.parquet(path("element"))
@@ -40,10 +37,8 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
     * partition column). */
   private val archiveCols = ArchiveStore.cols
 
-  def archive: DataFrame =
-    if (exists("archive"))
-      spark.read.parquet(path("archive")).select(archiveCols.map(col): _*)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.archive)
+  def archive: DataFrame = ArchiveStore.readOr(spark, path("archive"),
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.archive))
 
   /** Time-bounded archive scan with PARTITION pruning: the store is
     * partitioned by `p_date = date(timestamp)` (SURVEY.md §1.3), and the
@@ -87,12 +82,7 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
   private def rewriteArchive(df: DataFrame): Unit = {
     val tmp = path("archive__rewrite")
     ArchiveStore.write(df, SaveMode.Overwrite, tmp)
-    val dst = Paths.get(path("archive"))
-    if (Files.exists(dst)) {
-      Files.walk(dst).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
-    Files.move(Paths.get(tmp), dst)
+    ArchiveStore.replace(tmp, path("archive"))
   }
 
   private def nextId(df: DataFrame, idCol: String): Int = {

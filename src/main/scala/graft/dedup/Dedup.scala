@@ -1446,8 +1446,6 @@ object Dedup {
       labels = next.select("id", "cluster")
       it += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"CCDEBUG clusters rounds=$it converged=${changed == 0L}")
     // min-label propagation needs DIAMETER-many hops; exiting the loop
     // with moves still in flight would return wrong labels SILENTLY
     // (caught by the StreamingCcSpec deep-chain test: a 41-component

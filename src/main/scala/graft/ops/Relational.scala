@@ -74,12 +74,6 @@ object Relational {
       .drop("__rn")
   }
 
-  /** A6/A8 — "first value per group" with deterministic ordering
-    * (reference pandas `aggfunc='first'`, `database.py:416-427`). */
-  def firstByGroup(df: DataFrame, keyCols: Seq[String], orderCols: Seq[Column],
-      valueCols: Seq[String]): DataFrame =
-    dedupFirst(df, keyCols, orderCols).select((keyCols ++ valueCols).map(new Column(_)): _*)
-
   /** V1 — the signature long→wide pivot (reference `database.py:415-421`).
     * `values` MUST be the pre-resolved, sorted pivot domain: pandas sorts
     * pivot columns lexicographically and an explicit list keeps the Spark

@@ -355,30 +355,6 @@ object Similarity {
     model.copy(index = spark.table(tableName))
   }
 
-  /** Streaming maintenance for the SQ8 index — foreachBatch append with
-    * the owning session's relation cache refreshed after each batch
-    * (see [[ivfPqIndexAppendStream]] for why that refresh is
-    * load-bearing). */
-  def ivfSq8IndexAppendStream(model: IvfSq8Model, vecs: DataFrame, dim: Int,
-      tableName: String, checkpointPath: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val owner = vecs.sparkSession
-    vecs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          ivfSq8IndexAppend(model, batch, dim, tableName, idCol, vecCol)
-          owner.catalog.refreshTable(tableName)
-        }
-        ()
-      }
-      .start()
-  }
-
   /** Probe-limited SQ8 query against a built [[IvfSq8Model]]: each query
     * quantizes once (model absmax is a literal), probes its nProbe
     * nearest coarse clusters, and byte-dot-scores ONLY those clusters'

@@ -119,20 +119,11 @@ object DerivedStream {
     * once the watermark passes the window end. The reference has no
     * windowed aggregation of its own (its 1m grid arrives
     * pre-interpolated) — this is the extension shape for monitoring
-    * dashboards over the same stream; state is bounded by the watermark. */
+    * dashboards over the same stream; state is bounded by the watermark.
+    * A tumbling window is a sliding one whose slide is its length. */
   def windowedRollup(coerced: DataFrame, window: String = "1 hour",
       watermarkDelay: String = "10 minutes"): DataFrame =
-    coerced
-      .withWatermark("timestamp", watermarkDelay)
-      .groupBy(
-        org.apache.spark.sql.functions.window(col("timestamp"), window).as("w"),
-        col("attribute_id"))
-      .agg(
-        count(lit(1)).as("n"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
-      .select(col("w.start").as("window_start"), col("attribute_id"),
-        col("n"), col("min_value"), col("max_value"))
+    slidingRollup(coerced, window, window, watermarkDelay)
 
   /** Sliding-window variant of [[windowedRollup]]: each event lands in
     * `window / slide` overlapping windows (e.g. hourly stats refreshed

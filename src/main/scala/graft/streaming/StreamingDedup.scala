@@ -369,26 +369,6 @@ object StreamingDedup {
     claims.write.mode("overwrite").parquet(s"$registryDir/batch_id=$batchId")
   }
 
-  /** Wire a streaming document source through the boilerplate remover:
-    * cleaned docs under `cleanDir/batch_id=*`, line counts under
-    * `registryDir/batch_id=*`. */
-  def startBoilerplate(docs: DataFrame, registryDir: String, cleanDir: String,
-      checkpointPath: String, idCol: String = "doc_id",
-      textCol: String = "text", minDocs: Int = 5,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          boilerplateBatchStep(spark, registryDir, cleanDir, idCol, textCol,
-            minDocs)(batch, batchId)
-        ()
-      }
-      .start()
-  }
-
   /** Wire a streaming document source through the drift monitor:
     * per-batch drift rows under `driftDir/batch_id=*`, token counts
     * under `registryDir/batch_id=*`. */

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sketch.Sketches
 
@@ -60,21 +59,4 @@ object StreamingSketch {
           .select(col(groupCol), col("h")),
         groupCol, k),
       groupCol, k)
-
-  /** Continuous form: foreachBatch over the sketch registry. */
-  def startKmv(docs: DataFrame, registryDir: String, checkpointPath: String,
-      groupCol: String = "source", textCol: String = "text",
-      n: Int = 3, k: Int = 64,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          kmvBatchStep(spark, registryDir, groupCol, textCol, n, k)(batch, batchId)
-        ()
-      }
-      .start()
-  }
 }

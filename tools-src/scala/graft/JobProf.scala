@@ -9,14 +9,15 @@ import org.apache.spark.scheduler._
   * job-floor vs real compute is visible without the UI.
   *
   * {{{ sbt "runMain graft.JobProf /root/testdata/sf0.1 er_inc" }}}
+  *
+  * Runs on `SPARK_GRAFT_CPUS` cores (default 4), like `Bench`.
   */
 object JobProf {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.drop(1).toSeq
-    val spark = GraftSession.local(32, "graft-jobprof")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    val spark = Harness.session("graft-jobprof")
+    Harness.warm(spark, sfDir)
 
     final case class J(var start: Long = 0L, var end: Long = 0L,
       var tasks: Int = 0, var taskMs: Long = 0L, var desc: String = "")
@@ -43,7 +44,7 @@ object JobProf {
         }
     }
 
-    names.foreach { name =>
+    names.foreach { name => Harness.dropCreated(spark) {
       jobs.clear(); stageToJob.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
@@ -59,9 +60,7 @@ object JobProf {
         println(f"  job=$id%-4d wall=${w}%5dms tasks=${j.tasks}%4d taskSum=${j.taskMs}%6dms  ${j.desc.take(90)}")
       }
       println(f"  sumJobWall=${acc}ms  (wall-sumJobWall = driver/plan gaps)")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.foreach(_._2.unpersist(false))
-    }
+    } }
     spark.stop()
   }
 }

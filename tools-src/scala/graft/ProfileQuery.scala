@@ -6,7 +6,8 @@ package graft
   * {{{ sbt "runMain graft.ProfileQuery /root/testdata/sf0.1 s_knn_lsh d_minhash_sig" }}}
   *
   * Pass `--explain` as a query name to also print each plan
-  * (`explain("formatted")`) before timing it.
+  * (`explain("formatted")`) before timing it. Runs on `SPARK_GRAFT_CPUS`
+  * cores (default 4), like `Bench`.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
@@ -17,11 +18,9 @@ object ProfileQuery {
       case Array() => SparkEntry.queries.keys.toSeq.sorted
       case qs      => qs.toSeq
     }
-    val spark = GraftSession.local(32, "graft-profile")
-    // warmup: JVM + codegen + parquet reader init
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    names.foreach { name =>
+    val spark = Harness.session("graft-profile")
+    Harness.warm(spark, sfDir)
+    names.foreach { name => Harness.dropCreated(spark) {
       if (explain) SparkEntry.queries(name)(spark, sfDir).explain("formatted")
       // construct INSIDE the timed region: operators with driver-side
       // fixpoint loops (Hierarchy.closure, Dedup.clusters) do real work
@@ -31,8 +30,7 @@ object ProfileQuery {
         case e: Throwable => println(s"ERR $name ${e.getMessage.take(120)}"); -1L
       }
       println(f"PROF $name rows=$n t=${(System.nanoTime() - t0) / 1e9}%.2f")
-      spark.catalog.clearCache()
-    }
+    } }
     spark.stop()
   }
 }
