@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftbridge.BlockBridge
 import org.apache.spark.sql.SparkSession
 
 /** Session, warm-up and per-query cleanup shared by the harness mains
@@ -11,6 +12,18 @@ object Harness {
     * `SPARK_GRAFT_CPUS` cores, default 4. */
   def session(app: String): SparkSession =
     GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, app)
+
+  /** The query names listed, comma-separated, in `envVar`, or None when
+    * it is unset. A name that is not in [[SparkEntry.queries]] fails
+    * here, before any work: a typo would otherwise select nothing. */
+  def only(envVar: String): Option[Set[String]] =
+    sys.env.get(envVar).map { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty,
+        s"$envVar names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
+    }
 
   /** Absorbs JVM, codegen and parquet-reader start-up before anything is
     * timed; otherwise whichever query runs first is charged for it. */
@@ -33,7 +46,7 @@ object Harness {
     finally {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before.contains(id)) rdd.unpersist(blocking = false)
+        if (!before.contains(id)) BlockBridge.drop(rdd)
       }
     }
   }

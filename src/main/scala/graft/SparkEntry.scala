@@ -2847,11 +2847,10 @@ object SparkEntry {
       // minCommon=2 drops the 81%-of-candidates common=1 tail before
       // the anti/degree joins; top-50's weakest pair shares 4 (sf0.1),
       // 10 (sf0.01), 57 (sf0.001) neighbors — parity spec in GraphOpsSpec
-      // broadcastGraph: the packed edge set here is ~1M 8-byte keys —
-      // catalog-sized next to the wedge stream, so the anti/degree
-      // joins ship it instead of shuffling every candidate pair
+      // the packed edge set here is ~1M 8-byte keys — catalog-sized
+      // next to the wedge stream, so the anti/degree joins broadcast it
       graft.graph.GraphOps.linkPrediction(edges, "src", "dst",
-        maxDeg = 128, k = 50, minCommon = 2, broadcastGraph = true)
+        maxDeg = 128, k = 50, minCommon = 2)
     }),
 
     "w4_funnel" -> ((s, d) => {

@@ -2,26 +2,27 @@ package graft
 
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Every query
+  * runs even when another throws; the run then exits with status 1 and
+  * names each query that threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Harness.session("graft-verify")
-    new java.io.File(outDir).mkdirs()
     // dev-loop subset filter (comma-separated names), like the bench's
     // SPARK_GRAFT_BENCH_ONLY; the driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    val only = Harness.only("SPARK_GRAFT_VERIFY_ONLY")
+    val spark = Harness.session("graft-verify")
+    new java.io.File(outDir).mkdirs()
+    val selected = SparkEntry.queries.filter(kv => only.forall(_(kv._1)))
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
       Harness.dropCreated(spark) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
         }
       }
     }
@@ -41,5 +42,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} of ${selected.size} queries failed: " +
+        failed.sorted.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -81,26 +81,21 @@ final class GraftApi(spark: SparkSession, root: String) {
   /** Export sinks (S5/S6): CSV/parquet with the reference's timestamped
     * naming (`web_app.py:167-175`).
     *
-    * `singleFile` (default true for CSV) mirrors the reference's
-    * one-file download contract — an EXPLICIT serving choice that
-    * funnels the write through one task. Pass false for a bulk export
-    * at scale: every partition writes in parallel and the consumer
-    * globs the directory (or streams via [[streamExportCsv]]). */
+    * CSV and JSONL mirror the reference's one-file download contract
+    * — the write funnels through one task (`coalesce(1)`). A bulk
+    * export at scale streams through [[streamExportCsv]] instead. */
   def writeExport(df: DataFrame, outDir: String, baseName: String,
-      format: String, singleFile: Boolean = true): String = {
+      format: String): String = {
     val fname = s"$outDir/$baseName.$format"
     format match {
       case "csv" =>
-        (if (singleFile) df.coalesce(1) else df)
-          .write.option("header", "true").mode("overwrite").csv(fname)
+        df.coalesce(1).write.option("header", "true").mode("overwrite").csv(fname)
       case "parquet" => df.write.mode("overwrite").parquet(fname)
       // JSONL — the training-pipeline interchange format: one JSON
-      // object per line, rendered ON THE EXECUTORS by `to_json` (the
-      // same executor-side rendering contract as streamExportCsv), so a
-      // bulk export (singleFile = false) writes every partition in
-      // parallel and a dataloader globs the part files
+      // object per line, rendered by `to_json` (the same executor-side
+      // rendering contract as streamExportCsv)
       case "jsonl" =>
-        (if (singleFile) df.coalesce(1) else df)
+        df.coalesce(1)
           .select(to_json(struct(df.columns.map(col): _*)).as("value"))
           .write.mode("overwrite").text(fname)
       case other => throw new IllegalArgumentException(s"unknown format $other")

@@ -1,6 +1,7 @@
 package graft.catalog
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.spark.graftbridge.BlockBridge
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -84,7 +85,7 @@ object ArchiveStore {
     * executor storage until a GC lets the ContextCleaner find them. */
   private[graft] def release(checkpointed: DataFrame): Unit =
     checkpointed.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case r: LogicalRDD => BlockBridge.drop(r.rdd)
       case _ => ()
     }
 
@@ -93,13 +94,13 @@ object ArchiveStore {
     * (task per tiny file, footer overhead). Upserts already write each
     * rewritten date as one file. Rewrites each listed date
     * partition — or every partition with more than `maxFilesPerDate`
-    * files when none are listed — into `targetFiles` file(s) via a
-    * dynamic partition overwrite. Pure layout maintenance: rows are
-    * unchanged, and untouched partitions keep their files byte-for-byte
-    * (same guarantee the upsert relies on). Run it as the maintenance
-    * job between ingest windows. */
+    * files when none are listed — into one file via a dynamic partition
+    * overwrite. Pure layout maintenance: rows are unchanged, and
+    * untouched partitions keep their files byte-for-byte (same guarantee
+    * the upsert relies on). Run it as the maintenance job between ingest
+    * windows. */
   def compact(spark: SparkSession, path: String, dates: Seq[String] = Nil,
-      maxFilesPerDate: Int = 4, targetFiles: Int = 1): Unit = {
+      maxFilesPerDate: Int = 4): Unit = {
     if (!exists(path)) return
     val toCompact: Seq[String] =
       if (dates.nonEmpty) dates
@@ -115,7 +116,7 @@ object ArchiveStore {
     val rows = spark.read.parquet(path)
       .filter(col("p_date").isin(toCompact: _*))
       .select(cols.map(col): _*)
-      .repartition(targetFiles, col("timestamp")) // timestamp-clustered files
+      .repartition(1, col("timestamp")) // one task: one file per date
       .localCheckpoint() // break lineage: overwrite targets the read path
     try overwriteDates(rows, path) finally release(rows)
   }

@@ -100,12 +100,12 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
     id
   }
 
-  // ---- M2: insert attribute + optional derived backfill ------------------
+  // ---- M2: insert attribute + derived backfill ---------------------------
   // (reference database.py:494-536: formula -> validate refs, backfill,
   // register trigger; our "trigger" is the formula column consumed by
   // graft.streaming.DerivedStream)
   def insertAttribute(elementId: Int, name: String, kks: Option[String] = None,
-      formula: Option[String] = None, backfill: Boolean = true): Int = {
+      formula: Option[String] = None): Int = {
     require(!elements.filter(col("element_id") === elementId).isEmpty,
       s"element $elementId does not exist")
     formula.foreach(f => Formula.validateRefs(f, attributes))
@@ -115,7 +115,7 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
     val row = Seq((elementId, id, name, kks, formula))
       .toDF("element_id", "attribute_id", "name", "kks", "formula")
     writeDim("attribute", attributes.unionByName(row))
-    formula.filter(_ => backfill).foreach { f =>
+    formula.foreach { f =>
       appendArchive(Formula.backfill(archive, f, id))
     }
     id
@@ -123,8 +123,7 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
 
   // ---- M3: update attribute (derived only, reference database.py:961-1072)
   def updateAttribute(attributeId: Int, name: Option[String] = None,
-      kks: Option[String] = None, formula: Option[String] = None,
-      recomputeArchive: Boolean = true): Unit = {
+      kks: Option[String] = None, formula: Option[String] = None): Unit = {
     val attr = attributes.filter(col("attribute_id") === attributeId)
     require(!attr.isEmpty, s"attribute $attributeId does not exist")
     require(attr.head().getAs[String]("formula") != null,
@@ -140,7 +139,7 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
         when(col("attribute_id") === attributeId && lit(formula.isDefined), lit(formula.orNull))
           .otherwise(col("formula")))
     writeDim("attribute", updated)
-    formula.filter(_ => recomputeArchive).foreach { f =>
+    formula.foreach { f =>
       rewriteArchive(archive.filter(col("attribute_id") =!= attributeId))
       appendArchive(Formula.backfill(archive, f, attributeId))
     }

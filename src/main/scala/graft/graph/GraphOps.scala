@@ -39,14 +39,12 @@ object GraphOps {
     * is iters × O(|E|) with no driver involvement and no all-pairs
     * anywhere. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 3, broadcastState: Boolean = true): DataFrame = {
+      iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
     // the (node, score) state is |V|-sized — catalog-scale next to the
-    // edge table, so by default every superstep BROADCASTS it and the
-    // edge stream never shuffles for the join (one combinable groupBy
-    // on dst per round is the only exchange). At billion-node scale set
-    // broadcastState = false and bucket the edge table by src instead.
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
+    // edge table, and it must fit a broadcast: every superstep
+    // BROADCASTS it, so the edge stream never shuffles for the join (one
+    // combinable groupBy on dst per round is the only exchange).
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
@@ -63,14 +61,14 @@ object GraphOps {
     var state = base.withColumn("score", lit(PrScale))
     for (_ <- 1 to iters) {
       val insum = e.join(
-        hint(state.filter(col("outdeg") > 0)
+        broadcast(state.filter(col("outdeg") > 0)
           .select(col("id").as("src"), expr("score div outdeg").as("__c"))),
         Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("__c")).as("__insum"))
       // checkpoint each superstep: without it round i's broadcast
       // re-derives rounds 1..i-1 from scratch (O(iters²) work — the
       // Dedup.clusters per-hop lesson)
-      state = base.join(hint(insum), Seq("id"), "left")
+      state = base.join(broadcast(insum), Seq("id"), "left")
         .select(col("id"), col("outdeg"),
           (lit(PrScale * 3 / 20) +
             expr("(17 * coalesce(__insum, CAST(0 AS BIGINT))) div 20")).as("score"))
@@ -93,11 +91,10 @@ object GraphOps {
     * aggregate, NO window sort. iters × O(|E|), the [[pageRank]]
     * superstep shape. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 2, broadcastState: Boolean = true): DataFrame = {
+      iters: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
-    // labels are |V|-sized — broadcast by default, same contract as
-    // [[pageRank]]'s broadcastState
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
+    // labels are |V|-sized and broadcast — they must fit a broadcast,
+    // as [[pageRank]]'s state must
     val sym = edges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
@@ -109,14 +106,14 @@ object GraphOps {
       .localCheckpoint(false)
     var labels = nodes.withColumn("label", col("id"))
     for (_ <- 1 to iters) {
-      val best = e.join(hint(labels.select(col("id").as("v"), col("label"))), Seq("v"))
+      val best = e.join(broadcast(labels.select(col("id").as("v"), col("label"))), Seq("v"))
         .groupBy(col("u").as("id"), col("label")).agg(count(lit(1)).as("__n"))
         .groupBy("id")
         .agg(min(struct((-col("__n")).as("negn"), col("label").as("l"))).as("__b"))
         .select(col("id"), col("__b.l").as("label"))
       // per-round checkpoint — same O(iters²) re-derivation guard as
       // [[pageRank]]
-      labels = nodes.join(hint(best), Seq("id"), "left")
+      labels = nodes.join(broadcast(best), Seq("id"), "left")
         .select(col("id"), coalesce(col("label"), col("id")).as("label"))
         .localCheckpoint(false)
     }
@@ -166,14 +163,11 @@ object GraphOps {
     * oriented edge table, O(m^1.5) wedge rows worst case, no all-pairs
     * and no iteration. Output is one row: (n_edges, n_wedges,
     * n_triangles) — exact BIGINTs. */
-  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String,
-      broadcastEdges: Boolean = true): DataFrame = {
-    // with broadcastEdges (default) the oriented edge table — |E| thin
-    // long pairs — broadcasts to both the wedge build and the closure
-    // probe, so the wedge stream (the O(m^1.5) bulk) NEVER shuffles:
-    // the whole census is one scan → flatmap → broadcast-semi → count.
-    // Past broadcast scale, set false and bucket by src instead.
-    def hint(df: DataFrame): DataFrame = if (broadcastEdges) broadcast(df) else df
+  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    // the oriented edge table — |E| thin long pairs, which must fit a
+    // broadcast — ships to both the wedge build and the closure probe, so
+    // the wedge stream (the O(m^1.5) bulk) NEVER shuffles: the whole
+    // census is one scan → flatmap → broadcast-semi → count.
     val u = edges.select(col(srcCol).cast("long").as("__s"),
       col(dstCol).cast("long").as("__d"))
       .filter(col("__s").isNotNull && col("__d").isNotNull && col("__s") =!= col("__d"))
@@ -184,8 +178,8 @@ object GraphOps {
     val deg = u.select(col("a").as("id")).union(u.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
     val o = u
-      .join(hint(deg.select(col("id").as("a"), col("d").as("da"))), Seq("a"))
-      .join(hint(deg.select(col("id").as("b"), col("d").as("db"))), Seq("b"))
+      .join(broadcast(deg.select(col("id").as("a"), col("d").as("da"))), Seq("a"))
+      .join(broadcast(deg.select(col("id").as("b"), col("d").as("db"))), Seq("b"))
       .select(
         when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("a"))
           .otherwise(col("b")).as("src"),
@@ -193,13 +187,13 @@ object GraphOps {
           .otherwise(col("a")).as("dst"))
       .localCheckpoint(false) // both wedge sides + the closure probe
     val wedges = o.select(col("src").as("wa"), col("dst").as("wb"))
-      .join(hint(o.select(col("src").as("wb"), col("dst").as("wc"))), Seq("wb"))
+      .join(broadcast(o.select(col("src").as("wb"), col("dst").as("wc"))), Seq("wb"))
     // ONE pass over the wedge stream: the oriented edge set is distinct,
     // so the closure left-join matches at most once per wedge — wedge
     // and triangle counts come out of the same aggregate instead of
     // running the O(m^1.5) join twice
     val counted = wedges
-      .join(hint(o.withColumn("__hit", lit(1L))),
+      .join(broadcast(o.withColumn("__hit", lit(1L))),
         wedges("wa") === o("src") && wedges("wc") === o("dst"), "left")
       .agg(count(lit(1)).as("n_wedges"),
         // outer coalesce: a wedge-free graph aggregates ZERO rows and a
@@ -225,8 +219,7 @@ object GraphOps {
     * joins + combinable per-label counts; m is a broadcast 1-row
     * scalar, never collected. */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
-      labels: DataFrame, broadcastState: Boolean = true): DataFrame = {
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
+      labels: DataFrame): DataFrame = {
     val u = edges.select(col(srcCol).cast("long").as("__s"),
       col(dstCol).cast("long").as("__d"))
       .filter(col("__s").isNotNull && col("__d").isNotNull && col("__s") =!= col("__d"))
@@ -238,21 +231,21 @@ object GraphOps {
       col("label").cast("long").as("label"))
     val nodes = u.select(col("a").as("id")).union(u.select(col("b").as("id")))
       .distinct()
-      .join(hint(lab), Seq("id"), "left")
+      .join(broadcast(lab), Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
       .localCheckpoint(false)
     val m = u.agg(count(lit(1)).as("__m"))
     val intra = u
-      .join(hint(nodes.select(col("id").as("a"), col("label").as("__la"))), Seq("a"))
-      .join(hint(nodes.select(col("id").as("b"), col("label").as("__lb"))), Seq("b"))
+      .join(broadcast(nodes.select(col("id").as("a"), col("label").as("__la"))), Seq("a"))
+      .join(broadcast(nodes.select(col("id").as("b"), col("label").as("__lb"))), Seq("b"))
       .filter(col("__la") === col("__lb"))
       .groupBy(col("__la").as("label")).agg(count(lit(1)).as("__ec"))
     val degSum = u.select(col("a").as("id")).union(u.select(col("b").as("id")))
-      .join(hint(nodes), Seq("id"))
+      .join(broadcast(nodes), Seq("id"))
       .groupBy("label").agg(count(lit(1)).as("__kc"))
-    degSum.join(hint(intra), Seq("label"), "left")
+    degSum.join(broadcast(intra), Seq("label"), "left")
       .select(col("label"), coalesce(col("__ec"), lit(0L)).as("__ec"), col("__kc"))
-      .crossJoin(hint(m)) // 1-row scalar
+      .crossJoin(broadcast(m)) // 1-row scalar
       .agg(count(lit(1)).as("n_communities"),
         first(col("__m")).as("m_edges"),
         sum(lit(4L) * col("__m") * col("__ec") - col("__kc") * col("__kc"))
@@ -301,13 +294,12 @@ object GraphOps {
     * each triangle to its three edges — one combinable count per
     * canonical edge. Edges in no triangle are absent (join back with a
     * coalesce-0 where that matters). */
-  private def edgeSupport(u: DataFrame,
-      hint: DataFrame => DataFrame): DataFrame = {
+  private def edgeSupport(u: DataFrame): DataFrame = {
     val deg = u.select(col("a").as("id")).union(u.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
     val o = u
-      .join(hint(deg.select(col("id").as("a"), col("d").as("da"))), Seq("a"))
-      .join(hint(deg.select(col("id").as("b"), col("d").as("db"))), Seq("b"))
+      .join(broadcast(deg.select(col("id").as("a"), col("d").as("da"))), Seq("a"))
+      .join(broadcast(deg.select(col("id").as("b"), col("d").as("db"))), Seq("b"))
       .select(
         when(struct(col("da"), col("a")) < struct(col("db"), col("b")), col("a"))
           .otherwise(col("b")).as("src"),
@@ -315,8 +307,8 @@ object GraphOps {
           .otherwise(col("a")).as("dst"))
       .localCheckpoint(false) // wedge sides + closure probe
     val tri = o.select(col("src").as("wa"), col("dst").as("wb"))
-      .join(hint(o.select(col("src").as("wb"), col("dst").as("wc"))), Seq("wb"))
-      .join(hint(o.select(col("src").as("wa"), col("dst").as("wc"))),
+      .join(broadcast(o.select(col("src").as("wb"), col("dst").as("wc"))), Seq("wb"))
+      .join(broadcast(o.select(col("src").as("wa"), col("dst").as("wc"))),
         Seq("wa", "wc"), "left_semi")
     tri.select(explode(array(
         struct(least(col("wa"), col("wb")).as("a"), greatest(col("wa"), col("wb")).as("b")),
@@ -343,10 +335,10 @@ object GraphOps {
     * window sort; per-round localCheckpoint keeps the unrolled plan
     * linear. */
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      rounds: Int = 2, broadcastEdges: Boolean = true): DataFrame = {
+      rounds: Int = 2): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     require(rounds >= 1 && rounds <= 6, s"unrolled rounds must be in [1,6], got $rounds")
-    def hint(df: DataFrame): DataFrame = if (broadcastEdges) broadcast(df) else df
+    // the edge set broadcasts as in [[triangleCount]] and must fit one
     var u = edges.select(col(srcCol).cast("long").as("__s"),
       col(dstCol).cast("long").as("__d"))
       .filter(col("__s").isNotNull && col("__d").isNotNull && col("__s") =!= col("__d"))
@@ -355,11 +347,11 @@ object GraphOps {
       .distinct()
       .localCheckpoint(false)
     for (_ <- 1 to rounds) {
-      val keep = edgeSupport(u, hint).filter(col("support") >= k - 2)
-      u = u.join(hint(keep.select("a", "b")), Seq("a", "b"), "left_semi")
+      val keep = edgeSupport(u).filter(col("support") >= k - 2)
+      u = u.join(broadcast(keep.select("a", "b")), Seq("a", "b"), "left_semi")
         .localCheckpoint(false)
     }
-    u.join(hint(edgeSupport(u, hint)), Seq("a", "b"), "left")
+    u.join(broadcast(edgeSupport(u)), Seq("a", "b"), "left")
       .select(col("a"), col("b"),
         coalesce(col("support"), lit(0L)).as("support"))
   }
@@ -451,15 +443,14 @@ object GraphOps {
     * the FINAL surviving set, so `min(core_deg) >= k` iff converged.
     *
     * 100 TB shape per round: the |V|-sized survivor set joins the edge
-    * table twice (src gate, dst gate) — broadcast by default, same
-    * contract as [[pageRank]]'s broadcastState; past broadcast scale
-    * bucket the edge table by src — plus one combinable count groupBy.
+    * table twice (src gate, dst gate) — broadcast, so the survivor set
+    * must fit a broadcast as [[pageRank]]'s state must — plus one
+    * combinable count groupBy.
     * rounds × O(|E|), nothing pairwise, no driver loops. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, rounds: Int = 3, broadcastState: Boolean = true): DataFrame = {
+      k: Int, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 10, s"unrolled rounds must be in [1,10], got $rounds")
     require(k >= 1, s"k must be >= 1, got $k")
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
     val sym = edges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
@@ -471,15 +462,15 @@ object GraphOps {
     for (_ <- 1 to rounds) {
       // degree within the induced subgraph: BOTH endpoints must survive
       alive = e
-        .join(hint(alive.select(col("id").as("u"))), Seq("u"))
-        .join(hint(alive.select(col("id").as("v"))), Seq("v"))
+        .join(broadcast(alive.select(col("id").as("u"))), Seq("u"))
+        .join(broadcast(alive.select(col("id").as("v"))), Seq("v"))
         .groupBy(col("u").as("id")).agg(count(lit(1)).as("__deg"))
         .filter(col("__deg") >= k)
         .select("id")
         .localCheckpoint(false) // same O(rounds²) re-derivation guard
     }
-    e.join(hint(alive.select(col("id").as("u"))), Seq("u"))
-      .join(hint(alive.select(col("id").as("v"))), Seq("v"))
+    e.join(broadcast(alive.select(col("id").as("u"))), Seq("u"))
+      .join(broadcast(alive.select(col("id").as("v"))), Seq("v"))
       .groupBy(col("u").as("id")).agg(count(lit(1)).as("core_deg"))
   }
 
@@ -560,10 +551,8 @@ object GraphOps {
     * once (broadcast; a seed list is catalog-sized by definition), then
     * iters × (edge⋈state + one combinable sum). */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, iters: Int = 3,
-      broadcastState: Boolean = true): DataFrame = {
+      seeds: DataFrame, seedCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
@@ -577,18 +566,18 @@ object GraphOps {
     val base = e.select(col("src").as("id"), lit(1L).as("__one"))
       .union(e.select(col("dst").as("id"), lit(0L).as("__one")))
       .groupBy("id").agg(sum("__one").as("outdeg"))
-      .join(hint(seedIds), Seq("id"), "left")
+      .join(broadcast(seedIds), Seq("id"), "left")
       .select(col("id"), col("outdeg"),
         coalesce(col("__seed"), lit(0)).as("__seed"))
       .localCheckpoint(false)
     var state = base.withColumn("score", col("__seed") * lit(PrScale))
     for (_ <- 1 to iters) {
       val insum = e.join(
-        hint(state.filter(col("outdeg") > 0 && col("score") > 0)
+        broadcast(state.filter(col("outdeg") > 0 && col("score") > 0)
           .select(col("id").as("src"), expr("score div outdeg").as("__c"))),
         Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("__c")).as("__insum"))
-      state = base.join(hint(insum), Seq("id"), "left")
+      state = base.join(broadcast(insum), Seq("id"), "left")
         .select(col("id"), col("outdeg"), col("__seed"),
           (col("__seed") * lit(PrScale * 3 / 20) +
             expr("(17 * coalesce(__insum, CAST(0 AS BIGINT))) div 20")).as("score"))
@@ -644,9 +633,8 @@ object GraphOps {
     * (score·max(w) < 2^63). Scale shape: identical to the parents. */
   def personalizedPageRankWeighted(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, seeds: DataFrame, seedCol: String,
-      iters: Int = 3, broadcastState: Boolean = true): DataFrame = {
+      iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"),
       col(weightCol).cast("long").as("w"))
@@ -661,19 +649,19 @@ object GraphOps {
     val base = e.select(col("src").as("id"), col("w").as("__w"))
       .union(e.select(col("dst").as("id"), lit(0L).as("__w")))
       .groupBy("id").agg(sum("__w").as("outw"))
-      .join(hint(seedIds), Seq("id"), "left")
+      .join(broadcast(seedIds), Seq("id"), "left")
       .select(col("id"), col("outw"),
         coalesce(col("__seed"), lit(0)).as("__seed"))
       .localCheckpoint(false)
     var state = base.withColumn("score", col("__seed") * lit(PrScale))
     for (_ <- 1 to iters) {
       val insum = e.join(
-        hint(state.filter(col("outw") > 0 && col("score") > 0)
+        broadcast(state.filter(col("outw") > 0 && col("score") > 0)
           .select(col("id").as("src"), col("score"), col("outw"))),
         Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg(sum(expr("(score * w) div outw")).as("__insum"))
-      state = base.join(hint(insum), Seq("id"), "left")
+      state = base.join(broadcast(insum), Seq("id"), "left")
         .select(col("id"), col("outw"), col("__seed"),
           (col("__seed") * lit(PrScale * 3 / 20) +
             expr("(17 * coalesce(__insum, CAST(0 AS BIGINT))) div 20")).as("score"))
@@ -739,10 +727,8 @@ object GraphOps {
     * each superstep joins it with the broadcast (id, score, wsum)
     * state and lands one combinable sum on dst. */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, iters: Int = 3,
-      broadcastState: Boolean = true): DataFrame = {
+      weightCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"),
       col(weightCol).cast("long").as("w"))
@@ -761,12 +747,12 @@ object GraphOps {
       // state carries (score, outw) into the join instead of a
       // precomputed per-node quotient — still |V|-thin, still broadcast
       val insum = e.join(
-        hint(state.filter(col("outw") > 0)
+        broadcast(state.filter(col("outw") > 0)
           .select(col("id").as("src"), col("score"), col("outw"))),
         Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg(sum(expr("(score * w) div outw")).as("__insum"))
-      state = base.join(hint(insum), Seq("id"), "left")
+      state = base.join(broadcast(insum), Seq("id"), "left")
         .select(col("id"), col("outw"),
           (lit(PrScale * 3 / 20) +
             expr("(17 * coalesce(__insum, CAST(0 AS BIGINT))) div 20")).as("score"))
@@ -817,10 +803,8 @@ object GraphOps {
     * weight sum; NULL/non-positive weights drop. Same per-round shape:
     * one thin equi-join, two combinable aggregates, no window sort. */
   def labelPropagationWeighted(edges: DataFrame, srcCol: String,
-      dstCol: String, weightCol: String, iters: Int = 2,
-      broadcastState: Boolean = true): DataFrame = {
+      dstCol: String, weightCol: String, iters: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
     val sym = edges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"),
       col(weightCol).cast("long").as("w"))
@@ -834,12 +818,12 @@ object GraphOps {
       .localCheckpoint(false)
     var labels = nodes.withColumn("label", col("id"))
     for (_ <- 1 to iters) {
-      val best = e.join(hint(labels.select(col("id").as("v"), col("label"))), Seq("v"))
+      val best = e.join(broadcast(labels.select(col("id").as("v"), col("label"))), Seq("v"))
         .groupBy(col("u").as("id"), col("label")).agg(sum("w").as("__n"))
         .groupBy("id")
         .agg(min(struct((-col("__n")).as("negn"), col("label").as("l"))).as("__b"))
         .select(col("id"), col("__b.l").as("label"))
-      labels = nodes.join(hint(best), Seq("id"), "left")
+      labels = nodes.join(broadcast(best), Seq("id"), "left")
         .select(col("id"), coalesce(col("label"), col("id")).as("label"))
         .localCheckpoint(false)
     }
@@ -890,7 +874,7 @@ object GraphOps {
     * the two sides never collide.
     *
     * Scale shape: each half-step is the [[pageRank]] superstep (edge ⋈
-    * state equi-join + one combinable sum, state broadcast by default)
+    * state equi-join + one combinable sum, state broadcast)
     * plus a SCALAR max cross-joined back — broadcast, never collected.
     * Overflow headroom: raw sums are ≤ 10^6·maxdeg and the rescale
     * multiplies by 10^6, so maxdeg must stay < ~9·10^6 — comfortably
@@ -900,9 +884,8 @@ object GraphOps {
     * wrapping the rescale under non-ANSI arithmetic and corrupting the
     * hub/authority ranking. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 2, broadcastState: Boolean = true): DataFrame = {
+      iters: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
@@ -934,19 +917,19 @@ object GraphOps {
       .drop("__maxdeg")
       .withColumn("hub", lit(PrScale)).withColumn("auth", lit(PrScale))
     for (_ <- 1 to iters) {
-      val araw = e.join(hint(state.select(col("id").as("src"), col("hub"))), Seq("src"))
+      val araw = e.join(broadcast(state.select(col("id").as("src"), col("hub"))), Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("hub")).as("__raw"))
       val authed = state.select("id", "hub")
-        .join(hint(araw), Seq("id"), "left")
-        .crossJoin(hint(araw.agg(max(col("__raw")).as("__m"))))
+        .join(broadcast(araw), Seq("id"), "left")
+        .crossJoin(broadcast(araw.agg(max(col("__raw")).as("__m"))))
         .select(col("id"), col("hub"),
           expr("(coalesce(__raw, CAST(0 AS BIGINT)) * 1000000) div __m").as("auth"))
         .localCheckpoint(false) // per-half-step: the pageRank O(iters²) guard
-      val hraw = e.join(hint(authed.select(col("id").as("dst"), col("auth"))), Seq("dst"))
+      val hraw = e.join(broadcast(authed.select(col("id").as("dst"), col("auth"))), Seq("dst"))
         .groupBy(col("src").as("id")).agg(sum(col("auth")).as("__raw"))
       state = authed.select("id", "auth")
-        .join(hint(hraw), Seq("id"), "left")
-        .crossJoin(hint(hraw.agg(max(col("__raw")).as("__m"))))
+        .join(broadcast(hraw), Seq("id"), "left")
+        .crossJoin(broadcast(hraw.agg(max(col("__raw")).as("__m"))))
         .select(col("id"),
           expr("(coalesce(__raw, CAST(0 AS BIGINT)) * 1000000) div __m").as("hub"),
           col("auth"))
@@ -999,14 +982,13 @@ object GraphOps {
     *
     * Scale shape per round: reached-frontier ⋈ edges on the node id +
     * one combinable min groupBy — the [[pageRank]] superstep; state is
-    * (id, dist) and broadcast by default. The join deliberately sends
-    * the whole REACHED set, not just the new frontier: a frontier
-    * delta would need an extra anti-join per round, and min-combine
-    * makes re-relaxation free. */
+    * (id, dist) and broadcast, so it must fit one. The join
+    * deliberately sends the whole REACHED set, not just the new
+    * frontier: a frontier delta would need an extra anti-join per
+    * round, and min-combine makes re-relaxation free. */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, hops: Int = 3, broadcastState: Boolean = true): DataFrame = {
+      seeds: DataFrame, hops: Int = 3): DataFrame = {
     require(hops >= 1 && hops <= 10, s"unrolled hops must be in [1,10], got $hops")
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
     val sym = edges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
@@ -1016,15 +998,15 @@ object GraphOps {
     val nodes = e.select(col("u").as("id")).distinct()
       .localCheckpoint(false)
     val seedIds = seeds.select(col(seeds.columns.head).cast("long").as("id")).distinct()
-    var state = nodes.join(hint(seedIds.withColumn("__s", lit(0L))), Seq("id"), "left")
+    var state = nodes.join(broadcast(seedIds.withColumn("__s", lit(0L))), Seq("id"), "left")
       .select(col("id"), col("__s").as("dist"))
       .localCheckpoint(false)
     for (_ <- 1 to hops) {
       val relaxed = e.join(
-        hint(state.filter(col("dist").isNotNull)
+        broadcast(state.filter(col("dist").isNotNull)
           .select(col("id").as("u"), col("dist"))), Seq("u"))
         .groupBy(col("v").as("id")).agg(min(col("dist") + 1).as("__nd"))
-      state = state.join(hint(relaxed), Seq("id"), "left")
+      state = state.join(broadcast(relaxed), Seq("id"), "left")
         .select(col("id"),
           when(col("dist").isNull, col("__nd"))
             .when(col("__nd").isNull, col("dist"))
@@ -1103,15 +1085,11 @@ object GraphOps {
     * identical-result two-key path) instead of corrupting packs. */
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
       maxDeg: Int = 256, k: Int = 50, minCommon: Int = 1,
-      packIds: Boolean = true, broadcastGraph: Boolean = false): DataFrame = {
-    // broadcastGraph: ship the packed edge set into the anti-join and
-    // the degree table into the endpoint joins instead of shuffling the
-    // candidate stream — right whenever the EDGE LIST fits a broadcast
-    // (thin 8-byte packed keys; ~8 MB per million edges), which is the
-    // same catalog-size contract as [[pageRank]]'s broadcastState. On a
-    // billion-edge graph leave it false: candidates then shuffle on the
-    // packed key they are already aggregated by.
-    def ghint(df: DataFrame): DataFrame = if (broadcastGraph) broadcast(df) else df
+      packIds: Boolean = true): DataFrame = {
+    // the packed edge set and the degree table broadcast into the
+    // anti-join and the endpoint joins instead of shuffling the candidate
+    // stream — the EDGE LIST must fit a broadcast (thin 8-byte packed
+    // keys; ~8 MB per million edges), as [[pageRank]]'s state must.
     val u0 = edges.select(col(srcCol).cast("long").as("__s"),
         col(dstCol).cast("long").as("__d"))
       .filter(col("__s").isNotNull && col("__d").isNotNull && col("__s") =!= col("__d"))
@@ -1172,7 +1150,7 @@ object GraphOps {
         .groupBy("p").agg(count(lit(1)).as("common"))
         .filter(col("common") >= minCommon)
       packed
-        .join(ghint(u.select((shiftleft(col("a"), 32) + col("b")).as("p"))),
+        .join(broadcast(u.select((shiftleft(col("a"), 32) + col("b")).as("p"))),
           Seq("p"), "left_anti")
         .select(shiftright(col("p"), 32).as("a"),
           col("p").bitwiseAND(lit(4294967295L)).as("b"), col("common"))
@@ -1181,11 +1159,11 @@ object GraphOps {
         .repartition(aggParts, col("a"), col("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("common"))
         .filter(col("common") >= minCommon)
-        .join(ghint(u), Seq("a", "b"), "left_anti")
+        .join(broadcast(u), Seq("a", "b"), "left_anti")
     }
     candidates
-      .join(ghint(deg.select(col("v").as("a"), col("dg").as("da"))), Seq("a"))
-      .join(ghint(deg.select(col("v").as("b"), col("dg").as("db"))), Seq("b"))
+      .join(broadcast(deg.select(col("v").as("a"), col("dg").as("da"))), Seq("a"))
+      .join(broadcast(deg.select(col("v").as("b"), col("dg").as("db"))), Seq("b"))
       .withColumn("jaccard", col("common").cast("double") /
         (col("da") + col("db") - col("common")).cast("double"))
       .select("a", "b", "common", "da", "db", "jaccard")
@@ -1242,9 +1220,8 @@ object GraphOps {
     * subset you embed. */
   def randomWalks(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, steps: Int = 4,
-      salt: String = "walk:", broadcastState: Boolean = true): DataFrame = {
+      salt: String = "walk:"): DataFrame = {
     require(steps >= 1 && steps <= 10, s"unrolled steps must be in [1,10], got $steps")
-    def hint(df: DataFrame): DataFrame = if (broadcastState) broadcast(df) else df
     import graft.text.TextOps.{CharMul, P}
     val sym = edges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"))
@@ -1269,7 +1246,7 @@ object GraphOps {
       val hopDeg = deg.select(col("u").as("__du"), col("__dg").as("__ddg"))
       val hopIdx = idx.select(col("u").as("__iu"), col("__i").as("__ii"),
         col("v").as("__iv"))
-      state = hint(state).join(hopDeg, col("node") === col("__du"))
+      state = broadcast(state).join(hopDeg, col("node") === col("__du"))
         .select(col("walk"), col("node"), (pick % col("__ddg")).as("__pick"))
         .join(hopIdx, col("__iu") === col("node") && col("__ii") === col("__pick"))
         .select(col("walk"), col("__iv").as("node"))

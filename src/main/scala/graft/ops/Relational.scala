@@ -459,12 +459,12 @@ object Relational {
     * unchanged by null-side and value comparison over the tracked
     * columns (null-safe `<=>`, so a NULL→value change is an update,
     * not noise). The change-data-capture primitive for publishing
-    * incremental table versions; emit `unchanged = false` rows only
-    * and the output is the delta a downstream MERGE applies. Scale
+    * incremental table versions: unchanged rows are dropped, so the
+    * output is the delta a downstream MERGE applies. Scale
     * shape: one key shuffle (or zero on bucketed layouts via
     * [[materializeBucketed]]); values compare map-side. */
   def snapshotDiff(before: DataFrame, after: DataFrame, keys: Seq[String],
-      trackCols: Seq[String], includeUnchanged: Boolean = false): DataFrame = {
+      trackCols: Seq[String]): DataFrame = {
     require(keys.nonEmpty && trackCols.nonEmpty)
     val b = before.select((keys ++ trackCols).map(col): _*)
       .withColumn("__b", lit(1))
@@ -476,11 +476,11 @@ object Relational {
       .when(col("__a").isNull, lit("delete"))
       .when(changed, lit("update"))
       .otherwise(lit("unchanged"))
-    val out = b.join(a, keys, "full_outer").withColumn("op", op)
+    b.join(a, keys, "full_outer").withColumn("op", op)
       .select(keys.map(col) :+ col("op") :++
         trackCols.flatMap(c => Seq(col(c).as(s"before_$c"),
           col(s"__a_$c").as(s"after_$c"))): _*)
-    if (includeUnchanged) out else out.filter(col("op") =!= "unchanged")
+      .filter(col("op") =!= "unchanged")
   }
 
   /** Per-file min/max stats MANIFEST over a parquet layout — the

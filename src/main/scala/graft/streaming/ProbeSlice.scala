@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   * sorted row groups, so a probe reads the touched slice of the log,
   * not all of it. The sets are the ones the append paths already
   * broadcast whole to every executor, so driver-side collection is the
-  * same size class. Above the cap (or cap <= 0): a semi join,
-  * broadcast when `bcast` (the pre-round-10 behavior).
+  * same size class. Above the cap (or cap <= 0): a broadcast semi
+  * join, so the id set must fit a broadcast.
   *
   * CONTRACT: the FIRST column of `ids` must be LongType — every
   * registry key in the tree is a 64-bit id and the literal path reads
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
 private[streaming] object ProbeSlice {
 
   def apply(log: DataFrame, keyCol: String, ids: DataFrame,
-      literalCap: Int, bcast: Boolean): DataFrame = {
+      literalCap: Int): DataFrame = {
     val keys =
       if (literalCap <= 0) null
       else {
@@ -35,8 +35,8 @@ private[streaming] object ProbeSlice {
     if (keys != null && keys.isEmpty) log.filter(lit(false))
     else if (keys != null) log.filter(col(keyCol).isInCollection(keys))
     else {
-      val probe = ids.select(col(ids.columns.head).as(keyCol))
-      log.join(if (bcast) broadcast(probe) else probe, Seq(keyCol), "left_semi")
+      log.join(broadcast(ids.select(col(ids.columns.head).as(keyCol))),
+        Seq(keyCol), "left_semi")
     }
   }
 }

@@ -71,25 +71,24 @@ object RegistryMaintenance {
     extends RegistrySpec
 
   /** Compact every listed registry up to the shared frontier. Skips
-    * dirs with nothing to fold; safe to run on any cadence.
-    * `targetFiles` sizes each folded base (1 is right for
-    * test/segment-sized registries; size it to the fold's real output
-    * on a deployment where a base holds billions of claims). */
+    * dirs with nothing to fold; safe to run on any cadence. One task
+    * writes each folded base as one file, which relies on a registry
+    * base staying segment-sized. */
   def maintainAll(spark: SparkSession, registries: Seq[RegistrySpec],
-      upToBatchId: Long, targetFiles: Int = 1): Unit =
+      upToBatchId: Long): Unit =
     registries.foreach {
       case NearDupClaims(dir) =>
-        foldInPlace(spark, dir, upToBatchId, targetFiles)(
+        foldInPlace(spark, dir, upToBatchId)(
           _.groupBy("band", "k0", "k1")
             .agg(min("claimed_ts").as("claimed_ts")))
       case GramClaims(dir) =>
-        foldInPlace(spark, dir, upToBatchId, targetFiles)(
+        foldInPlace(spark, dir, upToBatchId)(
           _.select("h").distinct())
       case TokenCounts(dir) =>
-        foldInPlace(spark, dir, upToBatchId, targetFiles)(
+        foldInPlace(spark, dir, upToBatchId)(
           _.groupBy("h").agg(sum("cnt").as("cnt")))
       case KmvSketches(dir, groupCol, k) =>
-        foldInPlace(spark, dir, upToBatchId, targetFiles)(rows =>
+        foldInPlace(spark, dir, upToBatchId)(rows =>
           Sketches.kmvMerge(rows.select(col(groupCol), col("h")), groupCol, k)
             .select(col(groupCol), col("h"))) // drop the merge's rank column
       case ErRegistry(registryDir, mergeDir, idCol) =>
@@ -125,14 +124,14 @@ object RegistryMaintenance {
     * apply the registry's merge law, install as the new `batch_id=-1`
     * base and prune the folded partitions — all via the loss-safe
     * [[RegistryFs]] order. */
-  private def foldInPlace(spark: SparkSession, dir: String, upTo: Long,
-      targetFiles: Int)(fold: DataFrame => DataFrame): Unit = {
+  private def foldInPlace(spark: SparkSession, dir: String, upTo: Long)(
+      fold: DataFrame => DataFrame): Unit = {
     if (!hasPartitions(spark, dir)) return
     val (fs, p) = fsFor(spark, dir)
     RegistryFs.recover(fs, p)
     val below = spark.read.option("basePath", dir).parquet(dir)
       .filter(col("batch_id") < upTo).drop("batch_id")
-    fold(below).coalesce(targetFiles).write.mode("overwrite")
+    fold(below).coalesce(1).write.mode("overwrite")
       .parquet(RegistryFs.staging(p).toString)
     RegistryFs.swapBase(fs, p, upTo)
   }

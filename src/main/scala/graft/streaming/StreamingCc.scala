@@ -92,13 +92,11 @@ object StreamingCc {
     * losing components' members, and overwrite this batch's edge +
     * label partitions. */
   def batchStep(spark: SparkSession, edgesDir: String, labelsDir: String,
-      srcCol: String, dstCol: String,
-      broadcastAffected: Boolean = true,
-      base: Option[CcBase] = None,
+      srcCol: String, dstCol: String, base: Option[CcBase] = None,
       probeLiteralCap: Int = 100000)(
       batch: DataFrame, batchId: Long): Unit = {
     def slice(log: DataFrame, keyCol: String, ids: DataFrame): DataFrame =
-      ProbeSlice(log, keyCol, ids, probeLiteralCap, broadcastAffected)
+      ProbeSlice(log, keyCol, ids, probeLiteralCap)
     // with a bucketed base the `batch_id=-1` parquet base is EXCLUDED
     // from probe reads (the tables are its read-optimized copy); live
     // post-compaction partitions stack on top, per probe direction

@@ -117,26 +117,24 @@ object StreamingGraph {
     * and overwrite this batch's edge + score partitions. */
   def batchStep(spark: SparkSession, edgesDir: String, scoresDir: String,
       srcCol: String, dstCol: String, iters: Int,
-      broadcastAffected: Boolean = true, base: Option[GraphBase] = None,
-      probeLiteralCap: Int = 100000)(
+      base: Option[GraphBase] = None, probeLiteralCap: Int = 100000)(
       batch: DataFrame, batchId: Long): Unit = {
     require(iters >= 1 && iters <= 10, s"iters must be in [1,10], got $iters")
     base.foreach(gb => require(gb.iters == iters,
       s"GraphBase was compacted at iters=${gb.iters}, batchStep got $iters"))
-    // broadcastAffected: ship the (append-sized) frontier/affected/work
-    // id sets into every probe of the edge log and score registry
-    // instead of shuffling those tables — right whenever appends disturb
-    // a bounded neighborhood (the operator's whole premise; measured
-    // at the 100× fixture the log would otherwise SHUFFLE once per
-    // closure hop). Set false only for appends that rewire most of the
-    // graph — at which point a batch rerun is the better tool anyway.
-    def hint(df: DataFrame): DataFrame = if (broadcastAffected) broadcast(df) else df
+    // the (append-sized) frontier/affected/work id sets broadcast into
+    // every probe of the edge log and score registry instead of
+    // shuffling those tables (measured at the 100× fixture the log would
+    // otherwise SHUFFLE once per closure hop). The id sets must fit a
+    // broadcast: appends disturb a bounded neighborhood, the operator's
+    // whole premise; an append that rewires most of the graph is a job
+    // for a batch rerun.
     // slice(log, key, ids): the log rows whose key ∈ ids — pushed
     // In-filter (prunes the [[GraphBase]] bucket files / sorted row
     // groups) below `probeLiteralCap`, semi join above (see
     // [[ProbeSlice]])
     def slice(log: DataFrame, keyCol: String, ids: DataFrame): DataFrame =
-      ProbeSlice(log, keyCol, ids, probeLiteralCap, broadcastAffected)
+      ProbeSlice(log, keyCol, ids, probeLiteralCap)
     val sc = scoreCols(iters)
     // with a bucketed base the `batch_id=-1` parquet base is EXCLUDED
     // from probe reads (the tables are its read-optimized copy); live

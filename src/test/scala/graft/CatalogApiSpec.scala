@@ -316,6 +316,32 @@ class CatalogApiSpec extends SparkSpec {
     assert(api.databases() === Seq("site1"))
   }
 
+  test("api: allElements orders by (level, element_id); the cache mappings carry every row") {
+    val (api, cat) = freshApi()
+    val plantA = cat.insertElement("PlantA", level = 0)
+    val unitA = cat.insertElement("UnitA", level = 1, parentId = Some(plantA))
+    val plantB = cat.insertElement("PlantB", level = 0)
+    val unitB = cat.insertElement("UnitB", level = 1, parentId = Some(plantB))
+    val temp = cat.insertAttribute(unitA, "temp")
+    val press = cat.insertAttribute(unitB, "press")
+    val flow = cat.insertAttribute(plantA, "flow")
+
+    val all = api.allElements("site1").collect()
+      .map(r => (r.getAs[Int]("level"), r.getAs[Int]("element_id"))).toSeq
+    assert(all === Seq((0, plantA), (0, plantB), (1, unitA), (1, unitB)))
+
+    val (elementMap, attributeMap) = api.updateCacheMappings("site1")
+    val paths = elementMap.collect()
+      .map(r => r.getAs[Int]("element_id") -> r.getAs[String]("path")).toMap
+    assert(paths === Map(plantA -> "PlantA", unitA -> "PlantA|UnitA",
+      plantB -> "PlantB", unitB -> "PlantB|UnitB"))
+    val rawPaths = attributeMap.collect()
+      .map(r => r.getAs[Int]("attribute_id") -> r.getAs[String]("raw_path")).toMap
+    assert(rawPaths === Map(temp -> "\\\\AFSERVER\\PlantA\\UnitA|temp",
+      press -> "\\\\AFSERVER\\PlantB\\UnitB|press",
+      flow -> "\\\\AFSERVER\\PlantA|flow"))
+  }
+
   test("api: databases() lists namespaces through the Hadoop FS API " +
       "(scheme-qualified root, non-directory entries skipped)") {
     // the defect class this guards: a java.io.File walk silently returns
