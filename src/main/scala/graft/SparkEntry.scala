@@ -4213,8 +4213,8 @@ object SparkEntry {
         .orderBy("source", "rk")
     }),
 
-    // Z-order layout audit: the Morton key that materializeZOrdered
-    // clusters files by, summarized per key range — each bucket (a
+    // Z-order layout audit: the Morton key (Relational.zOrderKey) a
+    // range-partitioned write clusters files by, summarized per key range — each bucket (a
     // contiguous z-range = one file's worth under repartitionByRange)
     // covers a small HYPER-RECTANGLE of (user, minute) space, which is
     // what makes min-max stats prune range scans on EITHER column at

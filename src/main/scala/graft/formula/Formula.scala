@@ -122,11 +122,10 @@ object Formula {
     build(parse(formula))
   }
 
-  /** Pure-Scala evaluation against concrete attribute values — used by
-    * the stateful streaming path ([[graft.streaming.DerivedStream]]),
-    * where the computation runs inside a state-update function, not a
-    * Column. Division by zero raises (ArithmeticException) to match the
-    * compiled Column's ANSI behavior and PostgreSQL. */
+  /** Pure-Scala evaluation against concrete attribute values — the
+    * reference interpreter that `FormulaSpec`'s property test holds
+    * [[compile]] to. Division by zero raises (ArithmeticException) to
+    * match the compiled Column's ANSI behavior and PostgreSQL. */
   def eval(formula: String, values: Map[Int, Double]): Double = {
     def go(a: FormulaAst): Double = a match {
       case Ref(id) => values.getOrElse(id,

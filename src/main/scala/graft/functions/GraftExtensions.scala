@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** SQL registration for the native expressions, so `spark.sql` users get
@@ -13,11 +12,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *  - `float_vec_dot(a, b)`          — [[FloatVecDot]]
   *  - `float_double_vec_dot(a, b)`   — [[FloatDoubleVecDot]]
   *
-  * Two entry points, same builders:
-  *  - deploy-time: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  *    (injected before the session exists);
-  *  - runtime: [[GraftFunctions.register]] on an already-running session
-  *    (idempotent — re-registration overwrites with the same builder).
+  * Installed at session build with
+  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`, as
+  * [[graft.GraftSession]] does.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -52,12 +49,4 @@ object GraftFunctions {
         require(args.length == 2, "float_double_vec_dot(a, b) takes 2 arguments")
         FloatDoubleVecDot(args.head, args(1))
       }))
-
-  /** Register into a live session's FunctionRegistry. */
-  def register(spark: SparkSession): Unit = {
-    val reg: FunctionRegistry = spark.sessionState.functionRegistry
-    all.foreach { case (ident, info, builder) =>
-      reg.registerFunction(ident, info, builder)
-    }
-  }
 }

@@ -376,8 +376,9 @@ object Relational {
     * multi-column space instead of thin slices of the leading column —
     * the layout Delta's OPTIMIZE ZORDER / Iceberg's sort-order z-curve
     * produce, in plain Spark expressions. Callers pre-scale each column
-    * into [0, 2^bits) (rank, modulo, or min-max scale — the spec shows
-    * the pattern); `bits * cols.length` must stay ≤ 62. */
+    * into [0, 2^bits) (rank, modulo, or min-max scale — the
+    * `pipe_zorder` cell shows the pattern); `bits * cols.length` must
+    * stay ≤ 62. */
   def zOrderKey(cols: Seq[Column], bits: Int = 16): Column = {
     require(cols.nonEmpty && bits * cols.length <= 62,
       s"need 1+ cols and bits*n <= 62 (got ${cols.length} cols x $bits bits)")
@@ -401,28 +402,6 @@ object Relational {
     val terms = for (i <- 0 until bits; (c, j) <- cols.zipWithIndex)
       yield s"((($c) // ${1L << i}) % 2) * ${1L << (i * n + j)}"
     terms.mkString("(CAST(", " + ", " AS BIGINT))")
-  }
-
-  /** Write `df` as parquet clustered on the Z-order key of `cols`:
-    * range-partition on the key (one write-time shuffle), sort within
-    * each file, drop the key. Every output file then covers a small
-    * hyper-rectangle of the clustered columns, so the per-file /
-    * per-row-group min-max stats are TIGHT in EVERY clustered dimension
-    * — a range filter on any of them skips most of the data (parquet
-    * row-group pruning; file-level skipping too under a stats manifest
-    * à la Delta/Iceberg). Linear sort gives this for the leading column
-    * only; Z-order buys it for all of them at the cost of slightly
-    * looser leading-column bounds. The complement of
-    * [[materializeBucketed]]: bucketing optimizes equi-JOIN locality,
-    * Z-order optimizes multi-column range SCANS. */
-  def materializeZOrdered(df: DataFrame, path: String, cols: Seq[Column],
-      nFiles: Int, bits: Int = 16): DataFrame = {
-    df.withColumn("__z", zOrderKey(cols, bits))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
   }
 
   /** Numeric band (theta) join: match rows whose INTEGER-unit values
@@ -481,53 +460,6 @@ object Relational {
         trackCols.flatMap(c => Seq(col(c).as(s"before_$c"),
           col(s"__a_$c").as(s"after_$c"))): _*)
       .filter(col("op") =!= "unchanged")
-  }
-
-  /** Per-file min/max stats MANIFEST over a parquet layout — the
-    * Delta/Iceberg file-skipping metadata as a plain table: one
-    * combinable scan grouped by `input_file_name`, one row per file
-    * with `min_<col>`/`max_<col>` bounds plus a row count. Built once
-    * per layout write (amortized over every subsequent pruned read);
-    * the result is FILE-catalog-sized, not data-sized. Pairs with
-    * [[materializeZOrdered]]: Z-order makes the per-file boxes tight
-    * in every clustered dimension, which is what makes the manifest
-    * selective. */
-  def statsManifest(spark: org.apache.spark.sql.SparkSession, path: String,
-      cols: Seq[String]): DataFrame = {
-    require(cols.nonEmpty, "manifest needs at least one column")
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) :+
-      count(lit(1)).as("n_rows")
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Manifest-pruned range read: keep only the files whose
-    * [min, max] box INTERSECTS every requested range (a file that
-    * cannot match is never opened), then re-apply the exact predicate
-    * to the survivors — so the result is row-identical to the full
-    * filtered scan, only cheaper. The manifest filter collects a FILE
-    * LIST (bounded by the layout's file count, catalog-sized by
-    * construction); zero surviving files short-circuits to an empty
-    * frame without touching storage. `ranges` are inclusive bounds per
-    * column. */
-  def manifestPrunedRead(spark: org.apache.spark.sql.SparkSession,
-      path: String, manifest: DataFrame,
-      ranges: Seq[(String, Column, Column)]): DataFrame = {
-    require(ranges.nonEmpty, "pruned read needs at least one range")
-    val boxHit = ranges.map { case (c, lo, hi) =>
-      col(s"min_$c") <= hi && col(s"max_$c") >= lo
-    }.reduce(_ && _)
-    val exact = ranges.map { case (c, lo, hi) =>
-      col(c) >= lo && col(c) <= hi
-    }.reduce(_ && _)
-    val files = manifest.filter(boxHit).select("file")
-      .collect().map(_.getString(0))
-    if (files.isEmpty)
-      spark.read.parquet(path).filter(lit(false))
-    else
-      spark.read.parquet(files: _*).filter(exact)
   }
 
   /** Skew-safe equi-join (the 100 TB tool for hot keys, e.g. one sensor

@@ -299,7 +299,7 @@ object Similarity {
     * (id, cluster, packed int8 code) and DROPS the raw floats. Linear
     * in the corpus by nature; run once, reuse per query batch —
     * persist via [[graft.ops.Relational.materializeBucketed]] on
-    * `cluster` exactly as [[ivfPqIndexMaterialized]] does. */
+    * `cluster`, as for [[ivfPqIndex]]. */
   def ivfSq8Index(corpus: DataFrame, dim: Int, nCentroids: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
       trainMod: Long = 1L): IvfSq8Model = {
@@ -413,22 +413,6 @@ object Similarity {
       .withColumn("rank", row_number().over(wC))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
-  }
-
-  /** [[ivfSq8Index]] with the index PERSISTED as a parquet table
-    * bucketed (and per-file sorted) by `cluster` — identical deployment
-    * contract to [[ivfPqIndexMaterialized]]: the linear build runs ONCE,
-    * cluster-keyed reads are exchange-free, and
-    * [[ivfSq8Query]]`(pruneBuckets = true)` prunes whole bucket FILES at
-    * the scan. The stored rows are (id, cluster, dim-byte binary). */
-  def ivfSq8IndexMaterialized(corpus: DataFrame, dim: Int,
-      path: String, tableName: String, buckets: Int = 16,
-      nCentroids: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      trainMod: Long = 1L): IvfSq8Model = {
-    val model = ivfSq8Index(corpus, dim, nCentroids, idCol, vecCol, trainMod)
-    model.copy(index = graft.ops.Relational.materializeBucketed(
-      model.index, path, tableName, "cluster", buckets))
   }
 
   /** Build + query in one call (the bench/oracle entry; deployments
@@ -1434,10 +1418,10 @@ object Similarity {
   /** A trained IVF-PQ index: the driver-side coarse centroids and PQ
     * codebooks (catalog-sized), plus the distributed index table
     * (id, cluster, m code ints — NO raw vectors; ~40 bytes/vector vs
-    * 256+ for the raw floats). At 100 TB this table is built ONCE via
-    * [[ivfPqIndexMaterialized]] (parquet, bucketed by `cluster`),
-    * maintained incrementally via [[ivfPqIndexAppend]] /
-    * [[ivfPqIndexAppendStream]], and amortized across every query
+    * 256+ for the raw floats). At 100 TB this table is built ONCE and
+    * persisted with [[graft.ops.Relational.materializeBucketed]]
+    * (parquet, bucketed by `cluster`), maintained incrementally via
+    * [[ivfPqIndexAppend]], and amortized across every query
     * batch — which is why [[ivfPqQuery]]'s per-batch cost is
     * probe-limited, not corpus-linear. */
   final case class IvfPqModel(
@@ -1501,28 +1485,6 @@ object Similarity {
         .as("__pos"))
   }
 
-  /** [[ivfPqIndex]] with the index PERSISTED as a parquet table bucketed
-    * (and per-file sorted) by `cluster` — the deployment shape the model
-    * doc describes: the linear build runs ONCE, every subsequent query
-    * batch probes the stored table. Bucketing by the probe key means
-    * (a) the probe join and any cluster-keyed aggregate read the index
-    * with ZERO exchanges (bucket distribution satisfies them), and
-    * (b) a probed-cluster IN-filter prunes whole BUCKETS at the scan
-    * ([[ivfPqQuery]]'s `pruneBuckets` — `SelectedBucketsCount` in the
-    * plan), so a query batch reads ~nProbe·queries/nCentroids of the
-    * index FILES, not just of its rows. Registered in the session
-    * catalog ([[graft.ops.Relational.materializeBucketed]] — bucket
-    * metadata lives there, not in the files). */
-  def ivfPqIndexMaterialized(corpus: DataFrame, dim: Int,
-      path: String, tableName: String, buckets: Int = 16,
-      nCentroids: Int = 8, m: Int = 8, ksub: Int = 16,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      trainMod: Long = 1L): IvfPqModel = {
-    val model = ivfPqIndex(corpus, dim, nCentroids, m, ksub, idCol, vecCol, trainMod)
-    model.copy(index = graft.ops.Relational.materializeBucketed(
-      model.index, path, tableName, "cluster", buckets))
-  }
-
   /** Incremental index maintenance: encode `newVecs` with the FROZEN
     * model and APPEND them to the persisted bucketed table — no
     * retrain, no rebuild, no touch of existing files (appends add new
@@ -1552,42 +1514,6 @@ object Similarity {
     rows.find(_.getString(0) == "Num Buckets")
       .map(_.getString(1).trim.toInt)
       .getOrElse(sys.error(s"$tableName is not bucketed"))
-  }
-
-  /** Streaming face of [[ivfPqIndexAppend]]: newly ingested vectors are
-    * assigned + encoded in foreachBatch and appended to the bucketed
-    * index table — the ANN store stays query-ready while the corpus
-    * grows, and a full rebuild is only ever a POLICY decision (model
-    * drift), not an operational requirement. Restart-safe the usual
-    * foreachBatch way: the checkpoint replays an unacknowledged batch,
-    * whose rows land as duplicate index entries. [[ivfPqQuery]] dedups
-    * its (tiny) candidate set before the exact re-rank, so a replayed
-    * batch can never put the same neighbor in a top-k twice; the only
-    * residual effect is the duplicate burning one approximate-window
-    * slot until a compaction sweep rewrites the table. */
-  def ivfPqIndexAppendStream(model: IvfPqModel, vecs: DataFrame, dim: Int,
-      tableName: String, checkpointPath: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // foreachBatch runs in a CLONED session whose inserts refresh only
-    // the clone's relation cache — the owning session (which resolved
-    // the table when the model was built) would keep serving the stale
-    // file listing and silently miss every appended row; refresh it
-    // explicitly after each batch
-    val owner = vecs.sparkSession
-    vecs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          ivfPqIndexAppend(model, batch, dim, tableName, idCol, vecCol)
-          owner.catalog.refreshTable(tableName)
-        }
-        ()
-      }
-      .start()
   }
 
   /** Table maintenance for an appended ANN index (IVF-PQ or IVF-SQ8 —
@@ -1623,8 +1549,8 @@ object Similarity {
     * `nProbe/nCentroids` of the index plus queries × nCandidates
     * re-rank rows.
     *
-    * `pruneBuckets` — for a [[ivfPqIndexMaterialized]] cluster-bucketed
-    * index: one tiny extra job computes the batch's distinct probed
+    * `pruneBuckets` — for an index persisted bucketed by `cluster`
+    * ([[graft.ops.Relational.materializeBucketed]]): one tiny extra job computes the batch's distinct probed
     * cluster ids (≤ min(queries × nProbe, nCentroids) ints — catalog-
     * sized, never data-sized) and pins them as an IN-filter on the
     * bucket column, which Spark turns into BUCKET PRUNING at the scan
@@ -1673,9 +1599,9 @@ object Similarity {
     val wA = Window.partitionBy(col("query_id")).orderBy(col("approx_q").desc, col("neighbor_id"))
     // the dropDuplicates is a no-op on a cleanly-built index (each vector
     // lives in ONE cluster so pairs are unique) and costs one shuffle of
-    // a queries × nCandidates frame; it exists so a replayed streaming
-    // append ([[ivfPqIndexAppendStream]]) can never rank the same
-    // neighbor twice in a top-k
+    // a queries × nCandidates frame; it exists so a replayed
+    // [[ivfPqIndexAppend]] (a foreachBatch retry) can never rank the
+    // same neighbor twice in a top-k
     val cand = approx.withColumn("__ra", row_number().over(wA))
       .filter(col("__ra") <= nCandidates).select("query_id", "neighbor_id")
       .dropDuplicates("query_id", "neighbor_id")

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.formula.Formula
 import graft.ingest.Ingest
@@ -209,68 +209,6 @@ object DerivedStream {
       .agg(max(col("rho")).as("register"))
       .select(col("w.start").as("window_start"), col("attribute_id"),
         col("bucket"), col("register"))
-  }
-
-  /** T3 streaming-native dedup: watermarked
-    * `dropDuplicatesWithinWatermark` on the archive key. The batch
-    * pipeline dedups within a micro-batch ([[Ingest.coerceBatch]]);
-    * this drops RE-DELIVERIES ACROSS micro-batches too, holding key
-    * state only until the watermark passes — the bounded-state
-    * equivalent of the reference's unique-constraint
-    * `ON CONFLICT DO NOTHING` (reference `database/database.py:608-641`).
-    * Input must already be coerced archive rows with an event-time
-    * `timestamp`. */
-  def dedupAcrossBatches(coerced: DataFrame, watermarkDelay: String = "10 minutes"): DataFrame =
-    coerced
-      .withWatermark("timestamp", watermarkDelay)
-      .dropDuplicatesWithinWatermark("attribute_id", "timestamp")
-
-  /** T4, stateful per-row variant (the reference trigger's exact shape,
-    * SURVEY.md §2.9): state is keyed by TIMESTAMP and holds the source
-    * values seen so far for that instant; whenever a row completes (or
-    * changes) a timestamp's source set, the derived row is (re)emitted —
-    * Update semantics, the streaming analog of the trigger's
-    * `ON CONFLICT DO UPDATE` last-write-wins. State expires via
-    * event-time timeout once the watermark passes (bounded state; the
-    * per-batch recompute of [[start]] stays the default — this variant
-    * buys per-row emission latency when sources straggle ACROSS
-    * micro-batches).
-    *
-    * Input must be a coerced archive stream with a watermark already
-    * set on `timestamp`. Output: (attribute_id, timestamp, value).
-    */
-  def statefulDerived(coerced: DataFrame, d: DerivedDef): DataFrame = {
-    val spark = coerced.sparkSession
-    import spark.implicits._
-    val ids = Formula.refs(d.formula)
-    val idSet = ids.toSet
-    val derivedId = d.attributeId
-    val formula = d.formula
-    val src = coerced
-      .filter(col("attribute_id").isin(ids: _*) && col("value").isNotNull)
-      .select(col("attribute_id").cast("int"), col("timestamp"),
-        col("value").cast("double"))
-      .as[(Int, java.sql.Timestamp, Double)]
-    src.groupByKey(_._2)
-      .flatMapGroupsWithState[Map[Int, Double], (Int, java.sql.Timestamp, Double)](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (ts: java.sql.Timestamp, rows: Iterator[(Int, java.sql.Timestamp, Double)],
-         state: GroupState[Map[Int, Double]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val before = state.getOption.getOrElse(Map.empty[Int, Double])
-            val merged = before ++ rows.map(r => r._1 -> r._3)
-            state.update(merged)
-            // keep per-ts state until the watermark passes the instant
-            state.setTimeoutTimestamp(ts.getTime, "0 seconds")
-            val complete = idSet.subsetOf(merged.keySet)
-            val changed = merged != before
-            if (complete && changed)
-              Iterator((derivedId, ts, Formula.eval(formula, merged)))
-            else Iterator.empty
-          }
-      }
-      .toDF("attribute_id", "timestamp", "value")
   }
 
   /** Wire a streaming source of raw points into an archive directory,

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Relational
 
@@ -129,21 +128,5 @@ object StreamingAttribution {
     latest.write.mode("overwrite")
       .parquet(RegistryFs.staging(dirPath).toString)
     RegistryFs.swapBase(fs, dirPath, upToBatchId)
-  }
-
-  /** Continuous form: foreachBatch over the registry table. */
-  def start(events: DataFrame, registryDir: String, outDir: String,
-      checkpointPath: String, windowUs: Long = 86400000000L,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = events.sparkSession
-    events.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          batchStep(spark, registryDir, outDir, windowUs)(batch, batchId)
-        ()
-      }
-      .start()
   }
 }

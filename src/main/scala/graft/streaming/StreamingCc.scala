@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** INCREMENTAL connected components over edge appends — the registry
   * discipline ([[StreamingGraph]]'s shape) for the CC kernel that
@@ -253,21 +252,5 @@ object StreamingCc {
     val lLbl = graft.ops.Relational.materializeBucketed(
       lBase, s"$tablePath/labels_label", s"${tablePrefix}_labels_label", Seq("label"), buckets, onePerBucket = true)
     CcBase(eSrc, lId, lLbl)
-  }
-
-  /** Continuous form: foreachBatch over the two registries. */
-  def start(edges: DataFrame, edgesDir: String, labelsDir: String,
-      srcCol: String, dstCol: String, checkpointPath: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = edges.sparkSession
-    edges.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          batchStep(spark, edgesDir, labelsDir, srcCol, dstCol)(batch, batchId)
-        ()
-      }
-      .start()
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.Dedup
 
@@ -146,25 +145,6 @@ object StreamingDedup {
     graft.ops.Relational.materializeBucketed(claims, path, tableName, Seq("h"), buckets, onePerBucket = true)
   }
 
-  /** Wire a streaming document source through the substring suppressor:
-    * cleaned docs under `cleanDir/batch_id=*`, first-seen gram claims
-    * under `registryDir/batch_id=*`. */
-  def startSubstring(docs: DataFrame, registryDir: String, cleanDir: String,
-      checkpointPath: String, idCol: String = "doc_id",
-      textCol: String = "text", k: Int = 8,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          substringBatchStep(spark, registryDir, cleanDir, idCol, textCol, k)(batch, batchId)
-        ()
-      }
-      .start()
-  }
-
   /** One idempotent micro-batch step of STREAMING canonical dedup
     * ([[Dedup.canonicalSuppress]] semantics — exact dedup after
     * case/punct/whitespace normalization, for a corpus that arrives as
@@ -187,25 +167,6 @@ object StreamingDedup {
       Dedup.canonicalSuppress(batch, registry, idCol, textCol)
     kept.write.mode("overwrite").parquet(s"$keptDir/batch_id=$batchId")
     claims.write.mode("overwrite").parquet(s"$registryDir/batch_id=$batchId")
-  }
-
-  /** Wire a streaming document source through the canonical dedup:
-    * kept (id, canon_h) rows under `keptDir/batch_id=*`, canon-hash
-    * claims under `registryDir/batch_id=*`. */
-  def startCanon(docs: DataFrame, registryDir: String, keptDir: String,
-      checkpointPath: String, idCol: String = "doc_id",
-      textCol: String = "text",
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          canonBatchStep(spark, registryDir, keptDir, idCol, textCol)(batch, batchId)
-        ()
-      }
-      .start()
   }
 
   /** One idempotent micro-batch step of STREAMING chunk-level dedup
@@ -233,27 +194,6 @@ object StreamingDedup {
     claims.write.mode("overwrite").parquet(s"$registryDir/batch_id=$batchId")
   }
 
-  /** Wire a streaming document source through the chunk-level dedup:
-    * per-doc decisions under `decisionsDir/batch_id=*`, chunk-hash
-    * claims under `registryDir/batch_id=*`. */
-  def startCdc(docs: DataFrame, registryDir: String, decisionsDir: String,
-      checkpointPath: String, idCol: String = "doc_id",
-      textCol: String = "text", window: Int = 3, divisor: Int = 16,
-      minSharedPct: Int = 50,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          cdcBatchStep(spark, registryDir, decisionsDir, idCol, textCol,
-            window, divisor, minSharedPct)(batch, batchId)
-        ()
-      }
-      .start()
-  }
-
   /** One micro-batch of streaming novelty scoring
     * ([[graft.dedup.Dedup.noveltySuppress]]): the batch scores against
     * every EARLIER batch's gram claims, its first-seen grams append to
@@ -273,25 +213,6 @@ object StreamingDedup {
       graft.dedup.Dedup.noveltySuppress(batch, registry, idCol, textCol, n)
     scored.write.mode("overwrite").parquet(s"$scoredDir/batch_id=$batchId")
     claims.write.mode("overwrite").parquet(s"$registryDir/batch_id=$batchId")
-  }
-
-  /** Wire a streaming document source through the novelty scorer:
-    * per-batch scores under `scoredDir/batch_id=*`, first-seen gram
-    * claims under `registryDir/batch_id=*`. */
-  def startNovelty(docs: DataFrame, registryDir: String, scoredDir: String,
-      checkpointPath: String, idCol: String = "doc_id",
-      textCol: String = "text", n: Int = 3,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          noveltyBatchStep(spark, registryDir, scoredDir, idCol, textCol, n)(batch, batchId)
-        ()
-      }
-      .start()
   }
 
   /** The token-COUNT registry across all batches (h, cnt, batch_id) —
@@ -367,42 +288,5 @@ object StreamingDedup {
       reg, idCol, textCol, minDocs)
     cleaned.write.mode("overwrite").parquet(s"$cleanDir/batch_id=$batchId")
     claims.write.mode("overwrite").parquet(s"$registryDir/batch_id=$batchId")
-  }
-
-  /** Wire a streaming document source through the drift monitor:
-    * per-batch drift rows under `driftDir/batch_id=*`, token counts
-    * under `registryDir/batch_id=*`. */
-  def startDrift(docs: DataFrame, registryDir: String, driftDir: String,
-      checkpointPath: String, textCol: String = "text",
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          driftBatchStep(spark, registryDir, driftDir, textCol)(batch, batchId)
-        ()
-      }
-      .start()
-  }
-
-  /** Wire a streaming document source through the suppressor. `docs`
-    * must carry (idCol, tsCol, textCol); kept documents land under
-    * `keptDir/batch_id=*`, bucket claims under `registryDir/batch_id=*`. */
-  def start(docs: DataFrame, registryDir: String, keptDir: String,
-      checkpointPath: String, idCol: String = "doc_id", tsCol: String = "ts",
-      textCol: String = "text", n: Int = 3,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          batchStep(spark, registryDir, keptDir, idCol, tsCol, textCol, n)(batch, batchId)
-        ()
-      }
-      .start()
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.Dedup
 import graft.er.EntityResolution
@@ -174,23 +173,5 @@ object StreamingEr {
     reg.select(col(idCol), col("entity"))
       .join(broadcast(closed), Seq("entity"), "left")
       .select(col(idCol), coalesce(col("__final"), col("entity")).as("entity"))
-  }
-
-  /** Continuous form: foreachBatch over the two registries. */
-  def start(records: DataFrame, registryDir: String, mergeDir: String,
-      checkpointPath: String, idCol: String, nameCol: String,
-      blockCols: Seq[String], maxDist: Int,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = records.sparkSession
-    records.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          batchStep(spark, registryDir, mergeDir, idCol, nameCol,
-            blockCols, maxDist)(batch, batchId)
-        ()
-      }
-      .start()
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.graph.GraphOps.PrScale
 
@@ -370,21 +369,5 @@ object StreamingGraph {
     val sId = graft.ops.Relational.materializeBucketed(
       sBase, s"$tablePath/scores_id", s"${tablePrefix}_scores_id", Seq("id"), buckets, onePerBucket = true)
     GraphBase(eSrc, eDst, sId, iters)
-  }
-
-  /** Continuous form: foreachBatch over the two registries. */
-  def start(edges: DataFrame, edgesDir: String, scoresDir: String,
-      srcCol: String, dstCol: String, iters: Int, checkpointPath: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = edges.sparkSession
-    edges.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          batchStep(spark, edgesDir, scoresDir, srcCol, dstCol, iters)(batch, batchId)
-        ()
-      }
-      .start()
   }
 }

@@ -13,9 +13,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * its close (last event + gap), i.e. when no in-gap event can still
   * arrive. Deliberately NOT a `flatMapGroupsWithState` hand-roll — the
   * built-in operator gets state-store eviction, RocksDB spill, and
-  * watermark semantics for free, and the custom-state escape hatch is
-  * reserved for shapes the built-ins can't express (DerivedStream's
-  * per-timestamp formula join is the one real case in this engine).
+  * watermark semantics for free; no operator in this engine needs the
+  * custom-state escape hatch.
   *
   * Scale shape: state is one open-session range per (user, session) —
   * proportional to ACTIVE users, not history; the shuffle is the same

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.text.TextOps
 
@@ -111,21 +110,5 @@ object StreamingStats {
     stats.join(langs, Seq("source")).join(hist, Seq("source"))
       .join(fp, Seq("source"))
       .orderBy("source")
-  }
-
-  /** Continuous form: foreachBatch over the card registries. */
-  def start(docs: DataFrame, dir: String, checkpointPath: String,
-      binWidth: Long = 16L, k: Int = 64,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val spark = docs.sparkSession
-    docs.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          cardBatchStep(spark, dir, binWidth, k)(batch, batchId)
-        ()
-      }
-      .start()
   }
 }

@@ -39,13 +39,6 @@ object TextOps {
 
   def wsTokenCount(text: Column): Column = size(tokens(text))
   def bpeTokenCount(text: Column): Column = size(regexp_extract_all(text, lit(BpeRe), lit(0)))
-
-  /** Polynomial hash of one token string: fold over its characters.
-    * `ascii(substr(t,i,1))` (not split-on-empty, whose trailing-empty
-    * behavior differs between engines). */
-  private def charFoldExpr(tok: String): String =
-    s"aggregate(transform(sequence(1, length($tok)), i -> bigint(ascii(substring($tok, i, 1)))), " +
-      s"0L, (a, c) -> (a * $CharMul + c) % $P)"
   // the lambda variable is deliberately un-capturable (__ci): callers
   // inline arbitrary SQL expressions as $tok, and a plain `i` would be
   // shadow-captured by any outer list_transform/unnest alias named i
@@ -55,9 +48,8 @@ object TextOps {
       s"__ci -> CAST(ascii(substr($tok, __ci, 1)) AS BIGINT))), (a, c) -> (a * $mul + c) % $P)"
 
   /** Hash one token column value (used by dedup minhash/simhash too).
-    * Native codegen'd expression ([[graft.functions.PolyHash]]); the
-    * interpreted HOF char-fold form it replaces is kept as
-    * [[charFoldExpr]] for the SQL twin and documentation. */
+    * Native codegen'd expression ([[graft.functions.PolyHash]]);
+    * [[tokenHashSql]] is the same char fold as the oracle's SQL. */
   def tokenHash(tokCol: String): Column =
     graft.functions.NativeExprs.polyHash(col(tokCol), CharMul, P)
   def tokenHashSql(tokCol: String): String = charFoldSql(tokCol)

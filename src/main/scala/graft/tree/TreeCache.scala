@@ -46,9 +46,13 @@ object TreeCache {
     asList.select(explode(col("roots")).as("node"))
   }
 
+  /** The file's text, read through the Hadoop FileSystem so a `file:`
+    * URI or an `hdfs://` path loads like a local path. */
   private def readRaw(spark: SparkSession, path: String): String = {
-    val txt = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8).trim
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val txt = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
+      finally in.close()
     if (txt.startsWith("[")) txt else s"[$txt]" // single root -> list of one
   }
 

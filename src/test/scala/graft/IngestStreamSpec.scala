@@ -105,71 +105,6 @@ class IngestStreamSpec extends SparkSpec {
     assert(out === Seq(5.0, 66.0))
   }
 
-  test("T3: dropDuplicatesWithinWatermark drops re-deliveries across micro-batches") {
-    val sess = spark
-    import sess.implicits._
-    implicit val sq = sess.sqlContext
-    val dir = Files.createTempDirectory("graft_dedup").toString
-    val mem = MemoryStream[(Int, Timestamp, Double)]
-    val coerced = mem.toDF.toDF("attribute_id", "timestamp", "value")
-    def run(): Unit = {
-      val q = DerivedStream.dedupAcrossBatches(coerced, "10 minutes")
-        .writeStream.format("parquet")
-        .option("path", s"$dir/out").option("checkpointLocation", s"$dir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(120000)
-    }
-    def ts(s: String) = Timestamp.valueOf(s)
-    mem.addData((1, ts("2024-01-01 00:00:00"), 1.0))
-    run()
-    // same key re-delivered in a LATER micro-batch, within the watermark
-    mem.addData((1, ts("2024-01-01 00:00:00"), 999.0), (2, ts("2024-01-01 00:00:30"), 2.0))
-    run()
-    val out = spark.read.parquet(s"$dir/out").orderBy("attribute_id").collect()
-    assert(out.length === 2)
-    assert(out.map(_.getInt(0)).toSeq === Seq(1, 2))
-    assert(out(0).getDouble(2) === 1.0) // first delivery won
-  }
-
-  test("T4 stateful: derived row emits when straggling sources complete, re-emits on update") {
-    val sess = spark
-    import sess.implicits._
-    implicit val sq = sess.sqlContext
-    val dir = Files.createTempDirectory("graft_state").toString
-    val mem = MemoryStream[(Int, Timestamp, Double)]
-    val coerced = mem.toDF.toDF("attribute_id", "timestamp", "value")
-      .withWatermark("timestamp", "1 hour")
-    def ts(s: String) = Timestamp.valueOf(s)
-    def run(): Unit = {
-      val q = DerivedStream.statefulDerived(coerced, DerivedDef(9, "$1 + $2"))
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.write.mode("append").parquet(s"$dir/emitted"); ()
-        }
-        .start()
-      q.awaitTermination(120000)
-    }
-    def emitted: Seq[Double] =
-      if (new java.io.File(s"$dir/emitted").exists())
-        spark.read.parquet(s"$dir/emitted").collect().map(_.getDouble(2)).toSeq.sorted
-      else Seq.empty
-    // batch 1: only $1 arrives for 00:00 -> nothing emitted
-    mem.addData((1, ts("2024-01-01 00:00:00"), 10.0))
-    run()
-    assert(emitted === Seq.empty)
-    // batch 2: $2 completes 00:00 -> derived emitted from held state
-    mem.addData((2, ts("2024-01-01 00:00:00"), 5.0))
-    run()
-    assert(emitted === Seq(15.0))
-    // batch 3: re-delivery changes $1 -> last-write-wins re-emission
-    mem.addData((1, ts("2024-01-01 00:00:00"), 20.0))
-    run()
-    assert(emitted === Seq(15.0, 25.0))
-  }
-
   test("windowedRollup finalizes per-window aggregates under a watermark") {
     val sess = spark
     import sess.implicits._
@@ -750,8 +685,9 @@ class IngestStreamSpec extends SparkSpec {
   test("stateful paths hold under the RocksDB state store (state off-heap, not in executor memory)") {
     // the default in-memory provider caps streaming state at the heap;
     // RocksDB is the 100 TB configuration (state spills to local disk).
-    // Same statefulDerived scenario as T4 and the hllRollup bit-parity
-    // check, assertions unchanged — only the provider differs.
+    // Same sessionization scenario as StreamingSessionsSpec and the
+    // hllRollup bit-parity check, assertions unchanged — only the
+    // provider differs.
     val sess = spark
     import sess.implicits._
     implicit val sq = sess.sqlContext
@@ -760,35 +696,8 @@ class IngestStreamSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       def ts(s: String) = Timestamp.valueOf(s)
-      // statefulDerived: straggler completion then last-write-wins re-emit
-      val dir = Files.createTempDirectory("graft_rocks").toString
-      val mem = MemoryStream[(Int, Timestamp, Double)]
-      val coerced = mem.toDF.toDF("attribute_id", "timestamp", "value")
-        .withWatermark("timestamp", "1 hour")
-      def run(): Unit = {
-        val q = DerivedStream.statefulDerived(coerced, DerivedDef(9, "$1 + $2"))
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", s"$dir/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            b.write.mode("append").parquet(s"$dir/emitted"); ()
-          }
-          .start()
-        q.awaitTermination(120000)
-      }
-      def emitted: Seq[Double] =
-        if (new java.io.File(s"$dir/emitted").exists())
-          spark.read.parquet(s"$dir/emitted").collect().map(_.getDouble(2)).toSeq.sorted
-        else Seq.empty
-      mem.addData((1, ts("2024-01-01 00:00:00"), 10.0))
-      run()
-      assert(emitted === Seq.empty)
-      mem.addData((2, ts("2024-01-01 00:00:00"), 5.0))
-      run()
-      assert(emitted === Seq(15.0))
-      mem.addData((1, ts("2024-01-01 00:00:00"), 20.0))
-      run()
-      assert(emitted === Seq(15.0, 25.0))
+      // StreamingSessions: session-window state stitches across batches
+      StreamingSessionsSpec.checkStitchAndParity(spark)
 
       // hllRollup: streaming registers still equal the batch sketch bit-exactly
       val memH = MemoryStream[(Int, Timestamp, Long)]

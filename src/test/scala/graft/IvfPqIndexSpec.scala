@@ -27,8 +27,9 @@ class IvfPqIndexSpec extends SparkSpec {
   test("materialized index: identical top-k, exchange-free index side, bucket-pruned scan") {
     val dir = Files.createTempDirectory("graft_ivfpq_mat").toString
     spark.sql("DROP TABLE IF EXISTS t_ivfpq_mat")
-    val model = Similarity.ivfPqIndexMaterialized(emb, 64, s"$dir/idx", "t_ivfpq_mat",
-      buckets = 8)
+    val built = Similarity.ivfPqIndex(emb, 64)
+    val model = built.copy(index = graft.ops.Relational.materializeBucketed(
+      built.index, s"$dir/idx", "t_ivfpq_mat", "cluster", 8))
     try {
       // the oracle-pinned one-shot result (s_knn_ivfpq parameterization)
       // must be reproduced exactly from the stored index
@@ -60,8 +61,9 @@ class IvfPqIndexSpec extends SparkSpec {
   test("materialized IVF-SQ8 index: identical top-k, exchange-free index side, bucket-pruned scan") {
     val dir = Files.createTempDirectory("graft_ivfsq8_mat").toString
     spark.sql("DROP TABLE IF EXISTS t_ivfsq8_mat")
-    val model = Similarity.ivfSq8IndexMaterialized(emb, 64, s"$dir/idx", "t_ivfsq8_mat",
-      buckets = 8)
+    val built = Similarity.ivfSq8Index(emb, 64)
+    val model = built.copy(index = graft.ops.Relational.materializeBucketed(
+      built.index, s"$dir/idx", "t_ivfsq8_mat", "cluster", 8))
     try {
       val expect = rows(Similarity.ivfSq8TopK(emb, q, 10, 64))
       assert(rows(Similarity.ivfSq8Query(model, emb, q, 10, 64)) === expect)
@@ -158,9 +160,13 @@ class IvfPqIndexSpec extends SparkSpec {
       val (b1, b2) = b.splitAt(b.length / 2)
       mem.addData(b1.toSeq)
       mem.addData(b2.toSeq)
-      val sq1 = Similarity.ivfPqIndexAppendStream(m1, stream, 64,
-        "t_ivfpq_stream", s"$dir/ckpt")
-      sq1.awaitTermination(120000)
+      // foreachBatch runs in a cloned session whose inserts refresh only
+      // the clone's relation cache: the owning session must refresh the
+      // table after each append or it keeps the stale file listing
+      drainThrough(stream, s"$dir/ckpt") { (batch, _) =>
+        Similarity.ivfPqIndexAppend(m1, batch, 64, "t_ivfpq_stream")
+        spark.catalog.refreshTable("t_ivfpq_stream")
+      }
       assert(indexRows(spark.table("t_ivfpq_stream")) === indexRows(modelFull.index))
     } finally spark.sql("DROP TABLE IF EXISTS t_ivfpq_stream")
   }
@@ -171,8 +177,9 @@ class IvfPqIndexSpec extends SparkSpec {
     val a = emb.filter(col("vec_id") < 250)
     val b = emb.filter(col("vec_id") >= 250)
     // deployment reality: the model only ever saw the first installment
-    val m1 = Similarity.ivfPqIndexMaterialized(a, 64, s"$dir/idx", "t_ivfpq_frozen",
-      buckets = 8)
+    val built = Similarity.ivfPqIndex(a, 64)
+    val m1 = built.copy(index = graft.ops.Relational.materializeBucketed(
+      built.index, s"$dir/idx", "t_ivfpq_frozen", "cluster", 8))
     try {
       val m2 = Similarity.ivfPqIndexAppend(m1, b, 64, "t_ivfpq_frozen")
       val q10 = emb.filter(col("vec_id") < 10)

@@ -163,79 +163,4 @@ class ScaleTechniquesSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS b_lineitem")
     }
   }
-
-  test("z-ordered files bound EVERY clustered column; linear sort bounds only the leading one") {
-    val sess = spark
-    import sess.implicits._
-    // the full 256x256 grid: a and b independent and uniform, so file
-    // statistics measure the LAYOUT, not fixture luck
-    val n = 1 << 16
-    val df = (0 until n).map(id => (id.toLong, id % 256, id / 256))
-      .toDF("id", "a", "b")
-
-    def fileSpans(path: String): Seq[(Double, Double)] = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        .filter(_.getPath.getName.startsWith("part-")).toSeq
-        .map { f =>
-          val r = spark.read.parquet(f.getPath.toString)
-            .agg(min("a"), max("a"), min("b"), max("b")).head()
-          ((r.getInt(1) - r.getInt(0)) / 255.0, (r.getInt(3) - r.getInt(2)) / 255.0)
-        }
-    }
-    def mean(xs: Seq[Double]): Double = xs.sum / xs.size
-
-    // linear sort on (a, b): thin slices of a, every file spans all of b
-    df.repartitionByRange(16, col("a"), col("b"))
-      .sortWithinPartitions("a", "b")
-      .write.mode("overwrite").parquet("/tmp/graft-zorder/linear")
-    val lin = fileSpans("/tmp/graft-zorder/linear")
-
-    val z = Relational.materializeZOrdered(df, "/tmp/graft-zorder/z",
-      Seq(col("a"), col("b")), nFiles = 16, bits = 8)
-    // relayout only: nothing lost or duplicated
-    assert(z.count() === n && z.agg(sum("id")).head().getLong(0) === (0L until n).sum)
-    val zs = fileSpans("/tmp/graft-zorder/z")
-    assert(zs.size > 1 && lin.size > 1)
-
-    // linear: leading column tight, second column unbounded
-    assert(mean(lin.map(_._1)) < 0.15, s"linear a-span ${mean(lin.map(_._1))}")
-    assert(mean(lin.map(_._2)) > 0.9, s"linear b-span ${mean(lin.map(_._2))}")
-    // z-order: BOTH columns bounded well below the linear layout's
-    // unbounded dimension (16 files over a 2^16 morton space = 64x64
-    // squares ~ 0.25 span; boundary files loosen it a little)
-    assert(mean(zs.map(_._1)) < 0.5, s"z a-span ${mean(zs.map(_._1))}")
-    assert(mean(zs.map(_._2)) < 0.5, s"z b-span ${mean(zs.map(_._2))}")
-    // the quantity pruning cares about: the WORST dimension per file
-    assert(mean(zs.map(s => math.max(s._1, s._2))) <
-      0.6 * mean(lin.map(s => math.max(s._1, s._2))))
-
-    // ---- stats manifest + pruned read over the two layouts ----------
-    val manZ = Relational.statsManifest(spark, "/tmp/graft-zorder/z",
-      Seq("a", "b")).localCheckpoint()
-    val manL = Relational.statsManifest(spark, "/tmp/graft-zorder/linear",
-      Seq("a", "b")).localCheckpoint()
-    val box = Seq(("a", lit(10), lit(40)), ("b", lit(100), lit(140)))
-    // row-identical to the full filtered scan
-    val pruned = Relational.manifestPrunedRead(spark, "/tmp/graft-zorder/z",
-      manZ, box)
-    val full = spark.read.parquet("/tmp/graft-zorder/z")
-      .filter(col("a").between(10, 40) && col("b").between(100, 140))
-    assert(pruned.select("id").collect().map(_.getLong(0)).sorted.toSeq ===
-      full.select("id").collect().map(_.getLong(0)).sorted.toSeq)
-    // the payoff: a TRAILING-column range — the linear layout bounds
-    // only its leading column, so every file survives; the z manifest
-    // keeps a fraction
-    def kept(man: org.apache.spark.sql.DataFrame) = man.filter(
-      col("min_b") <= 140 && col("max_b") >= 100).count()
-    assert(kept(manL) === manL.count(),
-      s"linear layout unexpectedly bounded b: kept ${kept(manL)}/${manL.count()}")
-    assert(kept(manZ) < kept(manL),
-      s"z kept ${kept(manZ)} files, linear kept ${kept(manL)}")
-    assert(kept(manZ) < manZ.count(), "manifest pruned nothing")
-    // an impossible box short-circuits to empty without touching files
-    assert(Relational.manifestPrunedRead(spark, "/tmp/graft-zorder/z",
-      manZ, Seq(("a", lit(9999), lit(10000)))).isEmpty)
-  }
 }

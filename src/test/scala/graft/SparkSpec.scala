@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (Spark startup ~10s). */
@@ -15,6 +16,8 @@ object TestSession {
       // match GraftSession: registry-relayout probes rely on bucket
       // pruning, which the auto-disable rule strips from filter-only scans
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+      // match GraftSession: the native SQL functions register at build
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -25,4 +28,20 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfDir: String = TestSession.sfDir
+
+  /** Drain a streaming `rows` frame through a micro-batch step from a
+    * `foreachBatch` query, as a deployment wires one; empty micro-batches
+    * are skipped. Fails if the query fails. */
+  def drainThrough(rows: DataFrame, checkpoint: String)(
+      step: (DataFrame, Long) => Unit): Unit = {
+    rows.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) step(batch, batchId)
+        ()
+      }
+      .start()
+      .awaitTermination(120000)
+  }
 }

@@ -73,11 +73,9 @@ class StreamingDedupSpec extends SparkSpec {
     val docs = corpus
     val mem = MemoryStream[(Long, Long, String)]
     val stream = mem.toDF.toDF("doc_id", "ts", "text")
-    def run(): Unit = {
-      val q = StreamingDedup.start(stream, s"$dir/registry", s"$dir/kept",
-        s"$dir/ckpt", n = 3)
-      q.awaitTermination(120000)
-    }
+    def run(): Unit = drainThrough(stream, s"$dir/ckpt")(
+      StreamingDedup.batchStep(spark, s"$dir/registry", s"$dir/kept",
+        "doc_id", "ts", "text", 3))
     docs.grouped(8).foreach { batch => mem.addData(batch); run() }
 
     val kept = spark.read.parquet(s"$dir/kept")
@@ -127,9 +125,9 @@ class StreamingDedupSpec extends SparkSpec {
     // build a 3-batch registry through the normal streaming path
     docs.grouped(8).foreach { batch =>
       mem.addData(batch)
-      val q = StreamingDedup.start(stream, s"$dir/registry", s"$dir/kept",
-        s"$dir/ckpt", n = 3)
-      q.awaitTermination(120000)
+      drainThrough(stream, s"$dir/ckpt")(
+        StreamingDedup.batchStep(spark, s"$dir/registry", s"$dir/kept",
+          "doc_id", "ts", "text", 3))
     }
     spark.sql("DROP TABLE IF EXISTS t_registry_compact")
     val compacted = StreamingDedup.compactRegistry(

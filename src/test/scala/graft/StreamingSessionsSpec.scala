@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -13,10 +14,19 @@ import graft.streaming.StreamingSessions
   * exactly once. */
 class StreamingSessionsSpec extends SparkSpec {
 
+  test("cross-batch stitch, in-delay late event, batch parity, exactly-once append") {
+    StreamingSessionsSpec.checkStitchAndParity(spark)
+  }
+}
+
+object StreamingSessionsSpec extends org.scalatest.Assertions {
+
   private def ts(min: Long) = Timestamp.from(
     java.time.Instant.parse("2024-01-01T00:00:00Z").plusSeconds(min * 60))
 
-  test("cross-batch stitch, in-delay late event, batch parity, exactly-once append") {
+  /** The sessionization scenario, shared with the RocksDB state-store
+    * case of `IngestStreamSpec`. */
+  def checkStitchAndParity(spark: SparkSession): Unit = {
     val sess = spark
     import sess.implicits._
     implicit val sq = sess.sqlContext

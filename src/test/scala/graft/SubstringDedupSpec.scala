@@ -78,11 +78,9 @@ class SubstringDedupSpec extends SparkSpec {
     val mid = docs(docs.length / 2)._1
     val mem = MemoryStream[(Long, String)]
     val stream = mem.toDF.toDF("doc_id", "text")
-    def run(): Unit = {
-      val q = StreamingDedup.startSubstring(stream, s"$dir/registry",
-        s"$dir/clean", s"$dir/ckpt", k = 8)
-      q.awaitTermination(120000)
-    }
+    def run(): Unit = drainThrough(stream, s"$dir/ckpt")(
+      StreamingDedup.substringBatchStep(spark, s"$dir/registry",
+        s"$dir/clean", "doc_id", "text", 8))
     val (b0, b1) = docs.partition(_._1 < mid)
     mem.addData(b0); run()
     mem.addData(b1); run()
@@ -123,11 +121,9 @@ class SubstringDedupSpec extends SparkSpec {
     val mid = docs(docs.length / 2)._1
     val mem = MemoryStream[(Long, String)]
     val stream = mem.toDF.toDF("doc_id", "text")
-    def run(): Unit = {
-      val q = StreamingDedup.startNovelty(stream, s"$dir/registry",
-        s"$dir/scored", s"$dir/ckpt", n = 3)
-      q.awaitTermination(120000)
-    }
+    def run(): Unit = drainThrough(stream, s"$dir/ckpt")(
+      StreamingDedup.noveltyBatchStep(spark, s"$dir/registry",
+        s"$dir/scored", "doc_id", "text", 3))
     val (b0, b1) = docs.partition(_._1 < mid)
     mem.addData(b0); run()
     mem.addData(b1); run()
@@ -197,11 +193,9 @@ class SubstringDedupSpec extends SparkSpec {
     // of all EARLIER batches' own counts (the cumulative contract)
     val mem = MemoryStream[(Long, String)]
     val stream = mem.toDF.toDF("doc_id", "text")
-    def run(): Unit = {
-      val q = StreamingDedup.startDrift(stream, s"$dir/registry2",
-        s"$dir/drift2", s"$dir/ckpt2")
-      q.awaitTermination(120000)
-    }
+    def run(): Unit = drainThrough(stream, s"$dir/ckpt2")(
+      StreamingDedup.driftBatchStep(spark, s"$dir/registry2",
+        s"$dir/drift2", "text"))
     mem.addData(b0); run()
     mem.addData(b1 ++ b2); run()
     val rows = spark.read.option("basePath", s"$dir/drift2")
@@ -386,11 +380,9 @@ class SubstringDedupSpec extends SparkSpec {
       .map { case (id, t) => (id + 300000L, s"${t.toUpperCase} ??") }
     val mem = MemoryStream[(Long, String)]
     val stream = mem.toDF.toDF("doc_id", "text")
-    def run(): Unit = {
-      val q = StreamingDedup.startCanon(stream, s"$dir/registry",
-        s"$dir/kept", s"$dir/ckpt")
-      q.awaitTermination(120000)
-    }
+    def run(): Unit = drainThrough(stream, s"$dir/ckpt")(
+      StreamingDedup.canonBatchStep(spark, s"$dir/registry",
+        s"$dir/kept", "doc_id", "text"))
     mem.addData(base); run()
     mem.addData(twins ++ twins2); run()
 
@@ -428,11 +420,9 @@ class SubstringDedupSpec extends SparkSpec {
     val mid = docs(docs.length / 2)._1
     val mem = MemoryStream[(Long, String)]
     val stream = mem.toDF.toDF("doc_id", "text")
-    def run(): Unit = {
-      val q = StreamingDedup.startCdc(stream, s"$dir/registry",
-        s"$dir/decisions", s"$dir/ckpt")
-      q.awaitTermination(120000)
-    }
+    def run(): Unit = drainThrough(stream, s"$dir/ckpt")(
+      StreamingDedup.cdcBatchStep(spark, s"$dir/registry",
+        s"$dir/decisions", "doc_id", "text"))
     val (b0, b1) = docs.partition(_._1 < mid)
     mem.addData(b0); run()
     mem.addData(b1); run()

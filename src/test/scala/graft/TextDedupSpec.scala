@@ -615,7 +615,6 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("native expressions are SQL-registered: poly_hash / float_vec_dot") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT poly_hash('ab', 31, 2147483647) AS h, " +
         "float_vec_dot(array(cast(1.5 as float), cast(2.0 as float)), " +
@@ -634,7 +633,6 @@ class TextDedupSpec extends SparkSpec {
     val native = graft.functions.NativeExprs.floatDoubleVecDot(col("embedding"), planeLit)
     assert(emb.filter(hof =!= native).count() === 0L)
     // SQL registration
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT float_double_vec_dot(array(cast(1.5 as float), cast(2.0 as float)), " +
         "array(cast(2.0 as double), cast(0.5 as double))) AS d").head()

@@ -63,6 +63,15 @@ class TreeCacheSpec extends SparkSpec {
     assert(leaves === Map("Plant|Unit1|Pump" -> "w-p", "Plant|Unit2" -> "w-u2"))
   }
 
+  test("a tree given as a file: URI loads like a local path") {
+    val f = Files.createTempFile("tree", ".json")
+    Files.writeString(f, treeJson)
+    val viaUri = TreeCache.flatten(TreeCache.readRoots(spark, f.toUri.toString))
+    assert(f.toUri.toString.startsWith("file:"))
+    assert(viaUri.select("path").collect().map(_.getString(0)).toSet ===
+      flat.select("path").collect().map(_.getString(0)).toSet)
+  }
+
   test("list-of-roots files load as a forest") {
     val f = Files.createTempFile("forest", ".json")
     Files.writeString(f, s"[$treeJson, {\"name\": \"Plant2\", \"webid\": \"w2\", " +
