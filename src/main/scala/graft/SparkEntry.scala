@@ -859,8 +859,8 @@ object SparkEntry {
     // prior batches (only their distinct gram hashes — the registry),
     // odd doc_ids the arriving micro-batch. A window already claimed by
     // the registry is cut everywhere; within the batch the (id, pos)
-    // argmin survives — the per-micro-batch unit of
-    // streaming.StreamingDedup.substringBatchStep.
+    // argmin survives — what one micro-batch of a substring-dedup
+    // stream computes.
     "d_stream_substring" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val reg = Dedup.substringWindows(
@@ -875,7 +875,7 @@ object SparkEntry {
     // prior batches (their distinct chunk hashes = the claim registry),
     // odd doc_ids the arriving micro-batch — each odd doc's shared
     // coverage scores against the registry plus the within-batch owner
-    // rule, the per-micro-batch unit of StreamingDedup.cdcBatchStep.
+    // rule — what one micro-batch of a chunk-dedup stream computes.
     "d_stream_cdc" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val reg = Dedup.cdcChunks(docs.filter(col("doc_id") % 2 === 0),
@@ -909,8 +909,8 @@ object SparkEntry {
     }),
 
     // Streaming drift, batch kernel: even ids play the count registry
-    // (the corpus so far), odd ids the arriving batch — the
-    // per-micro-batch unit of StreamingDedup.driftBatchStep.
+    // (the corpus so far), odd ids the arriving batch — what one
+    // micro-batch of a vocabulary-drift stream computes.
     "d_stream_drift" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       TextOps.vocabDriftAgainst(
@@ -920,8 +920,8 @@ object SparkEntry {
     }),
 
     // Streaming novelty, batch kernel: even ids play the already-seen
-    // corpus (the gram registry), odd ids the arriving batch — the
-    // per-micro-batch unit of StreamingDedup.noveltyBatchStep.
+    // corpus (the gram registry), odd ids the arriving batch — what one
+    // micro-batch of a novelty stream computes.
     "d_stream_novelty" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val reg = Dedup.docTokens(
@@ -935,7 +935,7 @@ object SparkEntry {
     // Streaming near-dup suppression, batch kernel: even doc_ids play the
     // already-ingested registry, odd doc_ids the arriving micro-batch
     // (ts = doc_id). First-writer-wins, register-all-seen semantics —
-    // the per-micro-batch unit of streaming.StreamingDedup.
+    // what one micro-batch of a near-dup stream computes.
     "d_stream_neardup" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val reg = Dedup.bandClaims(
@@ -2399,11 +2399,11 @@ object SparkEntry {
             unix_micros(col("last_ts").cast("timestamp"))) / 60000000L).cast("long"))
         .orderBy("attribute_id")),
 
-    // ---- §2.9 windowed rollups (batch twins of DerivedStream) -------------
-    // Same aggregation expressions as DerivedStream.windowedRollup /
-    // slidingRollup / sessionRollup, run in batch mode so the window
-    // semantics themselves sit under the DuckDB oracle gate (the streaming
-    // variants add only a watermark on top of the identical plan).
+    // ---- §2.9 windowed rollups ---------------------------------------------
+    // Tumbling, sliding and session windows in batch mode, so the window
+    // semantics themselves sit under the DuckDB oracle gate (a streaming
+    // rollup adds only a watermark on top of the identical plan; the
+    // streaming session face is StreamingSessions, below).
     "w1_tumbling" -> ((s, d) =>
       Tables.events(s, d)
         .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))

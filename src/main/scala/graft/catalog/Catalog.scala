@@ -73,12 +73,6 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
   def appendArchive(rows: DataFrame): Unit =
     ArchiveStore.append(rows, path("archive"))
 
-  /** T5 production upsert: last-write-wins on (attribute_id, timestamp),
-    * rewriting ONLY the date partitions the new rows touch — see
-    * [[ArchiveStore.upsert]]. */
-  def upsertArchive(recomputed: DataFrame): Unit =
-    ArchiveStore.upsert(spark, path("archive"), recomputed)
-
   private def rewriteArchive(df: DataFrame): Unit = {
     val tmp = path("archive__rewrite")
     ArchiveStore.write(df, SaveMode.Overwrite, tmp)

@@ -83,8 +83,8 @@ object Dedup {
       s"FROM $table)"
   }
 
-  /** Batch kernel of STREAMING canonical dedup (wrapped by
-    * [[graft.streaming.StreamingDedup.canonBatchStep]]): suppress
+  /** Batch kernel of STREAMING canonical dedup (oracle-gated at
+    * `d_stream_canon`): suppress
     * `batch` against `registry` — the distinct canonical-form hashes
     * claimed by all PRIOR batches, one `h` column — plus the batch's
     * own lowest-id-per-canon-group keeper rule. First batch to claim a
@@ -160,11 +160,6 @@ object Dedup {
   def shinglesFromTokens(toks: Column, n: Int): Column =
     TextOps.shinglesFromTokens(toks, n)
 
-  /** N-gram (token shingle) array, n consecutive tokens joined by ' '.
-    * Only safe on a pre-projected token column — see
-    * [[shinglesFromTokens]]; prefer that entry point. */
-  def shingles(textCol: Column, n: Int): Column =
-    shinglesFromTokens(TextOps.tokens(textCol), n)
   def shinglesSql(text: String, n: Int): String =
     TextOps.shinglesSql(text, n)
 
@@ -665,7 +660,7 @@ object Dedup {
   }
 
   /** Shared window machinery of [[substringDedup]] and its streaming
-    * face ([[graft.streaming.StreamingDedup.substringBatchStep]]): one
+    * face ([[substringSuppress]]): one
     * row per token position — (id, pos, tok, h, packed) with h the
     * k-gram hash of the window STARTING at pos (null for the k-1 tail
     * positions that start no full window — arrays_zip pads the shorter
@@ -709,9 +704,8 @@ object Dedup {
         coalesce(col("n_removed"), lit(0)).as("n_removed"))
   }
 
-  /** Batch kernel of STREAMING substring dedup (wrapped by
-    * [[graft.streaming.StreamingDedup.substringBatchStep]], oracle-gated
-    * at `d_stream_substring`): suppress `batch` against `registry` — the
+  /** Batch kernel of STREAMING substring dedup (oracle-gated at
+    * `d_stream_substring`): suppress `batch` against `registry` — the
     * distinct first-seen gram hashes of all PRIOR batches, one `h`
     * column — plus this batch's own (id, pos) argmin. Returns (cleaned
     * docs, new claims): the batch's first-seen gram hashes not yet in
@@ -961,12 +955,10 @@ object Dedup {
        |FROM __cov""".stripMargin
 
   /** Batch kernel of STREAMING chunk-level dedup (the [[cdcDedup]]
-    * policy for a corpus that arrives as a feed; wrapped by
-    * [[graft.streaming.StreamingDedup.cdcBatchStep]]): a chunk in this
-    * batch is SHARED iff its hash was claimed by any earlier batch
-    * (registry probe, one `h` column — the gram-claim registry shape,
-    * so [[graft.streaming.RegistryMaintenance.GramClaims]] folds it)
-    * or belongs to an earlier doc (min id) within this batch. A doc
+    * policy for a corpus that arrives as a feed; oracle-gated at
+    * `d_stream_cdc`): a chunk in this batch is SHARED iff its hash was
+    * claimed by any earlier batch (registry probe, one `h` column) or
+    * belongs to an earlier doc (min id) within this batch. A doc
     * whose shared coverage reaches `minSharedPct` drops; the
     * representative survives automatically because ITS chunks were
     * unclaimed when it arrived — so with batches in id order the kept
@@ -1600,6 +1592,23 @@ object Dedup {
        |SELECT $idCol, $recombine AS simhash FROM __s""".stripMargin
   }
 
+  /** Band layout for a `bits`-wide signature split into `bands` chunks:
+    * widths as even as possible, covering all bits exactly once. */
+  private[graft] def bandLayout(bits: Int, bands: Int): (Seq[Int], Seq[Int]) = {
+    val widths = (0 until bands).map(b =>
+      bits / bands + (if (b < bits % bands) 1 else 0))
+    (widths, widths.scanLeft(0)(_ + _))
+  }
+
+  /** Chunk `b` of a signature. shiftright sign-extends on longs; the
+    * mask cuts the extension bits, and a full-width (64-bit, single-
+    * band) chunk masks with -1 since 1L<<64 wraps to 1. */
+  private[graft] def chunkAt(sig: Column, widths: Seq[Int], offsets: Seq[Int],
+      b: Int): Column = {
+    val mask = if (widths(b) >= 64) -1L else (1L << widths(b)) - 1
+    shiftright(sig, offsets(b)).bitwiseAND(lit(mask))
+  }
+
   /** Near-dup pairs by SimHash hamming distance, EXACT via pigeonhole
     * banding (Manku/Jain/Sarma's block-permuted simhash search, WWW'07):
     * the 32-bit signature is split into `maxHamming + 1` contiguous bit
@@ -1613,41 +1622,6 @@ object Dedup {
     * nested-loop. The signature table is persisted (one explode+agg, not
     * one per join side); the band explode adds `maxHamming + 1` rows per
     * doc, constant per document. */
-  /** Band layout for a `bits`-wide signature split into `bands` chunks:
-    * widths as even as possible, covering all bits exactly once. */
-  private def bandLayout(bits: Int, bands: Int): (Seq[Int], Seq[Int]) = {
-    val widths = (0 until bands).map(b =>
-      bits / bands + (if (b < bits % bands) 1 else 0))
-    (widths, widths.scanLeft(0)(_ + _))
-  }
-
-  /** Chunk `b` of a signature. shiftright sign-extends on longs; the
-    * mask cuts the extension bits, and a full-width (64-bit, single-
-    * band) chunk masks with -1 since 1L<<64 wraps to 1. */
-  private def chunkAt(sig: Column, widths: Seq[Int], offsets: Seq[Int],
-      b: Int): Column = {
-    val mask = if (widths(b) >= 64) -1L else (1L << widths(b)) - 1
-    shiftright(sig, offsets(b)).bitwiseAND(lit(mask))
-  }
-
-  /** The banded signature index [[simhashPairs]] joins on: one row per
-    * (doc, band) keyed by (band, chunk). Public so bucket-population
-    * skew — the scale hazard of banding — is directly observable. */
-  def simhashBands(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int, bits: Int = SimhashBits): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < bits,
-      s"maxHamming must be in [0, $bits)")
-    val bands = maxHamming + 1
-    val (widths, offsets) = bandLayout(bits, bands)
-    val blocks = (0 until bands).map { b =>
-      struct(lit(b).as("band"), chunkAt(col("simhash"), widths, offsets, b).as("chunk"))
-    }
-    simhash(df, idCol, textCol, bits)
-      .select(col(idCol), col("simhash"), explode(array(blocks: _*)).as("bc"))
-      .select(col(idCol), col("simhash"),
-        col("bc.band").as("band"), col("bc.chunk").as("chunk"))
-  }
-
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int, bits: Int = SimhashBits): DataFrame =
     hammingPairs(simhash(df, idCol, textCol, bits), idCol, "simhash",

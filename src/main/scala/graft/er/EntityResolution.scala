@@ -84,18 +84,6 @@ object EntityResolution {
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
   }
 
-  /** Multi-pass blocking (standard ER practice — match on name-key OR
-    * phone-key OR address-key): the union of several single-pass
-    * blockings, deduplicated. Recall is the union of the passes'
-    * recall; cost is additive, never multiplicative, and each pass
-    * keeps its own `maxBlock` skew cap. */
-  def candidatePairsMulti(records: DataFrame, idCol: String,
-      blockings: Seq[Seq[String]], maxBlock: Option[Int] = None): DataFrame = {
-    require(blockings.nonEmpty, "need at least one blocking pass")
-    blockings.map(b => candidatePairs(records, idCol, b, maxBlock))
-      .reduce(_ unionByName _).distinct()
-  }
-
   /** Blocked pairwise matching: candidate pairs whose `nameCol` edit
     * distance is ≤ `maxDist`, with names, the distance, and an integer
     * similarity percent (100 − 100·dist div max-length — exact integer

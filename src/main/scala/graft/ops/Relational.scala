@@ -12,30 +12,9 @@ import org.apache.spark.sql.functions._
   */
 object Relational {
 
-  /** P2 — dynamic IN-list filter (reference `database/database.py:381-384`).
-    * For id-lists large enough to blow the IN-list (>~10k) prefer
-    * [[semiJoinFilter]] which becomes a broadcast semi-join. */
+  /** P2 — dynamic IN-list filter (reference `database/database.py:381-384`). */
   def inList(df: DataFrame, col: String, values: Seq[Any]): DataFrame =
     df.filter(new Column(col).isin(values: _*))
-
-  /** P2 at scale: the id-set as a broadcast left-semi join instead of a
-    * literal IN-list — same semantics, bounded plan size. */
-  def semiJoinFilter(df: DataFrame, keys: DataFrame, col: String): DataFrame =
-    df.join(broadcast(keys), Seq(col), "left_semi")
-
-  /** P3 — inclusive-both-ends time range (reference `database.py:386-391`).
-    * Bounds are optional exactly as in the reference API. On a
-    * date-partitioned archive this prunes partitions at planning time. */
-  def timeRange(df: DataFrame, tsCol: String,
-      start: Option[String], end: Option[String]): DataFrame = {
-    val c = new Column(tsCol)
-    // cast literals to the column's own type (TIMESTAMP vs TIMESTAMP_NTZ —
-    // parquet files without UTC-adjustment read as NTZ) so the predicate
-    // stays a pushable comparison, not a cast around the column
-    val t = df.schema(tsCol).dataType
-    val withStart = start.fold(df)(s => df.filter(c >= lit(s).cast(t)))
-    end.fold(withStart)(e => withStart.filter(c <= lit(e).cast(t)))
-  }
 
   /** P4 — exact-name lookup, first match (reference `database.py:120-124`).
     * The reference's LIMIT 1 is order-undefined; we pin determinism by
@@ -324,47 +303,31 @@ object Relational {
       .drop("__cell")
   }
 
-  /** Materialize a frame bucketed+sorted by its join key — the layout
-    * that lets two big fact tables join with NO shuffle exchange on
-    * either side (co-located sort-merge join), the 100 TB alternative
+  /** Materialize a frame bucketed+sorted by its join key(s) — the
+    * layout that lets two big fact tables join with NO shuffle exchange
+    * on either side (co-located sort-merge join), the 100 TB alternative
     * to shuffling both sides on every query. One write-time shuffle
     * buys every subsequent join; `ScaleTechniquesSpec` proves the
-    * zero-exchange plan. Registers `tableName` in the session catalog
-    * (bucket metadata lives in the catalog, not the files — a plain
-    * `spark.read.parquet` of the path would NOT get the bucketed plan). */
-  def materializeBucketed(df: DataFrame, path: String, tableName: String,
-      key: String, buckets: Int): DataFrame =
-    materializeBucketed(df, path, tableName, Seq(key), buckets)
-
-  /** [[materializeBucketed]] on a compound key (e.g. the streaming-dedup
-    * registry's (band, k0, k1) bucket id): a join or aggregate keyed on
-    * ALL the bucket columns reads the table with no exchange. */
-  def materializeBucketed(df: DataFrame, path: String, tableName: String,
-      keys: Seq[String], buckets: Int): DataFrame =
-    materializeBucketed(df, path, tableName, keys, buckets,
-      onePerBucket = false)
-
-  /** [[materializeBucketed]] with the file-count lever explicit.
+    * zero-exchange plan. A join or aggregate keyed on ALL the bucket
+    * columns reads the table with no exchange. Registers `tableName` in
+    * the session catalog (bucket metadata lives in the catalog, not the
+    * files — a plain `spark.read.parquet` of the path would NOT get the
+    * bucketed plan).
     *
-    * `onePerBucket = true` repartitions on the bucket key FIRST: a
-    * bucketed write emits one file per (task, bucket) pair, so writing
-    * from an N-partition frame produces N×buckets small files and every
-    * later probe pays N× the footer/open cost (measured 4× on the 100×
-    * incremental-CC append). Spark's repartition hash IS the bucket
-    * hash (Murmur3 pmod), so this aligns each task with exactly one
-    * bucket → one file per bucket. Use it for PROBE-shaped registries
-    * (a maintenance sweep writing compact state).
-    *
-    * Leave it false for corpus-sized tables bucketed on LOW-CARDINALITY
-    * keys (the ANN indexes bucket by "cluster" with ≤ nCentroids
-    * distinct values): there the repartition would funnel the whole
-    * corpus through ≤ cardinality write tasks — one task external-sorts
-    * 1/k of the corpus — where the plain write keeps all upstream
-    * tasks in parallel. */
+    * The frame is repartitioned on the bucket key first: a bucketed
+    * write emits one file per (task, bucket) pair, so writing from an
+    * N-partition frame would produce N×buckets small files and every
+    * later probe would pay N× the footer/open cost (measured 4× on the
+    * 100× incremental-CC append). Spark's repartition hash IS the
+    * bucket hash (Murmur3 pmod), so each task writes exactly one bucket
+    * → one file per bucket. The callers are the registry maintenance
+    * sweeps, which write compact probe-shaped state; a key with fewer
+    * distinct values than `buckets` would funnel the write through that
+    * many tasks. */
   def materializeBucketed(df: DataFrame, path: String, tableName: String,
-      keys: Seq[String], buckets: Int, onePerBucket: Boolean): DataFrame = {
-    val src = if (onePerBucket) df.repartition(buckets, keys.map(col): _*) else df
-    src.write.bucketBy(buckets, keys.head, keys.tail: _*)
+      keys: Seq[String], buckets: Int): DataFrame = {
+    df.repartition(buckets, keys.map(col): _*)
+      .write.bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .option("path", path).mode("overwrite").saveAsTable(tableName)
     df.sparkSession.table(tableName)
@@ -460,22 +423,6 @@ object Relational {
         trackCols.flatMap(c => Seq(col(c).as(s"before_$c"),
           col(s"__a_$c").as(s"after_$c"))): _*)
       .filter(col("op") =!= "unchanged")
-  }
-
-  /** Skew-safe equi-join (the 100 TB tool for hot keys, e.g. one sensor
-    * producing most archive rows): the big side's hot partitions are split
-    * by a salt derived from a per-row expression, the small side is
-    * replicated `saltFactor`× so every (key, salt) pair still matches.
-    * Result set is EXACTLY the plain inner join's; only the shuffle
-    * layout changes — max partition size drops by ~saltFactor. Use when
-    * AQE's skew-join split can't help (e.g. pre-bucketed layouts).
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-      bigSaltSource: Column, saltFactor: Int): DataFrame = {
-    val b = big.withColumn("__salt", pmod(xxhash64(bigSaltSource), lit(saltFactor)).cast("int"))
-    val s = small.withColumn("__salt",
-      explode(array((0 until saltFactor).map(lit): _*)))
-    b.join(s, Seq(key, "__salt")).drop("__salt")
   }
 
   /** Market-basket association rules (Agrawal & Srikant, VLDB 1994 —

@@ -297,9 +297,8 @@ object Similarity {
   /** Build the IVF-SQ8 index: coarse k-means (bit-reproducible) + one
     * absmax scalar, then ONE projection pass encodes every vector to
     * (id, cluster, packed int8 code) and DROPS the raw floats. Linear
-    * in the corpus by nature; run once, reuse per query batch —
-    * persist via [[graft.ops.Relational.materializeBucketed]] on
-    * `cluster`, as for [[ivfPqIndex]]. */
+    * in the corpus by nature; run once, reuse per query batch, as for
+    * [[ivfPqIndex]]. */
   def ivfSq8Index(corpus: DataFrame, dim: Int, nCentroids: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
       trainMod: Long = 1L): IvfSq8Model = {
@@ -340,21 +339,6 @@ object Similarity {
         sq8QuantLit(col("c_vec"), model.absmax)).as("__code"))
   }
 
-  /** Incremental SQ8 index maintenance: encode `newVecs` with the
-    * frozen model and APPEND to the persisted bucketed table — no
-    * retrain, no rebuild, no touch of existing files (same contract
-    * and same bucket-spec re-declaration rule as [[ivfPqIndexAppend]]).
-    * Returns the model re-pointed at the refreshed table. */
-  def ivfSq8IndexAppend(model: IvfSq8Model, newVecs: DataFrame, dim: Int,
-      tableName: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): IvfSq8Model = {
-    val spark = newVecs.sparkSession
-    ivfSq8Encode(model, newVecs, dim, idCol, vecCol)
-      .write.bucketBy(bucketCount(spark, tableName), "cluster").sortBy("cluster")
-      .mode("append").saveAsTable(tableName)
-    model.copy(index = spark.table(tableName))
-  }
-
   /** Probe-limited SQ8 query against a built [[IvfSq8Model]]: each query
     * quantizes once (model absmax is a literal), probes its nProbe
     * nearest coarse clusters, and byte-dot-scores ONLY those clusters'
@@ -365,8 +349,7 @@ object Similarity {
     * [[ivfPqQuery]] with the SQ8 scorer swapped in. */
   def ivfSq8Query(model: IvfSq8Model, corpus: DataFrame, queries: DataFrame,
       k: Int, dim: Int, nProbe: Int = 3, nCandidates: Int = 50,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      pruneBuckets: Boolean = false): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     if (model.absmax <= 0.0) return emptyTopK(corpus, queries, idCol)
     val scoredCents = array(model.centroids.map { case (cid, c) =>
       struct((-graft.functions.NativeExprs.floatDoubleVecDot(col("q_vec"), array(c.map(lit): _*)))
@@ -379,25 +362,14 @@ object Similarity {
         graft.functions.NativeExprs.packInt8(
           sq8QuantLit(col("q_vec"), model.absmax)).as("__qcode"),
         probeCol.as("cluster"))
-    // pruneBuckets: pin the batch's probed cluster ids as an IN-filter —
-    // on a materializeBucketed index the scan turns it into bucket
-    // pruning (SelectedBucketsCount), same contract as ivfPqQuery
-    val idx =
-      if (!pruneBuckets) model.index
-      else {
-        val probed = queries.select(col(vecCol).as("q_vec"))
-          .select(probeCol.as("cluster")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        model.index.filter(col("cluster").isin(probed: _*))
-      }
-    val approx = idx.join(broadcast(qb), Seq("cluster"))
+    val approx = model.index.join(broadcast(qb), Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         graft.functions.NativeExprs.byteVecDot(col("__qcode"), col("__code")).as("adot"))
     val wA = Window.partitionBy(col("query_id")).orderBy(col("adot").desc, col("neighbor_id"))
     // dropDuplicates: no-op on a clean index (one cluster per vector) but
-    // makes a replayed streaming append unable to rank a neighbor twice —
-    // same contract as ivfPqQuery
+    // keeps an index with a twice-written row from ranking a neighbor
+    // twice — same contract as ivfPqQuery
     val cand = approx.withColumn("__ra", row_number().over(wA))
       .filter(col("__ra") <= nCandidates).select("query_id", "neighbor_id")
       .dropDuplicates("query_id", "neighbor_id")
@@ -1419,10 +1391,7 @@ object Similarity {
     * codebooks (catalog-sized), plus the distributed index table
     * (id, cluster, m code ints — NO raw vectors; ~40 bytes/vector vs
     * 256+ for the raw floats). At 100 TB this table is built ONCE and
-    * persisted with [[graft.ops.Relational.materializeBucketed]]
-    * (parquet, bucketed by `cluster`), maintained incrementally via
-    * [[ivfPqIndexAppend]], and amortized across every query
-    * batch — which is why [[ivfPqQuery]]'s per-batch cost is
+    * amortized across every query batch — which is why [[ivfPqQuery]]'s per-batch cost is
     * probe-limited, not corpus-linear. */
   final case class IvfPqModel(
       centroids: Array[(Int, Seq[Double])],
@@ -1463,8 +1432,8 @@ object Similarity {
     * pass that then DROPS the raw vector — each index row carries
     * (id, cluster, m ints), never the floats. Pure per-row, so an index
     * built in installments (batch or streaming) is ROW-IDENTICAL to a
-    * single-shot encode of the union under the same model — the
-    * property [[ivfPqIndexAppend]]'s no-rebuild contract rests on. */
+    * single-shot encode of the union under the same model: new vectors
+    * join an index without a retrain or rebuild. */
   def ivfPqEncode(model: IvfPqModel, vecs: DataFrame, dim: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cb = model.codebooks
@@ -1485,83 +1454,15 @@ object Similarity {
         .as("__pos"))
   }
 
-  /** Incremental index maintenance: encode `newVecs` with the FROZEN
-    * model and APPEND them to the persisted bucketed table — no
-    * retrain, no rebuild, no touch of existing files (appends add new
-    * per-bucket files beside the old ones; bucket pruning and the
-    * exchange-free probe are unaffected — only the per-file sort
-    * guarantee weakens to per-append, which nothing here relies on).
-    * The per-batch cost is one projection over the BATCH. Mirrors the
-    * archive's incremental-ingest contract (reference
-    * `ingest.py:217-236`) applied to the ANN store; the writer must
-    * re-declare the identical bucket spec or Spark rejects the append.
-    * Returns the model re-pointed at the refreshed table. */
-  def ivfPqIndexAppend(model: IvfPqModel, newVecs: DataFrame, dim: Int,
-      tableName: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): IvfPqModel = {
-    val spark = newVecs.sparkSession
-    ivfPqEncode(model, newVecs, dim, idCol, vecCol)
-      .write.bucketBy(bucketCount(spark, tableName), "cluster").sortBy("cluster")
-      .mode("append").saveAsTable(tableName)
-    model.copy(index = spark.table(tableName))
-  }
-
-  /** Bucket count of a catalog table (the append writer must re-declare
-    * the creating spec exactly). */
-  private def bucketCount(spark: org.apache.spark.sql.SparkSession,
-      tableName: String): Int = {
-    val rows = spark.sql(s"DESCRIBE TABLE EXTENDED $tableName").collect()
-    rows.find(_.getString(0) == "Num Buckets")
-      .map(_.getString(1).trim.toInt)
-      .getOrElse(sys.error(s"$tableName is not bucketed"))
-  }
-
-  /** Table maintenance for an appended ANN index (IVF-PQ or IVF-SQ8 —
-    * both bucket on `cluster`): fold the per-append files in each
-    * bucket back into one file per bucket and drop replay-duplicated
-    * rows. A replayed foreachBatch appends byte-identical rows, so
-    * DISTINCT is deterministic — it can only remove exact duplicates,
-    * never choose between variants. Same-table rewrite: the read is
-    * localCheckpointed so the overwrite may target the table it read
-    * (the ArchiveStore.compact discipline). Query RESULTS are already
-    * replay-safe without this ([[ivfPqQuery]] dedups its candidate
-    * set); what compaction restores is the file listing — appends add
-    * `buckets` files each, and scan-open cost grows with every sweep
-    * interval — and the duplicate-free approximate window (a duplicate
-    * burns one nCandidates slot). Run on whatever cadence keeps the
-    * per-bucket file count short, exactly like the claim registries. */
-  def ivfIndexCompact(spark: org.apache.spark.sql.SparkSession,
-      tableName: String): DataFrame = {
-    val buckets = bucketCount(spark, tableName)
-    val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $tableName").collect()
-      .find(_.getString(0) == "Location").map(_.getString(1))
-      .getOrElse(sys.error(s"$tableName has no location"))
-    val rows = spark.table(tableName).distinct().localCheckpoint()
-    rows.write.bucketBy(buckets, "cluster").sortBy("cluster")
-      .option("path", loc).mode("overwrite").saveAsTable(tableName)
-    spark.table(tableName)
-  }
-
   /** Query a prebuilt [[IvfPqModel]]: per query, an ADC lookup table and
     * the nProbe nearest coarse clusters; candidates via the cluster
     * equi-join against the index table; ADC score, nCandidates cut,
     * exact-cosine re-rank against the raw corpus. Per-batch cost is
     * `nProbe/nCentroids` of the index plus queries × nCandidates
-    * re-rank rows.
-    *
-    * `pruneBuckets` — for an index persisted bucketed by `cluster`
-    * ([[graft.ops.Relational.materializeBucketed]]): one tiny extra job computes the batch's distinct probed
-    * cluster ids (≤ min(queries × nProbe, nCentroids) ints — catalog-
-    * sized, never data-sized) and pins them as an IN-filter on the
-    * bucket column, which Spark turns into BUCKET PRUNING at the scan
-    * (`SelectedBucketsCount` in the plan): the query batch reads only
-    * the probed clusters' index FILES instead of scanning and
-    * discarding the rest. Identical results by construction (the
-    * equi-join already kept only probed clusters' rows). */
+    * re-rank rows. */
   def ivfPqQuery(model: IvfPqModel, corpus: DataFrame, queries: DataFrame,
       k: Int, dim: Int, nProbe: Int = 3, nCandidates: Int = 50,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      pruneBuckets: Boolean = false): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     if (model.codebooks.isEmpty) return emptyTopK(corpus, queries, idCol)
     val m = model.codebooks.length
     val subDim = dim / m
@@ -1582,15 +1483,7 @@ object Similarity {
       explode(slice(transform(array_sort(scoredCents), x => x("cid")), 1, nProbe))
     val qb = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
       .select(col("query_id"), lut.as("__lut"), probeCol.as("cluster"))
-    val idx =
-      if (!pruneBuckets) model.index
-      else {
-        val probed = queries.select(col(vecCol).as("q_vec"))
-          .select(probeCol.as("cluster")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        model.index.filter(col("cluster").isin(probed: _*))
-      }
-    val approx = idx.join(broadcast(qb), Seq("cluster"))
+    val approx = model.index.join(broadcast(qb), Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         (0 until m).map(s =>
@@ -1599,9 +1492,9 @@ object Similarity {
     val wA = Window.partitionBy(col("query_id")).orderBy(col("approx_q").desc, col("neighbor_id"))
     // the dropDuplicates is a no-op on a cleanly-built index (each vector
     // lives in ONE cluster so pairs are unique) and costs one shuffle of
-    // a queries × nCandidates frame; it exists so a replayed
-    // [[ivfPqIndexAppend]] (a foreachBatch retry) can never rank the
-    // same neighbor twice in a top-k
+    // a queries × nCandidates frame; it exists so an index holding a
+    // twice-written row (a retried append) can never rank the same
+    // neighbor twice in a top-k
     val cand = approx.withColumn("__ra", row_number().over(wA))
       .filter(col("__ra") <= nCandidates).select("query_id", "neighbor_id")
       .dropDuplicates("query_id", "neighbor_id")
@@ -1694,19 +1587,8 @@ object Similarity {
     * cell-exact. */
   def semDedup(corpus: DataFrame, dim: Int, nCentroids: Int = 8,
       threshold: Double = 0.4, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
-    semDedupWithCents(corpus,
-      collectCentroids(ivfCentroids(corpus, dim, nCentroids, 1, idCol, vecCol)),
-      dim, threshold, idCol, vecCol)
-
-  /** [[semDedup]] against ALREADY-TRAINED centroids — the pipeline after
-    * the index: assign, within-bucket pairs, connected components,
-    * min-id representative. Factored out so the incremental path
-    * ([[semDedupIncrement]]) and any caller holding a frozen index run
-    * the IDENTICAL suppression machinery the batch entry runs. */
-  def semDedupWithCents(corpus: DataFrame, cents: Array[(Int, Seq[Double])],
-      dim: Int, threshold: Double = 0.4, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
+    val cents = collectCentroids(ivfCentroids(corpus, dim, nCentroids, 1, idCol, vecCol))
     val assigned = assignClustersLocal(corpus.select(col(idCol), col(vecCol)), cents, vecCol, idCol)
       .withColumnRenamed("cluster", "bucket")
     val pairs = nearDupPairs(assigned, "bucket", threshold, dim, idCol, vecCol)
@@ -1715,83 +1597,6 @@ object Similarity {
       .join(assigned.select(col(idCol), col("bucket")), Seq(idCol))
       .select(col(idCol), col("bucket"), col("rep"),
         (col(idCol) === col("rep")).as("kept"))
-  }
-
-  /** Frozen SemDeDup state between increments: the trained centroids
-    * (catalog-sized, driver-resident) and the kept representatives WITH
-    * their vectors and buckets — the only rows a future document must be
-    * gated against. At 100 TB the reps frame is the post-dedup corpus
-    * (bounded by the kept fraction), stored however the caller likes
-    * (parquet bucketed by `bucket` composes with
-    * [[graft.ops.Relational.materializeBucketed]] exactly like the ANN
-    * index). */
-  final case class SemDedupState(
-      centroids: Array[(Int, Seq[Double])],
-      reps: DataFrame)
-
-  /** Initialize incremental SemDeDup: run the batch pipeline on the
-    * first installment, return the audit rows plus the state future
-    * increments gate against. */
-  def semDedupInit(corpus: DataFrame, dim: Int, nCentroids: Int = 8,
-      threshold: Double = 0.4, idCol: String = "vec_id",
-      vecCol: String = "embedding"): (SemDedupState, DataFrame) = {
-    val cents = collectCentroids(ivfCentroids(corpus, dim, nCentroids, 1, idCol, vecCol))
-    val audit = semDedupWithCents(corpus, cents, dim, threshold, idCol, vecCol)
-    val reps = corpus.select(col(idCol), col(vecCol))
-      .join(audit.filter(col("kept")).select(col(idCol), col("bucket")), Seq(idCol))
-    (SemDedupState(cents, reps), audit)
-  }
-
-  /** Incremental SemDeDup: dedup a NEW installment against the frozen
-    * state without re-touching history. New vectors are assigned to the
-    * EXISTING centroids (broadcast argmax projection), cosine-gated
-    * against the kept representatives of their own bucket plus each
-    * other (both pure bucket equi-joins — no cartesian, no rescan of
-    * past non-representatives), grouped by connected components, and
-    * labeled with the min reachable id. Emitted audit rows cover ONLY
-    * the new documents; prior audit rows are immutable (an increment
-    * never rewrites history — the streaming-friendly contract), and
-    * survivors join the reps state for the next increment.
-    *
-    * Matches the batch pipeline exactly when (a) installment ids exceed
-    * all prior ids (append-only streams — otherwise min-id could elect
-    * a new doc as rep of an old group) and (b) no duplicate chain runs
-    * THROUGH a suppressed non-representative or bridges two existing
-    * groups (the rep-probe trade the SemDeDup paper's bucket recall
-    * caveat already accepts; a bridging doc is suppressed by the
-    * smaller-id rep while both old groups stand). The spec pins
-    * batch-equality on the fixture and the no-cartesian plan. */
-  def semDedupIncrement(state: SemDedupState, newDocs: DataFrame, dim: Int,
-      threshold: Double = 0.4, idCol: String = "vec_id",
-      vecCol: String = "embedding"): (SemDedupState, DataFrame) = {
-    val assigned = assignClustersLocal(newDocs.select(col(idCol), col(vecCol)),
-      state.centroids, vecCol, idCol)
-      .withColumnRenamed("cluster", "bucket")
-    // new-vs-new candidates: the ordinary within-bucket pair join
-    val newPairs = nearDupPairs(assigned, "bucket", threshold, dim, idCol, vecCol)
-      .select("id_a", "id_b")
-    // new-vs-reps candidates: equi-join on the bucket key only (a rep
-    // gates only its own bucket's newcomers), exact cosine as the
-    // post-filter — same shape, same threshold arithmetic
-    val n = assigned.withColumn("__na", sqrt(dot(vecCol, vecCol, dim)))
-      .select(col("bucket"), col(idCol).as("id_a"), col(vecCol).as("__va"), col("__na"))
-    val r = state.reps.withColumn("__nb", sqrt(dot(vecCol, vecCol, dim)))
-      .select(col("bucket"), col(idCol).as("id_b"), col(vecCol).as("__vb"), col("__nb"))
-    val repPairs = n.join(r, Seq("bucket"))
-      .filter(dot("__va", "__vb", dim) / (col("__na") * col("__nb")) >= threshold)
-      .select("id_a", "id_b")
-    val nodes = assigned.select(col(idCol))
-      .unionByName(state.reps.select(col(idCol)))
-    val labels = graft.dedup.Dedup.clusters(
-      nodes, newPairs.unionByName(repPairs), idCol)
-      .select(col("id").as(idCol), col("cluster").as("rep"))
-    val audit = assigned.select(col(idCol), col("bucket"))
-      .join(labels, Seq(idCol))
-      .select(col(idCol), col("bucket"), col("rep"),
-        (col(idCol) === col("rep")).as("kept"))
-    val newReps = assigned.select(col(idCol), col(vecCol))
-      .join(audit.filter(col("kept")).select(col(idCol), col("bucket")), Seq(idCol))
-    (state.copy(reps = state.reps.unionByName(newReps)), audit)
   }
 
   /** Oracle twin for [[semDedup]]: the shared [[kmeansAssignCtes]] index

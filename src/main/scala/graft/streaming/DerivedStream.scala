@@ -114,103 +114,6 @@ object DerivedStream {
   def upsert(existing: DataFrame, recomputed: DataFrame): DataFrame =
     merge(Some(existing), recomputed, Nil).select(graft.catalog.ArchiveStore.cols.map(col): _*)
 
-  /** Watermarked tumbling-window rollup over a coerced archive stream:
-    * per-(window, attribute) counts and value aggregates that finalize
-    * once the watermark passes the window end. The reference has no
-    * windowed aggregation of its own (its 1m grid arrives
-    * pre-interpolated) — this is the extension shape for monitoring
-    * dashboards over the same stream; state is bounded by the watermark.
-    * A tumbling window is a sliding one whose slide is its length. */
-  def windowedRollup(coerced: DataFrame, window: String = "1 hour",
-      watermarkDelay: String = "10 minutes"): DataFrame =
-    slidingRollup(coerced, window, window, watermarkDelay)
-
-  /** Sliding-window variant of [[windowedRollup]]: each event lands in
-    * `window / slide` overlapping windows (e.g. hourly stats refreshed
-    * every 15 minutes). Same watermark-bounded state; the overlap factor
-    * multiplies state size, which is why the slide is a parameter and
-    * never defaulted finer than needed. */
-  def slidingRollup(coerced: DataFrame, window: String = "1 hour",
-      slide: String = "15 minutes",
-      watermarkDelay: String = "10 minutes"): DataFrame =
-    coerced
-      .withWatermark("timestamp", watermarkDelay)
-      .groupBy(
-        org.apache.spark.sql.functions.window(col("timestamp"), window, slide).as("w"),
-        col("attribute_id"))
-      .agg(
-        count(lit(1)).as("n"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
-      .select(col("w.start").as("window_start"), col("attribute_id"),
-        col("n"), col("min_value"), col("max_value"))
-
-  /** Session-window rollup: per-attribute activity bursts separated by
-    * at least `gap` of silence collapse to one row (start, end, count).
-    * The natural shape for "how long did this sensor stream without
-    * interruption" monitoring; windows merge as events arrive and
-    * finalize once the watermark passes `end + gap`. */
-  def sessionRollup(coerced: DataFrame, gap: String = "30 minutes",
-      watermarkDelay: String = "10 minutes"): DataFrame =
-    coerced
-      .withWatermark("timestamp", watermarkDelay)
-      .groupBy(session_window(col("timestamp"), gap).as("w"), col("attribute_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("session_start"), col("w.end").as("session_end"),
-        col("attribute_id"), col("n"))
-
-  /** Watermarked stream-STREAM correlation: pair readings from two live
-    * streams on the same key whose event times lie within `maxLagSeconds`
-    * of each other — "which command preceded this sensor spike", the
-    * two-source question stream-static joins can't answer. Both sides
-    * carry watermarks AND the join predicate bounds event-time distance,
-    * which is exactly what lets Spark evict join state once the
-    * watermark passes (unbounded state otherwise — the stream-stream
-    * join trap). Inner join, append semantics; output columns:
-    * key, timestamp, value, r_timestamp, r_value. */
-  def correlateStreams(left: DataFrame, right: DataFrame, key: String,
-      maxLagSeconds: Long, watermarkDelay: String = "10 minutes"): DataFrame = {
-    val l = left.withWatermark("timestamp", watermarkDelay)
-    val r = right.select(col(key).as("__rk"),
-        col("timestamp").as("r_timestamp"), col("value").as("r_value"))
-      .withWatermark("r_timestamp", watermarkDelay)
-    l.join(r,
-      col(key) === col("__rk") &&
-        col("r_timestamp") >= col("timestamp") - expr(s"INTERVAL $maxLagSeconds SECONDS") &&
-        col("r_timestamp") <= col("timestamp") + expr(s"INTERVAL $maxLagSeconds SECONDS"))
-      .drop("__rk")
-  }
-
-  /** Approximate-distinct rollup: per-(window, attribute) HyperLogLog
-    * registers maintained under a watermark — the streaming face of
-    * [[graft.sketch.Sketches.hllRegistersBy]] (registers are integer
-    * maxima, which Structured Streaming merges incrementally per
-    * micro-batch for free). State is (windows × attributes × m) rows
-    * REGARDLESS of event volume — the constant-size property that makes
-    * a distinct-users dashboard viable over a 100 TB stream where exact
-    * per-window distinct state would be unbounded. Feed the output to
-    * [[graft.sketch.Sketches.hllEstimateBy]] for the estimates; on a
-    * drained stream both match the batch twin bit-exactly (spec). */
-  def hllRollup(hashed: DataFrame, window: String = "1 hour", m: Int = 64,
-      watermarkDelay: String = "10 minutes"): DataFrame = {
-    require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
-    val quotBits = 31 - Integer.numberOfTrailingZeros(m)
-    val mixed = (col("h") * graft.sketch.Sketches.HllMixA) % graft.sketch.Sketches.HllMixMod
-    val quot = floor(mixed / m).cast("long")
-    val rho = when(quot === 0, lit(quotBits + 1))
-      .otherwise(lit(quotBits + 1) - length(bin(quot)))
-    hashed
-      .withWatermark("timestamp", watermarkDelay)
-      .select(col("timestamp"), col("attribute_id"),
-        (mixed % m).as("bucket"), rho.cast("int").as("rho"))
-      .groupBy(
-        org.apache.spark.sql.functions.window(col("timestamp"), window).as("w"),
-        col("attribute_id"), col("bucket"))
-      .agg(max(col("rho")).as("register"))
-      .select(col("w.start").as("window_start"), col("attribute_id"),
-        col("bucket"), col("register"))
-  }
-
   /** Wire a streaming source of raw points into an archive directory,
     * maintaining derived attributes per micro-batch. The sink is the
     * date-partitioned [[graft.catalog.ArchiveStore]] layout, and every

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Loss-safe filesystem choreography shared by the streaming-registry
-  * compactions ([[StreamingAttribution]], [[StreamingEr]]). The failure
+  * compactions ([[StreamingEr]], [[StreamingGraph]], [[StreamingCc]]). The failure
   * mode this exists to remove: an in-place compaction that deletes the
   * folded partitions BEFORE its staged base is renamed in has an
   * unrecoverable window — a crash (or a failed rename, whose boolean

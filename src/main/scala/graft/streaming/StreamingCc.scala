@@ -246,11 +246,11 @@ object StreamingCc {
     val lBase = readLabelsRaw(spark, labelsDir)
       .filter(col("batch_id") === -1L).select("id", "label")
     val eSrc = graft.ops.Relational.materializeBucketed(
-      eBase, s"$tablePath/edges_src", s"${tablePrefix}_edges_src", Seq("src"), buckets, onePerBucket = true)
+      eBase, s"$tablePath/edges_src", s"${tablePrefix}_edges_src", Seq("src"), buckets)
     val lId = graft.ops.Relational.materializeBucketed(
-      lBase, s"$tablePath/labels_id", s"${tablePrefix}_labels_id", Seq("id"), buckets, onePerBucket = true)
+      lBase, s"$tablePath/labels_id", s"${tablePrefix}_labels_id", Seq("id"), buckets)
     val lLbl = graft.ops.Relational.materializeBucketed(
-      lBase, s"$tablePath/labels_label", s"${tablePrefix}_labels_label", Seq("label"), buckets, onePerBucket = true)
+      lBase, s"$tablePath/labels_label", s"${tablePrefix}_labels_label", Seq("label"), buckets)
     CcBase(eSrc, lId, lLbl)
   }
 }

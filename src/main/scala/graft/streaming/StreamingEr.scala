@@ -8,8 +8,8 @@ import graft.er.EntityResolution
 
 /** INCREMENTAL entity resolution: records arrive as a feed and each
   * batch is resolved against everything seen so far — without ever
-  * re-scoring history against itself. The [[StreamingDedup]] registry
-  * discipline applied to record linkage.
+  * re-scoring history against itself: a `batch_id=*` registry that each
+  * batch reads strictly earlier partitions of, applied to record linkage.
   *
   * What makes the increment sound: the registry keeps every record's
   * ARRIVAL-TIME entity label, and a new batch only needs edges that
@@ -27,8 +27,8 @@ import graft.er.EntityResolution
   * Replay safety: the registry and merge-log reads are strictly
   * earlier (`batch_id < current`) and both writes are per-batch
   * partition overwrites, so a crashed-and-replayed batch rewrites its
-  * two partitions byte-identically (the [[StreamingAttribution]]
-  * frontier caveat applies to any compaction).
+  * two partitions byte-identically (a compaction must stay at or below
+  * the checkpoint frontier, see [[compactRegistry]]).
   *
   * [[EntityResolutionSpec]] pins the contract: installments in ANY
   * arrival order, resolved through the merge log, equal the batch
@@ -99,8 +99,7 @@ object StreamingEr {
         lit(0L).as("batch_id")).limit(0)
   }
 
-  /** Table maintenance, IN PLACE (the [[StreamingAttribution]]
-    * compaction discipline): fold every `batch_id < upToBatchId`
+  /** Table maintenance, IN PLACE: fold every `batch_id < upToBatchId`
     * registry partition into ONE base partition `batch_id=-1` whose
     * entity labels are already RESOLVED through the folded range of the
     * merge log, and prune the folded registry and merge partitions.

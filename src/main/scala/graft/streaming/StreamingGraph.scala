@@ -339,8 +339,7 @@ object StreamingGraph {
     * in-edge probe) and the score base bucketed by id — then pass the
     * returned [[GraphBase]] to [[batchStep]] so appends probe pruned
     * bucket files / sorted row groups instead of re-scanning the full
-    * log ~4× (the same maintenance shape as
-    * `StreamingDedup.compactSubstringRegistry`). The `batch_id=*` dirs
+    * log ~4×. The `batch_id=*` dirs
     * remain the write path and source of truth; the tables are
     * read-optimized copies of the installed `batch_id=-1` base and are
     * rebuilt on each maintenance sweep.
@@ -363,11 +362,11 @@ object StreamingGraph {
       .filter(col("batch_id") === -1L)
       .select(("id" +: "outdeg" +: scoreCols(iters)).map(col): _*)
     val eSrc = graft.ops.Relational.materializeBucketed(
-      eBase, s"$tablePath/edges_src", s"${tablePrefix}_edges_src", Seq("src"), buckets, onePerBucket = true)
+      eBase, s"$tablePath/edges_src", s"${tablePrefix}_edges_src", Seq("src"), buckets)
     val eDst = graft.ops.Relational.materializeBucketed(
-      eBase, s"$tablePath/edges_dst", s"${tablePrefix}_edges_dst", Seq("dst"), buckets, onePerBucket = true)
+      eBase, s"$tablePath/edges_dst", s"${tablePrefix}_edges_dst", Seq("dst"), buckets)
     val sId = graft.ops.Relational.materializeBucketed(
-      sBase, s"$tablePath/scores_id", s"${tablePrefix}_scores_id", Seq("id"), buckets, onePerBucket = true)
+      sBase, s"$tablePath/scores_id", s"${tablePrefix}_scores_id", Seq("id"), buckets)
     GraphBase(eSrc, eDst, sId, iters)
   }
 }

@@ -1321,20 +1321,6 @@ object TextOps {
   def importanceScores(raw: org.apache.spark.sql.DataFrame,
       target: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
       scale: Long = 1000000L, n: Int = 1): org.apache.spark.sql.DataFrame = {
-    val (rawToks, counts) = dsirTokenCounts(raw, target, idCol, textCol, n)
-    val weights = counts.select(col("tok"),
-      expr(s"((coalesce(__ct, 0L) + 1L) * ${scale}L) div (__cr + 1L)").as("__wq"))
-    rawToks.join(weights, "tok")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_toks"), sum(col("__wq")).as("score"))
-  }
-
-  /** Shared DSIR counting stage: the hashed unit stream of the raw
-    * corpus and the per-token (raw count, target count) table both
-    * weight variants project from. */
-  private def dsirTokenCounts(raw: org.apache.spark.sql.DataFrame,
-      target: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
-      n: Int): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     // n > 1 scores hashed n-gram occurrences (the DSIR paper's unit);
     // shingle arrays are built from a materialized token column (the
     // same O(tokens) discipline as the dedup suite)
@@ -1348,32 +1334,11 @@ object TextOps {
       .select(tokenHash("__tok").as("tok"))
     val cRaw = rawToks.groupBy("tok").agg(count(lit(1)).as("__cr"))
     val cTgt = tgtToks.groupBy("tok").agg(count(lit(1)).as("__ct"))
-    (rawToks, cRaw.join(cTgt, Seq("tok"), "left_outer"))
-  }
-
-  /** The DSIR paper's log-weight form, closing the documented deviation
-    * of [[importanceScores]]: per-token weight
-    * `w(t) = ln(c_tgt(t)+1) − ln(c_raw(t)+1)` (add-one-smoothed
-    * unnormalized log likelihood ratio; the corpus-level normalizers
-    * shift every token's weight by the same constant and are omitted,
-    * as the ranking — DSIR's consumer — is invariant to them), score =
-    * double sum over the document's token occurrences. `ln` is a libm
-    * call whose last ulp varies across engines, so this variant is
-    * SPEC-gated (brute-force parity + directional agreement with the
-    * integer variant) rather than hash-oracle-gated; the integer
-    * variant remains the cross-engine contract. Same plan shape: two
-    * token-count aggregates, one vocabulary-sized join, one per-doc
-    * sum. */
-  def importanceScoresLog(raw: org.apache.spark.sql.DataFrame,
-      target: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
-      n: Int = 1): org.apache.spark.sql.DataFrame = {
-    val (rawToks, counts) = dsirTokenCounts(raw, target, idCol, textCol, n)
-    val weights = counts.select(col("tok"),
-      (log(coalesce(col("__ct"), lit(0L)) + lit(1L).cast("double")) -
-        log(col("__cr") + lit(1L).cast("double"))).as("__w"))
+    val weights = cRaw.join(cTgt, Seq("tok"), "left_outer").select(col("tok"),
+      expr(s"((coalesce(__ct, 0L) + 1L) * ${scale}L) div (__cr + 1L)").as("__wq"))
     rawToks.join(weights, "tok")
       .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_toks"), sum(col("__w")).as("score_log"))
+      .agg(count(lit(1)).as("n_toks"), sum(col("__wq")).as("score"))
   }
 
   /** DuckDB twin of [[importanceScores]]: identical hashed-unigram
@@ -1838,8 +1803,8 @@ object TextOps {
     * [[boilerplateRemove]] (spec-pinned). `registry` is (h, cnt) rows
     * from STRICTLY EARLIER batches — a count registry, so the
     * strictly-earlier read (not exclude-own-batch) is what makes
-    * replay byte-identical (see
-    * [[graft.streaming.StreamingDedup.driftBatchStep]]'s rationale);
+    * replay byte-identical (a replayed batch must not see the counts
+    * of batches after it);
     * pre-summed (compacted) and per-batch row forms both work, the
     * kernel re-sums. */
   def boilerplateSuppress(batch: org.apache.spark.sql.DataFrame,

@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.api.GraftApi
-import graft.catalog.Catalog
+import graft.catalog.{ArchiveStore, Catalog}
 
 class CatalogApiSpec extends SparkSpec {
 
@@ -135,7 +135,7 @@ class CatalogApiSpec extends SparkSpec {
     assert(cat.archive.columns.toSeq === Seq("attribute_id", "timestamp", "value"))
   }
 
-  test("T5 upsertArchive rewrites only touched date partitions, last-write-wins") {
+  test("T5 archive upsert rewrites only touched date partitions, last-write-wins") {
     val (_, cat) = freshApi()
     val sess = spark
     import sess.implicits._
@@ -144,16 +144,15 @@ class CatalogApiSpec extends SparkSpec {
       (1, ts("2024-01-02 10:00:00"), 2.0),
       (2, ts("2024-01-02 11:00:00"), 9.0),
       (1, ts("2024-01-03 10:00:00"), 3.0)).toDF("attribute_id", "timestamp", "value"))
-    def partFiles(date: String): Set[String] = {
-      val root = new java.io.File(new java.net.URI(cat.archive.inputFiles.head))
-        .getParentFile.getParentFile
-      new java.io.File(root, s"p_date=$date").listFiles()
+    val archiveDir = new java.io.File(new java.net.URI(cat.archive.inputFiles.head))
+      .getParentFile.getParentFile
+    def partFiles(date: String): Set[String] =
+      new java.io.File(archiveDir, s"p_date=$date").listFiles()
         .map(_.getName).filter(_.endsWith(".parquet")).toSet
-    }
     val day1Before = partFiles("2024-01-01")
     val day3Before = partFiles("2024-01-03")
     // upsert into day 2 only: change one key, add one key
-    cat.upsertArchive(Seq(
+    ArchiveStore.upsert(spark, archiveDir.getPath, Seq(
       (1, ts("2024-01-02 10:00:00"), 22.0),
       (3, ts("2024-01-02 12:00:00"), 33.0)).toDF("attribute_id", "timestamp", "value"))
     val rows = cat.archive.orderBy("timestamp", "attribute_id").collect()
@@ -162,6 +161,21 @@ class CatalogApiSpec extends SparkSpec {
     // untouched date partitions keep their physical files
     assert(partFiles("2024-01-01") === day1Before)
     assert(partFiles("2024-01-03") === day3Before)
+  }
+
+  test("archiveRange is inclusive on both ends; either bound may be open") {
+    val (_, cat) = freshApi()
+    val sess = spark
+    import sess.implicits._
+    cat.appendArchive(Seq(
+      (1, ts("2024-01-01 00:00:00"), 1.0),
+      (1, ts("2024-01-02 00:00:00"), 2.0),
+      (1, ts("2024-01-03 00:00:00"), 3.0)).toDF("attribute_id", "timestamp", "value"))
+    val got = cat.archiveRange(
+      Some("2024-01-01 00:00:00"), Some("2024-01-02 00:00:00")).count()
+    assert(got === 2)
+    assert(cat.archiveRange(None, None).count() === 3)
+    assert(cat.archiveRange(Some("2024-01-03 00:00:00"), None).count() === 1)
   }
 
   test("compact merges fragmented date partitions without changing rows") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.dedup.Dedup
 import graft.sim.Similarity
 import graft.streaming.StreamingEr
@@ -47,32 +45,6 @@ class DeepChainSpec extends SparkSpec {
     assert(out.length === 41)
     assert(out.forall { case (_, rep, _) => rep === 0L })
     assert(out.filter(_._3).map(_._1).toSeq === Seq(0L))
-  }
-
-  test("semDedupIncrement completes when one installment carries a " +
-      "41-vector gradient chain") {
-    val sess = spark
-    import sess.implicits._
-    // seed doc at 200° — ≥40° from every chain point (cos 40° ≈ 0.77 <
-    // 0.995), so it seeds the single centroid without pairing with the
-    // chain; the increment's component structure is the pure path
-    val t = math.toRadians(200.0)
-    val seed = Seq((1000L, Array(math.cos(t).toFloat, math.sin(t).toFloat)))
-      .toDF("vec_id", "embedding")
-    val (s0, audit0) = Similarity.semDedupInit(seed, 2, nCentroids = 1,
-      threshold = 0.995)
-    assert(audit0.filter(col("kept")).count() === 1L)
-    val chain = (0 until 41).map(i => (i.toLong, arc(i)))
-      .toDF("vec_id", "embedding")
-    val (s1, audit1) = Similarity.semDedupIncrement(s0, chain, 2,
-      threshold = 0.995)
-    val rows = audit1.collect().map(r => (r.getLong(0), r.getLong(2), r.getBoolean(3)))
-    assert(rows.length === 41)
-    assert(rows.forall { case (_, rep, _) => rep === 0L })
-    assert(rows.filter(_._3).map(_._1).toSeq === Seq(0L))
-    // survivors joined the rep state: the frozen seed plus the chain rep
-    assert(s1.reps.select("vec_id").collect().map(_.getLong(0)).toSet
-      === Set(1000L, 0L))
   }
 
   test("StreamingEr completes on a batch whose match graph is a " +

@@ -257,21 +257,6 @@ class EntityResolutionSpec extends SparkSpec {
     assert(resolvedMap() === batch, "replayed batch changed resolution")
   }
 
-  test("multi-pass blocking is the deduplicated union of the passes") {
-    val sess = spark
-    import sess.implicits._
-    val df = Seq(
-      (1L, "b1", "p1"), (2L, "b1", "p2"), // share blk only
-      (3L, "b2", "p2"), (4L, "b3", "p3"), // 3 shares phn with 2
-      (5L, "b1", "p1")                    // shares blk with 1,2 AND phn with 1
-    ).toDF("id", "blk", "phn")
-    val got = EntityResolution.candidatePairsMulti(df, "id",
-      Seq(Seq("blk"), Seq("phn")))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // blk pass: (1,2),(1,5),(2,5); phn pass: (2,3),(1,5) — (1,5) once
-    assert(got === Set((1L, 2L), (1L, 5L), (2L, 5L), (2L, 3L)))
-  }
-
   test("incremental ER compaction folds resolved labels in place; later batches unaffected") {
     import graft.streaming.StreamingEr
     import graft.model.Tables
@@ -348,35 +333,33 @@ class EntityResolutionSpec extends SparkSpec {
   }
 
   test("compaction crash windows are recoverable: parked base restored, stale staging discarded") {
-    import graft.streaming.{RegistryFs, StreamingAttribution}
-    import graft.model.Tables
-    val ev = Tables.events(spark, sfDir).localCheckpoint()
-    val dir = java.nio.file.Files.createTempDirectory("graft_reg_crash")
-      .toString + "/registry"
-    val week = expr("unix_micros(cast(ts as timestamp)) div 604800000000")
-    Seq(0L, 1L).foreach { i =>
-      StreamingAttribution.batchStep(spark, dir, s"$dir/../out",
-        86400000000L)(ev.filter(week % 2 === i), i)
-    }
-    StreamingAttribution.compactRegistry(spark, dir, upToBatchId = 2L)
-    val want = StreamingAttribution.readRegistry(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
+    val sess = spark
+    import sess.implicits._
+    import graft.streaming.{RegistryFs, StreamingEr}
+    val root = java.nio.file.Files.createTempDirectory("graft_reg_crash").toString
+    val dir = s"$root/registry"
+    Seq(Seq((10L, "aaaa"), (20L, "aabb")), Seq((15L, "aaab"), (30L, "zzzz")))
+      .zipWithIndex.foreach { case (rows, i) =>
+        StreamingEr.batchStep(spark, dir, s"$root/merge", "id", "name",
+          Seq("blk"), maxDist = 1)(
+          rows.map { case (id, nm) => (id, nm, "b") }.toDF("id", "name", "blk"), i.toLong)
+      }
+    StreamingEr.compactRegistry(spark, dir, s"$root/merge", "id", upToBatchId = 2L)
+    def registry() = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    val want = registry()
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // simulate a crash between park and install: base parked, staging gone
     assert(fs.rename(new org.apache.hadoop.fs.Path(dirPath, "batch_id=-1"),
       new org.apache.hadoop.fs.Path(dirPath, ".compact-old")))
     RegistryFs.recover(fs, dirPath)
-    assert(StreamingAttribution.readRegistry(spark, dir)
-      .collect().map(_.toString).sorted.toSeq === want,
-      "recover() did not restore the parked base")
+    assert(registry() === want, "recover() did not restore the parked base")
     // a leftover staging dir (crash before any rename) is stale: its fold
     // may predate newer batches — recover must discard it and keep the base
     fs.mkdirs(new org.apache.hadoop.fs.Path(dirPath, ".compact-staging"))
     RegistryFs.recover(fs, dirPath)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dirPath, ".compact-staging")))
-    assert(StreamingAttribution.readRegistry(spark, dir)
-      .collect().map(_.toString).sorted.toSeq === want)
+    assert(registry() === want)
   }
 
   test("er_match plan: blocking is an equi-join, never a cartesian product") {

@@ -198,7 +198,7 @@ class GraphOpsSpec extends SparkSpec {
     val e = (1L to 200L).flatMap(i => Seq((i, i % 50 + 1), (i % 50 + 1, i)))
       .toDF("src", "dst")
     val bucketed = graft.ops.Relational.materializeBucketed(
-      e, s"$dir/edges", "t_graph_edges_bucketed", "src", 8)
+      e, s"$dir/edges", "t_graph_edges_bucketed", Seq("src"), 8)
     try {
       val state = (1L to 200L).map(i => (i, 1000000L)).toDF("src", "score")
       val stepped = bucketed.join(state, Seq("src"))

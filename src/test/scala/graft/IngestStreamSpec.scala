@@ -105,137 +105,6 @@ class IngestStreamSpec extends SparkSpec {
     assert(out === Seq(5.0, 66.0))
   }
 
-  test("windowedRollup finalizes per-window aggregates under a watermark") {
-    val sess = spark
-    import sess.implicits._
-    implicit val sq = sess.sqlContext
-    val dir = Files.createTempDirectory("graft_rollup").toString
-    val mem = MemoryStream[(Int, Timestamp, Double)]
-    val coerced = mem.toDF.toDF("attribute_id", "timestamp", "value")
-    def ts(s: String) = Timestamp.valueOf(s)
-    mem.addData(
-      (1, ts("2024-01-01 00:10:00"), 5.0),
-      (1, ts("2024-01-01 00:50:00"), 15.0),
-      (2, ts("2024-01-01 00:20:00"), 7.0),
-      (1, ts("2024-01-01 01:05:00"), 99.0)) // next window
-    val q = DerivedStream.windowedRollup(coerced, "1 hour", "10 minutes")
-      .writeStream.format("memory").queryName("rollup")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val rows = spark.table("rollup")
-      .orderBy("window_start", "attribute_id").collect()
-    assert(rows.length === 3)
-    assert(rows(0).getLong(2) === 2 && rows(0).getDouble(3) === 5.0 && rows(0).getDouble(4) === 15.0)
-    assert(rows(1).getLong(2) === 1 && rows(1).getDouble(3) === 7.0)
-    assert(rows(2).getLong(2) === 1 && rows(2).getDouble(4) === 99.0)
-  }
-
-  test("slidingRollup lands each event in every overlapping window") {
-    val sess = spark
-    import sess.implicits._
-    implicit val sq = sess.sqlContext
-    val mem = MemoryStream[(Int, Timestamp, Double)]
-    val coerced = mem.toDF.toDF("attribute_id", "timestamp", "value")
-    def ts(s: String) = Timestamp.valueOf(s)
-    mem.addData((1, ts("2024-01-01 00:40:00"), 5.0))
-    val q = DerivedStream.slidingRollup(coerced, "1 hour", "30 minutes", "10 minutes")
-      .writeStream.format("memory").queryName("sliding")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val starts = spark.table("sliding").orderBy("window_start")
-      .collect().map(_.getTimestamp(0).toString)
-    // 00:40 is inside [00:00,01:00) and [00:30,01:30): two windows, one event
-    assert(starts.toSeq === Seq("2024-01-01 00:00:00.0", "2024-01-01 00:30:00.0"))
-  }
-
-  test("correlateStreams: stream-stream join pairs readings within the lag bound only") {
-    val sess = spark
-    import sess.implicits._
-    implicit val sq = sess.sqlContext
-    val memL = MemoryStream[(Int, Timestamp, Double)]
-    val memR = MemoryStream[(Int, Timestamp, Double)]
-    def ts(s: String) = Timestamp.valueOf(s)
-    memL.addData(
-      (1, ts("2024-01-01 00:10:00"), 1.0),
-      (2, ts("2024-01-01 00:10:00"), 2.0))
-    memR.addData(
-      (1, ts("2024-01-01 00:12:00"), 10.0), // +2m: within 5m lag
-      (1, ts("2024-01-01 00:30:00"), 20.0), // +20m: outside
-      (2, ts("2024-01-01 00:06:00"), 30.0), // -4m: within
-      (3, ts("2024-01-01 00:10:00"), 40.0)) // different key
-    val q = graft.streaming.DerivedStream.correlateStreams(
-      memL.toDF.toDF("attribute_id", "timestamp", "value"),
-      memR.toDF.toDF("attribute_id", "timestamp", "value"),
-      "attribute_id", maxLagSeconds = 300)
-      .writeStream.format("memory").queryName("corr").outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val rows = spark.table("corr")
-      .select("attribute_id", "value", "r_value")
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2))).toSet
-    assert(rows === Set((1, 1.0, 10.0), (2, 2.0, 30.0)))
-  }
-
-  test("hllRollup: streaming per-window registers equal the batch sketch bit-exactly") {
-    val sess = spark
-    import sess.implicits._
-    implicit val sq = sess.sqlContext
-    val mem = MemoryStream[(Int, Timestamp, Long)]
-    def ts(s: String) = Timestamp.valueOf(s)
-    // two windows, repeated users within a window (max is idempotent —
-    // re-observation must not change a register)
-    val rows = Seq(
-      (1, ts("2024-01-01 00:05:00"), 101L), (1, ts("2024-01-01 00:10:00"), 102L),
-      (1, ts("2024-01-01 00:20:00"), 101L), (1, ts("2024-01-01 01:05:00"), 103L),
-      (2, ts("2024-01-01 00:30:00"), 201L))
-    mem.addData(rows: _*)
-    val hashed = mem.toDF.toDF("attribute_id", "timestamp", "h")
-    val q = graft.streaming.DerivedStream.hllRollup(hashed, "1 hour", 64)
-      .writeStream.format("memory").queryName("hll").outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("hll")
-      .select("window_start", "attribute_id", "bucket", "register")
-      .collect().map(r => (r.getTimestamp(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
-    val batch = graft.sketch.Sketches.hllRegistersBy(
-      rows.toDF("attribute_id", "timestamp", "h")
-        .withColumn("hour", date_trunc("hour", col("timestamp"))),
-      Seq("hour", "attribute_id"), 64)
-      .collect().map(r => (r.getTimestamp(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
-    assert(streamed === batch)
-    assert(streamed.map(t => (t._1, t._2)).size >= 3) // (window, attr) groups present
-  }
-
-  test("sessionRollup merges bursts and splits on gaps") {
-    val sess = spark
-    import sess.implicits._
-    implicit val sq = sess.sqlContext
-    val mem = MemoryStream[(Int, Timestamp, Double)]
-    val coerced = mem.toDF.toDF("attribute_id", "timestamp", "value")
-    def ts(s: String) = Timestamp.valueOf(s)
-    mem.addData(
-      (1, ts("2024-01-01 00:00:00"), 1.0),
-      (1, ts("2024-01-01 00:10:00"), 2.0), // within 30m gap → same session
-      (1, ts("2024-01-01 02:00:00"), 3.0)) // >30m silence → new session
-    val q = DerivedStream.sessionRollup(coerced, "30 minutes", "10 minutes")
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val rows = spark.table("sessions").orderBy("session_start").collect()
-    assert(rows.length === 2)
-    assert(rows(0).getLong(3) === 2) // merged burst
-    assert(rows(0).getTimestamp(1).toString === "2024-01-01 00:40:00.0") // end = last + gap
-    assert(rows(1).getLong(3) === 1)
-  }
-
   test("T6: independent per-namespace streams run concurrently") {
     val sess = spark
     import sess.implicits._
@@ -685,62 +554,13 @@ class IngestStreamSpec extends SparkSpec {
   test("stateful paths hold under the RocksDB state store (state off-heap, not in executor memory)") {
     // the default in-memory provider caps streaming state at the heap;
     // RocksDB is the 100 TB configuration (state spills to local disk).
-    // Same sessionization scenario as StreamingSessionsSpec and the
-    // hllRollup bit-parity check, assertions unchanged — only the
-    // provider differs.
-    val sess = spark
-    import sess.implicits._
-    implicit val sq = sess.sqlContext
+    // Same sessionization scenario as StreamingSessionsSpec, assertions
+    // unchanged — only the provider differs.
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def ts(s: String) = Timestamp.valueOf(s)
-      // StreamingSessions: session-window state stitches across batches
-      StreamingSessionsSpec.checkStitchAndParity(spark)
-
-      // hllRollup: streaming registers still equal the batch sketch bit-exactly
-      val memH = MemoryStream[(Int, Timestamp, Long)]
-      val rows = Seq(
-        (1, ts("2024-01-01 00:05:00"), 101L), (1, ts("2024-01-01 00:10:00"), 102L),
-        (1, ts("2024-01-01 00:20:00"), 101L), (1, ts("2024-01-01 01:05:00"), 103L),
-        (2, ts("2024-01-01 00:30:00"), 201L))
-      memH.addData(rows: _*)
-      val q = graft.streaming.DerivedStream.hllRollup(
-        memH.toDF.toDF("attribute_id", "timestamp", "h"), "1 hour", 64)
-        .writeStream.format("memory").queryName("hll_rocks").outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(120000)
-      val streamed = spark.table("hll_rocks")
-        .select("window_start", "attribute_id", "bucket", "register")
-        .collect().map(r => (r.getTimestamp(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
-      val batch = graft.sketch.Sketches.hllRegistersBy(
-        rows.toDF("attribute_id", "timestamp", "h")
-          .withColumn("hour", date_trunc("hour", col("timestamp"))),
-        Seq("hour", "attribute_id"), 64)
-        .collect().map(r => (r.getTimestamp(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
-      assert(streamed === batch)
-
-      // correlateStreams: dual-watermark join state lives in RocksDB too
-      val memL = MemoryStream[(Int, Timestamp, Double)]
-      val memR = MemoryStream[(Int, Timestamp, Double)]
-      memL.addData((1, ts("2024-01-01 00:10:00"), 1.0))
-      memR.addData(
-        (1, ts("2024-01-01 00:12:00"), 10.0), // within 5m lag
-        (1, ts("2024-01-01 00:30:00"), 20.0)) // outside
-      val qc = graft.streaming.DerivedStream.correlateStreams(
-        memL.toDF.toDF("attribute_id", "timestamp", "value"),
-        memR.toDF.toDF("attribute_id", "timestamp", "value"),
-        "attribute_id", maxLagSeconds = 300)
-        .writeStream.format("memory").queryName("corr_rocks").outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      qc.awaitTermination(120000)
-      val corr = spark.table("corr_rocks").select("attribute_id", "value", "r_value")
-        .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2))).toSet
-      assert(corr === Set((1, 1.0, 10.0)))
-    } finally prev match {
+    try StreamingSessionsSpec.checkStitchAndParity(spark)
+    finally prev match {
       case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
       case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }

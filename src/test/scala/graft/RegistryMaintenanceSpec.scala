@@ -3,24 +3,21 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-import graft.model.Tables
 import graft.streaming.RegistryMaintenance._
-import graft.streaming.{RegistryMaintenance, StreamingAttribution, StreamingDedup, StreamingEr, StreamingSketch}
+import graft.streaming.{RegistryMaintenance, StreamingCc, StreamingEr, StreamingGraph}
 
 /** The one-sweep maintenance contract: after `maintainAll` folds every
   * streaming registry to its `batch_id=-1` base (frontier BELOW the
   * latest batch — the live-stream shape), the next batch of every
-  * stream produces byte-identical output, every "current state" read
-  * is unchanged, and the registries hold strictly fewer files. */
+  * stream writes the same rows, every "current state" read is
+  * unchanged, and the registries hold strictly fewer files. */
 class RegistryMaintenanceSpec extends SparkSpec {
+
+  private val Iters = 3
 
   private def rowSet(df: DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
-
-  private def readAll(dir: String): DataFrame =
-    spark.read.option("basePath", dir).parquet(dir).drop("batch_id")
 
   private def parquetFiles(dir: String): Int = {
     def walk(f: java.io.File): Int =
@@ -29,47 +26,23 @@ class RegistryMaintenanceSpec extends SparkSpec {
     walk(new java.io.File(dir))
   }
 
-  /** 32 docs in 4 batches of 8, with cross-batch repeats (7/12/20 share
-    * doc 4's text; 17 shares doc 2's) so the claim registries actually
-    * suppress across the compaction frontier. */
-  private def docBatches: Seq[DataFrame] = {
+  test("maintainAll below the latest batch: next-batch parity, state parity, fewer files") {
     val sess = spark
     import sess.implicits._
-    val texts = Tables.documents(spark, sfDir)
-      .filter(length(col("text")) > 50)
-      .orderBy("doc_id").limit(32).collect().map(_.getAs[String]("text"))
-    val rows = (1L to 32L).map { id =>
-      val t = id match {
-        case 7 | 12 | 20 => texts(3)
-        case 17          => texts(1)
-        case _           => texts(id.toInt - 1)
-      }
-      (id, id, id % 3, t)
-    }
-    rows.grouped(8).toSeq
-      .map(g => g.toDF("doc_id", "ts", "source", "text"))
-  }
-
-  test("maintainAll below the latest batch: next-batch parity, state parity, fewer files") {
-    val batches = docBatches.map(_.localCheckpoint())
-    val erBatches = {
-      val sess = spark
-      import sess.implicits._
-      Seq(
-        Seq((10L, "widget-a", "b"), (15L, "gadget-z", "b")),
-        Seq((20L, "widget-b", "b")),
-        Seq((5L, "widget-c", "b")),
-        Seq((25L, "widget-d", "b"), (3L, "gadget-y", "b"))
-      ).map(_.toDF("id", "name", "blk").localCheckpoint())
-    }
-    val ev = Tables.events(spark, sfDir).localCheckpoint()
-    val evSplits = Seq("2024-01-05 00:00:00", "2024-01-10 00:00:00",
-      "2024-01-20 00:00:00").map(s => lit(s).cast("timestamp"))
-    val evBatches = Seq(
-      ev.filter(col("ts") < evSplits(0)),
-      ev.filter(col("ts") >= evSplits(0) && col("ts") < evSplits(1)),
-      ev.filter(col("ts") >= evSplits(1) && col("ts") < evSplits(2)),
-      ev.filter(col("ts") >= evSplits(2)))
+    val erBatches = Seq(
+      Seq((10L, "widget-a", "b"), (15L, "gadget-z", "b")),
+      Seq((20L, "widget-b", "b")),
+      Seq((5L, "widget-c", "b")),
+      Seq((25L, "widget-d", "b"), (3L, "gadget-y", "b"))
+    ).map(_.toDF("id", "name", "blk").localCheckpoint())
+    // edge appends shared by the CC and PageRank streams: components
+    // that merge across the frontier, a duplicate edge and a self-loop
+    val edgeBatches = Seq(
+      Seq((1L, 2L), (2L, 3L), (10L, 11L)),
+      Seq((3L, 1L), (20L, 21L), (1L, 2L)),
+      Seq((11L, 20L), (4L, 4L)),
+      Seq((21L, 3L), (30L, 31L))
+    ).map(_.toDF("src", "dst").localCheckpoint())
 
     // two identical trees; only `swept` gets maintained
     val trees = Seq("plain", "swept").map { name =>
@@ -78,22 +51,31 @@ class RegistryMaintenanceSpec extends SparkSpec {
 
     def runBatch(root: String, i: Int): Unit = {
       val id = i.toLong
-      StreamingDedup.batchStep(spark, s"$root/nd_reg", s"$root/nd_kept",
-        "doc_id", "ts", "text", 3)(batches(i), id)
-      StreamingDedup.substringBatchStep(spark, s"$root/ss_reg",
-        s"$root/ss_clean", "doc_id", "text", 8)(batches(i), id)
-      StreamingDedup.noveltyBatchStep(spark, s"$root/nv_reg",
-        s"$root/nv_scored", "doc_id", "text", 3)(batches(i), id)
-      StreamingDedup.cdcBatchStep(spark, s"$root/cdc_reg",
-        s"$root/cdc_dec", "doc_id", "text")(batches(i), id)
-      StreamingDedup.driftBatchStep(spark, s"$root/dr_reg",
-        s"$root/dr_out", "text")(batches(i), id)
-      StreamingSketch.kmvBatchStep(spark, s"$root/kmv_reg",
-        "source", "text", 3, 16)(batches(i), id)
       StreamingEr.batchStep(spark, s"$root/er_reg", s"$root/er_merge",
         "id", "name", Seq("blk"), maxDist = 1)(erBatches(i), id)
-      StreamingAttribution.batchStep(spark, s"$root/at_reg",
-        s"$root/at_out", 86400000000L)(evBatches(i), id)
+      StreamingCc.batchStep(spark, s"$root/cc_edges", s"$root/cc_labels",
+        "src", "dst")(edgeBatches(i), id)
+      StreamingGraph.batchStep(spark, s"$root/pr_edges", s"$root/pr_scores",
+        "src", "dst", Iters)(edgeBatches(i), id)
+    }
+
+    def sweep(root: String, upTo: Long): Unit =
+      RegistryMaintenance.maintainAll(spark, Seq(
+        ErRegistry(s"$root/er_reg", s"$root/er_merge", "id"),
+        CcState(s"$root/cc_edges", s"$root/cc_labels"),
+        PageRankState(s"$root/pr_edges", s"$root/pr_scores", Iters)),
+        upToBatchId = upTo)
+
+    def assertStateParity(swept: String, plain: String): Unit = {
+      assert(
+        rowSet(StreamingEr.resolveEntities(spark, s"$swept/er_reg",
+          s"$swept/er_merge", "id")) ===
+        rowSet(StreamingEr.resolveEntities(spark, s"$plain/er_reg",
+          s"$plain/er_merge", "id")))
+      assert(rowSet(StreamingCc.readLabels(spark, s"$swept/cc_labels")) ===
+        rowSet(StreamingCc.readLabels(spark, s"$plain/cc_labels")))
+      assert(rowSet(StreamingGraph.readScores(spark, s"$swept/pr_scores", Iters)) ===
+        rowSet(StreamingGraph.readScores(spark, s"$plain/pr_scores", Iters)))
     }
 
     for (i <- 0 to 2; root <- trees.values) runBatch(root, i)
@@ -104,42 +86,22 @@ class RegistryMaintenanceSpec extends SparkSpec {
     // frontier BELOW the latest batch (folds 0,1; batch 2 keeps its own
     // partitions) — the live-stream case, and for ER the case where
     // batch-2 merge rows still reference pre-frontier labels
-    RegistryMaintenance.maintainAll(spark, Seq(
-      NearDupClaims(s"$swept/nd_reg"),
-      GramClaims(s"$swept/ss_reg"),
-      GramClaims(s"$swept/nv_reg"),
-      GramClaims(s"$swept/cdc_reg"),
-      TokenCounts(s"$swept/dr_reg"),
-      KmvSketches(s"$swept/kmv_reg", "source", 16),
-      ErRegistry(s"$swept/er_reg", s"$swept/er_merge", "id"),
-      AttributionClicks(s"$swept/at_reg")), upToBatchId = 2L)
+    sweep(swept, 2L)
     assert(parquetFiles(swept) < filesBefore,
       "sweep did not shrink the registries")
     assert(parquetFiles(swept) < parquetFiles(plain))
+    assertStateParity(swept, plain)
 
     for (root <- trees.values) runBatch(root, 3)
 
-    // next-batch output parity, stream by stream
-    for (out <- Seq("nd_kept", "ss_clean", "nv_scored", "cdc_dec", "dr_out", "at_out"))
+    // next-batch output parity for the streams whose batch rows carry no
+    // arrival-time label (ER is checked through its resolved state)
+    for (out <- Seq("cc_edges", "cc_labels", "pr_edges", "pr_scores"))
       assert(
         rowSet(spark.read.parquet(s"$swept/$out/batch_id=3")) ===
         rowSet(spark.read.parquet(s"$plain/$out/batch_id=3")),
         s"$out diverged after the sweep")
-    // ... and cumulative outputs are unchanged too
-    for (out <- Seq("nd_kept", "ss_clean", "nv_scored", "cdc_dec", "dr_out", "at_out"))
-      assert(rowSet(readAll(s"$swept/$out")) === rowSet(readAll(s"$plain/$out")))
-
-    // current-state parity for the stateful reads
-    assert(
-      rowSet(StreamingSketch.kmvCurrent(spark, s"$swept/kmv_reg",
-        "source", 16, groupType = "bigint")) ===
-      rowSet(StreamingSketch.kmvCurrent(spark, s"$plain/kmv_reg",
-        "source", 16, groupType = "bigint")))
-    assert(
-      rowSet(StreamingEr.resolveEntities(spark, s"$swept/er_reg",
-        s"$swept/er_merge", "id")) ===
-      rowSet(StreamingEr.resolveEntities(spark, s"$plain/er_reg",
-        s"$plain/er_merge", "id")))
+    assertStateParity(swept, plain)
     // the widget chain must be ONE entity labelled by its min id (5),
     // which requires the folded merge closure to have been retained
     val entities = StreamingEr.resolveEntities(spark, s"$swept/er_reg",
@@ -148,35 +110,19 @@ class RegistryMaintenanceSpec extends SparkSpec {
     assert(Seq(10L, 20L, 5L).map(entities) === Seq(5L, 5L, 5L))
 
     // a second sweep at the full frontier composes with the first base
-    RegistryMaintenance.maintainAll(spark, Seq(
-      NearDupClaims(s"$swept/nd_reg"),
-      GramClaims(s"$swept/ss_reg"),
-      TokenCounts(s"$swept/dr_reg"),
-      KmvSketches(s"$swept/kmv_reg", "source", 16),
-      ErRegistry(s"$swept/er_reg", s"$swept/er_merge", "id"),
-      AttributionClicks(s"$swept/at_reg")), upToBatchId = 4L)
-    assert(
-      rowSet(StreamingEr.resolveEntities(spark, s"$swept/er_reg",
-        s"$swept/er_merge", "id")) ===
-      rowSet(StreamingEr.resolveEntities(spark, s"$plain/er_reg",
-        s"$plain/er_merge", "id")))
-    assert(
-      rowSet(StreamingSketch.kmvCurrent(spark, s"$swept/kmv_reg",
-        "source", 16, groupType = "bigint")) ===
-      rowSet(StreamingSketch.kmvCurrent(spark, s"$plain/kmv_reg",
-        "source", 16, groupType = "bigint")))
+    sweep(swept, 4L)
+    assertStateParity(swept, plain)
   }
 
   test("maintainAll skips registries whose streams have not started") {
     val dir = Files.createTempDirectory("graft_maint_empty").toString
     // nothing written anywhere: every case must no-op, not throw
     RegistryMaintenance.maintainAll(spark, Seq(
-      NearDupClaims(s"$dir/nd_reg"),
-      GramClaims(s"$dir/ss_reg"),
-      TokenCounts(s"$dir/dr_reg"),
-      KmvSketches(s"$dir/kmv_reg", "source", 16),
       ErRegistry(s"$dir/er_reg", s"$dir/er_merge", "id"),
-      AttributionClicks(s"$dir/at_reg")), upToBatchId = 5L)
-    assert(!new java.io.File(s"$dir/nd_reg").exists())
+      CcState(s"$dir/cc_edges", s"$dir/cc_labels"),
+      PageRankState(s"$dir/pr_edges", s"$dir/pr_scores", Iters)), upToBatchId = 5L)
+    assert(!new java.io.File(s"$dir/er_reg").exists())
+    assert(!new java.io.File(s"$dir/cc_labels").exists())
+    assert(!new java.io.File(s"$dir/pr_scores").exists())
   }
 }

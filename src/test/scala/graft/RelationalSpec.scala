@@ -7,18 +7,6 @@ import graft.ops.Relational
 
 class RelationalSpec extends SparkSpec {
 
-  test("timeRange is inclusive on both ends") {
-    val sess = spark
-    import sess.implicits._
-    val df = Seq("2024-01-01 00:00:00", "2024-01-02 00:00:00", "2024-01-03 00:00:00")
-      .toDF("s").select($"s".cast("timestamp").as("ts"))
-    val got = Relational.timeRange(df, "ts",
-      Some("2024-01-01 00:00:00"), Some("2024-01-02 00:00:00")).count()
-    assert(got === 2)
-    assert(Relational.timeRange(df, "ts", None, None).count() === 3)
-    assert(Relational.timeRange(df, "ts", Some("2024-01-03 00:00:00"), None).count() === 1)
-  }
-
   test("rangeJoin: inclusive bounds, multi-cell intervals, exactly-once pairs") {
     val sess = spark
     import sess.implicits._
@@ -164,15 +152,6 @@ class RelationalSpec extends SparkSpec {
     assert(out.length === 2)
     assert(out(0).getDouble(1) === 1.0 && out(0).getDouble(2) === 2.0)
     assert(out(1).getDouble(1) === 3.0 && out(1).isNullAt(2))
-  }
-
-  test("semiJoinFilter equals inList on the same key set") {
-    val part = Tables.part(spark, sfDir)
-    val keys = part.select("p_partkey").limit(10)
-    val a = Relational.semiJoinFilter(part, keys, "p_partkey").count()
-    val ids = keys.collect().map(_.getLong(0)).toSeq
-    val b = Relational.inList(part, "p_partkey", ids).count()
-    assert(a === b)
   }
 
   test("whereEqualsGlobalAgg matches driver-side computation") {

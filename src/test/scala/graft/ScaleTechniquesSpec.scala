@@ -5,26 +5,13 @@ import org.apache.spark.sql.functions._
 import graft.model.Tables
 import graft.ops.Relational
 
-/** The two shuffle-shaping techniques SURVEY.md §4 calls out for the
-  * 100 TB design point, each proven on the fixtures:
-  *  - salting: identical result set to the plain join, hot keys split
-  *  - bucketing: a bucketed-by-join-key table pair joins with NO
-  *    shuffle exchange on either side (co-located sort-merge join)
+/** Shuffle-shaping techniques for the 100 TB design point, each proven
+  * on the fixtures: runtime bloom filters, AQE skew splits, the
+  * clusters join paths, and bucketing — a bucketed-by-join-key table
+  * pair joins with NO shuffle exchange on either side (co-located
+  * sort-merge join).
   */
 class ScaleTechniquesSpec extends SparkSpec {
-
-  test("saltedJoin returns exactly the plain inner join's rows") {
-    val orders = Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey")
-    val lineitem = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_linenumber")
-      .withColumnRenamed("l_orderkey", "o_orderkey")
-    val plain = lineitem.join(orders, Seq("o_orderkey"))
-      .select("o_orderkey", "l_linenumber", "o_custkey")
-    val salted = Relational.saltedJoin(lineitem, orders, "o_orderkey",
-        bigSaltSource = col("l_linenumber"), saltFactor = 4)
-      .select("o_orderkey", "l_linenumber", "o_custkey")
-    assert(salted.count() === plain.count())
-    assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
-  }
 
   test("runtime bloom filter prunes the probe side of a selective shuffle join") {
     // the 100 TB shape of the d_contam probe: a huge application side
@@ -141,11 +128,11 @@ class ScaleTechniquesSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
     val bOrders = Relational.materializeBucketed(
       Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey"),
-      s"$wh/b_orders", "b_orders", "o_orderkey", 8)
+      s"$wh/b_orders", "b_orders", Seq("o_orderkey"), 8)
     val bLineitem = Relational.materializeBucketed(
       Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity")
         .withColumnRenamed("l_orderkey", "o_orderkey"),
-      s"$wh/b_lineitem", "b_lineitem", "o_orderkey", 8)
+      s"$wh/b_lineitem", "b_lineitem", Seq("o_orderkey"), 8)
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ

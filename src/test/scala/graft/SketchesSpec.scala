@@ -187,88 +187,4 @@ class SketchesSpec extends SparkSpec {
     assert(out(("ga", "gc")).getAs[Double]("true_jaccard") === 0.0)
   }
 
-  test("streaming KMV: installments merge to the whole-corpus sketch; replay is idempotent") {
-    val sess = spark
-    import sess.implicits._
-    val docs = graft.model.Tables.documents(spark, sfDir)
-      .select("doc_id", "source", "text").localCheckpoint()
-    val dir = java.nio.file.Files.createTempDirectory("graft_kmv_stream").toString
-    val k = 32
-    // three id-sliced installments
-    Seq(0, 1, 2).foreach { i =>
-      graft.streaming.StreamingSketch.kmvBatchStep(spark, dir,
-        "source", "text", 3, k)(docs.filter(col("doc_id") % 3 === i), i.toLong)
-    }
-    def est() = graft.streaming.StreamingSketch
-      .kmvCurrent(spark, dir, "source", k).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val direct = Sketches.kmvEstimate(
-      Sketches.kmvSketch(docs, "source", "text", 3, k), "source", k).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    assert(est() === direct, "merged installments diverge from the direct sketch")
-    // replay batch 1: the sketch is a function of the batch's SET, so
-    // the partition rewrites identically and the merge cannot move
-    graft.streaming.StreamingSketch.kmvBatchStep(spark, dir,
-      "source", "text", 3, k)(docs.filter(col("doc_id") % 3 === 1), 1L)
-    assert(est() === direct, "replayed batch changed the merged sketch")
-  }
-
-  test("streaming dataset card: installments merge to the single-shot card; replay idempotent") {
-    val docs = graft.model.Tables.documents(spark, sfDir)
-      .select("doc_id", "source", "text").localCheckpoint()
-    val inc = java.nio.file.Files.createTempDirectory("graft_card_inc").toString
-    val one = java.nio.file.Files.createTempDirectory("graft_card_one").toString
-    Seq(0, 1, 2).foreach { i =>
-      graft.streaming.StreamingStats.cardBatchStep(spark, inc)(
-        docs.filter(col("doc_id") % 3 === i), i.toLong)
-    }
-    graft.streaming.StreamingStats.cardBatchStep(spark, one)(docs, 0L)
-    def rows(d: String) = graft.streaming.StreamingStats
-      .cardCurrent(spark, d).collect().map(_.toSeq).toSeq
-    val merged = rows(inc)
-    // every component merges to exactly the single-shot card: additive
-    // sums trivially, the fixed-grid median bin and union-keep-k KMV by
-    // construction — the whole point of the component choices
-    assert(merged === rows(one), "merged installments diverge from single-shot")
-    // sanity against the batch oracle query's exact fields
-    val card = SparkEntry.queries("pipe_dataset_card")(spark, sfDir)
-      .collect().map(r => r.getString(0) -> r).toMap
-    merged.foreach { r =>
-      val b = card(r.head.asInstanceOf[String])
-      assert(r(1) === b.getAs[Long]("n_docs"))
-      assert(r(2) === b.getAs[Long]("n_tokens"))
-      assert(r(3) === b.getAs[Long]("mean_quality_milli"))
-      assert(r(4) === b.getAs[Long]("n_langs"))
-      assert(r(5) === b.getAs[String]("top_lang"))
-    }
-    // replay an installment: all four component partitions rewrite
-    // identically, the merged card cannot move
-    graft.streaming.StreamingStats.cardBatchStep(spark, inc)(
-      docs.filter(col("doc_id") % 3 === 1), 1L)
-    assert(rows(inc) === merged, "replayed batch changed the card")
-  }
-
-  test("streaming KMV: empty registry honors a non-string group type") {
-    val empty = java.nio.file.Files
-      .createTempDirectory("graft_kmv_empty").toString
-    // bigint group column: the fallback schema must match what the first
-    // batch would write, not assume string
-    val cur = graft.streaming.StreamingSketch
-      .kmvCurrent(spark, s"$empty/none", "grp", 16, groupType = "bigint")
-    assert(cur.schema("grp").dataType ===
-      org.apache.spark.sql.types.LongType)
-    assert(cur.count() === 0)
-    // and a real bigint-grouped batch round-trips through the registry
-    val sess = spark
-    import sess.implicits._
-    val df = Seq((1L, 10L, "a b c"), (2L, 10L, "c d e"), (3L, 20L, "x y z"))
-      .toDF("doc_id", "grp", "text")
-    graft.streaming.StreamingSketch.kmvBatchStep(spark, s"$empty/reg",
-      "grp", "text", 2, 16)(df, 0L)
-    val est = graft.streaming.StreamingSketch
-      .kmvCurrent(spark, s"$empty/reg", "grp", 16, groupType = "bigint")
-    assert(est.schema("grp").dataType ===
-      org.apache.spark.sql.types.LongType)
-    assert(est.count() === 2)
-  }
 }

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (Spark startup ~10s). */
@@ -28,20 +27,4 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sfDir: String = TestSession.sfDir
-
-  /** Drain a streaming `rows` frame through a micro-batch step from a
-    * `foreachBatch` query, as a deployment wires one; empty micro-batches
-    * are skipped. Fails if the query fails. */
-  def drainThrough(rows: DataFrame, checkpoint: String)(
-      step: (DataFrame, Long) => Unit): Unit = {
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) step(batch, batchId)
-        ()
-      }
-      .start()
-      .awaitTermination(120000)
-  }
 }

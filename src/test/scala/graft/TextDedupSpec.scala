@@ -50,7 +50,8 @@ class TextDedupSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val df = Seq((1, "a b c d"), (2, "a b")).toDF("id", "text")
-    val got = df.select(col("id"), Dedup.shingles(col("text"), 3).as("sh"))
+    val got = df.select(col("id"),
+        Dedup.shinglesFromTokens(TextOps.tokens(col("text")), 3).as("sh"))
       .collect().map(r => r.getInt(0) -> r.getSeq[String](1)).toMap
     assert(got(1) === Seq("a b c", "b c d"))
     assert(got(2) === Seq())
@@ -203,42 +204,6 @@ class TextDedupSpec extends SparkSpec {
     assert(!got.contains(4L))
     assert(got(2L)._1 === 3L && got(3L)._1 === 3L)
     assert(got(2L)._2 > got(3L)._2)
-  }
-
-  test("importanceScoresLog: brute-force ln parity within 1e-9, directional agreement with integer weights") {
-    val sess = spark
-    import sess.implicits._
-    // matched-length docs: the unnormalized ln sum is length-sensitive
-    // (each token adds a mostly-negative weight), so direction is only
-    // comparable at equal token counts — exactly how DSIR consumes it
-    // (resampling among similar-length chunks)
-    val rawTokens = Map(
-      1L -> Seq("alpha", "alpha", "beta"),   // target-leaning
-      2L -> Seq("delta", "epsilon", "zeta"), // target-free
-      3L -> Seq("alpha", "beta", "beta"))    // mixed
-    val raw = rawTokens.toSeq.sortBy(_._1)
-      .map { case (id, ts) => (id, ts.mkString(" ")) }.toDF("doc_id", "text")
-    val tgtTokens = Seq("alpha", "beta", "alpha")
-    val target = Seq((10L, tgtTokens.mkString(" "))).toDF("doc_id", "text")
-    // brute-force reference in plain Scala doubles: same add-one ln
-    // ratio per occurrence, summed per document
-    val cRaw = rawTokens.values.flatten.groupBy(identity).view.mapValues(_.size).toMap
-    val cTgt = tgtTokens.groupBy(identity).view.mapValues(_.size).toMap
-    def w(t: String) =
-      math.log(cTgt.getOrElse(t, 0) + 1.0) - math.log(cRaw(t) + 1.0)
-    val expected = rawTokens.map { case (id, ts) => id -> ts.map(w).sum }
-    val got = TextOps.importanceScoresLog(raw, target, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(got.keySet === expected.keySet)
-    expected.foreach { case (id, e) =>
-      assert(math.abs(got(id) - e) < 1e-9, s"doc $id: got ${got(id)}, want $e")
-    }
-    // directional agreement: both variants rank target-leaning docs
-    // above the target-free doc
-    val ints = TextOps.importanceScores(raw, target, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(got(1L) > got(2L) && ints(1L) > ints(2L))
-    assert(got(3L) > got(2L) && ints(3L) > ints(2L))
   }
 
   test("importanceScores n=2 scores bigram occurrences exactly") {
@@ -706,9 +671,15 @@ class TextDedupSpec extends SparkSpec {
     // 8-bit blocks at 32 bits — on the real corpus the most-populated
     // (band, chunk) bucket must shrink and the bucket count must grow,
     // or the wider width buys nothing
-    def buckets(bits: Int) =
-      Dedup.simhashBands(docs, "doc_id", "text", maxHamming = 3, bits = bits)
-        .groupBy("band", "chunk").agg(count(lit(1)).as("n"))
+    def buckets(bits: Int) = {
+      // the (band, chunk) keys hammingPairs joins on, for radius 3
+      val (widths, offsets) = Dedup.bandLayout(bits, 4)
+      val blocks = (0 until 4).map(b => struct(lit(b).as("band"),
+        Dedup.chunkAt(col("simhash"), widths, offsets, b).as("chunk")))
+      Dedup.simhash(docs, "doc_id", "text", bits)
+        .select(explode(array(blocks: _*)).as("bc"))
+        .groupBy("bc.band", "bc.chunk").agg(count(lit(1)).as("n"))
+    }
     val n32 = buckets(32).agg(max("n"), count(lit(1))).head()
     val n64 = buckets(64).agg(max("n"), count(lit(1))).head()
     assert(n64.getLong(0) < n32.getLong(0),

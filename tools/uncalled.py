@@ -4,8 +4,14 @@
 Comments are stripped from src/main, tools-src and perfbench/src first, so a
 doc mention or [[link]] is no caller. A def of object Obj is reached by
 `Obj.name` or (an apply) `Obj(` anywhere, or by a bare `name` not preceded by
-`.` in its own file; a class member by `.name` anywhere. `override`s and
-`main`s are entry points. SparkEntry's calls count; its own defs are cells.
+`.` in its own file; a class member by `.name` anywhere, unless the receiver
+before the dot names an object (`Plant.upsertArchive` calls Plant's, not a
+class's member). `override`s and `main`s are entry points. SparkEntry's calls
+count; its own defs are cells.
+
+The scan runs to a fixed point: the body of every unreached def not on the
+allowlist is blanked and the scan repeats, so a def that only dead code
+reaches is listed too. Exit 0 iff every listed def is allowlisted.
 Run from the repo root: python3 tools/uncalled.py
 """
 import pathlib
@@ -24,44 +30,50 @@ KEEP = {
     "StreamingCc.compactRegistry", "StreamingCc.compactRegistryBucketed",
     "StreamingGraph.compactRegistry", "StreamingGraph.compactRegistryBucketed",
     "StreamingEr.compactRegistry", "StreamingEr.compactRegistryBucketed",
-    "StreamingDedup.compactSubstringRegistry", "StreamingDedup.compactCountRegistry",
     "Formula.eval",  # the reference interpreter FormulaSpec checks compile against
 }
-# Reached only from specs: deleting one deletes the cases that cover only it.
-SPEC_ONLY = set("""
-    Dedup.shingles Dedup.simhashBands EntityResolution.candidatePairsMulti
-    Relational.semiJoinFilter Relational.timeRange Relational.saltedJoin
-    Similarity.ivfSq8IndexAppend Similarity.ivfPqIndexAppend Similarity.ivfIndexCompact
-    Similarity.semDedupInit Similarity.semDedupIncrement TextOps.importanceScoresLog
-    DerivedStream.windowedRollup DerivedStream.sessionRollup
-    DerivedStream.correlateStreams DerivedStream.hllRollup StreamingAttribution.batchStep
-    StreamingDedup.batchStep StreamingDedup.compactRegistry StreamingDedup.canonBatchStep
-    StreamingDedup.substringBatchStep StreamingDedup.cdcBatchStep
-    StreamingDedup.noveltyBatchStep StreamingDedup.driftBatchStep
-    StreamingDedup.boilerplateBatchStep StreamingSketch.kmvBatchStep
-    StreamingSketch.kmvCurrent StreamingStats.cardBatchStep StreamingStats.cardCurrent
-""".split())
 TOKENS = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|//[^\n]*|/\*[\s\S]*?\*/')
 OWNER = re.compile(r"^([ \t]*)(?:[\w\[\]]+[ \t]+)*(object|class|trait)[ \t]+(\w+)", re.M)
 DEF = re.compile(r"^([ \t]*)((?:[\w\[\]]+[ \t]+)*)def[ \t]+(\w+)", re.M)
 
 
+def blank(text):
+    return re.sub(r"[^\n]", " ", text)
+
+
 def strip(text):
     """Blank out comments, keeping line breaks and string literals."""
-    return TOKENS.sub(lambda m: m[0] if m[0].startswith('"') else re.sub(r"[^\n]", " ", m[0]), text)
+    return TOKENS.sub(lambda m: m[0] if m[0].startswith('"') else blank(m[0]), text)
 
 
-def reached(name, owner, kind, own, corpus):
+def body_end(text, d):
+    """End offset of def `d`: the next non-blank line indented no deeper,
+    a closing brace at the def's own indent included."""
+    indent = len(d[1])
+    pos = text.find("\n", d.end())
+    while pos != -1:
+        nxt = text.find("\n", pos + 1)
+        line = text[pos + 1:nxt if nxt != -1 else len(text)]
+        depth = len(line) - len(line.lstrip())
+        if line.strip() and depth <= indent:
+            return nxt if line.strip() == "}" and depth == indent and nxt != -1 else pos
+        pos = nxt
+    return len(text)
+
+
+def reached(name, owner, kind, own, corpus, objects):
     if re.search(rf"(?<![.\w])(?<!def ){name}\b", own):
         return True
     if kind != "object":
-        return re.search(rf"\.{name}\b", corpus) is not None
+        return any(m[1] not in objects for m in re.finditer(rf"(\w*)\.{name}\b", corpus))
     return bool(re.search(rf"\b{owner}\.{name}\b", corpus) or (name == "apply" and re.search(rf"\b{owner}\(", corpus)))
 
 
-def main():
-    src = {p: strip(p.read_text()) for r in ROOTS for p in sorted(pathlib.Path(r).rglob("*.scala"))}
-    corpus, bad = "\n".join(src.values()), 0
+def unreached(src):
+    """(qual, path, line, def match) of every def in src/main nothing reaches."""
+    corpus = "\n".join(src.values())
+    objects = {m[3] for m in OWNER.finditer(corpus) if m[2] == "object"}
+    out = []
     for path, text in src.items():
         if not str(path).startswith("src/main") or path.name == "SparkEntry.scala":
             continue
@@ -71,12 +83,34 @@ def main():
             if "override" in d[2].split() or d[3] == "main" or not enclosing:
                 continue
             _, _, kind, owner = enclosing[-1]
-            if reached(d[3], owner, kind, text[:d.start()] + text[d.end():], corpus):
-                continue
-            qual = f"{owner}.{d[3]}"
-            tag = "keep" if qual in KEEP or f"{owner}.*" in KEEP else "spec-only" if qual in SPEC_ONLY else "NOT ALLOWED"
-            bad += tag == "NOT ALLOWED"
-            print(f"{qual:44} {f'{path}:{text.count(chr(10), 0, d.start()) + 1}':58} {tag}")
+            if not reached(d[3], owner, kind, text[:d.start()] + text[d.end():], corpus, objects):
+                out.append((f"{owner}.{d[3]}", path, text.count("\n", 0, d.start()) + 1, d))
+    return out
+
+
+def allowed(qual):
+    return qual in KEEP or f"{qual.split('.')[0]}.*" in KEEP
+
+
+def main():
+    src = {p: strip(p.read_text()) for r in ROOTS for p in sorted(pathlib.Path(r).rglob("*.scala"))}
+    found = set()
+    while True:
+        fresh = [u for u in unreached(src) if u[:3] not in found]
+        if not fresh:
+            break
+        found.update(u[:3] for u in fresh)
+        # blank dead bodies back to front so earlier offsets stay valid
+        for qual, path, line, d in sorted(fresh, key=lambda u: -u[3].start()):
+            if not allowed(qual):
+                text = src[path]
+                end = body_end(text, d)
+                src[path] = text[:d.start()] + blank(text[d.start():end]) + text[end:]
+    bad = 0
+    for qual, path, line in sorted(found, key=lambda u: (str(u[1]), u[2])):
+        tag = "keep" if allowed(qual) else "NOT ALLOWED"
+        bad += tag == "NOT ALLOWED"
+        print(f"{qual:44} {f'{path}:{line}':58} {tag}")
     print(f"{bad} not allowed")
     return 1 if bad else 0
 
