@@ -601,7 +601,7 @@ object SparkEntry {
     "t_repetition" -> ((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
-        .select(col("doc_id"), Dedup.shinglesFromTokens(col("__toks"), 3).as("__sh"))
+        .select(col("doc_id"), TextOps.shinglesFromTokens(col("__toks"), 3).as("__sh"))
         .select(col("doc_id"),
           size(col("__sh")).as("n_shingles"),
           size(array_distinct(col("__sh"))).as("n_distinct"))
@@ -643,7 +643,7 @@ object SparkEntry {
       val crafted = TextOps.CraftedPiiRows.toDF("doc_id", "text")
       val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
         .unionAll(crafted)
-      val cols = TextOps.redactPiiV2(col("text")).map { case (n, c) => c.as(n) }
+      val cols = TextOps.redactPii(col("text"), TextOps.PiiClassesV2).map { case (n, c) => c.as(n) }
       base.select(col("doc_id") +: cols: _*).orderBy("doc_id")
     }),
 
@@ -655,7 +655,7 @@ object SparkEntry {
       val crafted = TextOps.CraftedPiiRowsV3.toDF("doc_id", "text")
       val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
         .unionAll(crafted)
-      val cols = TextOps.redactPiiV3(col("text")).map { case (n, c) => c.as(n) }
+      val cols = TextOps.redactPii(col("text"), TextOps.PiiClassesV3).map { case (n, c) => c.as(n) }
       base.select(col("doc_id") +: cols: _*).orderBy("doc_id")
     }),
 
@@ -2068,7 +2068,7 @@ object SparkEntry {
     // task — per-group state, fine while groups are bounded (event
     // types here), a hazard only if a single group's distinct values
     // are data-proportional. The scale-safe twin for that regime is
-    // Sketches.histogramQuantilesBy (bin counts only, proven cell-exact
+    // Sketches.histogramQuantiles with group columns (bin counts only, proven cell-exact
     // against the same DuckDB walk by k_quantile_daily).
     "a_percentile" -> ((s, d) =>
       Tables.events(s, d)
@@ -4376,23 +4376,23 @@ object SparkEntry {
     // the grouped form: per-day value percentiles over the event stream —
     // per-group boundaries, same bounded-error walk
     "k_quantile_daily" -> ((s, d) =>
-      graft.sketch.Sketches.histogramQuantilesBy(
+      graft.sketch.Sketches.histogramQuantiles(
         Tables.events(s, d).select(to_date(col("ts")).as("day"), col("value")),
-        "value", Seq("day"), 32, Seq(0.5, 0.95))
+        "value", 32, Seq(0.5, 0.95), Seq("day"))
         .orderBy("day", "q")),
 
     // grouped HLL — the streaming-dashboard shape (distinct users per
     // (hour, event_type)) as its deterministic batch twin: registers are
     // per-group integer maxima, so even grouped estimates are cell-exact
     "k_hll_window" -> ((s, d) =>
-      graft.sketch.Sketches.hllEstimateBy(
-        graft.sketch.Sketches.hllRegistersBy(
+      graft.sketch.Sketches.hllEstimate(
+        graft.sketch.Sketches.hllRegisters(
           Tables.events(s, d)
             .select(date_trunc("hour", col("ts")).as("hour"), col("event_type"),
               col("user_id").cast("string").as("uid"))
             .select(col("hour"), col("event_type"), TextOps.tokenHash("uid").as("h")),
-          Seq("hour", "event_type"), 64),
-        Seq("hour", "event_type"), 64)
+          64, Seq("hour", "event_type")),
+        64, Seq("hour", "event_type"))
         .orderBy("hour", "event_type")),
 
     // Join-key skew diagnostic: the numbers you read BEFORE choosing a
@@ -4661,7 +4661,7 @@ object SparkEntry {
         "FROM documents) GROUP BY tok ORDER BY n DESC, tok LIMIT 20"),
 
     "t_repetition" -> {
-      val sh = Dedup.shinglesSql("text", 3)
+      val sh = TextOps.shinglesSql("text", 3)
       s"SELECT doc_id, CAST(len($sh) AS INTEGER) AS n_shingles, " +
         s"CAST(len(list_distinct($sh)) AS INTEGER) AS n_distinct, " +
         s"CASE WHEN len($sh) > 0 THEN CAST(1 AS DOUBLE) - CAST(len(list_distinct($sh)) AS DOUBLE) / CAST(len($sh) AS DOUBLE) END AS rep_ratio " +
@@ -4677,7 +4677,7 @@ object SparkEntry {
     },
 
     "t_redact_v2" -> {
-      val f = TextOps.redactPiiV2Sql("text")
+      val f = TextOps.redactPiiSql("text", TextOps.PiiClassesV2)
       val values = TextOps.CraftedPiiRows
         .map { case (id, t) => s"($id, '$t')" }.mkString(", ")
       s"SELECT doc_id, ${f("n_emails")} AS n_emails, ${f("n_ibans")} AS n_ibans, " +
@@ -4689,7 +4689,7 @@ object SparkEntry {
     },
 
     "t_redact_v3" -> {
-      val f = TextOps.redactPiiV3Sql("text")
+      val f = TextOps.redactPiiSql("text", TextOps.PiiClassesV3)
       val values = TextOps.CraftedPiiRowsV3
         .map { case (id, t) => s"($id, '$t')" }.mkString(", ")
       s"SELECT doc_id, ${f("n_emails")} AS n_emails, ${f("n_ibans")} AS n_ibans, " +
@@ -4800,7 +4800,7 @@ object SparkEntry {
     },
 
     "d_jaccard_ngram" -> {
-      val sh = Dedup.shinglesSql("text", 3)
+      val sh = TextOps.shinglesSql("text", 3)
       s"WITH __u AS (SELECT doc_id, lang, source, unnest($sh) AS tok FROM documents), " +
         s"uniq AS (SELECT DISTINCT doc_id, lang, source, ${TextOps.tokenHashSql("tok")} AS tok FROM __u), " +
         "sizes AS (SELECT doc_id, count(*) AS n FROM uniq GROUP BY doc_id), " +
@@ -4931,7 +4931,7 @@ object SparkEntry {
         "ORDER BY doc_id"),
 
     "t_ngram_topk" -> {
-      val sh = Dedup.shinglesSql("text", 3)
+      val sh = TextOps.shinglesSql("text", 3)
       s"WITH __u AS (SELECT doc_id, source, unnest($sh) AS tok FROM documents), " +
         s"uniq AS (SELECT DISTINCT doc_id, source, ${TextOps.tokenHashSql("tok")} AS tok FROM __u), " +
         "cnt AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS df FROM uniq GROUP BY 1, 2), " +
@@ -6537,15 +6537,15 @@ object SparkEntry {
         "orders", "o_totalprice", 64, Seq(0.5, 0.9, 0.99))}) ORDER BY q"),
 
     "k_quantile_daily" ->
-      (s"SELECT * FROM (${graft.sketch.Sketches.histogramQuantilesBySql(
+      (s"SELECT * FROM (${graft.sketch.Sketches.histogramQuantilesSql(
         "(SELECT CAST(ts AS DATE) AS day, value FROM events)",
-        "value", Seq("day"), 32, Seq(0.5, 0.95))}) ORDER BY day, q"),
+        "value", 32, Seq(0.5, 0.95), Seq("day"))}) ORDER BY day, q"),
 
     "k_hll_window" -> {
       val hashed = "SELECT date_trunc('hour', ts) AS hour, event_type, " +
         s"${TextOps.tokenHashSql("CAST(user_id AS VARCHAR)")} AS h FROM events"
-      val regs = graft.sketch.Sketches.hllRegistersBySql(hashed, Seq("hour", "event_type"), 64)
-      s"SELECT * FROM (${graft.sketch.Sketches.hllEstimateBySql(regs, Seq("hour", "event_type"), 64)}) " +
+      val regs = graft.sketch.Sketches.hllRegistersSql(hashed, 64, Seq("hour", "event_type"))
+      s"SELECT * FROM (${graft.sketch.Sketches.hllEstimateSql(regs, 64, Seq("hour", "event_type"))}) " +
         "ORDER BY hour, event_type"
     },
 

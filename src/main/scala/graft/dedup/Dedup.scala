@@ -132,7 +132,7 @@ object Dedup {
 
   /** Distinct (doc, token-HASH) pairs — the inverted-index input. With
     * n > 1 the "token" is an n-gram shingle (tokenized into a bound
-    * column first — see [[shinglesFromTokens]]).
+    * column first — see [[TextOps.shinglesFromTokens]]).
     *
     * The token is carried as its 8-byte [[TextOps.tokenHash]], not the
     * string: the distinct and the pair join then shuffle fixed-width
@@ -148,20 +148,10 @@ object Dedup {
       else df
         .select((idCol +: extraCols).map(col) :+ TextOps.tokens(col(textCol)).as("__toks"): _*)
         .select((idCol +: extraCols).map(col) :+
-          explode(shinglesFromTokens(col("__toks"), n)).as("__tok"): _*)
+          explode(TextOps.shinglesFromTokens(col("__toks"), n)).as("__tok"): _*)
     units.select((idCol +: extraCols).map(col) :+ TextOps.tokenHash("__tok").as("tok"): _*)
       .distinct()
   }
-
-  /** N-gram shingle array from an ALREADY-MATERIALIZED token-array
-    * column — shared text machinery, lives in [[TextOps]] (importance
-    * scoring shingles with the same recipe); kept here as the dedup
-    * suite's entry point. */
-  def shinglesFromTokens(toks: Column, n: Int): Column =
-    TextOps.shinglesFromTokens(toks, n)
-
-  def shinglesSql(text: String, n: Int): String =
-    TextOps.shinglesSql(text, n)
 
   /** N-gram-Jaccard near-dup pairs via inverted index (n = 1 → unigram),
     * optionally blocked. Output: (id_a, id_b, common, n_a, n_b,
@@ -376,7 +366,7 @@ object Dedup {
     * same first-occurrence min + join-back arithmetic. */
   def noveltyScoresSql(table: String, idCol: String, textCol: String,
       n: Int = 3): String = {
-    val sh = shinglesSql(textCol, n)
+    val sh = TextOps.shinglesSql(textCol, n)
     s"""WITH __dt AS (
        |  SELECT DISTINCT $idCol, ${TextOps.tokenHashSql("tok")} AS tok
        |  FROM (SELECT $idCol, unnest($sh) AS tok FROM $table)
@@ -432,7 +422,7 @@ object Dedup {
     * `batchPred` rows. */
   def noveltySuppressSql(table: String, registryPred: String,
       batchPred: String, idCol: String, textCol: String, n: Int = 3): String = {
-    val sh = shinglesSql(textCol, n)
+    val sh = TextOps.shinglesSql(textCol, n)
     s"""WITH __bt AS (
        |  SELECT DISTINCT $idCol, ${TextOps.tokenHashSql("tok")} AS tok
        |  FROM (SELECT $idCol, unnest($sh) AS tok FROM $table WHERE $batchPred)
@@ -573,7 +563,7 @@ object Dedup {
     * and count arithmetic (one correctly-rounded double division). */
   def contaminationMatrixSql(table: String, sourceCol: String,
       textCol: String, n: Int, maxDf: Int = 1000): String = {
-    val sh = shinglesSql(textCol, n)
+    val sh = TextOps.shinglesSql(textCol, n)
     s"""WITH __st AS (
        |  SELECT DISTINCT $sourceCol AS source, ${TextOps.tokenHashSql("tok")} AS tok
        |  FROM (SELECT $sourceCol, unnest($sh) AS tok FROM $table)
@@ -597,7 +587,7 @@ object Dedup {
     * train vocabulary as a DISTINCT subquery probed by a LEFT JOIN. */
   def contaminationSql(table: String, trainPred: String, evalPred: String,
       idCol: String, textCol: String, n: Int): String = {
-    val sh = shinglesSql(textCol, n)
+    val sh = TextOps.shinglesSql(textCol, n)
     s"""WITH __ev AS (
        |  SELECT DISTINCT $idCol, ${TextOps.tokenHashSql("tok")} AS tok
        |  FROM (SELECT $idCol, unnest($sh) AS tok FROM $table WHERE $evalPred)
@@ -1039,7 +1029,7 @@ object Dedup {
     // array (CollapseProject keeps the non-cheap multi-referenced split
     // in a separate project — verified via .explain)
     val toks = df.select(col(idCol), TextOps.tokens(col(textCol)).as("__toks"))
-    val sh = toks.select(col(idCol), explode(shinglesFromTokens(col("__toks"), n)).as("sh"))
+    val sh = toks.select(col(idCol), explode(TextOps.shinglesFromTokens(col("__toks"), n)).as("sh"))
       .distinct()
       .withColumn("h", TextOps.tokenHash("sh"))
     val aggs = MinhashParams.zipWithIndex.map { case ((a, b), i) =>
@@ -1077,7 +1067,7 @@ object Dedup {
       s"min((h * $a + $b) % ${TextOps.P}) AS m$i"
     }.mkString(", ")
     s"""WITH __sh AS (
-       |  SELECT DISTINCT $idCol, unnest(${shinglesSql(textCol, n)}) AS sh FROM $table
+       |  SELECT DISTINCT $idCol, unnest(${TextOps.shinglesSql(textCol, n)}) AS sh FROM $table
        |), __h AS (
        |  SELECT $idCol, ${TextOps.tokenHashSql("sh")} AS h FROM __sh
        |)
@@ -1139,7 +1129,7 @@ object Dedup {
     * stopping at (id_a, id_b) at `threshold`. */
   private def truthPairsSql(table: String, idCol: String, textCol: String,
       n: Int, threshold: Double): String = {
-    val sh = shinglesSql(textCol, n)
+    val sh = TextOps.shinglesSql(textCol, n)
     s"""WITH __u AS (SELECT $idCol, unnest($sh) AS tok FROM $table),
        |uniq AS (SELECT DISTINCT $idCol, ${TextOps.tokenHashSql("tok")} AS tok FROM __u),
        |sizes AS (SELECT $idCol, count(*) AS n FROM uniq GROUP BY $idCol),
@@ -1224,7 +1214,7 @@ object Dedup {
   def minhashEstimatePairsSql(table: String, idCol: String, textCol: String,
       n: Int): String = {
     val k = MinhashParams.size
-    val sh = shinglesSql(textCol, n)
+    val sh = TextOps.shinglesSql(textCol, n)
     val est = (0 until k).map(i =>
       s"CASE WHEN sa2.m$i = sb2.m$i THEN 1 ELSE 0 END").mkString(" + ")
     s"""WITH __cand AS (SELECT * FROM (${minhashLshCandidatesSql(table, idCol, textCol, n)})),
@@ -1783,13 +1773,13 @@ object Dedup {
     * aggregation (= a state store) in front of every downstream step.
     * Each intermediate (tokens, shingles, shingle hashes) is bound in
     * its own projection so no lambda re-evaluates a non-cheap subtree
-    * (see [[shinglesFromTokens]]). */
+    * (see [[TextOps.shinglesFromTokens]]). */
   def minhashSignatureStateless(df: DataFrame, carryCols: Seq[String],
       textCol: String, n: Int): DataFrame = {
     val toks = df.select(carryCols.map(col) :+
       TextOps.tokens(col(textCol)).as("__toks"): _*)
     val sh = toks.select(carryCols.map(col) :+
-      shinglesFromTokens(col("__toks"), n).as("__sh"): _*)
+      TextOps.shinglesFromTokens(col("__toks"), n).as("__sh"): _*)
     val hs = sh.select(carryCols.map(col) :+
       transform(col("__sh"),
         t => graft.functions.NativeExprs.polyHash(t, TextOps.CharMul, TextOps.P))

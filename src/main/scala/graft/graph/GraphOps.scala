@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,6 +32,11 @@ object GraphOps {
     * standard simplification. Edges dedupe first (unweighted graph);
     * `iters` is unrolled into one declarative plan.
     *
+    * One of the four entry points of the [[prSupersteps]] kernel: the
+    * unweighted graph is distinct edges at unit weight, so
+    * `(score·1) div outdeg` is the weighted share, and every node is a
+    * seed, so the teleport is the global one.
+    *
     * 100 TB shape: the edge table is localCheckpointed once and reused
     * by every superstep; each superstep is edge⋈state on src (both
     * sides hash-partitioned by node id — bucket the edge table to make
@@ -39,42 +44,95 @@ object GraphOps {
     * is iters × O(|E|) with no driver involvement and no all-pairs
     * anywhere. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 3): DataFrame = {
-    require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
-    // the (node, score) state is |V|-sized — catalog-scale next to the
-    // edge table, and it must fit a broadcast: every superstep
-    // BROADCASTS it, so the edge stream never shuffles for the join (one
-    // combinable groupBy on dst per round is the only exchange).
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+      iters: Int = 3): DataFrame =
+    prSupersteps(unitEdges(edges, srcCol, dstCol), None, iters)
+      .select(col("id"), col("out").as("outdeg"), col("score"))
+
+  /** Distinct non-NULL directed (src, dst) pairs at unit weight `w = 1`,
+    * checkpointed once for reuse by every superstep. */
+  private def unitEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .localCheckpoint(false) // reused by every superstep
-    // the node frame with out-degrees in ONE union-aggregate pass (src
-    // rows carry 1, dst rows 0, so pure sinks sum to outdeg 0) — the
+      .withColumn("w", lit(1L))
+
+  /** Directed (src, dst, w) edges with parallel edges folded into their
+    * weight sum; NULL and non-positive weights drop. */
+  private def weightedEdges(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"),
+      col(weightCol).cast("long").as("w"))
+      .filter(col("src").isNotNull && col("dst").isNotNull && col("w") > 0)
+      .groupBy("src", "dst").agg(sum("w").as("w"))
+      .localCheckpoint(false) // reused by every superstep
+
+  /** Distinct non-NULL seed ids, flagged `__seed = 1`. */
+  private def seedIds(seeds: DataFrame, seedCol: String): DataFrame =
+    seeds.select(col(seedCol).cast("long").as("id"))
+      .filter(col("id").isNotNull).distinct()
+      .withColumn("__seed", lit(1))
+
+  /** A node's floored share of its score along one out-edge of weight
+    * `w`: `(score·w) div out`, `out` its total out-weight. */
+  private[graft] def prShare(score: String, out: String, w: String): Column =
+    expr(s"($score * $w) div $out")
+
+  /** One superstep's landing score: the teleport `seed·0.15·scale`
+    * plus `(17·Σ incoming) div 20` — the damping rule, written once. */
+  private[graft] def prLand(insum: String, seed: Column = lit(1)): Column =
+    seed * lit(PrScale * 3 / 20) +
+      expr(s"(17 * coalesce($insum, CAST(0 AS BIGINT))) div 20")
+
+  /** The one integer PageRank superstep loop behind [[pageRank]],
+    * [[pageRankWeighted]], [[personalizedPageRank]] and
+    * [[personalizedPageRankWeighted]], over checkpointed (src, dst, w)
+    * edges. Returns (id, out, seed, score): `out` is the node's
+    * out-weight, `seed` its teleport flag — every node when `seeds` is
+    * None, in which case the `score > 0` send filter is a no-op (every
+    * score is at least `0.15·scale`).
+    *
+    * The (node, score) state is |V|-sized — catalog-scale next to the
+    * edge table, and it must fit a broadcast: every superstep
+    * BROADCASTS it, so the edge stream never shuffles for the join (one
+    * combinable groupBy on dst per round is the only exchange). The
+    * share is per-EDGE (`(score·w) div out`), so the state carries
+    * (score, out) into the join. */
+  private def prSupersteps(e: DataFrame, seeds: Option[DataFrame],
+      iters: Int): DataFrame = {
+    require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
+    // the node frame with out-weights in ONE union-aggregate pass (src
+    // rows carry w, dst rows 0, so pure sinks sum to out 0) — the
     // separate distinct-nodes + outdeg-agg + left-join it replaces cost
-    // an extra shuffle and an extra codegen shape per operator
-    val base = e.select(col("src").as("id"), lit(1L).as("__one"))
-      .union(e.select(col("dst").as("id"), lit(0L).as("__one")))
-      .groupBy("id").agg(sum("__one").as("outdeg"))
-      .localCheckpoint(false) // reused as every superstep's node frame
-    var state = base.withColumn("score", lit(PrScale))
+    // an extra shuffle and an extra codegen shape per operator; only
+    // the seed flag still joins
+    val nodes = e.select(col("src").as("id"), col("w").as("__w"))
+      .union(e.select(col("dst").as("id"), lit(0L).as("__w")))
+      .groupBy("id").agg(sum("__w").as("out"))
+    val base = seeds.fold(nodes.withColumn("seed", lit(1))) { s =>
+      nodes.join(broadcast(s), Seq("id"), "left")
+        .select(col("id"), col("out"), coalesce(col("__seed"), lit(0)).as("seed"))
+    }.localCheckpoint(false) // reused as every superstep's node frame
+    var state = base.withColumn("score", col("seed") * lit(PrScale))
     for (_ <- 1 to iters) {
       val insum = e.join(
-        broadcast(state.filter(col("outdeg") > 0)
-          .select(col("id").as("src"), expr("score div outdeg").as("__c"))),
+        broadcast(state.filter(col("out") > 0 && col("score") > 0)
+          .select(col("id").as("src"), col("score"), col("out"))),
         Seq("src"))
-        .groupBy(col("dst").as("id")).agg(sum(col("__c")).as("__insum"))
+        .groupBy(col("dst").as("id"))
+        .agg(sum(prShare("score", "out", "w")).as("__insum"))
       // checkpoint each superstep: without it round i's broadcast
       // re-derives rounds 1..i-1 from scratch (O(iters²) work — the
       // Dedup.clusters per-hop lesson)
       state = base.join(broadcast(insum), Seq("id"), "left")
-        .select(col("id"), col("outdeg"),
-          (lit(PrScale * 3 / 20) +
-            expr("(17 * coalesce(__insum, CAST(0 AS BIGINT))) div 20")).as("score"))
+        .select(col("id"), col("out"), col("seed"),
+          prLand("__insum", col("seed")).as("score"))
         .localCheckpoint(false)
     }
-    state.select("id", "outdeg", "score")
+    state
   }
 
   /** Synchronous label propagation (Raghavan et al., 2007) for
@@ -84,6 +142,8 @@ object GraphOps {
     * label). Deterministic BY CONSTRUCTION — the classic async LPA is
     * run-order-dependent, the synchronous + total-order-tie-break form
     * is engine-reproducible, which is what makes it oracle-checkable.
+    * The [[lpaRounds]] kernel over distinct symmetric edges at unit
+    * weight, so the weight sum is the neighbor count.
     *
     * Scale shape per round: one edge⋈labels equi-join (labels are thin
     * (id, label) rows), one combinable (node, label) count, one
@@ -92,22 +152,30 @@ object GraphOps {
     * superstep shape. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 2): DataFrame = {
-    require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
-    // labels are |V|-sized and broadcast — they must fit a broadcast,
-    // as [[pageRank]]'s state must
     val sym = edges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    val e = sym.select(col("u"), col("v"))
+    lpaRounds(sym.select(col("u"), col("v"))
       .union(sym.select(col("v").as("u"), col("u").as("v")))
       .distinct()
       .localCheckpoint(false) // reused every round
+      .withColumn("w", lit(1L)), iters)
+  }
+
+  /** The one synchronous label-propagation round loop behind
+    * [[labelPropagation]] and [[labelPropagationWeighted]], over
+    * checkpointed symmetric (u, v, w) edges: each node adopts the label
+    * with the greatest incident weight sum, ties → smallest label. */
+  private def lpaRounds(e: DataFrame, iters: Int): DataFrame = {
+    require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
+    // labels are |V|-sized and broadcast — they must fit a broadcast,
+    // as [[pageRank]]'s state must
     val nodes = e.select(col("u").as("id")).distinct()
       .localCheckpoint(false)
     var labels = nodes.withColumn("label", col("id"))
     for (_ <- 1 to iters) {
       val best = e.join(broadcast(labels.select(col("id").as("v"), col("label"))), Seq("v"))
-        .groupBy(col("u").as("id"), col("label")).agg(count(lit(1)).as("__n"))
+        .groupBy(col("u").as("id"), col("label")).agg(sum("w").as("__n"))
         .groupBy("id")
         .agg(min(struct((-col("__n")).as("negn"), col("label").as("l"))).as("__b"))
         .select(col("id"), col("__b.l").as("label"))
@@ -545,47 +613,18 @@ object GraphOps {
     * so ranks — the output that matters — are identical, and the
     * unnormalized form keeps the plan free of an eager |seeds| count.
     * State starts at `scale` on seeds / 0 elsewhere; dangling mass
-    * drops as in [[pageRank]].
+    * drops as in [[pageRank]]. An all-nodes seed set reproduces
+    * [[pageRank]] exactly: both run the [[prSupersteps]] kernel.
     *
     * Scale shape: identical to [[pageRank]] — seeds join the node frame
     * once (broadcast; a seed list is catalog-sized by definition), then
     * iters × (edge⋈state + one combinable sum). */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, iters: Int = 3): DataFrame = {
-    require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint(false) // reused by every superstep
-    // node frame + out-degrees fused into one union-aggregate (the
-    // [[pageRank]] base shape); only the seed flag still joins
-    val seedIds = seeds.select(col(seedCol).cast("long").as("id"))
-      .filter(col("id").isNotNull).distinct()
-      .withColumn("__seed", lit(1))
-    val base = e.select(col("src").as("id"), lit(1L).as("__one"))
-      .union(e.select(col("dst").as("id"), lit(0L).as("__one")))
-      .groupBy("id").agg(sum("__one").as("outdeg"))
-      .join(broadcast(seedIds), Seq("id"), "left")
-      .select(col("id"), col("outdeg"),
-        coalesce(col("__seed"), lit(0)).as("__seed"))
-      .localCheckpoint(false)
-    var state = base.withColumn("score", col("__seed") * lit(PrScale))
-    for (_ <- 1 to iters) {
-      val insum = e.join(
-        broadcast(state.filter(col("outdeg") > 0 && col("score") > 0)
-          .select(col("id").as("src"), expr("score div outdeg").as("__c"))),
-        Seq("src"))
-        .groupBy(col("dst").as("id")).agg(sum(col("__c")).as("__insum"))
-      state = base.join(broadcast(insum), Seq("id"), "left")
-        .select(col("id"), col("outdeg"), col("__seed"),
-          (col("__seed") * lit(PrScale * 3 / 20) +
-            expr("(17 * coalesce(__insum, CAST(0 AS BIGINT))) div 20")).as("score"))
-        .localCheckpoint(false)
-    }
-    state.select(col("id"), col("outdeg"),
-      col("__seed").cast("int").as("is_seed"), col("score"))
-  }
+      seeds: DataFrame, seedCol: String, iters: Int = 3): DataFrame =
+    prSupersteps(unitEdges(edges, srcCol, dstCol),
+      Some(seedIds(seeds, seedCol)), iters)
+      .select(col("id"), col("out").as("outdeg"),
+        col("seed").cast("int").as("is_seed"), col("score"))
 
   /** Oracle twin of [[personalizedPageRank]]: identical supersteps as
     * chained CTEs. `seedsSql` must yield one column `id`. */
@@ -630,46 +669,15 @@ object GraphOps {
     * just adjacency. Same unnormalized-teleport argument (linearity ⇒
     * rank-identical to the |seeds|-normalized form), same weight fold
     * and BIGINT `(score·w) div wsum` flooring, same headroom contract
-    * (score·max(w) < 2^63). Scale shape: identical to the parents. */
+    * (score·max(w) < 2^63). The [[prSupersteps]] kernel, so unit
+    * weights on distinct edges reproduce [[personalizedPageRank]]. */
   def personalizedPageRankWeighted(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, seeds: DataFrame, seedCol: String,
-      iters: Int = 3): DataFrame = {
-    require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"),
-      col(weightCol).cast("long").as("w"))
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("w") > 0)
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-      .localCheckpoint(false) // reused by every superstep
-    // node frame + out-weights fused into one union-aggregate (the
-    // [[pageRankWeighted]] base shape); only the seed flag still joins
-    val seedIds = seeds.select(col(seedCol).cast("long").as("id"))
-      .filter(col("id").isNotNull).distinct()
-      .withColumn("__seed", lit(1))
-    val base = e.select(col("src").as("id"), col("w").as("__w"))
-      .union(e.select(col("dst").as("id"), lit(0L).as("__w")))
-      .groupBy("id").agg(sum("__w").as("outw"))
-      .join(broadcast(seedIds), Seq("id"), "left")
-      .select(col("id"), col("outw"),
-        coalesce(col("__seed"), lit(0)).as("__seed"))
-      .localCheckpoint(false)
-    var state = base.withColumn("score", col("__seed") * lit(PrScale))
-    for (_ <- 1 to iters) {
-      val insum = e.join(
-        broadcast(state.filter(col("outw") > 0 && col("score") > 0)
-          .select(col("id").as("src"), col("score"), col("outw"))),
-        Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(expr("(score * w) div outw")).as("__insum"))
-      state = base.join(broadcast(insum), Seq("id"), "left")
-        .select(col("id"), col("outw"), col("__seed"),
-          (col("__seed") * lit(PrScale * 3 / 20) +
-            expr("(17 * coalesce(__insum, CAST(0 AS BIGINT))) div 20")).as("score"))
-        .localCheckpoint(false)
-    }
-    state.select(col("id"), col("outw"),
-      col("__seed").cast("int").as("is_seed"), col("score"))
-  }
+      iters: Int = 3): DataFrame =
+    prSupersteps(weightedEdges(edges, srcCol, dstCol, weightCol),
+      Some(seedIds(seeds, seedCol)), iters)
+      .select(col("id"), col("out").as("outw"),
+        col("seed").cast("int").as("is_seed"), col("score"))
 
   /** Oracle twin of [[personalizedPageRankWeighted]]. `edgesSql` must
     * yield (src, dst, w); `seedsSql` one column `id`. */
@@ -722,44 +730,14 @@ object GraphOps {
     * scores (≤ ~10^6·|V|) and weights below ~10^6 — keep weights in
     * counts or micro-units, not raw cents of a 100 TB ledger.
     *
-    * Scale shape: identical to [[pageRank]] — the weighted edge table
-    * (one row per distinct pair after the fold) is checkpointed once;
-    * each superstep joins it with the broadcast (id, score, wsum)
-    * state and lands one combinable sum on dst. */
+    * The [[prSupersteps]] kernel [[pageRank]] runs, so uniform weights
+    * on distinct edges reproduce the unweighted scores; the weighted
+    * edge table (one row per distinct pair after the fold) is
+    * checkpointed once. */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, iters: Int = 3): DataFrame = {
-    require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"),
-      col(weightCol).cast("long").as("w"))
-      .filter(col("src").isNotNull && col("dst").isNotNull && col("w") > 0)
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-      .localCheckpoint(false) // reused by every superstep
-    // node frame + out-weights in ONE union-aggregate pass (dst rows
-    // carry weight 0) — same fusion as [[pageRank]]'s base
-    val base = e.select(col("src").as("id"), col("w").as("__w"))
-      .union(e.select(col("dst").as("id"), lit(0L).as("__w")))
-      .groupBy("id").agg(sum("__w").as("outw"))
-      .localCheckpoint(false)
-    var state = base.withColumn("score", lit(PrScale))
-    for (_ <- 1 to iters) {
-      // weighted contribution is per-EDGE ((score·w) div wsum), so the
-      // state carries (score, outw) into the join instead of a
-      // precomputed per-node quotient — still |V|-thin, still broadcast
-      val insum = e.join(
-        broadcast(state.filter(col("outw") > 0)
-          .select(col("id").as("src"), col("score"), col("outw"))),
-        Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(expr("(score * w) div outw")).as("__insum"))
-      state = base.join(broadcast(insum), Seq("id"), "left")
-        .select(col("id"), col("outw"),
-          (lit(PrScale * 3 / 20) +
-            expr("(17 * coalesce(__insum, CAST(0 AS BIGINT))) div 20")).as("score"))
-        .localCheckpoint(false) // the per-round O(iters²) guard
-    }
-    state.select("id", "outw", "score")
-  }
+      weightCol: String, iters: Int = 3): DataFrame =
+    prSupersteps(weightedEdges(edges, srcCol, dstCol, weightCol), None, iters)
+      .select(col("id"), col("out").as("outw"), col("score"))
 
   /** Oracle twin of [[pageRankWeighted]]: identical supersteps as
     * chained CTEs — same weight fold, same `(score·w) // wsum`
@@ -800,34 +778,19 @@ object GraphOps {
     * adopts the label with the greatest incident WEIGHT sum (ties →
     * smallest label) — communities by interaction strength, not edge
     * presence. Edges symmetrize and parallel edges fold into their
-    * weight sum; NULL/non-positive weights drop. Same per-round shape:
-    * one thin equi-join, two combinable aggregates, no window sort. */
+    * weight sum; NULL/non-positive weights drop. The [[lpaRounds]]
+    * kernel, so uniform weights reproduce the unweighted labels. */
   def labelPropagationWeighted(edges: DataFrame, srcCol: String,
       dstCol: String, weightCol: String, iters: Int = 2): DataFrame = {
-    require(iters >= 1 && iters <= 10, s"unrolled iters must be in [1,10], got $iters")
     val sym = edges.select(col(srcCol).cast("long").as("u"),
       col(dstCol).cast("long").as("v"),
       col(weightCol).cast("long").as("w"))
       .filter(col("u").isNotNull && col("v").isNotNull &&
         col("u") =!= col("v") && col("w") > 0)
-    val e = sym.select(col("u"), col("v"), col("w"))
+    lpaRounds(sym.select(col("u"), col("v"), col("w"))
       .union(sym.select(col("v").as("u"), col("u").as("v"), col("w")))
       .groupBy("u", "v").agg(sum("w").as("w"))
-      .localCheckpoint(false)
-    val nodes = e.select(col("u").as("id")).distinct()
-      .localCheckpoint(false)
-    var labels = nodes.withColumn("label", col("id"))
-    for (_ <- 1 to iters) {
-      val best = e.join(broadcast(labels.select(col("id").as("v"), col("label"))), Seq("v"))
-        .groupBy(col("u").as("id"), col("label")).agg(sum("w").as("__n"))
-        .groupBy("id")
-        .agg(min(struct((-col("__n")).as("negn"), col("label").as("l"))).as("__b"))
-        .select(col("id"), col("__b.l").as("label"))
-      labels = nodes.join(broadcast(best), Seq("id"), "left")
-        .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-        .localCheckpoint(false)
-    }
-    labels
+      .localCheckpoint(false), iters)
   }
 
   /** Oracle twin of [[labelPropagationWeighted]]. `edgesSql` must

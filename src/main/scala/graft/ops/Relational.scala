@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Relational operators from the reference's query surface (SURVEY.md §2.2-§2.6).
@@ -84,12 +84,12 @@ object Relational {
     * join Spark has no built-in operator for; the reference's J4
     * alignment is the exact-timestamp special case).
     *
-    * Implemented as the scalable union-sort form, NOT a range join:
-    * both sides are unioned, one shuffle partitions by key, and a
-    * running `last(_, ignoreNulls)` window carries each right payload
-    * forward to the left rows that follow it in (ts, side, tiebreak)
-    * order. Cost is a single sort per key partition — linear, no
-    * per-key collect, no quadratic candidate pairs, and skewed keys
+    * Implemented as the scalable union-sort form ([[asofUnion]]), NOT a
+    * range join: both sides are unioned, one shuffle partitions by key,
+    * and a running `last(_, ignoreNulls)` window carries each right
+    * payload forward to the left rows that follow it in (ts, side,
+    * tiebreak) order. Cost is a single sort per key partition — linear,
+    * no per-key collect, no quadratic candidate pairs, and skewed keys
     * stay one partition's sort rather than a join explosion.
     *
     * Semantics pinned for determinism: inclusive (a right row exactly
@@ -101,31 +101,50 @@ object Relational {
     */
   def asofJoin(left: DataFrame, right: DataFrame, key: String, tsCol: String,
       payload: Seq[String], tiebreak: Seq[String]): DataFrame = {
+    val u = asofUnion(left, right, key, tsCol, payload, tiebreak, rightSide = 0)
+    u.df.withColumn("__pl", last(col("__pl"), ignoreNulls = true)
+        .over(u.window.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .filter(col("__side") === 1)
+      .select(u.leftOut ++ payload.map(c => col(s"__pl.$c").as(c)): _*)
+  }
+
+  /** [[asofUnion]]'s result: the unioned rows, the window order, and
+    * the left columns every as-of join outputs first. */
+  private final case class AsofUnion(df: DataFrame, window: WindowSpec,
+      leftOut: Seq[Column])
+
+  /** The union-sort input every as-of join carries its match over:
+    * left rows (side 1, NULL payload) unioned with right rows (side
+    * `rightSide`, payload struct), plus the key-partitioned
+    * (ts, side, tiebreak) window order and the left output columns.
+    *
+    * The payload travels as ONE struct: per-column carry would stitch
+    * together fields of DIFFERENT right rows when the latest row has a
+    * NULL field (ignoreNulls would skip past it per-column); the struct
+    * is never null for a right row, so the carry is atomic. `withTs`
+    * prepends the right row's own timestamp to it as `__mts`. */
+  private def asofUnion(left: DataFrame, right: DataFrame, key: String,
+      tsCol: String, payload: Seq[String], tiebreak: Seq[String],
+      rightSide: Int, withTs: Boolean = false): AsofUnion = {
     val leftCols = left.columns.filterNot(c => c == key || c == tsCol).toSeq
-    // the payload travels as ONE struct: per-column carry would stitch
-    // together fields of DIFFERENT right rows when the latest row has a
-    // NULL field (ignoreNulls would skip past it per-column); the struct
-    // is never null for a right row, so the carry is atomic
+    // (right column, payload field name)
+    val pl = (if (withTs) Seq(tsCol -> "__mts") else Nil) ++ payload.map(c => c -> c)
     val plType = org.apache.spark.sql.types.StructType(
-      payload.map(c => right.schema(c).copy(name = c)))
+      pl.map { case (c, n) => right.schema(c).copy(name = n) })
     val l = left.select(
       Seq(col(key), col(tsCol), lit(1).as("__side"),
         lit(null).cast(plType).as("__pl")) ++
         leftCols.map(col) ++
         tiebreak.map(c => lit(null).cast(right.schema(c).dataType).as(s"__tb_$c")): _*)
     val r = right.select(
-      Seq(col(key), col(tsCol), lit(0).as("__side"),
-        struct(payload.map(col): _*).as("__pl")) ++
+      Seq(col(key), col(tsCol), lit(rightSide).as("__side"),
+        struct(pl.map { case (c, n) => col(c).as(n) }: _*).as("__pl")) ++
         leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
         tiebreak.map(c => col(c).as(s"__tb_$c")): _*)
-    val w = Window.partitionBy(col(key))
-      .orderBy(col(tsCol) +: col("__side") +: tiebreak.map(c => col(s"__tb_$c")): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    l.unionByName(r)
-      .withColumn("__pl", last(col("__pl"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select(Seq(col(key), col(tsCol)) ++ leftCols.map(col) ++
-        payload.map(c => col(s"__pl.$c").as(c)): _*)
+    AsofUnion(l.unionByName(r),
+      Window.partitionBy(col(key))
+        .orderBy(col(tsCol) +: col("__side") +: tiebreak.map(c => col(s"__tb_$c")): _*),
+      Seq(col(key), col(tsCol)) ++ leftCols.map(col))
   }
 
   /** Typo-tolerant lookup: rows whose `nameCol` is within `maxDist`
@@ -146,33 +165,17 @@ object Relational {
   /** Forward as-of join: each left row picks the EARLIEST right row with
     * `right.ts >= left.ts` (inclusive; smallest (ts, tiebreak) wins) —
     * the "next reading after the query instant" lookup, the mirror of
-    * [[asofJoin]]. Same union-sort shape: right rows get side 2 so they
-    * sort AFTER a left row at the same timestamp (making the match
+    * [[asofJoin]]. Same [[asofUnion]] shape: right rows get side 2 so
+    * they sort AFTER a left row at the same timestamp (making the match
     * inclusive), and one `first` over the following window carries the
     * next payload back — linear per key partition, no pair join. */
   def asofJoinForward(left: DataFrame, right: DataFrame, key: String, tsCol: String,
       payload: Seq[String], tiebreak: Seq[String]): DataFrame = {
-    val leftCols = left.columns.filterNot(c => c == key || c == tsCol).toSeq
-    val plType = org.apache.spark.sql.types.StructType(
-      payload.map(c => right.schema(c).copy(name = c)))
-    val l = left.select(
-      Seq(col(key), col(tsCol), lit(1).as("__side"),
-        lit(null).cast(plType).as("__pl")) ++
-        leftCols.map(col) ++
-        tiebreak.map(c => lit(null).cast(right.schema(c).dataType).as(s"__tb_$c")): _*)
-    val r = right.select(
-      Seq(col(key), col(tsCol), lit(2).as("__side"),
-        struct(payload.map(col): _*).as("__pl")) ++
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-        tiebreak.map(c => col(c).as(s"__tb_$c")): _*)
-    val w = Window.partitionBy(col(key))
-      .orderBy(col(tsCol) +: col("__side") +: tiebreak.map(c => col(s"__tb_$c")): _*)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    l.unionByName(r)
-      .withColumn("__pl", first(col("__pl"), ignoreNulls = true).over(w))
+    val u = asofUnion(left, right, key, tsCol, payload, tiebreak, rightSide = 2)
+    u.df.withColumn("__pl", first(col("__pl"), ignoreNulls = true)
+        .over(u.window.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
       .filter(col("__side") === 1)
-      .select(Seq(col(key), col(tsCol)) ++ leftCols.map(col) ++
-        payload.map(c => col(s"__pl.$c").as(c)): _*)
+      .select(u.leftOut ++ payload.map(c => col(s"__pl.$c").as(c)): _*)
   }
 
   /** Nearest as-of join: each left row picks the right row with the
@@ -186,34 +189,17 @@ object Relational {
     * `matched_ts` (the chosen row's timestamp) and `dir`
     * ('before' — including an exact-ts hit — or 'after').
     *
-    * Scale shape: the SAME single union-sort as the one-sided joins —
-    * one window partition sort per key carries the previous payload
-    * (last over preceding) and the next (first over following)
+    * Scale shape: the SAME single [[asofUnion]] sort as the one-sided
+    * joins — one window partition sort per key carries the previous
+    * payload (last over preceding) and the next (first over following)
     * simultaneously; the Δt comparison is a per-row integer-micros
     * expression. Never a range join, never a pair explosion; a same-ts
     * right row lands in the backward carry with Δ=0, which always
     * wins, so one sort order serves both directions. */
   def asofJoinNearest(left: DataFrame, right: DataFrame, key: String,
       tsCol: String, payload: Seq[String], tiebreak: Seq[String]): DataFrame = {
-    val leftCols = left.columns.filterNot(c => c == key || c == tsCol).toSeq
-    val plType = org.apache.spark.sql.types.StructType(
-      right.schema(tsCol).copy(name = "__mts") +:
-        payload.map(c => right.schema(c).copy(name = c)))
-    val l = left.select(
-      Seq(col(key), col(tsCol), lit(1).as("__side"),
-        lit(null).cast(plType).as("__pl")) ++
-        leftCols.map(col) ++
-        tiebreak.map(c => lit(null).cast(right.schema(c).dataType).as(s"__tb_$c")): _*)
-    val r = right.select(
-      Seq(col(key), col(tsCol), lit(0).as("__side"),
-        struct(col(tsCol).as("__mts") +: payload.map(col): _*).as("__pl")) ++
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-        tiebreak.map(c => col(c).as(s"__tb_$c")): _*)
-    val ord = col(tsCol) +: col("__side") +: tiebreak.map(c => col(s"__tb_$c"))
-    val wPrev = Window.partitionBy(col(key)).orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = Window.partitionBy(col(key)).orderBy(ord: _*)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val u = asofUnion(left, right, key, tsCol, payload, tiebreak,
+      rightSide = 0, withTs = true)
     val lts = unix_micros(col(tsCol).cast("timestamp"))
     val pd = lts - unix_micros(col("__prev.__mts").cast("timestamp"))
     val nd = unix_micros(col("__next.__mts").cast("timestamp")) - lts
@@ -221,12 +207,14 @@ object Relational {
       .when(col("__next").isNull, col("__prev"))
       .when(pd <= nd, col("__prev"))
       .otherwise(col("__next"))
-    l.unionByName(r)
-      .withColumn("__prev", last(col("__pl"), ignoreNulls = true).over(wPrev))
-      .withColumn("__next", first(col("__pl"), ignoreNulls = true).over(wNext))
+    u.df
+      .withColumn("__prev", last(col("__pl"), ignoreNulls = true)
+        .over(u.window.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("__next", first(col("__pl"), ignoreNulls = true)
+        .over(u.window.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
       .filter(col("__side") === 1)
       .withColumn("__ch", chosen)
-      .select(Seq(col(key), col(tsCol)) ++ leftCols.map(col) ++
+      .select(u.leftOut ++
         payload.map(c => col(s"__ch.$c").as(c)) ++ Seq(
           col("__ch.__mts").as("matched_ts"),
           when(col("__ch").isNull, lit(null).cast("string"))

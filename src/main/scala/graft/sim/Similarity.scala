@@ -246,15 +246,46 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cand = binaryTopK(corpus, queries, nCandidates, dim, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-    val scored = cand.join(broadcast(qv), Seq("query_id")).join(cv, Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine("__qv", "__cv", dim).as("cos"))
+    exactRerank(cand, corpus, queries, k, dim, idCol, vecCol, broadcastCand = false)
+  }
+
+  /** The exact re-rank every candidate-then-rerank ANN search ends in
+    * (the incremental top-k shape): raw vectors rejoin for the
+    * (query_id, neighbor_id) candidate rows only, cos is
+    * `dot / (q_norm · c_norm)` with per-vector norms — the same folds in
+    * the same order as [[cosine]], so the doubles are bit-identical —
+    * and the top `k` per query by (cos DESC, neighbor_id) survive. The
+    * query side is broadcast; `broadcastCand` broadcasts the candidates
+    * (a queries × nCandidates cut) into the corpus scan, otherwise they
+    * stream into the corpus join. */
+  private def exactRerank(cand: DataFrame, corpus: DataFrame,
+      queries: DataFrame, k: Int, dim: Int, idCol: String, vecCol: String,
+      broadcastCand: Boolean): DataFrame = {
+    val cn = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
+      .withColumn("c_norm", sqrt(dot("c_vec", "c_vec", dim)))
+    val qn = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+      .withColumn("q_norm", sqrt(dot("q_vec", "q_vec", dim)))
+    val pairs =
+      if (broadcastCand) cn.join(broadcast(cand), Seq("neighbor_id"))
+      else cand.join(cn, Seq("neighbor_id"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
+    pairs.join(broadcast(qn), Seq("query_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        (dot("q_vec", "c_vec", dim) / (col("q_norm") * col("c_norm"))).as("cos"))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+  }
+
+  /** The `nProbe` coarse clusters nearest each query's `q_vec`, one
+    * exploded row per cluster: centroids ordered by negated dot
+    * product, cluster id breaking ties. */
+  private def probeClusters(cents: Array[(Int, Seq[Double])], nProbe: Int): Column = {
+    val scoredCents = array(cents.map { case (cid, c) =>
+      struct((-graft.functions.NativeExprs.floatDoubleVecDot(col("q_vec"), array(c.map(lit): _*)))
+        .as("neg"), lit(cid).as("cid"))
+    }: _*)
+    explode(slice(transform(array_sort(scoredCents), x => x("cid")), 1, nProbe))
   }
 
   /** Oracle twin of [[binaryRerankTopK]]: the binary shortlist CTE +
@@ -351,40 +382,21 @@ object Similarity {
       k: Int, dim: Int, nProbe: Int = 3, nCandidates: Int = 50,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     if (model.absmax <= 0.0) return emptyTopK(corpus, queries, idCol)
-    val scoredCents = array(model.centroids.map { case (cid, c) =>
-      struct((-graft.functions.NativeExprs.floatDoubleVecDot(col("q_vec"), array(c.map(lit): _*)))
-        .as("neg"), lit(cid).as("cid"))
-    }: _*)
-    val probeCol =
-      explode(slice(transform(array_sort(scoredCents), x => x("cid")), 1, nProbe))
     val qb = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
       .select(col("query_id"),
         graft.functions.NativeExprs.packInt8(
           sq8QuantLit(col("q_vec"), model.absmax)).as("__qcode"),
-        probeCol.as("cluster"))
+        probeClusters(model.centroids, nProbe).as("cluster"))
     val approx = model.index.join(broadcast(qb), Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         graft.functions.NativeExprs.byteVecDot(col("__qcode"), col("__code")).as("adot"))
     val wA = Window.partitionBy(col("query_id")).orderBy(col("adot").desc, col("neighbor_id"))
-    // dropDuplicates: no-op on a clean index (one cluster per vector) but
-    // keeps an index with a twice-written row from ranking a neighbor
-    // twice — same contract as ivfPqQuery
+    // each index row is one *Encode projection row, so a vector sits in
+    // exactly one cluster and (query, neighbor) pairs are already unique
     val cand = approx.withColumn("__ra", row_number().over(wA))
       .filter(col("__ra") <= nCandidates).select("query_id", "neighbor_id")
-      .dropDuplicates("query_id", "neighbor_id")
-    val cn = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      .withColumn("c_norm", sqrt(dot("c_vec", "c_vec", dim)))
-    val qn = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .withColumn("q_norm", sqrt(dot("q_vec", "q_vec", dim)))
-    val wC = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    cn.join(broadcast(cand), Seq("neighbor_id"))
-      .join(broadcast(qn), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot("q_vec", "c_vec", dim) / (col("q_norm") * col("c_norm"))).as("cos"))
-      .withColumn("rank", row_number().over(wC))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+    exactRerank(cand, corpus, queries, k, dim, idCol, vecCol, broadcastCand = true)
   }
 
   /** Build + query in one call (the bench/oracle entry; deployments
@@ -731,18 +743,7 @@ object Similarity {
       .join(broadcast(qb.select("ht", "hb", "query_id")), Seq("ht", "hb"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
-    val cn = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      .withColumn("c_norm", sqrt(dot("c_vec", "c_vec", dim)))
-    val qn = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .withColumn("q_norm", sqrt(dot("q_vec", "q_vec", dim)))
-    val scored = cand.join(cn, Seq("neighbor_id"))
-      .join(broadcast(qn), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot("q_vec", "c_vec", dim) / (col("q_norm") * col("c_norm"))).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+    exactRerank(cand, corpus, queries, k, dim, idCol, vecCol, broadcastCand = false)
   }
 
   /** Oracle twin for [[lshTopK]]: the SAME planes as 32 VALUES rows
@@ -956,14 +957,9 @@ object Similarity {
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
         .withColumn("c_norm", sqrt(dot("c_vec", "c_vec", dim))),
       centsLocal, "c_vec", "neighbor_id")
-    val scoredCents = array(centsLocal.map { case (cid, c) =>
-      struct((-graft.functions.NativeExprs.floatDoubleVecDot(col("q_vec"), array(c.map(lit): _*)))
-        .as("neg"), lit(cid).as("cid"))
-    }: _*)
     val qb = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
       .withColumn("q_norm", sqrt(dot("q_vec", "q_vec", dim)))
-      .withColumn("cluster",
-        explode(slice(transform(array_sort(scoredCents), x => x("cid")), 1, nProbe)))
+      .withColumn("cluster", probeClusters(centsLocal, nProbe))
     // each corpus vector lives in exactly ONE cluster, so (query,
     // neighbor) pairs are already unique — no dedup shuffle; and the
     // rank window input is thinned to (query_id, neighbor_id, cos) so
@@ -1230,18 +1226,7 @@ object Similarity {
     val cand = approx.withColumn("__ra", row_number().over(wA))
       .filter(col("__ra") <= nCandidates).select("query_id", "neighbor_id")
     // exact re-rank: raw vectors rejoin for queries x nCandidates rows only
-    val cn = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      .withColumn("c_norm", sqrt(dot("c_vec", "c_vec", dim)))
-    val qn = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .withColumn("q_norm", sqrt(dot("q_vec", "q_vec", dim)))
-    val wC = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    cn.join(broadcast(cand), Seq("neighbor_id"))
-      .join(broadcast(qn), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot("q_vec", "c_vec", dim) / (col("q_norm") * col("c_norm"))).as("cos"))
-      .withColumn("rank", row_number().over(wC))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+    exactRerank(cand, corpus, queries, k, dim, idCol, vecCol, broadcastCand = true)
   }
 
   /** CTE chain for the bit-reproducible PQ codebook training (one Lloyd
@@ -1467,7 +1452,6 @@ object Similarity {
     val m = model.codebooks.length
     val subDim = dim / m
     val cb = model.codebooks
-    val centsLocal = model.centroids
     val offsets = cb.scanLeft(0)((acc, sc) => acc + sc._2.length)
     def svCol(vc: String, s: Int) = slice(col(vc), s * subDim + 1, subDim)
     // query side: ADC lookup table + the nProbe nearest coarse clusters
@@ -1475,14 +1459,9 @@ object Similarity {
       round(graft.functions.NativeExprs.floatDoubleVecDot(svCol("q_vec", s),
         array(c.map(lit): _*)) * CentroidQ).cast("long")
     }): _*)
-    val scoredCents = array(centsLocal.map { case (cid, c) =>
-      struct((-graft.functions.NativeExprs.floatDoubleVecDot(col("q_vec"), array(c.map(lit): _*)))
-        .as("neg"), lit(cid).as("cid"))
-    }: _*)
-    val probeCol =
-      explode(slice(transform(array_sort(scoredCents), x => x("cid")), 1, nProbe))
     val qb = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .select(col("query_id"), lut.as("__lut"), probeCol.as("cluster"))
+      .select(col("query_id"), lut.as("__lut"),
+        probeClusters(model.centroids, nProbe).as("cluster"))
     val approx = model.index.join(broadcast(qb), Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -1490,27 +1469,11 @@ object Similarity {
           element_at(col("__lut"), lit(offsets(s)) + element_at(col("__pos"), s + 1)))
           .reduce(_ + _).as("approx_q"))
     val wA = Window.partitionBy(col("query_id")).orderBy(col("approx_q").desc, col("neighbor_id"))
-    // the dropDuplicates is a no-op on a cleanly-built index (each vector
-    // lives in ONE cluster so pairs are unique) and costs one shuffle of
-    // a queries × nCandidates frame; it exists so an index holding a
-    // twice-written row (a retried append) can never rank the same
-    // neighbor twice in a top-k
+    // each index row is one *Encode projection row, so a vector sits in
+    // exactly one cluster and (query, neighbor) pairs are already unique
     val cand = approx.withColumn("__ra", row_number().over(wA))
       .filter(col("__ra") <= nCandidates).select("query_id", "neighbor_id")
-      .dropDuplicates("query_id", "neighbor_id")
-    // exact re-rank: raw vectors rejoin for queries x nCandidates rows only
-    val cn = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      .withColumn("c_norm", sqrt(dot("c_vec", "c_vec", dim)))
-    val qn = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .withColumn("q_norm", sqrt(dot("q_vec", "q_vec", dim)))
-    val wC = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    cn.join(broadcast(cand), Seq("neighbor_id"))
-      .join(broadcast(qn), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot("q_vec", "c_vec", dim) / (col("q_norm") * col("c_norm"))).as("cos"))
-      .withColumn("rank", row_number().over(wC))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+    exactRerank(cand, corpus, queries, k, dim, idCol, vecCol, broadcastCand = true)
   }
 
   /** Oracle twin for [[ivfPqTopK]]: composes [[kmeansAssignCtes]] (the

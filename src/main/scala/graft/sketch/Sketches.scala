@@ -133,65 +133,20 @@ object Sketches {
     * would round 30.0 to 29.999… differently per engine at power-of-two
     * boundaries). Registers are integer maxima: exact, mergeable,
     * order-free. Input needs no distinct — max is idempotent, which is
-    * the whole HLL trick. `m` must be a power of two. */
-  def hllRegisters(hashed: DataFrame, m: Int): DataFrame = {
+    * the whole HLL trick. `m` must be a power of two.
+    *
+    * `groupCols` keeps ONE register set per group key — the
+    * windowed/dashboard shape ("distinct users per (hour, event type)"):
+    * the group key simply joins the bucket in the groupBy, so a 100 TB
+    * stream aggregates map-side into (groups × m) rows total, and
+    * per-group sketches merge by register max exactly like the global
+    * one. No group columns is the global sketch. */
+  def hllRegisters(hashed: DataFrame, m: Int,
+      groupCols: Seq[String] = Nil): DataFrame = {
     require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
     val quotBits = 31 - Integer.numberOfTrailingZeros(m)
     val mixed = (col("h") * HllMixA) % HllMixMod
     val quot = floor(mixed / m).cast("long") // exact: m a power of two
-    val rho = when(quot === 0, lit(quotBits + 1))
-      .otherwise(lit(quotBits + 1) - length(bin(quot)))
-    hashed.select((mixed % m).as("bucket"), rho.cast("int").as("rho"))
-      .groupBy("bucket").agg(max(col("rho")).as("register"))
-  }
-
-  /** HLL distinct-count estimate from [[hllRegisters]] output, with the
-    * standard alpha_m bias correction. All 2^-r terms are exact powers
-    * of two, so the harmonic sum is order-free and the estimate is
-    * bit-identical across engines. Buckets that never received a value
-    * contribute 2^0 (register 0). */
-  def hllEstimate(registers: DataFrame, m: Int): DataFrame = {
-    val alpha = 0.7213 / (1.0 + 1.079 / m)
-    registers
-      .agg(sum(pow(lit(2.0), -col("register"))).as("__sum"),
-        count(lit(1)).as("__nonEmpty"))
-      .select((lit(alpha) * m * m /
-        (col("__sum") + (lit(m) - col("__nonEmpty")))).as("estimate"))
-  }
-
-  /** Oracle twin for [[hllEstimate]]: the alpha constant is rendered
-    * from the SAME Scala double (shortest round-trip repr), and the
-    * expression order matches the Column form operator for operator. */
-  def hllEstimateSql(registersSql: String, m: Int): String = {
-    val alpha = 0.7213 / (1.0 + 1.079 / m)
-    // explicit DOUBLE: DuckDB would otherwise type the literal DECIMAL
-    // and overflow the * m * m product
-    s"SELECT CAST($alpha AS DOUBLE) * $m * $m / (sum(pow(2.0, -register)) + ($m - count(*))) AS estimate " +
-      s"FROM ($registersSql)"
-  }
-
-  def hllRegistersSql(hashedSql: String, m: Int): String = {
-    val quotBits = 31 - Integer.numberOfTrailingZeros(m)
-    val mixed = s"((h * $HllMixA) % $HllMixMod)"
-    val quot = s"CAST(floor($mixed / $m) AS BIGINT)"
-    s"""SELECT $mixed % $m AS bucket,
-       |       CAST(max(CASE WHEN $quot = 0 THEN ${quotBits + 1}
-       |                ELSE ${quotBits + 1} - length(bin($quot))
-       |           END) AS INTEGER) AS register
-       |FROM ($hashedSql) GROUP BY $mixed % $m""".stripMargin
-  }
-
-  /** Grouped HLL registers — ONE register set per group key: the
-    * windowed/dashboard shape ("distinct users per (hour, event type)").
-    * Identical register arithmetic to [[hllRegisters]]; the group key
-    * simply joins the bucket in the groupBy, so a 100 TB stream
-    * aggregates map-side into (groups × m) rows total, and per-group
-    * sketches merge by register max exactly like the global one. */
-  def hllRegistersBy(hashed: DataFrame, groupCols: Seq[String], m: Int): DataFrame = {
-    require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two, got $m")
-    val quotBits = 31 - Integer.numberOfTrailingZeros(m)
-    val mixed = (col("h") * HllMixA) % HllMixMod
-    val quot = floor(mixed / m).cast("long")
     val rho = when(quot === 0, lit(quotBits + 1))
       .otherwise(lit(quotBits + 1) - length(bin(quot)))
     hashed.select(groupCols.map(col) :+ (mixed % m).as("bucket") :+ rho.cast("int").as("rho"): _*)
@@ -199,9 +154,14 @@ object Sketches {
       .agg(max(col("rho")).as("register"))
   }
 
-  /** Per-group estimates from [[hllRegistersBy]] output: the same
-    * bias-corrected harmonic mean as [[hllEstimate]], grouped. */
-  def hllEstimateBy(registers: DataFrame, groupCols: Seq[String], m: Int): DataFrame = {
+  /** HLL distinct-count estimate from [[hllRegisters]] output, with the
+    * standard alpha_m bias correction — one estimate per `groupCols`
+    * key, or one global row with no group columns. All 2^-r terms are
+    * exact powers of two, so the harmonic sum is order-free and the
+    * estimate is bit-identical across engines. Buckets that never
+    * received a value contribute 2^0 (register 0). */
+  def hllEstimate(registers: DataFrame, m: Int,
+      groupCols: Seq[String] = Nil): DataFrame = {
     val alpha = 0.7213 / (1.0 + 1.079 / m)
     registers
       .groupBy(groupCols.map(col): _*)
@@ -212,24 +172,32 @@ object Sketches {
           (col("__sum") + (lit(m) - col("__nonEmpty")))).as("estimate")): _*)
   }
 
-  /** Oracle twins for the grouped forms: same expressions, same order. */
-  def hllRegistersBySql(hashedSql: String, groupCols: Seq[String], m: Int): String = {
+  /** Oracle twin for [[hllEstimate]]: the alpha constant is rendered
+    * from the SAME Scala double (shortest round-trip repr), and the
+    * expression order matches the Column form operator for operator. */
+  def hllEstimateSql(registersSql: String, m: Int,
+      groupCols: Seq[String] = Nil): String = {
+    val alpha = 0.7213 / (1.0 + 1.079 / m)
+    val g = groupCols.map(_ + ", ").mkString
+    // explicit DOUBLE: DuckDB would otherwise type the literal DECIMAL
+    // and overflow the * m * m product
+    s"SELECT ${g}CAST($alpha AS DOUBLE) * $m * $m / (sum(pow(2.0, -register)) + ($m - count(*))) AS estimate " +
+      s"FROM ($registersSql)" +
+      (if (groupCols.isEmpty) "" else s" GROUP BY ${groupCols.mkString(", ")}")
+  }
+
+  /** Oracle twin for [[hllRegisters]]: same expressions, same order. */
+  def hllRegistersSql(hashedSql: String, m: Int,
+      groupCols: Seq[String] = Nil): String = {
     val quotBits = 31 - Integer.numberOfTrailingZeros(m)
     val mixed = s"((h * $HllMixA) % $HllMixMod)"
     val quot = s"CAST(floor($mixed / $m) AS BIGINT)"
-    val g = groupCols.mkString(", ")
-    s"""SELECT $g, $mixed % $m AS bucket,
+    val g = groupCols.map(_ + ", ").mkString
+    s"""SELECT $g$mixed % $m AS bucket,
        |       CAST(max(CASE WHEN $quot = 0 THEN ${quotBits + 1}
        |                ELSE ${quotBits + 1} - length(bin($quot))
        |           END) AS INTEGER) AS register
-       |FROM ($hashedSql) GROUP BY $g, $mixed % $m""".stripMargin
-  }
-
-  def hllEstimateBySql(registersSql: String, groupCols: Seq[String], m: Int): String = {
-    val alpha = 0.7213 / (1.0 + 1.079 / m)
-    val g = groupCols.mkString(", ")
-    s"SELECT $g, CAST($alpha AS DOUBLE) * $m * $m / (sum(pow(2.0, -register)) + ($m - count(*))) AS estimate " +
-      s"FROM ($registersSql) GROUP BY $g"
+       |FROM ($hashedSql) GROUP BY $g$mixed % $m""".stripMargin
   }
 
   /** Approximate quantiles from an equi-width histogram — the mergeable
@@ -243,54 +211,24 @@ object Sketches {
     * 100 TB quantile trade. Deterministic (integer counts + fixed-order
     * double arithmetic) → cell-exact oracle like the other sketches.
     * Returns (q, estimate) per requested quantile, linearly interpolated
-    * inside the covering bin. */
+    * inside the covering bin.
+    *
+    * `groupCols` gives per-group bin boundaries and per-group quantile
+    * walks (daily/monthly latency percentiles, the monitoring shape):
+    * the per-group (lo, hi, n) table joins on the group key and the
+    * cumulative walk partitions by it over the (groups × bins)-row
+    * table. No group columns is the global sketch: the 1-row
+    * (lo, hi, n) side then joins with no key, as a broadcast. */
   def histogramQuantiles(df: DataFrame, valueCol: String, bins: Int,
-      qs: Seq[Double]): DataFrame = {
-    require(bins > 0 && qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0))
-    val v = col(valueCol).cast("double")
-    val mm = broadcast(df.agg(min(v).as("lo"), max(v).as("hi"), count(v).as("n")))
-    val width = (col("hi") - col("lo")) / bins
-    // NULLs are excluded from n = count(v); binning them would create a
-    // NULL bin that the NULLS-FIRST cumulative window counts ahead of
-    // every real bin, shifting every estimate — filter before binning.
-    val counts = df.select(v.as("__v")).filter(col("__v").isNotNull).crossJoin(mm)
-      .select(when(col("hi") === col("lo"), lit(0))
-        .otherwise(least(floor((col("__v") - col("lo")) / width).cast("int"),
-          lit(bins - 1))).as("bin"))
-      .groupBy("bin").agg(count(lit(1)).as("c"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy("bin")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    // 1-based rank, floored at 1: q = 0 means "the minimum" (rank 1) —
-    // a plain q*n rank of 0 satisfies no bin's (cum_before < r) and the
-    // quantile would silently vanish from the output
-    val r = greatest(col("q") * col("n").cast("double"), lit(1.0))
-    counts.withColumn("cum", sum(col("c")).over(w)) // bins rows: tiny window
-      .crossJoin(mm)
-      .withColumn("q", explode(array(qs.map(lit): _*)))
-      // the covering bin: first whose cumulative count reaches rank q*n
-      .filter(col("cum").cast("double") >= r &&
-        (col("cum") - col("c")).cast("double") < r)
-      .select(col("q"),
-        (col("lo") + col("bin").cast("double") * width +
-          ((r - (col("cum") - col("c")).cast("double")) / col("c").cast("double")) * width)
-          .as("estimate"))
-  }
-
-  /** Grouped [[histogramQuantiles]] — per-group bin boundaries and per-
-    * group quantile walks (daily/monthly latency percentiles, the
-    * monitoring shape). The per-group (lo, hi, n) table is groups-sized
-    * (broadcastable by Catalyst); bin counts stay one map-side-
-    * combinable aggregate; the cumulative walk partitions by group over
-    * the (groups × bins)-row table. */
-  def histogramQuantilesBy(df: DataFrame, valueCol: String,
-      groupCols: Seq[String], bins: Int, qs: Seq[Double]): DataFrame = {
+      qs: Seq[Double], groupCols: Seq[String] = Nil): DataFrame = {
     require(bins > 0 && qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0))
     val v = col(valueCol).cast("double")
     val mm = df.groupBy(groupCols.map(col): _*)
       .agg(min(v).as("lo"), max(v).as("hi"), count(v).as("n"))
     val width = (col("hi") - col("lo")) / bins
-    // same NULL exclusion as the global form: n excludes NULLs, so must the bins
+    // NULLs are excluded from n = count(v); binning them would create a
+    // NULL bin that the NULLS-FIRST cumulative window counts ahead of
+    // every real bin, shifting every estimate — filter before binning.
     val counts = df.select(groupCols.map(col) :+ v.as("__v"): _*)
       .filter(col("__v").isNotNull)
       .join(mm, groupCols)
@@ -303,10 +241,14 @@ object Sketches {
       .partitionBy(groupCols.map(col): _*).orderBy("bin")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
+    // 1-based rank, floored at 1: q = 0 means "the minimum" (rank 1) —
+    // a plain q*n rank of 0 satisfies no bin's (cum_before < r) and the
+    // quantile would silently vanish from the output
     val r = greatest(col("q") * col("n").cast("double"), lit(1.0))
-    counts.withColumn("cum", sum(col("c")).over(w))
+    counts.withColumn("cum", sum(col("c")).over(w)) // (groups ×) bins rows: tiny window
       .join(mm, groupCols)
       .withColumn("q", explode(array(qs.map(lit): _*)))
+      // the covering bin: first whose cumulative count reaches rank q*n
       .filter(col("cum").cast("double") >= r &&
         (col("cum") - col("c")).cast("double") < r)
       .select(groupCols.map(col) :+ col("q") :+
@@ -315,64 +257,44 @@ object Sketches {
           .as("estimate")): _*)
   }
 
-  /** Oracle twin for [[histogramQuantilesBy]]. */
-  def histogramQuantilesBySql(table: String, valueCol: String,
-      groupCols: Seq[String], bins: Int, qs: Seq[Double]): String = {
+  /** Oracle twin for [[histogramQuantiles]]: same binning, same
+    * cumulative walk, same interpolation expression order, grouped by
+    * `groupCols` (none: the global form). Quantile literals are CAST AS
+    * DOUBLE (DuckDB types bare float literals DECIMAL); the window cum
+    * is cast back to BIGINT (DuckDB sums BIGINT into HUGEINT). */
+  def histogramQuantilesSql(table: String, valueCol: String, bins: Int,
+      qs: Seq[Double], groupCols: Seq[String] = Nil): String = {
     val qList = qs.map(q => s"CAST($q AS DOUBLE)").mkString(", ")
-    val g = groupCols.mkString(", ")
     val width = s"((hi - lo) / $bins)"
     val rank = "greatest(q * CAST(n AS DOUBLE), CAST(1 AS DOUBLE))"
+    val gl = groupCols.mkString(", ")
+    val g = groupCols.map(_ + ", ").mkString
+    val (groupBy, joinMm, cum) =
+      if (groupCols.isEmpty) ("", "CROSS JOIN __mm",
+        "SELECT bin, c, CAST(sum(c) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM __c")
+      else (s" GROUP BY $gl", s"JOIN __mm USING ($gl)",
+        s"""SELECT ${g}bin, c,
+           |         CAST(sum(c) OVER (PARTITION BY $gl ORDER BY bin ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+           |  FROM __c""".stripMargin)
     s"""WITH __mm AS (
-       |  SELECT $g, min(CAST($valueCol AS DOUBLE)) AS lo, max(CAST($valueCol AS DOUBLE)) AS hi,
-       |         count($valueCol) AS n FROM $table GROUP BY $g
+       |  SELECT ${g}min(CAST($valueCol AS DOUBLE)) AS lo, max(CAST($valueCol AS DOUBLE)) AS hi,
+       |         count($valueCol) AS n FROM $table$groupBy
        |), __b AS (
-       |  SELECT $g, CASE WHEN hi = lo THEN 0
+       |  SELECT ${g}CASE WHEN hi = lo THEN 0
        |         ELSE least(CAST(floor((CAST($valueCol AS DOUBLE) - lo) / $width) AS INTEGER), ${bins - 1})
        |         END AS bin
-       |  FROM $table JOIN __mm USING ($g)
+       |  FROM $table $joinMm
        |  WHERE $valueCol IS NOT NULL
        |), __c AS (
-       |  SELECT $g, bin, count(*) AS c FROM __b GROUP BY $g, bin
+       |  SELECT ${g}bin, count(*) AS c FROM __b GROUP BY ${g}bin
        |), __cum AS (
-       |  SELECT $g, bin, c,
-       |         CAST(sum(c) OVER (PARTITION BY $g ORDER BY bin ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-       |  FROM __c
+       |  $cum
        |), __q AS (SELECT unnest([$qList]) AS q)
-       |SELECT $g, q, lo + CAST(bin AS DOUBLE) * $width +
+       |SELECT ${g}q, lo + CAST(bin AS DOUBLE) * $width +
        |       (($rank - CAST(cum - c AS DOUBLE)) / CAST(c AS DOUBLE)) * $width AS estimate
-       |FROM __cum JOIN __mm USING ($g) CROSS JOIN __q
+       |FROM __cum $joinMm CROSS JOIN __q
        |WHERE CAST(cum AS DOUBLE) >= $rank
        |  AND CAST(cum - c AS DOUBLE) < $rank""".stripMargin
-  }
-
-  /** Oracle twin for [[histogramQuantiles]]: same binning, same
-    * cumulative walk, same interpolation expression order. Quantile
-    * literals are CAST AS DOUBLE (DuckDB types bare float literals
-    * DECIMAL); the window cum is cast back to BIGINT (DuckDB sums
-    * BIGINT into HUGEINT). */
-  def histogramQuantilesSql(table: String, valueCol: String, bins: Int,
-      qs: Seq[Double]): String = {
-    val qList = qs.map(q => s"CAST($q AS DOUBLE)").mkString(", ")
-    val width = s"((hi - lo) / $bins)"
-    s"""WITH __mm AS (
-       |  SELECT min(CAST($valueCol AS DOUBLE)) AS lo, max(CAST($valueCol AS DOUBLE)) AS hi,
-       |         count($valueCol) AS n FROM $table
-       |), __b AS (
-       |  SELECT CASE WHEN hi = lo THEN 0
-       |         ELSE least(CAST(floor((CAST($valueCol AS DOUBLE) - lo) / $width) AS INTEGER), ${bins - 1})
-       |         END AS bin
-       |  FROM $table CROSS JOIN __mm
-       |  WHERE $valueCol IS NOT NULL
-       |), __c AS (
-       |  SELECT bin, count(*) AS c FROM __b GROUP BY bin
-       |), __cum AS (
-       |  SELECT bin, c, CAST(sum(c) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM __c
-       |), __q AS (SELECT unnest([$qList]) AS q)
-       |SELECT q, lo + CAST(bin AS DOUBLE) * $width +
-       |       ((greatest(q * CAST(n AS DOUBLE), CAST(1 AS DOUBLE)) - CAST(cum - c AS DOUBLE)) / CAST(c AS DOUBLE)) * $width AS estimate
-       |FROM __cum CROSS JOIN __mm CROSS JOIN __q
-       |WHERE CAST(cum AS DOUBLE) >= greatest(q * CAST(n AS DOUBLE), CAST(1 AS DOUBLE))
-       |  AND CAST(cum - c AS DOUBLE) < greatest(q * CAST(n AS DOUBLE), CAST(1 AS DOUBLE))""".stripMargin
   }
 
   // ---- KMV (k minimum values) distinct sketch ----------------------------

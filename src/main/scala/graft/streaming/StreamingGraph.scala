@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.graph.GraphOps.PrScale
+import graft.graph.GraphOps.{PrScale, prLand, prShare}
 
 /** INCREMENTAL PageRank maintenance over edge appends — the graph
   * family's rung on the registry discipline every other stateful family
@@ -255,12 +255,11 @@ object StreamingGraph {
     for (i <- 1 to iters) {
       val insum = eA.join(
         cur.filter(col("outdeg") > 0)
-          .select(col("id").as("src"), expr("__cur div outdeg").as("__c")),
+          .select(col("id").as("src"), prShare("__cur", "outdeg", "1").as("__c")),
         Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum("__c").as("__insum"))
       val siAff = affected.join(insum, Seq("id"), "left")
-        .select(col("id"), (lit(PrScale * 3 / 20) +
-          expr("(17 * coalesce(__insum, CAST(0 AS BIGINT))) div 20")).as(s"__n$i"))
+        .select(col("id"), prLand("__insum").as(s"__n$i"))
         .localCheckpoint(true)
       patch = patch.join(siAff, Seq("id"))
       cur = work.join(siAff, Seq("id"), "left")
@@ -282,7 +281,7 @@ object StreamingGraph {
   }
 
   /** Bootstrap scores: the [[graft.graph.GraphOps.pageRank]] supersteps
-    * (identical integer math) over the first batch's edge set, keeping
+    * (the same share and damping expressions) over the first batch's edge set, keeping
     * every round's scores. The node/outdeg frame folds the usual
     * distinct-nodes + outdeg-agg + join into ONE union-aggregate pass. */
   private def bootstrapScores(e: DataFrame, iters: Int): DataFrame = {
@@ -295,13 +294,11 @@ object StreamingGraph {
     for (i <- 1 to iters) {
       val insum = e.join(
         cur.filter(col("outdeg") > 0)
-          .select(col("id").as("src"), expr("__cur div outdeg").as("__c")),
+          .select(col("id").as("src"), prShare("__cur", "outdeg", "1").as("__c")),
         Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum("__c").as("__insum"))
       cur = base.join(insum, Seq("id"), "left")
-        .select(col("id"), col("outdeg"),
-          (lit(PrScale * 3 / 20) +
-            expr("(17 * coalesce(__insum, CAST(0 AS BIGINT))) div 20")).as("__cur"))
+        .select(col("id"), col("outdeg"), prLand("__insum").as("__cur"))
         .localCheckpoint(true)
       acc = acc.join(cur.select(col("id"), col("__cur").as(s"s$i")), Seq("id"))
     }

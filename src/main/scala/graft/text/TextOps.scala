@@ -1978,30 +1978,32 @@ object TextOps {
   val PhoneRe = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
   val Ipv4Re = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
 
-  /** PII scrub for a text column: per-class match counts (the audit
-    * trail a redaction pass must emit) + the text with every match
-    * replaced by a typed placeholder. Counts are measured on the input
-    * text independently per class; replacement is sequential
-    * email → phone → IP (identical order in the SQL twin). Scan-shaped:
-    * pure projections, no shuffle, no UDF. */
-  def redactPii(text: Column): Seq[(String, Column)] = Seq(
-    "n_emails" -> size(regexp_extract_all(text, lit(EmailRe), lit(0))),
-    "n_phones" -> size(regexp_extract_all(text, lit(PhoneRe), lit(0))),
-    "n_ips" -> size(regexp_extract_all(text, lit(Ipv4Re), lit(0))),
-    "clean" -> regexp_replace(
-      regexp_replace(
-        regexp_replace(text, EmailRe, "<EMAIL>"),
-        PhoneRe, "<PHONE>"),
-      Ipv4Re, "<IP>"))
+  /** PII scrub for a text column over an ordered class table of
+    * (count column, regex, placeholder): per-class match counts (the
+    * audit trail a redaction pass must emit) + the text with every
+    * match replaced by its typed placeholder. Counts are measured on
+    * the input text independently per class; replacement is
+    * sequential in table order (identical order in the SQL twin). The
+    * default [[PiiClasses]] is email → phone → IP; [[PiiClassesV2]] and
+    * [[PiiClassesV3]] add classes. Scan-shaped: pure projections, no
+    * shuffle, no UDF. */
+  def redactPii(text: Column,
+      classes: Seq[(String, String, String)] = PiiClasses): Seq[(String, Column)] =
+    classes.map { case (n, re, _) => n -> size(regexp_extract_all(text, lit(re), lit(0))) } :+
+      ("clean" -> classes.foldLeft(text) { case (t, (_, re, tag)) => regexp_replace(t, re, tag) })
 
-  def redactPiiSql(text: String): Map[String, String] = Map(
-    "n_emails" -> s"CAST(len(regexp_extract_all($text, '$EmailRe')) AS INTEGER)",
-    "n_phones" -> s"CAST(len(regexp_extract_all($text, '$PhoneRe')) AS INTEGER)",
-    "n_ips" -> s"CAST(len(regexp_extract_all($text, '$Ipv4Re')) AS INTEGER)",
-    "clean" -> ("regexp_replace(regexp_replace(regexp_replace(" +
-      s"$text, '$EmailRe', '<EMAIL>', 'g'), " +
-      s"'$PhoneRe', '<PHONE>', 'g'), " +
-      s"'$Ipv4Re', '<IP>', 'g')"))
+  def redactPiiSql(text: String,
+      classes: Seq[(String, String, String)] = PiiClasses): Map[String, String] =
+    (classes.map { case (n, re, _) =>
+      n -> s"CAST(len(regexp_extract_all($text, '$re')) AS INTEGER)"
+    } :+ ("clean" -> ("regexp_replace(" * classes.size + text +
+      classes.map { case (_, re, tag) => s", '$re', '$tag', 'g')" }.mkString))).toMap
+
+  /** The `t_redact` class table: email → phone → IP. */
+  val PiiClasses: Seq[(String, String, String)] = Seq(
+    ("n_emails", EmailRe, "<EMAIL>"),
+    ("n_phones", PhoneRe, "<PHONE>"),
+    ("n_ips", Ipv4Re, "<IP>"))
 
   /** IBAN shape (ISO 13616 surface form, no checksum validation):
     * country code + 2 check digits + 10-30 alphanumerics. Uppercase
@@ -2020,39 +2022,17 @@ object TextOps {
     * just a span-equality argument. */
   val E164Re = "\\+[1-9][0-9]{7,14}"
 
-  /** [[redactPii]] with the IBAN and E.164 classes added. Counts are
-    * independent per class on the INPUT text (v1 contract); replacement
-    * order email → iban → e164 → phone → ip, identical in the twin.
-    * Placeholders are uppercase-letter-only, so no earlier replacement
-    * can create a later class's match. */
-  def redactPiiV2(text: Column): Seq[(String, Column)] = Seq(
-    "n_emails" -> size(regexp_extract_all(text, lit(EmailRe), lit(0))),
-    "n_ibans" -> size(regexp_extract_all(text, lit(IbanRe), lit(0))),
-    "n_e164" -> size(regexp_extract_all(text, lit(E164Re), lit(0))),
-    "n_phones" -> size(regexp_extract_all(text, lit(PhoneRe), lit(0))),
-    "n_ips" -> size(regexp_extract_all(text, lit(Ipv4Re), lit(0))),
-    "clean" -> regexp_replace(
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(text, EmailRe, "<EMAIL>"),
-            IbanRe, "<IBAN>"),
-          E164Re, "<E164>"),
-        PhoneRe, "<PHONE>"),
-      Ipv4Re, "<IP>"))
-
-  def redactPiiV2Sql(text: String): Map[String, String] = Map(
-    "n_emails" -> s"CAST(len(regexp_extract_all($text, '$EmailRe')) AS INTEGER)",
-    "n_ibans" -> s"CAST(len(regexp_extract_all($text, '$IbanRe')) AS INTEGER)",
-    "n_e164" -> s"CAST(len(regexp_extract_all($text, '$E164Re')) AS INTEGER)",
-    "n_phones" -> s"CAST(len(regexp_extract_all($text, '$PhoneRe')) AS INTEGER)",
-    "n_ips" -> s"CAST(len(regexp_extract_all($text, '$Ipv4Re')) AS INTEGER)",
-    "clean" -> ("regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(" +
-      s"$text, '$EmailRe', '<EMAIL>', 'g'), " +
-      s"'$IbanRe', '<IBAN>', 'g'), " +
-      s"'$E164Re', '<E164>', 'g'), " +
-      s"'$PhoneRe', '<PHONE>', 'g'), " +
-      s"'$Ipv4Re', '<IP>', 'g')"))
+  /** [[PiiClasses]] with the IBAN and E.164 classes added (the
+    * `t_redact_v2` table). Counts are independent per class on the
+    * INPUT text (v1 contract); replacement order email → iban → e164 →
+    * phone → ip. Placeholders are uppercase-letter-only, so no earlier
+    * replacement can create a later class's match. */
+  val PiiClassesV2: Seq[(String, String, String)] = Seq(
+    ("n_emails", EmailRe, "<EMAIL>"),
+    ("n_ibans", IbanRe, "<IBAN>"),
+    ("n_e164", E164Re, "<E164>"),
+    ("n_phones", PhoneRe, "<PHONE>"),
+    ("n_ips", Ipv4Re, "<IP>"))
 
   /** US Social Security number surface shape: 3-2-4 digit groups. The
     * group widths are disjoint from [[PhoneRe]]'s 3-3-4, so the two
@@ -2071,52 +2051,21 @@ object TextOps {
     * IBAN pass (row 900014). */
   val NinoRe = "[A-Z]{2}[0-9]{6}[A-Z]"
 
-  /** [[redactPiiV2]] with the US-SSN and UK-NINO national-id classes.
-    * Replacement order email → iban → nino → e164 → ssn → phone → ip
-    * (identical in the twin): iban before nino so the longer shape wins
+  /** [[PiiClassesV2]] with the US-SSN and UK-NINO national-id classes
+    * (the `t_redact_v3` table). Replacement order email → iban → nino →
+    * e164 → ssn → phone → ip: iban before nino so the longer shape wins
     * the span; ssn/phone are shape-disjoint so their order is cosmetic.
     * Placeholders stay uppercase-letter-only — no pass can create a
     * later class's match ("<SSN>" contains no digits, "<NINO>" no digit
     * run). */
-  def redactPiiV3(text: Column): Seq[(String, Column)] = Seq(
-    "n_emails" -> size(regexp_extract_all(text, lit(EmailRe), lit(0))),
-    "n_ibans" -> size(regexp_extract_all(text, lit(IbanRe), lit(0))),
-    "n_ninos" -> size(regexp_extract_all(text, lit(NinoRe), lit(0))),
-    "n_e164" -> size(regexp_extract_all(text, lit(E164Re), lit(0))),
-    "n_ssns" -> size(regexp_extract_all(text, lit(SsnRe), lit(0))),
-    "n_phones" -> size(regexp_extract_all(text, lit(PhoneRe), lit(0))),
-    "n_ips" -> size(regexp_extract_all(text, lit(Ipv4Re), lit(0))),
-    "clean" -> regexp_replace(
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(
-                regexp_replace(text, EmailRe, "<EMAIL>"),
-                IbanRe, "<IBAN>"),
-              NinoRe, "<NINO>"),
-            E164Re, "<E164>"),
-          SsnRe, "<SSN>"),
-        PhoneRe, "<PHONE>"),
-      Ipv4Re, "<IP>"))
-
-  def redactPiiV3Sql(text: String): Map[String, String] = Map(
-    "n_emails" -> s"CAST(len(regexp_extract_all($text, '$EmailRe')) AS INTEGER)",
-    "n_ibans" -> s"CAST(len(regexp_extract_all($text, '$IbanRe')) AS INTEGER)",
-    "n_ninos" -> s"CAST(len(regexp_extract_all($text, '$NinoRe')) AS INTEGER)",
-    "n_e164" -> s"CAST(len(regexp_extract_all($text, '$E164Re')) AS INTEGER)",
-    "n_ssns" -> s"CAST(len(regexp_extract_all($text, '$SsnRe')) AS INTEGER)",
-    "n_phones" -> s"CAST(len(regexp_extract_all($text, '$PhoneRe')) AS INTEGER)",
-    "n_ips" -> s"CAST(len(regexp_extract_all($text, '$Ipv4Re')) AS INTEGER)",
-    "clean" -> ("regexp_replace(regexp_replace(regexp_replace(regexp_replace(" +
-      "regexp_replace(regexp_replace(regexp_replace(" +
-      s"$text, '$EmailRe', '<EMAIL>', 'g'), " +
-      s"'$IbanRe', '<IBAN>', 'g'), " +
-      s"'$NinoRe', '<NINO>', 'g'), " +
-      s"'$E164Re', '<E164>', 'g'), " +
-      s"'$SsnRe', '<SSN>', 'g'), " +
-      s"'$PhoneRe', '<PHONE>', 'g'), " +
-      s"'$Ipv4Re', '<IP>', 'g')"))
+  val PiiClassesV3: Seq[(String, String, String)] = Seq(
+    ("n_emails", EmailRe, "<EMAIL>"),
+    ("n_ibans", IbanRe, "<IBAN>"),
+    ("n_ninos", NinoRe, "<NINO>"),
+    ("n_e164", E164Re, "<E164>"),
+    ("n_ssns", SsnRe, "<SSN>"),
+    ("n_phones", PhoneRe, "<PHONE>"),
+    ("n_ips", Ipv4Re, "<IP>"))
 
   /** Adversarial PII rows for the `t_redact_v2` crafted-fixture oracle:
     * every boundary where the two regex engines COULD diverge is a row

@@ -1,6 +1,6 @@
 package graft.tree
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Hierarchy (equipment-tree) operators (SURVEY.md §2.3 J5/J6, §2.2 P6).

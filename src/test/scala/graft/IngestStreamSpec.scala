@@ -456,8 +456,6 @@ class IngestStreamSpec extends SparkSpec {
   }
 
   test("a two-formula micro-batch over a pre-seeded day runs at most 12 Spark jobs") {
-    val sess = spark
-    import sess.implicits._
     val dir = Files.createTempDirectory("graft_jobs").toString
     val archive = s"$dir/archive"
     // six hours of both tags on the streamed day (plant time 07:00 on)

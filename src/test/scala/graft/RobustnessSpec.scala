@@ -235,7 +235,7 @@ class RobustnessSpec extends SparkSpec {
     // all-NULL group contributes no rows (count(v) = 0, no bins)
     val grouped = (vals.map(v => ("a", Option(v))) ++
       Seq(("a", Option.empty[Double]), ("b", Option.empty[Double]))).toDF("g", "v")
-    val byG = Sketches.histogramQuantilesBy(grouped, "v", Seq("g"), 8, qs)
+    val byG = Sketches.histogramQuantiles(grouped, "v", 8, qs, Seq("g"))
       .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     assert(byG.keys.forall(_._1 == "a"))
     assert(byG.map { case ((_, q), e) => q -> e } === want)

@@ -155,8 +155,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("annRecall: self-recall is 1.0; missing neighbors count against the exact set") {
-    val sess = spark
-    import sess.implicits._
     val q = emb.filter(col("vec_id") < 5)
     val exact = Similarity.bruteForceTopK(emb, q, 10, 64)
     // an exact result evaluated against itself is perfect recall

@@ -14,8 +14,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("CMS estimates never undercount (one-sided error bound)") {
-    val sess = spark
-    import sess.implicits._
     val rnd = new scala.util.Random(3)
     val words = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta")
     val d = docs((1L to 50L).map(i =>
@@ -31,8 +29,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("CMS sketches merge by counter addition (partition-and-merge == whole)") {
-    val sess = spark
-    import sess.implicits._
     val rnd = new scala.util.Random(5)
     val words = Vector("red", "green", "blue", "cyan", "teal")
     val all = (1L to 60L).map(i =>
@@ -47,8 +43,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("Bloom: no false negatives ever; filters merge by set union") {
-    val sess = spark
-    import sess.implicits._
     val rnd = new scala.util.Random(9)
     val words = (1 to 40).map(i => s"w$i")
     val all = (1L to 60L).map(i =>
@@ -114,7 +108,7 @@ class SketchesSpec extends SparkSpec {
       yield (g, rnd.nextDouble() * (if (g == "b") 10.0 else 500.0))
     val bins = 16
     val qs = Seq(0.0, 0.25, 0.5, 0.9, 1.0)
-    val got = Sketches.histogramQuantilesBy(rows.toDF("g", "v"), "v", Seq("g"), bins, qs)
+    val got = Sketches.histogramQuantiles(rows.toDF("g", "v"), "v", bins, qs, Seq("g"))
       .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
     // brute reference with the IDENTICAL arithmetic (same fp op order)
     val want = rows.groupBy(_._1).flatMap { case (g, rs) =>

@@ -51,7 +51,7 @@ class TextDedupSpec extends SparkSpec {
     import sess.implicits._
     val df = Seq((1, "a b c d"), (2, "a b")).toDF("id", "text")
     val got = df.select(col("id"),
-        Dedup.shinglesFromTokens(TextOps.tokens(col("text")), 3).as("sh"))
+        TextOps.shinglesFromTokens(TextOps.tokens(col("text")), 3).as("sh"))
       .collect().map(r => r.getInt(0) -> r.getSeq[String](1)).toMap
     assert(got(1) === Seq("a b c", "b c d"))
     assert(got(2) === Seq())
@@ -404,7 +404,7 @@ class TextDedupSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val df = TextOps.CraftedPiiRows.toDF("doc_id", "text")
-    val cols = TextOps.redactPiiV2(col("text")).map { case (n, c) => c.as(n) }
+    val cols = TextOps.redactPii(col("text"), TextOps.PiiClassesV2).map { case (n, c) => c.as(n) }
     val got = df.select(col("doc_id") +: cols: _*)
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5), r.getString(6))))
@@ -428,6 +428,26 @@ class TextDedupSpec extends SparkSpec {
     assert(got(900008L)._6 === "token <IBAN>BCD clamps at thirty")
     // fewer than 10 chars after the prefix never matches
     assert(got(900009L)._2 === 0)
+  }
+
+  test("redactPii v3 classes: SSN/phone spans are disjoint; an IBAN-length NINO-prefixed run is IBAN") {
+    val sess = spark
+    import sess.implicits._
+    val df = TextOps.CraftedPiiRowsV3.toDF("doc_id", "text")
+    val cols = TextOps.redactPii(col("text"), TextOps.PiiClassesV3).map { case (n, c) => c.as(n) }
+    val got = df.select(col("doc_id") +: cols: _*)
+      .collect().map(r => r.getLong(0) ->
+        ((r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6),
+          r.getInt(7), r.getString(8))))
+      .toMap
+    // (n_emails, n_ibans, n_ninos, n_e164, n_ssns, n_phones, n_ips, clean)
+    assert(got(900010L) === ((0, 0, 0, 0, 1, 0, 0, "SSN <SSN> filed today")))
+    // 3-3-4 is a dash phone, never an SSN: the two shapes claim disjoint spans
+    assert(got(900011L) === ((0, 0, 0, 0, 0, 1, 0, "not an SSN <PHONE> is a dash phone")))
+    assert(got(900012L) === ((0, 0, 1, 0, 0, 0, 0, "NI number <NINO> on file")))
+    // counted by both classes on the input; the earlier IBAN pass takes the span
+    assert(got(900014L) === ((0, 1, 1, 0, 0, 0, 0,
+      "run <IBAN> is iban shaped with a nino prefix")))
   }
 
   test("chunkTokens: sliding windows with overlap, short/empty docs behave") {
@@ -897,8 +917,6 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("spanCorrupt: splicing targets back into inputs reconstructs every document") {
-    val sess = spark
-    import sess.implicits._
     val out = TextOps.spanCorrupt(docs.limit(100), "doc_id", "text")
       .collect().map(r => (r.getLong(0),
         r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))).toSeq
@@ -937,8 +955,6 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("fimTransform: prefix+middle+suffix reassemble every document; cuts are deterministic") {
-    val sess = spark
-    import sess.implicits._
     val out = TextOps.fimTransform(docs.limit(100), "doc_id", "text")
       .collect().map(r => (r.getLong(0),
         r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
@@ -1133,8 +1149,6 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("eval decontamination keeps exactly the low-overlap test docs") {
-    val sess = spark
-    import sess.implicits._
     val docs = Tables.documents(spark, sfDir)
       .withColumn("__split", TextOps.hashSplit(col("doc_id")))
     val test = docs.filter(col("__split") === "test")

@@ -3,7 +3,6 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
-import org.scalatest.prop.TableDrivenPropertyChecks
 
 import graft.ops.TimeSeries
 
