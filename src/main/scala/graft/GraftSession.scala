@@ -37,13 +37,12 @@ object GraftSession {
       // stable in isolation, where 100 entries suffice). Class metadata
       // is KBs per entry; the compiled code budget is the code cache.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // this engine's bucketed tables (registry relayouts — dedup gram
-      // claims, graph edge/score/label bases — and the materialized ANN
-      // indexes) are all probed by key filters or joined on their
-      // bucket key; the auto-disable rule does not credit append-sized
-      // In-filter PROBES, so with autoBucketedScan on a filter-only
-      // scan is "uninteresting" and reverts to a plain scan (planner
-      // marks `Bucketed: false`), losing SelectedBucketsCount pruning.
+      // bucketed tables (e.g. a materialized ANN index) are probed by
+      // key filters or joined on their bucket key; the auto-disable
+      // rule does not credit append-sized In-filter PROBES, so with
+      // autoBucketedScan on a filter-only scan is "uninteresting" and
+      // reverts to a plain scan (planner marks `Bucketed: false`),
+      // losing SelectedBucketsCount pruning.
       // Non-bucketed tables are unaffected by this flag.
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
 

@@ -51,10 +51,11 @@ object SparkEntry {
       "SELECT query_id, neighbor_id, cos, rank FROM r WHERE rank <= 10 ORDER BY query_id, rank"
 
   /** One shared parent for the incremental-query temp registries
-    * (g_pagerank_inc, g_cc_inc, d_stream_cluster) with ONE process-wide
-    * shutdown hook — repeated invocations in a long-lived session
-    * (bench passes, verify loops) each get a fresh subdirectory but
-    * never accumulate hooks, and the whole tree is swept at JVM exit. */
+    * (d_stream_cluster, er_inc, w3_session_inc, g_pagerank_inc, g_cc_inc)
+    * with ONE process-wide shutdown hook — repeated invocations in a
+    * long-lived session (bench passes, verify loops) each get a fresh
+    * subdirectory but never accumulate hooks, and the whole tree is
+    * swept at JVM exit. */
   private lazy val tmpRegistryRoot: java.nio.file.Path = {
     val root = java.nio.file.Files.createTempDirectory("graft_inc_reg")
     sys.addShutdownHook {

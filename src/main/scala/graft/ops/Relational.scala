@@ -291,36 +291,6 @@ object Relational {
       .drop("__cell")
   }
 
-  /** Materialize a frame bucketed+sorted by its join key(s) — the
-    * layout that lets two big fact tables join with NO shuffle exchange
-    * on either side (co-located sort-merge join), the 100 TB alternative
-    * to shuffling both sides on every query. One write-time shuffle
-    * buys every subsequent join; `ScaleTechniquesSpec` proves the
-    * zero-exchange plan. A join or aggregate keyed on ALL the bucket
-    * columns reads the table with no exchange. Registers `tableName` in
-    * the session catalog (bucket metadata lives in the catalog, not the
-    * files — a plain `spark.read.parquet` of the path would NOT get the
-    * bucketed plan).
-    *
-    * The frame is repartitioned on the bucket key first: a bucketed
-    * write emits one file per (task, bucket) pair, so writing from an
-    * N-partition frame would produce N×buckets small files and every
-    * later probe would pay N× the footer/open cost (measured 4× on the
-    * 100× incremental-CC append). Spark's repartition hash IS the
-    * bucket hash (Murmur3 pmod), so each task writes exactly one bucket
-    * → one file per bucket. The callers are the registry maintenance
-    * sweeps, which write compact probe-shaped state; a key with fewer
-    * distinct values than `buckets` would funnel the write through that
-    * many tasks. */
-  def materializeBucketed(df: DataFrame, path: String, tableName: String,
-      keys: Seq[String], buckets: Int): DataFrame = {
-    df.repartition(buckets, keys.map(col): _*)
-      .write.bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .option("path", path).mode("overwrite").saveAsTable(tableName)
-    df.sparkSession.table(tableName)
-  }
-
   /** Z-order (Morton) key: round-robin bit interleave of up to a few
     * non-negative integer columns, each clamped to `bits` bits. Rows
     * sorted by this key cluster into small HYPER-RECTANGLES of the
@@ -391,8 +361,8 @@ object Relational {
     * not noise). The change-data-capture primitive for publishing
     * incremental table versions: unchanged rows are dropped, so the
     * output is the delta a downstream MERGE applies. Scale
-    * shape: one key shuffle (or zero on bucketed layouts via
-    * [[materializeBucketed]]); values compare map-side. */
+    * shape: one key shuffle (or zero when both sides are bucketed on
+    * the key); values compare map-side. */
   def snapshotDiff(before: DataFrame, after: DataFrame, keys: Seq[String],
       trackCols: Seq[String]): DataFrame = {
     require(keys.nonEmpty && trackCols.nonEmpty)

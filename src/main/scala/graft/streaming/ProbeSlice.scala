@@ -7,10 +7,9 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   * whose `keyCol` is in the (append-sized) id set.
   *
   * When the id set fits `literalCap` it is COLLECTED and pushed as an
-  * In-set FILTER instead of a semi join — on a bucketed+sorted relayout
-  * (`Relational.materializeBucketed`) that prunes bucket files and
-  * sorted row groups, so a probe reads the touched slice of the log,
-  * not all of it. The sets are the ones the append paths already
+  * In-set FILTER instead of a semi join — pushed to the parquet scan,
+  * where it skips row groups whose min/max stats miss every key, and
+  * no join is planned. The sets are the ones the append paths already
   * broadcast whole to every executor, so driver-side collection is the
   * same size class. Above the cap (or cap <= 0): a broadcast semi
   * join, so the id set must fit a broadcast.

@@ -35,22 +35,12 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB shape: the endpoint-label lookup, the member-relabel probe
   * (raw rows by label, then their ids' histories), and the log-dedup
-  * slice are all [[ProbeSlice]] probes — pushed In-filters that prune
-  * a bucketed+sorted relayout, the same deployment lever as
-  * [[StreamingGraph.compactRegistryBucketed]]. The only full-registry
-  * pass is compaction. The label-level merge CC runs on an
+  * slice are all [[ProbeSlice]] probes — a pushed In-filter or a
+  * broadcast semi join on the registry scan, so no append-path read
+  * shuffles the registry. The label-level merge CC runs on an
   * append-sized graph regardless of corpus size.
   */
 object StreamingCc {
-
-  /** Bucketed deployment relayout of a compacted CC registry pair
-    * ([[compactRegistryBucketed]]): the pair log bucketed by src, and
-    * the label base twice — by id (the endpoint/member lookups) and by
-    * label (the losing-component member probe). Passing it to
-    * [[batchStep]] redirects the append path's probes to these tables;
-    * the `batch_id=*` dirs stay the write path and source of truth. */
-  final case class CcBase(edgesSrc: DataFrame, labelsById: DataFrame,
-      labelsByLabel: DataFrame)
 
   /** All batches of the pair log ((src, dst, batch_id); typed empty
     * frame when nothing has been written yet). */
@@ -91,27 +81,14 @@ object StreamingCc {
     * losing components' members, and overwrite this batch's edge +
     * label partitions. */
   def batchStep(spark: SparkSession, edgesDir: String, labelsDir: String,
-      srcCol: String, dstCol: String, base: Option[CcBase] = None,
-      probeLiteralCap: Int = 100000)(
+      srcCol: String, dstCol: String, probeLiteralCap: Int = 100000)(
       batch: DataFrame, batchId: Long): Unit = {
     def slice(log: DataFrame, keyCol: String, ids: DataFrame): DataFrame =
       ProbeSlice(log, keyCol, ids, probeLiteralCap)
-    // with a bucketed base the `batch_id=-1` parquet base is EXCLUDED
-    // from probe reads (the tables are its read-optimized copy); live
-    // post-compaction partitions stack on top, per probe direction
-    val liveE = readEdges(spark, edgesDir).filter(col("batch_id") =!= batchId)
-    val prevEdges = base match {
-      case Some(cb) => cb.edgesSrc.select("src", "dst")
-        .union(liveE.filter(col("batch_id") >= 0).select("src", "dst"))
-      case None => liveE.select("src", "dst")
-    }
-    val liveL = readLabelsRaw(spark, labelsDir)
+    val prevEdges = readEdges(spark, edgesDir)
+      .filter(col("batch_id") =!= batchId).select("src", "dst")
+    val prevRaw = readLabelsRaw(spark, labelsDir)
       .filter(col("batch_id") =!= batchId)
-    def withBase(t: DataFrame): DataFrame =
-      t.select("id", "label").withColumn("batch_id", lit(-1L))
-        .unionByName(liveL.filter(col("batch_id") >= 0))
-    val prevRawById = base.map(cb => withBase(cb.labelsById)).getOrElse(liveL)
-    val prevRawByLabel = base.map(cb => withBase(cb.labelsByLabel)).getOrElse(liveL)
     // checkpoints on this path are EAGER by design: a lazily-marked RDD
     // materializes only inside a LATER query's job, by which point the
     // originating plan's SQL-metric accumulators may be GC'd — every task
@@ -139,7 +116,7 @@ object StreamingCc {
       empty.write.mode("overwrite").parquet(s"$labelsDir/batch_id=$batchId")
       return
     }
-    if (prevRawById.isEmpty) {
+    if (prevRaw.isEmpty) {
       // bootstrap (empty registry): every node is new, so the probe
       // machinery is pure overhead — and its O(|V|) broadcasts and
       // eager checkpoints are a driver hazard at corpus scale (the
@@ -159,7 +136,7 @@ object StreamingCc {
       .union(newE.select(col("dst").as("id"))).distinct()
       .localCheckpoint(true)
     val endpointLabels = nodeCand
-      .join(latestPerId(slice(prevRawById, "id", nodeCand)), Seq("id"), "left")
+      .join(latestPerId(slice(prevRaw, "id", nodeCand)), Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
       .localCheckpoint(true)
     // label-level merge graph: one edge per new pair, projected to the
@@ -194,63 +171,18 @@ object StreamingCc {
     // old labels) — latest-per-id over those ids' full histories, then
     // keep the ones whose CURRENT label remaps
     val affectedLabels = labelMap.select("label")
-    val candIds = slice(prevRawByLabel, "label", affectedLabels)
+    val candIds = slice(prevRaw, "label", affectedLabels)
       .select("id").distinct().localCheckpoint(true)
-    val relabeled = latestPerId(slice(prevRawById, "id", candIds))
+    val relabeled = latestPerId(slice(prevRaw, "id", candIds))
       .join(labelMap, Seq("label"))
       .select(col("id"), col("__new").as("label"))
     // new nodes (no registry row): their pre-merge label is their own
     // id; write them with its remap when their component merged
     val newNodes = nodeCand.join(
-        slice(prevRawById.select("id"), "id", nodeCand), Seq("id"), "left_anti")
+        slice(prevRaw.select("id"), "id", nodeCand), Seq("id"), "left_anti")
       .join(labelMap.select(col("label").as("id"), col("__new")), Seq("id"), "left")
       .select(col("id"), coalesce(col("__new"), col("id")).as("label"))
     relabeled.unionByName(newNodes)
       .write.mode("overwrite").parquet(s"$labelsDir/batch_id=$batchId")
-  }
-
-  /** Table maintenance, IN PLACE: fold every `batch_id < upToBatchId`
-    * label partition into one latest-wins row per node as the
-    * `batch_id=-1` base (and the pair log into one distinct relayout),
-    * via the loss-safe [[RegistryFs]] choreography. */
-  def compactRegistry(spark: SparkSession, edgesDir: String,
-      labelsDir: String, upToBatchId: Long): Unit = {
-    val lPath = new org.apache.hadoop.fs.Path(labelsDir)
-    val lFs = lPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    RegistryFs.recover(lFs, lPath)
-    latestPerId(
-      readLabelsRaw(spark, labelsDir).filter(col("batch_id") < upToBatchId))
-      .write.mode("overwrite").parquet(RegistryFs.staging(lPath).toString)
-    RegistryFs.swapBase(lFs, lPath, upToBatchId)
-    val ePath = new org.apache.hadoop.fs.Path(edgesDir)
-    val eFs = ePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    RegistryFs.recover(eFs, ePath)
-    readEdges(spark, edgesDir).filter(col("batch_id") < upToBatchId)
-      .select("src", "dst").distinct()
-      .write.mode("overwrite").parquet(RegistryFs.staging(ePath).toString)
-    RegistryFs.swapBase(eFs, ePath, upToBatchId)
-  }
-
-  /** [[compactRegistry]] plus the DEPLOYMENT relayout: the pair log
-    * bucketed+sorted by src and the label base bucketed twice (by id
-    * and by label — the two probe directions the append path issues).
-    * Pass the returned [[CcBase]] to [[batchStep]]; rebuilt on each
-    * maintenance sweep, same shape as
-    * [[StreamingGraph.compactRegistryBucketed]]. */
-  def compactRegistryBucketed(spark: SparkSession, edgesDir: String,
-      labelsDir: String, upToBatchId: Long,
-      tablePath: String, tablePrefix: String, buckets: Int = 32): CcBase = {
-    compactRegistry(spark, edgesDir, labelsDir, upToBatchId)
-    val eBase = readEdges(spark, edgesDir)
-      .filter(col("batch_id") === -1L).select("src", "dst")
-    val lBase = readLabelsRaw(spark, labelsDir)
-      .filter(col("batch_id") === -1L).select("id", "label")
-    val eSrc = graft.ops.Relational.materializeBucketed(
-      eBase, s"$tablePath/edges_src", s"${tablePrefix}_edges_src", Seq("src"), buckets)
-    val lId = graft.ops.Relational.materializeBucketed(
-      lBase, s"$tablePath/labels_id", s"${tablePrefix}_labels_id", Seq("id"), buckets)
-    val lLbl = graft.ops.Relational.materializeBucketed(
-      lBase, s"$tablePath/labels_label", s"${tablePrefix}_labels_label", Seq("label"), buckets)
-    CcBase(eSrc, lId, lLbl)
   }
 }

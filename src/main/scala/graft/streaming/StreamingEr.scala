@@ -27,8 +27,7 @@ import graft.er.EntityResolution
   * Replay safety: the registry and merge-log reads are strictly
   * earlier (`batch_id < current`) and both writes are per-batch
   * partition overwrites, so a crashed-and-replayed batch rewrites its
-  * two partitions byte-identically (a compaction must stay at or below
-  * the checkpoint frontier, see [[compactRegistry]]).
+  * two partitions byte-identically.
   *
   * [[EntityResolutionSpec]] pins the contract: installments in ANY
   * arrival order, resolved through the merge log, equal the batch
@@ -97,62 +96,6 @@ object StreamingEr {
     else
       spark.range(0).select(lit(0L).as("entity"), lit(0L).as("into"),
         lit(0L).as("batch_id")).limit(0)
-  }
-
-  /** Table maintenance, IN PLACE: fold every `batch_id < upToBatchId`
-    * registry partition into ONE base partition `batch_id=-1` whose
-    * entity labels are already RESOLVED through the folded range of the
-    * merge log, and prune the folded registry and merge partitions.
-    * Resolution semantics are unchanged because a component's resolved
-    * label is its min record id, exactly what a fresh arrival would
-    * have produced.
-    *
-    * The folded merge information is NOT destroyed: the fold's closure
-    * mapping (old label → final label) is written as the merge log's
-    * own `batch_id=-1` base partition. This is what keeps a compaction
-    * at `upToBatchId` BELOW the latest batch sound — registry
-    * partitions and merge rows at or past the frontier still reference
-    * pre-frontier arrival-time labels (e.g. a batch-2 merge `20 → 5`
-    * written when record 20 carried arrival label 20), and only the
-    * retained mapping reconnects them to the rewritten base (the first
-    * draft deleted the folded merges outright, splitting exactly such
-    * entities). On re-compaction both bases are inside the
-    * `batch_id < upToBatchId` read, so the mapping composes.
-    *
-    * Crash-safety: both folds are staged fully before any destructive
-    * step, then installed via [[RegistryFs.swapBase]] (park → rename →
-    * prune, rename results checked); [[RegistryFs.recover]] repairs a
-    * previously interrupted run first. `upToBatchId` must be at or
-    * below the checkpoint frontier (a replayable batch must keep its
-    * own partitions). */
-  def compactRegistry(spark: SparkSession, registryDir: String,
-      mergeDir: String, idCol: String, upToBatchId: Long): Unit = {
-    val regPath = new org.apache.hadoop.fs.Path(registryDir)
-    val mrgPath = new org.apache.hadoop.fs.Path(mergeDir)
-    val fs = regPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(mrgPath)
-    RegistryFs.recover(fs, regPath)
-    RegistryFs.recover(fs, mrgPath)
-    val reg = spark.read.option("basePath", registryDir).parquet(registryDir)
-      .filter(col("batch_id") < upToBatchId).drop("batch_id")
-    val merges = readMerges(spark, mergeDir)
-      .filter(col("batch_id") < upToBatchId).select("entity", "into")
-    val nodes = merges.select(col("entity").as("__n"))
-      .unionByName(merges.select(col("into").as("__n"))).distinct()
-    val closed = Dedup.clusters(nodes,
-      merges.select(col("entity").as("id_a"), col("into").as("id_b")), "__n")
-      .select(col("id").as("entity"), col("cluster").as("__final"))
-    val resolved = reg.join(broadcast(closed), Seq("entity"), "left")
-      .withColumn("entity", coalesce(col("__final"), col("entity")))
-      .drop("__final")
-    resolved.write.mode("overwrite")
-      .parquet(RegistryFs.staging(regPath).toString)
-    // the retained closure: old label → final label, merge-log-sized
-    closed.filter(col("entity") =!= col("__final"))
-      .select(col("entity"), col("__final").as("into"))
-      .write.mode("overwrite").parquet(RegistryFs.staging(mrgPath).toString)
-    RegistryFs.swapBase(fs, regPath, upToBatchId)
-    RegistryFs.swapBase(fs, mrgPath, upToBatchId)
   }
 
   /** Current (id, entity) for everything seen so far: arrival-time

@@ -46,29 +46,14 @@ import graft.graph.GraphOps.{PrScale, prLand, prShare}
   *
   * 100 TB shape: per batch, the K-hop frontier expansion and the K
   * recompute supersteps are equi-joins keyed by node id over the
-  * accumulated edge log (bucket it by dst to make the in-edge probe
-  * exchange-free); the recompute joins touch only in-edges OF AFFECTED
-  * NODES (a semi-join slice of the log), so batch cost scales with the
-  * disturbed neighborhood — the whole point of the incremental form.
-  * Registry growth is one row per CHANGED node per batch; fold it back
-  * to one row per node with [[compactRegistry]] (wired into
-  * [[RegistryMaintenance.maintainAll]]).
+  * accumulated edge log; the recompute joins touch only in-edges OF
+  * AFFECTED NODES (a [[ProbeSlice]] of the log), so batch cost scales
+  * with the disturbed neighborhood — the whole point of the incremental
+  * form. Registry growth is one row per CHANGED node per batch.
   */
 object StreamingGraph {
 
   private def scoreCols(iters: Int): Seq[String] = (1 to iters).map(i => s"s$i")
-
-  /** The bucketed deployment relayout of a compacted registry pair
-    * ([[compactRegistryBucketed]]): the edge base as TWO bucketed+sorted
-    * tables (one per probe direction) and the score base bucketed by id.
-    * Passing it to [[batchStep]] redirects the append path's log/registry
-    * PROBES to these tables — the batch-partition dirs stay the source
-    * of truth for writes, replay, and [[readScores]]; the tables are a
-    * read-optimized copy of the `batch_id=-1` base, so probes prune
-    * bucket files and sorted row groups instead of re-scanning the full
-    * log once per probe (the measured ~4-scan append floor). */
-  final case class GraphBase(edgesSrc: DataFrame, edgesDst: DataFrame,
-      scores: DataFrame, iters: Int)
 
   /** All batches of the edge log ((src, dst, batch_id); empty frame with
     * the right columns when nothing has been written yet). */
@@ -116,11 +101,9 @@ object StreamingGraph {
     * and overwrite this batch's edge + score partitions. */
   def batchStep(spark: SparkSession, edgesDir: String, scoresDir: String,
       srcCol: String, dstCol: String, iters: Int,
-      base: Option[GraphBase] = None, probeLiteralCap: Int = 100000)(
+      probeLiteralCap: Int = 100000)(
       batch: DataFrame, batchId: Long): Unit = {
     require(iters >= 1 && iters <= 10, s"iters must be in [1,10], got $iters")
-    base.foreach(gb => require(gb.iters == iters,
-      s"GraphBase was compacted at iters=${gb.iters}, batchStep got $iters"))
     // the (append-sized) frontier/affected/work id sets broadcast into
     // every probe of the edge log and score registry instead of
     // shuffling those tables (measured at the 100× fixture the log would
@@ -129,34 +112,15 @@ object StreamingGraph {
     // whole premise; an append that rewires most of the graph is a job
     // for a batch rerun.
     // slice(log, key, ids): the log rows whose key ∈ ids — pushed
-    // In-filter (prunes the [[GraphBase]] bucket files / sorted row
-    // groups) below `probeLiteralCap`, semi join above (see
+    // In-filter below `probeLiteralCap`, semi join above (see
     // [[ProbeSlice]])
     def slice(log: DataFrame, keyCol: String, ids: DataFrame): DataFrame =
       ProbeSlice(log, keyCol, ids, probeLiteralCap)
     val sc = scoreCols(iters)
-    // with a bucketed base the `batch_id=-1` parquet base is EXCLUDED
-    // from probe reads (the tables are its read-optimized copy); live
-    // post-compaction partitions stack on top in both probe directions
-    val livePrev = readEdges(spark, edgesDir).filter(col("batch_id") =!= batchId)
-    val (prevEdgesSrc, prevEdgesDst) = base match {
-      case Some(gb) =>
-        val live = livePrev.filter(col("batch_id") >= 0).select("src", "dst")
-        (gb.edgesSrc.select("src", "dst").union(live),
-          gb.edgesDst.select("src", "dst").union(live))
-      case None =>
-        val all = livePrev.select("src", "dst")
-        (all, all)
-    }
-    val prevRaw = base match {
-      case Some(gb) =>
-        val payload = Seq("id", "outdeg") ++ sc
-        gb.scores.select(payload.map(col): _*).withColumn("batch_id", lit(-1L))
-          .unionByName(readScoresRaw(spark, scoresDir, iters)
-            .filter(col("batch_id") >= 0 && col("batch_id") =!= batchId))
-      case None =>
-        readScoresRaw(spark, scoresDir, iters).filter(col("batch_id") =!= batchId)
-    }
+    val prevEdges = readEdges(spark, edgesDir)
+      .filter(col("batch_id") =!= batchId).select("src", "dst")
+    val prevRaw = readScoresRaw(spark, scoresDir, iters)
+      .filter(col("batch_id") =!= batchId)
     // dedupe against the log WITHOUT shuffling it: slice the log to the
     // batch's own src keys first (pushed filter or broadcast semi — a
     // pruned scan, not an exchange), then anti-join small-vs-small;
@@ -169,7 +133,7 @@ object StreamingGraph {
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .localCheckpoint(true)
-    val logSlice = slice(prevEdgesSrc, "src", cand.select("src").distinct())
+    val logSlice = slice(prevEdges, "src", cand.select("src").distinct())
     val newE = cand.join(logSlice, Seq("src", "dst"), "left_anti")
       .localCheckpoint(true)
     newE.write.mode("overwrite").parquet(s"$edgesDir/batch_id=$batchId")
@@ -191,10 +155,9 @@ object StreamingGraph {
       return
     }
     // NOT checkpointed: each use re-scans the parquet log + the small
-    // checkpointed newE — at scale a (bucketed) log re-read beats
-    // caching the full edge set
-    val allESrc = prevEdgesSrc.union(newE)
-    val allEDst = prevEdgesDst.union(newE)
+    // checkpointed newE — at scale a log re-read beats caching the full
+    // edge set
+    val allE = prevEdges.union(newE)
     // seeds: sources whose outdeg changed + brand-new nodes (no registry
     // row yet — includes tail-only nodes the closure would miss)
     val dOut = newE.groupBy(col("src").as("id")).agg(count(lit(1)).as("__d"))
@@ -217,7 +180,7 @@ object StreamingGraph {
     var hop = 0
     var drained = false
     while (hop < iters && !drained) {
-      frontier = slice(allESrc, "src", frontier)
+      frontier = slice(allE, "src", frontier)
         .select(col("dst").as("id")).distinct().localCheckpoint(true)
       // an empty frontier has converged — every remaining hop would
       // re-scan the log to produce nothing (a DAG shallower than K
@@ -230,9 +193,8 @@ object StreamingGraph {
     affected = affected.localCheckpoint(true)
     // recompute working set: affected nodes + their in-neighbors (whose
     // stored per-round scores feed the supersteps); eA = the in-edge
-    // slice of the log that lands on an affected node — the probe the
-    // dst-bucketed base exists for
-    val eA = slice(allEDst, "dst", affected)
+    // slice of the log that lands on an affected node
+    val eA = slice(allE, "dst", affected)
       .localCheckpoint(true)
     val workIds = affected.union(eA.select(col("src").as("id"))).distinct()
       .localCheckpoint(true)
@@ -303,67 +265,5 @@ object StreamingGraph {
       acc = acc.join(cur.select(col("id"), col("__cur").as(s"s$i")), Seq("id"))
     }
     acc
-  }
-
-  /** Table maintenance, IN PLACE: fold every `batch_id < upToBatchId`
-    * score partition into one latest-wins row per node as the
-    * `batch_id=-1` base (and the edge log into one distinct-relayout
-    * base), via the loss-safe [[RegistryFs]] choreography. Same frontier
-    * caveat as every registry: `upToBatchId` must not exceed the
-    * stream's checkpoint frontier. */
-  def compactRegistry(spark: SparkSession, edgesDir: String,
-      scoresDir: String, iters: Int, upToBatchId: Long): Unit = {
-    val sPath = new org.apache.hadoop.fs.Path(scoresDir)
-    val sFs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    RegistryFs.recover(sFs, sPath)
-    latestPerId(
-      readScoresRaw(spark, scoresDir, iters).filter(col("batch_id") < upToBatchId),
-      iters)
-      .write.mode("overwrite").parquet(RegistryFs.staging(sPath).toString)
-    RegistryFs.swapBase(sFs, sPath, upToBatchId)
-    val ePath = new org.apache.hadoop.fs.Path(edgesDir)
-    val eFs = ePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    RegistryFs.recover(eFs, ePath)
-    readEdges(spark, edgesDir).filter(col("batch_id") < upToBatchId)
-      .select("src", "dst").distinct()
-      .write.mode("overwrite").parquet(RegistryFs.staging(ePath).toString)
-    RegistryFs.swapBase(eFs, ePath, upToBatchId)
-  }
-
-  /** [[compactRegistry]] plus the DEPLOYMENT relayout: after the
-    * in-place fold, materialize the edge base as two bucketed+sorted
-    * tables (by src for the dedup/frontier probes, by dst for the
-    * in-edge probe) and the score base bucketed by id — then pass the
-    * returned [[GraphBase]] to [[batchStep]] so appends probe pruned
-    * bucket files / sorted row groups instead of re-scanning the full
-    * log ~4×. The `batch_id=*` dirs
-    * remain the write path and source of truth; the tables are
-    * read-optimized copies of the installed `batch_id=-1` base and are
-    * rebuilt on each maintenance sweep.
-    *
-    * Honest scope (measured, BENCH_SCALE round 10): pruning pays when
-    * an append's probe keys are LOCALIZED (clustered entity ids,
-    * recent-key ranges). Probe key sets spread uniformly over the key
-    * domain intersect every block of ANY layout — on such fixtures the
-    * bucketed base ties the plain dir layout and the win is the probe
-    * PLAN (exchange-free bare scan) and write volume, not scan bytes. */
-  def compactRegistryBucketed(spark: SparkSession, edgesDir: String,
-      scoresDir: String, iters: Int, upToBatchId: Long,
-      tablePath: String, tablePrefix: String, buckets: Int = 32): GraphBase = {
-    compactRegistry(spark, edgesDir, scoresDir, iters, upToBatchId)
-    // relayout FROM the installed base, so the tables are byte-derived
-    // from exactly the state the batch partitions fold to
-    val eBase = readEdges(spark, edgesDir)
-      .filter(col("batch_id") === -1L).select("src", "dst")
-    val sBase = readScoresRaw(spark, scoresDir, iters)
-      .filter(col("batch_id") === -1L)
-      .select(("id" +: "outdeg" +: scoreCols(iters)).map(col): _*)
-    val eSrc = graft.ops.Relational.materializeBucketed(
-      eBase, s"$tablePath/edges_src", s"${tablePrefix}_edges_src", Seq("src"), buckets)
-    val eDst = graft.ops.Relational.materializeBucketed(
-      eBase, s"$tablePath/edges_dst", s"${tablePrefix}_edges_dst", Seq("dst"), buckets)
-    val sId = graft.ops.Relational.materializeBucketed(
-      sBase, s"$tablePath/scores_id", s"${tablePrefix}_scores_id", Seq("id"), buckets)
-    GraphBase(eSrc, eDst, sId, iters)
   }
 }

@@ -257,111 +257,6 @@ class EntityResolutionSpec extends SparkSpec {
     assert(resolvedMap() === batch, "replayed batch changed resolution")
   }
 
-  test("incremental ER compaction folds resolved labels in place; later batches unaffected") {
-    import graft.streaming.StreamingEr
-    import graft.model.Tables
-    val p = Tables.part(spark, sfDir)
-      .select("p_partkey", "p_name", "p_brand", "p_type").localCheckpoint()
-    val dirs = Seq.fill(2)(java.nio.file.Files
-      .createTempDirectory("graft_er_cmp").toString)
-    def step(d: String, m: Long, i: Long) =
-      StreamingEr.batchStep(spark, s"$d/reg", s"$d/merge",
-        "p_partkey", "p_name", Seq("p_brand", "p_type"), maxDist = 3)(
-        p.filter(pmod(col("p_partkey"), lit(4)) === m), i)
-    // three installments on both sides; compact one side at the frontier
-    dirs.foreach { d => Seq(3L, 1L, 0L).zipWithIndex.foreach {
-      case (m, i) => step(d, m, i.toLong) } }
-    StreamingEr.compactRegistry(spark, s"${dirs.head}/reg",
-      s"${dirs.head}/merge", "p_partkey", upToBatchId = 3L)
-    // only the base remains, with RESOLVED labels and an empty merge log
-    val fs = new org.apache.hadoop.fs.Path(dirs.head)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(s"${dirs.head}/reg"))
-      .map(_.getPath.getName).filter(_.startsWith("batch_id=")).sorted
-    assert(parts.toSeq === Seq("batch_id=-1"))
-    // folded merge PARTITIONS are pruned; the retained closure lives in
-    // the merge log's own batch_id=-1 base
-    assert(StreamingEr.readMerges(spark, s"${dirs.head}/merge")
-      .filter(col("batch_id") >= 0 && col("batch_id") < 3).isEmpty)
-    // the fourth installment lands on both sides; resolution parity
-    dirs.foreach(d => step(d, 2L, 3L))
-    def res(d: String) = StreamingEr.resolveEntities(spark, s"$d/reg",
-      s"$d/merge", "p_partkey").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(res(dirs.head) === res(dirs(1)),
-      "post-compaction resolution diverges from the uncompacted twin")
-    // and both equal the batch operator on the union
-    val batch = graft.er.EntityResolution.entities(p, "p_partkey",
-      graft.er.EntityResolution.matchPairs(p, "p_partkey", "p_name",
-        Seq("p_brand", "p_type"), maxDist = 3))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(res(dirs.head) === batch)
-  }
-
-  test("compaction BELOW the frontier keeps post-frontier merge rows connected") {
-    // the advisor's crafted fixture: merges (20→10) at batch 1 and
-    // (20→5) at batch 2; compacting at upToBatchId=2 folds only batches
-    // 0-1, yet the kept batch-2 merge row references record 20's
-    // arrival-time label — the retained closure base must reconnect it,
-    // or entity {5,10,15,20} splits into {10,15,20} and {5}
-    val sess = spark
-    import sess.implicits._
-    import graft.streaming.StreamingEr
-    val dir = java.nio.file.Files.createTempDirectory("graft_er_subf").toString
-    def step(rows: Seq[(Long, String)], i: Long) =
-      StreamingEr.batchStep(spark, s"$dir/reg", s"$dir/merge",
-        "id", "name", Seq("blk"), maxDist = 1)(
-        rows.map { case (id, nm) => (id, nm, "b") }.toDF("id", "name", "blk"), i)
-    step(Seq((10L, "aaaa"), (20L, "aabb")), 0L)
-    step(Seq((15L, "aaab")), 1L) // bridges 10,20 → merge (20→10)
-    step(Seq((5L, "abbb")), 2L)  // matches 20 → merge (20→5)
-    StreamingEr.compactRegistry(spark, s"$dir/reg", s"$dir/merge",
-      "id", upToBatchId = 2L)
-    def resolved() = StreamingEr.resolveEntities(spark, s"$dir/reg",
-      s"$dir/merge", "id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(resolved() === Map(5L -> 5L, 10L -> 5L, 15L -> 5L, 20L -> 5L),
-      "sub-frontier compaction split an entity bridged across the frontier")
-    // re-compaction at the full frontier composes the retained closure
-    // with the kept batch-2 merge (both are inside the < upToBatchId read)
-    StreamingEr.compactRegistry(spark, s"$dir/reg", s"$dir/merge",
-      "id", upToBatchId = 3L)
-    assert(resolved() === Map(5L -> 5L, 10L -> 5L, 15L -> 5L, 20L -> 5L))
-    // and a post-compaction arrival matching a rewritten record still chains
-    step(Seq((6L, "abbc")), 3L) // dist 1 to "abbb" (record 5)
-    assert(resolved() === Map(5L -> 5L, 6L -> 5L, 10L -> 5L, 15L -> 5L,
-      20L -> 5L))
-  }
-
-  test("compaction crash windows are recoverable: parked base restored, stale staging discarded") {
-    val sess = spark
-    import sess.implicits._
-    import graft.streaming.{RegistryFs, StreamingEr}
-    val root = java.nio.file.Files.createTempDirectory("graft_reg_crash").toString
-    val dir = s"$root/registry"
-    Seq(Seq((10L, "aaaa"), (20L, "aabb")), Seq((15L, "aaab"), (30L, "zzzz")))
-      .zipWithIndex.foreach { case (rows, i) =>
-        StreamingEr.batchStep(spark, dir, s"$root/merge", "id", "name",
-          Seq("blk"), maxDist = 1)(
-          rows.map { case (id, nm) => (id, nm, "b") }.toDF("id", "name", "blk"), i.toLong)
-      }
-    StreamingEr.compactRegistry(spark, dir, s"$root/merge", "id", upToBatchId = 2L)
-    def registry() = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
-    val want = registry()
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate a crash between park and install: base parked, staging gone
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dirPath, "batch_id=-1"),
-      new org.apache.hadoop.fs.Path(dirPath, ".compact-old")))
-    RegistryFs.recover(fs, dirPath)
-    assert(registry() === want, "recover() did not restore the parked base")
-    // a leftover staging dir (crash before any rename) is stale: its fold
-    // may predate newer batches — recover must discard it and keep the base
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dirPath, ".compact-staging"))
-    RegistryFs.recover(fs, dirPath)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dirPath, ".compact-staging")))
-    assert(registry() === want)
-  }
-
   test("er_match plan: blocking is an equi-join, never a cartesian product") {
     val p = SparkEntry.queries("er_match")(spark, sfDir).queryExecution
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

@@ -197,7 +197,7 @@ class GraphOpsSpec extends SparkSpec {
     import sess.implicits._
     val e = (1L to 200L).flatMap(i => Seq((i, i % 50 + 1), (i % 50 + 1, i)))
       .toDF("src", "dst")
-    val bucketed = graft.ops.Relational.materializeBucketed(
+    val bucketed = materializeBucketed(
       e, s"$dir/edges", "t_graph_edges_bucketed", Seq("src"), 8)
     try {
       val state = (1L to 200L).map(i => (i, 1000000L)).toDF("src", "score")

@@ -24,7 +24,7 @@ class IvfPqIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_ivfpq_mat").toString
     spark.sql("DROP TABLE IF EXISTS t_ivfpq_mat")
     val built = Similarity.ivfPqIndex(emb, 64)
-    val model = built.copy(index = graft.ops.Relational.materializeBucketed(
+    val model = built.copy(index = materializeBucketed(
       built.index, s"$dir/idx", "t_ivfpq_mat", Seq("cluster"), 8))
     try {
       // the oracle-pinned one-shot result (s_knn_ivfpq parameterization)
@@ -33,8 +33,7 @@ class IvfPqIndexSpec extends SparkSpec {
       assert(rows(Similarity.ivfPqQuery(model, emb, q, 10, 64)) === expect)
 
       // the index side of any cluster-keyed operation reads the bucketed
-      // table with ZERO exchanges (bucket distribution satisfies it) —
-      // the compactRegistry discipline applied to the ANN store
+      // table with ZERO exchanges (bucket distribution satisfies it)
       val agg = model.index.groupBy("cluster").count()
       val aggPlan = agg.queryExecution.executedPlan.toString
       agg.collect()
@@ -47,7 +46,7 @@ class IvfPqIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_ivfsq8_mat").toString
     spark.sql("DROP TABLE IF EXISTS t_ivfsq8_mat")
     val built = Similarity.ivfSq8Index(emb, 64)
-    val model = built.copy(index = graft.ops.Relational.materializeBucketed(
+    val model = built.copy(index = materializeBucketed(
       built.index, s"$dir/idx", "t_ivfsq8_mat", Seq("cluster"), 8))
     try {
       val expect = rows(Similarity.ivfSq8TopK(emb, q, 10, 64))

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
-import graft.ops.Relational
 
 /** Shuffle-shaping techniques for the 100 TB design point, each proven
   * on the fixtures: runtime bloom filters, AQE skew splits, the
@@ -126,10 +125,10 @@ class ScaleTechniquesSpec extends SparkSpec {
     val wh = "/tmp/graft-bucketed"
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    val bOrders = Relational.materializeBucketed(
+    val bOrders = materializeBucketed(
       Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey"),
       s"$wh/b_orders", "b_orders", Seq("o_orderkey"), 8)
-    val bLineitem = Relational.materializeBucketed(
+    val bLineitem = materializeBucketed(
       Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity")
         .withColumnRenamed("l_orderkey", "o_orderkey"),
       s"$wh/b_lineitem", "b_lineitem", Seq("o_orderkey"), 8)

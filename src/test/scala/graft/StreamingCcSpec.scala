@@ -6,15 +6,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
-import graft.streaming.{RegistryMaintenance, StreamingCc}
+import graft.streaming.StreamingCc
 
 /** Incremental connected components: after EVERY batch of edge appends,
   * the registry state equals `Dedup.clusters` run from scratch on the
   * accumulated union (same node universe: every logged endpoint). Plus:
   * replayed batches leave the registry row-identical, untouched
   * components are never rewritten, merges cascade across batches AND
-  * within one batch, and compaction through the shared maintenance
-  * sweep changes nothing. */
+  * within one batch, and the semi-join probe mode reaches the same
+  * state. */
 class StreamingCcSpec extends SparkSpec {
 
   private def edgeDf(pairs: Seq[(Long, Long)]): DataFrame = {
@@ -108,56 +108,5 @@ class StreamingCcSpec extends SparkSpec {
     val chain = (0 until 40).map(i => (2L * i + 1, 2L * i + 2))
     step(edgeDf(chain), 1L)
     assert(stateOf(lDir) === batchCc(comps ++ chain))
-  }
-
-  test("registry compaction through maintainAll: state parity, next batch unaffected") {
-    val root = Files.createTempDirectory("graft_cc_cmp").toString
-    val (eDir, lDir) = (s"$root/edges", s"$root/labels")
-    val step = StreamingCc.batchStep(spark, eDir, lDir, "src", "dst") _
-    for (b <- batches.indices) step(edgeDf(batches(b)), b.toLong)
-    val before = stateOf(lDir)
-
-    RegistryMaintenance.maintainAll(spark,
-      Seq(RegistryMaintenance.CcState(eDir, lDir)), upToBatchId = 3L)
-    assert(stateOf(lDir) === before)
-    val parts = new java.io.File(lDir).listFiles().map(_.getName)
-      .filter(_.startsWith("batch_id=")).toSet
-    assert(parts === Set("batch_id=-1", "batch_id=3"))
-
-    // post-compaction appends still reach exact batch parity
-    val extra = Seq((61L, 31L), (70L, 70L))
-    step(edgeDf(extra), 4L)
-    assert(stateOf(lDir) === batchCc(batches.flatten ++ extra))
-  }
-
-  test("bucketed relayout: probes pruned, exact parity through the base, replay-stable") {
-    val root = Files.createTempDirectory("graft_cc_bkt").toString
-    val (eDir, lDir) = (s"$root/edges", s"$root/labels")
-    val step0 = StreamingCc.batchStep(spark, eDir, lDir, "src", "dst") _
-    for (b <- 0 to 2) step0(edgeDf(batches(b)), b.toLong)
-
-    val base = StreamingCc.compactRegistryBucketed(spark, eDir, lDir,
-      upToBatchId = 3L, tablePath = s"$root/tables",
-      tablePrefix = "t_cc_bkt", buckets = 4)
-
-    // the member-relabel probe (labels by label, append-sized key set):
-    // pushed In filter on a bare bucketed scan — no exchange, no join,
-    // pruned bucket files
-    val probe = base.labelsByLabel.filter(col("label").isInCollection(Seq(10L)))
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange") && !plan.contains("Join"),
-      s"label probe not a bare scan:\n$plan")
-    assert(plan.contains("SelectedBucketsCount"), s"no bucket pruning:\n$plan")
-
-    val stepB = StreamingCc.batchStep(spark, eDir, lDir, "src", "dst",
-      base = Some(base)) _
-    stepB(edgeDf(batches(3)), 3L)
-    assert(stateOf(lDir) === batchCc(batches.flatten))
-    // replay through the base: row-identical
-    def rows(dir: String) = spark.read.option("basePath", dir).parquet(dir)
-      .collect().map(_.toString).toSet
-    val lBefore = rows(lDir)
-    stepB(edgeDf(batches(3)), 3L)
-    assert(rows(lDir) === lBefore)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphOps
-import graft.streaming.{RegistryMaintenance, StreamingGraph}
+import graft.streaming.StreamingGraph
 
 /** Incremental PageRank maintenance: after EVERY batch of edge appends,
   * the registry state equals the batch operator run from scratch on the
@@ -14,8 +14,7 @@ import graft.streaming.{RegistryMaintenance, StreamingGraph}
   * iteration (the per-round columns are the state that makes the
   * affected-neighborhood recompute exact). Plus: replayed batches leave
   * the registry row-identical, untouched components are never
-  * rewritten, and registry compaction through the shared maintenance
-  * sweep changes nothing. */
+  * rewritten, and the semi-join probe mode reaches the same state. */
 class StreamingGraphSpec extends SparkSpec {
 
   private val Iters = 3
@@ -92,73 +91,12 @@ class StreamingGraphSpec extends SparkSpec {
     assert(spark.read.parquet(s"$sDir/batch_id=3").isEmpty)
     assert(scoresOf(StreamingGraph.readScores(spark, sDir, Iters)) ===
       scoresOf(GraphOps.pageRank(edgeDf(batches.flatten), "src", "dst", Iters)))
-  }
 
-  test("registry compaction through maintainAll: state parity, next batch unaffected") {
-    val root = Files.createTempDirectory("graft_pr_cmp").toString
-    val (eDir, sDir) = (s"$root/edges", s"$root/scores")
-    val step = StreamingGraph.batchStep(spark, eDir, sDir, "src", "dst", Iters) _
-    for (b <- 0 to 2) step(edgeDf(batches(b)), b.toLong)
-    val before = scoresOf(StreamingGraph.readScores(spark, sDir, Iters))
-
-    // fold below the latest batch (the live-stream frontier shape)
-    RegistryMaintenance.maintainAll(spark,
-      Seq(RegistryMaintenance.PageRankState(eDir, sDir, Iters)), upToBatchId = 2L)
-    assert(scoresOf(StreamingGraph.readScores(spark, sDir, Iters)) === before)
-    // folded partitions pruned, base installed
-    val parts = new java.io.File(sDir).listFiles().map(_.getName)
-      .filter(_.startsWith("batch_id=")).toSet
-    assert(parts === Set("batch_id=-1", "batch_id=2"))
-
-    // post-compaction appends still reach exact batch parity
-    val extra = Seq((8L, 1L), (4L, 8L), (9L, 9L))
-    step(edgeDf(extra), 3L)
-    assert(scoresOf(StreamingGraph.readScores(spark, sDir, Iters)) ===
-      scoresOf(GraphOps.pageRank(edgeDf(batches.flatten ++ extra),
-        "src", "dst", Iters)))
-  }
-
-  test("bucketed relayout: appends probe the tables exchange-free/pruned, " +
-      "exact parity in both probe modes, replay-stable") {
-    val root = Files.createTempDirectory("graft_pr_bkt").toString
-    val (eDir, sDir) = (s"$root/edges", s"$root/scores")
-    val step0 = StreamingGraph.batchStep(spark, eDir, sDir, "src", "dst", Iters) _
-    for (b <- 0 to 1) step0(edgeDf(batches(b)), b.toLong)
-
-    val base = StreamingGraph.compactRegistryBucketed(spark, eDir, sDir,
-      Iters, upToBatchId = 2L, tablePath = s"$root/tables",
-      tablePrefix = "t_pr_bkt", buckets = 4)
-
-    // the in-edge probe (the dst-direction slice batchStep issues) over
-    // the bucketed table with an append-sized key set: a pushed In
-    // filter on a bare scan — NO exchange, NO join
-    val probe = base.edgesDst.filter(col("dst").isInCollection(Seq(1L, 2L, 4L)))
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"in-edge probe shuffled:\n$plan")
-    assert(!plan.contains("Join"), s"in-edge probe joined:\n$plan")
-    assert(plan.contains("PushedFilters") && plan.contains("In(dst"),
-      s"dst In-filter not pushed to the scan:\n$plan")
-    // bucket pruning: the scan reads fewer than all 4 bucket files
-    assert(plan.contains("SelectedBucketsCount"),
-      s"bucket pruning not applied:\n$plan")
-
-    // appends THROUGH the base reach exact batch parity (literal-probe
-    // mode) and replay identically
-    val stepB = StreamingGraph.batchStep(spark, eDir, sDir, "src", "dst",
-      Iters, base = Some(base)) _
-    stepB(edgeDf(batches(2)), 2L)
-    assert(scoresOf(StreamingGraph.readScores(spark, sDir, Iters)) ===
-      scoresOf(GraphOps.pageRank(edgeDf(batches.flatten), "src", "dst", Iters)))
-    val sBefore = rowSet(spark.read.option("basePath", sDir).parquet(sDir))
-    stepB(edgeDf(batches(2)), 2L)
-    assert(rowSet(spark.read.option("basePath", sDir).parquet(sDir)) === sBefore)
-
-    // semi-join fallback mode (probeLiteralCap = 0) over the same base:
-    // identical state
+    // semi-join fallback probes (probeLiteralCap = 0): identical state
     val stepSemi = StreamingGraph.batchStep(spark, eDir, sDir, "src", "dst",
-      Iters, base = Some(base), probeLiteralCap = 0) _
+      Iters, probeLiteralCap = 0) _
     val extra = Seq((8L, 1L), (4L, 8L), (9L, 9L))
-    stepSemi(edgeDf(extra), 3L)
+    stepSemi(edgeDf(extra), 4L)
     assert(scoresOf(StreamingGraph.readScores(spark, sDir, Iters)) ===
       scoresOf(GraphOps.pageRank(edgeDf(batches.flatten ++ extra),
         "src", "dst", Iters)))

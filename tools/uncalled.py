@@ -11,7 +11,8 @@ count; its own defs are cells.
 
 The scan runs to a fixed point: the body of every unreached def not on the
 allowlist is blanked and the scan repeats, so a def that only dead code
-reaches is listed too. Exit 0 iff every listed def is allowlisted.
+reaches is listed too. Exit 0 iff every listed def is allowlisted and every
+KEEP entry allows at least one listed def (a stale entry is printed).
 Run from the repo root: python3 tools/uncalled.py
 """
 import pathlib
@@ -25,11 +26,7 @@ KEEP = {
     # reference ingest behaviour still waiting for a caller on the PI path
     "Ingest.incrementalStart", "Ingest.densityOk", "Ingest.hourlyChunks",
     "TreeCache.*",  # reference extract_leaf_nodes.py
-    # maintenance of stores that a cell or the ingest path writes
-    "ArchiveStore.compact", "RegistryMaintenance.maintainAll", "RegistryFs.*",
-    "StreamingCc.compactRegistry", "StreamingCc.compactRegistryBucketed",
-    "StreamingGraph.compactRegistry", "StreamingGraph.compactRegistryBucketed",
-    "StreamingEr.compactRegistry", "StreamingEr.compactRegistryBucketed",
+    "ArchiveStore.compact",  # maintenance of the archive the ingest path writes
     "Formula.eval",  # the reference interpreter FormulaSpec checks compile against
 }
 TOKENS = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|//[^\n]*|/\*[\s\S]*?\*/')
@@ -88,8 +85,12 @@ def unreached(src):
     return out
 
 
+def allows(entry, qual):
+    return entry in (qual, f"{qual.split('.')[0]}.*")
+
+
 def allowed(qual):
-    return qual in KEEP or f"{qual.split('.')[0]}.*" in KEEP
+    return any(allows(k, qual) for k in KEEP)
 
 
 def main():
@@ -111,8 +112,11 @@ def main():
         tag = "keep" if allowed(qual) else "NOT ALLOWED"
         bad += tag == "NOT ALLOWED"
         print(f"{qual:44} {f'{path}:{line}':58} {tag}")
-    print(f"{bad} not allowed")
-    return 1 if bad else 0
+    stale = sorted(k for k in KEEP if not any(allows(k, u[0]) for u in found))
+    for k in stale:
+        print(f"{k:44} {'KEEP entry allows no listed def':58} STALE")
+    print(f"{bad} not allowed, {len(stale)} stale KEEP entries")
+    return 1 if bad or stale else 0
 
 
 if __name__ == "__main__":
