@@ -16,7 +16,9 @@ import org.apache.spark.sql.SparkSession
   *    −22% on the full sf0.1 sweep vs the fixed-count config.
   *  - UTC session time zone: every temporal oracle twin assumes it.
   *  - `graft.functions.GraftExtensions` registers the native SQL
-  *    functions (`poly_hash`, `float_vec_dot`, ...) at session build.
+  *    functions (`poly_hash`, `float_vec_dot`, ...) and the optimizer
+  *    rule `SortLocalRelation` (a global sort over a `LocalRelation` runs
+  *    at planning time, with no job) at session build.
   *
   * On a real cluster replace `cores` with the executor-core total; the
   * ratios carry.
@@ -37,14 +39,6 @@ object GraftSession {
       // stable in isolation, where 100 entries suffice). Class metadata
       // is KBs per entry; the compiled code budget is the code cache.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // bucketed tables (e.g. a materialized ANN index) are probed by
-      // key filters or joined on their bucket key; the auto-disable
-      // rule does not credit append-sized In-filter PROBES, so with
-      // autoBucketedScan on a filter-only scan is "uninteresting" and
-      // reverts to a plain scan (planner marks `Bucketed: false`),
-      // losing SelectedBucketsCount pruning.
-      // Non-bucketed tables are unaffected by this flag.
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
 
   /** A local session with the recommended configuration (the harness
     * shape: `local[cores]`, UI off). */

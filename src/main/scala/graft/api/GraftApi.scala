@@ -17,7 +17,12 @@ import graft.tree.Hierarchy
   */
 final class GraftApi(spark: SparkSession, root: String) {
 
-  def catalog(database: String): Catalog = new Catalog(spark, root, database)
+  private val catalogs = new java.util.concurrent.ConcurrentHashMap[String, Catalog]()
+
+  /** One [[Catalog]] per namespace for this API's lifetime, so its
+    * dimension snapshots serve every call instead of one. */
+  def catalog(database: String): Catalog =
+    catalogs.computeIfAbsent(database, new Catalog(spark, root, _))
 
   // GET /api/databases (web_app.py:57-67): config sections -> namespaces.
   // Hadoop FS, not java.io.File: the namespace root may live on HDFS/S3,
@@ -64,12 +69,20 @@ final class GraftApi(spark: SparkSession, root: String) {
   def export(db: String, elementIds: Seq[Int],
       start: Option[String], end: Option[String]): DataFrame = {
     val c = catalog(db)
-    val attrs = c.attributes.filter(col("element_id").isin(elementIds: _*))
-      .join(broadcast(c.elements.select(col("element_id"), col("name").as("element_name"))),
+    val elements = c.elements
+    val attributes = c.attributes.filter(col("element_id").isin(elementIds: _*))
+    val attrs = attributes
+      .join(broadcast(elements.select(col("element_id"), col("name").as("element_name"))),
         Seq("element_id"))
       .select(col("attribute_id"), col("name").as("attribute_name"), col("element_name"))
-    val attrNames = attrs.select("attribute_name").distinct()
-      .collect().map(_.getString(0)).sorted // deterministic pivot schema (§7.4-1)
+    // the pivot schema: names of the selected attributes whose element
+    // exists, read through filters and projections only, which fold
+    // into the snapshots' local rows, so these collects run no job
+    val present = elements.filter(col("element_id").isin(elementIds: _*))
+      .select("element_id").collect().map(_.get(0))
+    val attrNames = attributes.filter(col("element_id").isin(present: _*))
+      .select("name").collect().map(_.getString(0))
+      .distinct.sorted // deterministic pivot schema (§7.4-1)
     val scan = c.archiveRange(start, end) // partition-pruned time range
       .join(broadcast(attrs), Seq("attribute_id"))
     val keys = if (elementIds.sizeIs > 1) Seq("element_name", "timestamp") else Seq("timestamp")

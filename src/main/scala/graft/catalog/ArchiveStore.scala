@@ -43,6 +43,17 @@ object ArchiveStore {
     fs.exists(new HPath(p, "_SUCCESS"))
   }
 
+  /** A committed table's files as (name, length, modification time),
+    * name-sorted; `None` while the table has no `_SUCCESS` marker (the
+    * [[exists]] rule). Every overwrite writes part files under fresh
+    * names, so two commits within one millisecond still list apart. */
+  private[catalog] def listing(path: String): Option[Seq[(String, Long, Long)]] = {
+    val (fs, p) = hadoopFs(path)
+    val files = try fs.listStatus(p).toSeq catch { case _: java.io.FileNotFoundException => Nil }
+    val named = files.map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sortBy(_._1)
+    Option.when(named.exists(_._1 == "_SUCCESS"))(named)
+  }
+
   /** Logical-schema read (partition column dropped); empty frame with the
     * batch's own types when nothing has been written yet. */
   def readOr(spark: SparkSession, path: String, empty: => DataFrame): DataFrame =

@@ -1,7 +1,10 @@
 package graft.catalog
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.formula.Formula
 import graft.model.Schemas
@@ -19,19 +22,62 @@ import graft.tree.Hierarchy
   * — single-writer rewrite-on-mutation is correct and cheap. Every probe,
   * read and move goes through the Hadoop FileSystem ([[ArchiveStore]]),
   * so `root` may be a local path or a URI (`file:`, `hdfs://`, ...).
+  *
+  * Snapshots: [[elements]] and [[attributes]] are served from one
+  * immutable in-memory snapshot per table: the table directory's
+  * [[ArchiveStore.listing]] and the table's rows as a `LocalRelation`.
+  * Filters, projections and sorts over a snapshot plan to a
+  * `LocalTableScan` and run no Spark job. Each read lists the directory
+  * and reloads the rows only when the listing changed, so a write made
+  * outside this catalog is seen on the next read. This catalog's own
+  * dimension writes install the rows they wrote as the new snapshot and
+  * never re-read their table. A snapshot is replaced whole, so a
+  * concurrent reader sees the old table or the new one, never a mix.
+  *
+  * Single writer: one `Catalog` per namespace writes its dimension
+  * tables. If another writer commits between this catalog's write and
+  * its listing of the result, this catalog serves its own rows until
+  * the listing next changes.
   */
 final class Catalog(val spark: SparkSession, root: String, val database: String) {
 
   private def path(table: String) = s"$root/$database/$table"
   private def exists(table: String) = ArchiveStore.exists(path(table))
 
-  def elements: DataFrame =
-    if (exists("element")) spark.read.parquet(path("element"))
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.element)
+  private def local(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
-  def attributes: DataFrame =
-    if (exists("attribute")) spark.read.parquet(path("attribute"))
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.attribute)
+  /** One dimension table's snapshot; `empty` is the schema served while
+    * no table is committed. */
+  private final class Dim(val table: String, empty: StructType) {
+    @volatile private var snapshot: Option[Catalog.Snapshot] = None
+
+    def frame: DataFrame = {
+      val seen = ArchiveStore.listing(path(table))
+      snapshot.filter(_.listing == seen).fold {
+        val rows = seen.fold(local(Nil, empty)) { _ =>
+          val stored = spark.read.parquet(path(table))
+          local(stored.collect().toSeq, stored.schema)
+        }
+        snapshot = Some(Catalog.Snapshot(seen, rows))
+        rows
+      }(_.frame)
+    }
+
+    /** Installs the rows this catalog just wrote. A parquet read returns
+      * every column as nullable, so the snapshot's schema does too. */
+    def install(rows: Seq[Row], schema: StructType): Unit = {
+      val read = StructType(schema.fields.map(_.copy(nullable = true)))
+      snapshot = Some(Catalog.Snapshot(ArchiveStore.listing(path(table)), local(rows, read)))
+    }
+  }
+
+  private val elementDim = new Dim("element", Schemas.element)
+  private val attributeDim = new Dim("attribute", Schemas.attribute)
+
+  def elements: DataFrame = elementDim.frame
+
+  def attributes: DataFrame = attributeDim.frame
 
   /** Archive columns in contract order (readers drop the physical
     * partition column). */
@@ -59,12 +105,13 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
 
   /** Dimension rewrite: collect-free overwrite via temp dir + move is
     * unnecessary at catalog size — a driver-side materialize breaks the
-    * read-overwrite cycle safely. Single-writer by contract. */
-  private def writeDim(table: String, df: DataFrame): Unit = {
+    * read-overwrite cycle safely, and the collected rows become the
+    * table's new snapshot. Single-writer by contract. */
+  private def writeDim(dim: Dim, df: DataFrame): Unit = {
     val rows = df.collect().toSeq
-    val fresh = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), df.schema)
-    fresh.write.mode(SaveMode.Overwrite).parquet(path(table))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), df.schema)
+      .write.mode(SaveMode.Overwrite).parquet(path(dim.table))
+    dim.install(rows, df.schema)
   }
 
   /** Writes are date-partitioned (`p_date`, [[ArchiveStore]]): appends
@@ -90,7 +137,7 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
     val sess = spark
     import sess.implicits._
     val row = Seq((level, id, name, parentId)).toDF("level", "element_id", "name", "parent_id")
-    writeDim("element", elements.unionByName(row))
+    writeDim(elementDim, elements.unionByName(row))
     id
   }
 
@@ -108,7 +155,7 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
     import sess.implicits._
     val row = Seq((elementId, id, name, kks, formula))
       .toDF("element_id", "attribute_id", "name", "kks", "formula")
-    writeDim("attribute", attributes.unionByName(row))
+    writeDim(attributeDim, attributes.unionByName(row))
     formula.foreach { f =>
       appendArchive(Formula.backfill(archive, f, id))
     }
@@ -132,7 +179,7 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
       .withColumn("formula",
         when(col("attribute_id") === attributeId && lit(formula.isDefined), lit(formula.orNull))
           .otherwise(col("formula")))
-    writeDim("attribute", updated)
+    writeDim(attributeDim, updated)
     formula.foreach { f =>
       rewriteArchive(archive.filter(col("attribute_id") =!= attributeId))
       appendArchive(Formula.backfill(archive, f, attributeId))
@@ -146,8 +193,8 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
     val nArchive = archive.join(attrIds, Seq("attribute_id"), "left_semi").count()
     val nAttrs = attrIds.count()
     rewriteArchive(archive.join(attrIds, Seq("attribute_id"), "left_anti"))
-    writeDim("attribute", attributes.filter(col("element_id") =!= elementId))
-    writeDim("element", elements.filter(col("element_id") =!= elementId))
+    writeDim(attributeDim, attributes.filter(col("element_id") =!= elementId))
+    writeDim(elementDim, elements.filter(col("element_id") =!= elementId))
     (nAttrs, nArchive)
   }
 
@@ -155,7 +202,7 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
   def deleteAttribute(attributeId: Int): Long = {
     val n = archive.filter(col("attribute_id") === attributeId).count()
     rewriteArchive(archive.filter(col("attribute_id") =!= attributeId))
-    writeDim("attribute", attributes.filter(col("attribute_id") =!= attributeId))
+    writeDim(attributeDim, attributes.filter(col("attribute_id") =!= attributeId))
     n
   }
 
@@ -179,13 +226,11 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
     * anti-join. Derived attribute definitions survive via the same path
     * join. */
   def repopulate(newElements: DataFrame, newAttributes: DataFrame): Unit = {
-    // materialize the OLD path mapping before the dims are overwritten —
-    // a lazy plan would re-read the rewritten parquet
-    val oldLazy = attributePathMapping().withColumnRenamed("attribute_id", "old_id")
-    val oldAttrPaths = spark.createDataFrame(
-      spark.sparkContext.parallelize(oldLazy.collect().toSeq, 1), oldLazy.schema)
-    writeDim("element", newElements)
-    writeDim("attribute", newAttributes)
+    // the OLD path mapping is planned over the old snapshots' rows, so
+    // it still reads the old dimensions after the writes below
+    val oldAttrPaths = attributePathMapping().withColumnRenamed("attribute_id", "old_id")
+    writeDim(elementDim, newElements)
+    writeDim(attributeDim, newAttributes)
     val newAttrPaths = attributePathMapping().withColumnRenamed("attribute_id", "new_id")
     val idMap = oldAttrPaths.join(newAttrPaths, Seq("raw_path"))
       .filter(col("old_id") =!= col("new_id"))
@@ -195,4 +240,9 @@ final class Catalog(val spark: SparkSession, root: String, val database: String)
       .join(valid, Seq("attribute_id"), "left_semi") // P11 orphan cleanup
     rewriteArchive(remapped)
   }
+}
+
+private object Catalog {
+  /** A dimension table's rows as of one [[ArchiveStore.listing]]. */
+  final case class Snapshot(listing: Option[Seq[(String, Long, Long)]], frame: DataFrame)
 }

@@ -2,11 +2,17 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.api.GraftApi
 import graft.catalog.{ArchiveStore, Catalog}
+import graft.model.Schemas
 
 class CatalogApiSpec extends SparkSpec {
 
@@ -370,5 +376,148 @@ class CatalogApiSpec extends SparkSpec {
     // missing root: empty listing, no throw (fresh deployment)
     assert(new GraftApi(spark, "file:" + root.resolve("absent"))
       .databases() === Seq.empty)
+  }
+
+  /** Every read route's answer over namespace `db`: the schema and the
+    * rows, in route order (sorted for the routes that order nothing). */
+  private def routes(api: GraftApi, db: String): Seq[(String, String)] = {
+    def show(name: String, df: DataFrame, sorted: Boolean = false) = {
+      val rows = df.collect().map(_.toString).toSeq
+      name -> (df.schema.toString + (if (sorted) rows.sorted else rows).mkString(";"))
+    }
+    val elems = api.allElements(db).collect()
+    val ids = elems.map(_.getAs[Int]("element_id")).toSeq
+    val attrNames = api.allAttributes(db).collect().map(_.getAs[String]("name")).toSeq
+    Seq(
+      show("leafElements", api.leafElements(db)),
+      show("allElements", api.allElements(db)),
+      show("allAttributes", api.allAttributes(db)),
+      show("lookup element %", api.lookup(db, "element", "%")),
+      show("lookup attribute %", api.lookup(db, "attribute", "%")),
+      show("fuzzyLookup element", api.fuzzyLookup(db, "element", "unit")),
+      show("fuzzyLookup attribute", api.fuzzyLookup(db, "attribute", "temp")),
+      show("export", api.export(db, ids, None, None)),
+      show("exportTable element", api.exportTable(db, "element"), sorted = true),
+      show("exportTable attribute", api.exportTable(db, "attribute"), sorted = true)) ++
+      ids.map(id => show(s"elementAttributes $id", api.elementAttributes(db, id))) ++
+      elems.map(_.getAs[String]("name")).map(n =>
+        show(s"lookup element $n", api.lookup(db, "element", n), sorted = true)) ++
+      attrNames.map(n => show(s"lookup attribute $n", api.lookup(db, "attribute", n), sorted = true))
+  }
+
+  test("snapshots: every route reflects each write, through the same and a second GraftApi") {
+    val root = Files.createTempDirectory("graft_snap").toString
+    val db = "site1"
+    val api = new GraftApi(spark, root)
+    val other = new GraftApi(spark, root) // warm too, but never writes
+    assert(api.catalog(db) eq api.catalog(db))
+    val sess = spark
+    import sess.implicits._
+
+    // after a write, the writing API and the warm second API agree with
+    // an API built fresh over the stored tables, and the names are right
+    def check(step: String, elements: Set[String], attributes: Set[String]): Unit = {
+      val truth = routes(new GraftApi(spark, root), db).toMap
+      for (a <- Seq(api, other); (route, got) <- routes(a, db))
+        assert(got === truth(route), s"after $step: $route")
+      assert(api.allElements(db).collect().map(_.getAs[String]("name")).toSet === elements, step)
+      assert(api.allAttributes(db).collect().map(_.getAs[String]("name")).toSet === attributes, step)
+    }
+
+    check("nothing", Set.empty, Set.empty)
+    val plant = api.insertElement(db, "Plant", 0, None)
+    val unit1 = api.insertElement(db, "Unit1", 1, Some(plant))
+    check("insertElement", Set("Plant", "Unit1"), Set.empty)
+    val unit2 = api.insertElement(db, "Unit2", 1, Some(plant))
+    val temp = api.insertAttribute(db, unit1, "temp", Some("10ABC"), None)
+    val press = api.insertAttribute(db, unit2, "press", None, None)
+    api.catalog(db).appendArchive(Seq(
+      (temp, ts("2024-01-01 00:00:00"), 10.0),
+      (press, ts("2024-01-01 00:00:00"), 2.0)).toDF("attribute_id", "timestamp", "value"))
+    val mean = api.insertAttribute(db, unit1, "mean", None, Some(s"($$$temp + $$$press) / 2"))
+    check("insertAttribute", Set("Plant", "Unit1", "Unit2"), Set("temp", "press", "mean"))
+    api.updateAttribute(db, mean, Some("half"), None, Some(s"$$$temp / 2"))
+    check("updateAttribute", Set("Plant", "Unit1", "Unit2"), Set("temp", "press", "half"))
+    api.deleteAttribute(db, press)
+    check("deleteAttribute", Set("Plant", "Unit1", "Unit2"), Set("temp", "half"))
+    api.deleteElement(db, unit2)
+    check("deleteElement", Set("Plant", "Unit1"), Set("temp", "half"))
+    api.catalog(db).repopulate(
+      Seq((0, 5, "Plant", None: Option[Int]), (1, 6, "Unit1", Some(5)), (1, 7, "Unit3", Some(5)))
+        .toDF("level", "element_id", "name", "parent_id"),
+      Seq((6, 8, "temp", None: Option[String], None: Option[String]),
+        (7, 9, "flow", None: Option[String], None: Option[String]))
+        .toDF("element_id", "attribute_id", "name", "kks", "formula"))
+    check("repopulate", Set("Plant", "Unit1", "Unit3"), Set("temp", "flow"))
+
+    // an overwrite made outside Catalog, in several part files
+    spark.createDataFrame(Seq(Row(0, 5, "Plant", null), Row(1, 6, "Unit1", 5),
+        Row(1, 7, "Unit3", 5), Row(1, 10, "Unit4", 5)).asJava, Schemas.element)
+      .repartition(2).write.mode("overwrite").parquet(s"$root/$db/element")
+    check("outside overwrite", Set("Plant", "Unit1", "Unit3", "Unit4"), Set("temp", "flow"))
+  }
+
+  /** Names of the jobs `body` starts (each job's stage call sites). A
+    * marker job run after `body` bounds the wait: the listener bus
+    * delivers job starts in order, so once the marker arrives every job
+    * of `body` has been seen. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val marker = "catalog-spec-marker"
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit = started.add(
+        if (Option(s.properties).exists(_.getProperty("spark.job.description") == marker)) marker
+        else s.stageInfos.map(_.name).mkString(";"))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      Iterator.continually(started.poll(60, TimeUnit.SECONDS))
+        .map(j => { assert(j != null, "marker job never reported"); j })
+        .takeWhile(_ != marker).toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("warm snapshots: dimension-only browse calls and the export's pivot schema run no job") {
+    val (api, cat) = freshApi()
+    val boiler = cat.insertElement("Boiler")
+    cat.insertElement("Turbine")
+    val temp = cat.insertAttribute(boiler, "temp")
+    val press = cat.insertAttribute(boiler, "press")
+    val sess = spark
+    import sess.implicits._
+    cat.appendArchive(Seq((temp, ts("2024-01-01 00:00:00"), 1.0),
+      (press, ts("2024-01-01 00:00:00"), 2.0)).toDF("attribute_id", "timestamp", "value"))
+    val calls: Seq[(String, () => Unit)] = Seq(
+      "elementAttributes" -> (() => api.elementAttributes("site1", boiler).collect()),
+      "lookup exact" -> (() => api.lookup("site1", "element", "Boiler").collect()),
+      "lookup ILIKE" -> (() => api.lookup("site1", "element", "%oi%").collect()),
+      "leafElements" -> (() => api.leafElements("site1").collect()),
+      "attribute lookup" -> (() => api.lookup("site1", "attribute", "temp").collect()),
+      "allAttributes" -> (() => api.allAttributes("site1").collect()))
+    calls.foreach(_._2()) // warm: the snapshots are loaded
+    val jobs = calls.map { case (name, call) => name -> jobsOf(call()) }.toMap
+    for (name <- Seq("elementAttributes", "lookup exact", "lookup ILIKE"))
+      assert(jobs(name).isEmpty, s"$name ran jobs: ${jobs(name)}")
+    // the join routes keep their join jobs, but none re-reads a dimension
+    for ((name, js) <- jobs; j <- js)
+      assert(!j.contains("at Catalog.scala"), s"$name re-read a dimension: $j")
+    // the catalog's own write installs its rows: no re-read after it
+    val flow = cat.insertAttribute(boiler, "flow")
+    val after = jobsOf(assert(api.elementAttributes("site1", boiler).collect()
+      .map(_.getAs[String]("name")).toSeq === Seq("flow", "press", "temp")))
+    assert(after.isEmpty, s"elementAttributes after a write ran: $after")
+
+    // building the download reads the archive's schema (archiveRange), and
+    // nothing else: the pivot schema comes from the snapshots
+    var out: DataFrame = null
+    val exportJobs = jobsOf { out = api.export("site1", Seq(boiler), None, None) }
+    assert(exportJobs.forall(_.startsWith("parquet at Catalog.scala")) && exportJobs.size <= 1,
+      s"export planning ran: $exportJobs")
+    assert(out.columns.toSeq === Seq("timestamp", "flow", "press", "temp"))
+    assert(flow === 3)
   }
 }

@@ -13,8 +13,8 @@ object TestSession {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // match GraftSession: bucketed-table probes rely on bucket
-      // pruning, which the auto-disable rule strips from filter-only scans
+      // materializeBucketed's probes rely on bucket pruning, which the
+      // auto-disable rule strips from filter-only scans
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       // match GraftSession: the native SQL functions register at build
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
